@@ -43,9 +43,10 @@ DECODE_TIERS = {
     "blob": ("sensor_msgs/CompressedImage", "blobs"),
 }
 
-#: decoder kernel → datatype whose sample payloads it decodes
+#: decoder kernel → datatype whose sample payloads it decodes. The
+#: fixed-stride tier has no kernel of its own outside ``decode_messages``
+#: (one ``np.frombuffer`` inside it), so only ``decode.fixed_s`` covers it.
 KERNELS = {
-    "fixed": "geometry_msgs/Twist",
     "offset_scan": "sensor_msgs/Imu",
     "per_row": "sensor_msgs/JointState",
 }
@@ -65,10 +66,7 @@ def _rows_per_s(fn, n_rows: int, min_seconds: float) -> float:
 
 def _kernel_layers(run: Run, rec: bagmaker.Recording, layer: dict) -> None:
     """Decoder kernels on in-memory payloads, with no Spark."""
-    import numpy as np
-
     from rosbag2parquet_spark.sources.decode import (
-        fixed_layout,
         make_decoder,
         make_vector_decoder,
         variable_layout,
@@ -78,15 +76,7 @@ def _kernel_layers(run: Run, rec: bagmaker.Recording, layer: dict) -> None:
     for tier, dtype in KERNELS.items():
         bufs = rec.samples[dtype]
         specs = parse_msgdef(dtype, bagmaker.MSG_DEFS[dtype])
-        if tier == "fixed":
-            np_dtype = np.dtype(
-                [(n, d) if n is not None else (f"__pad{i}", f"V{int(d)}")
-                 for i, (n, d) in enumerate(fixed_layout(dtype, specs))]
-            )
-
-            def fn(bufs=bufs, np_dtype=np_dtype):
-                return np.frombuffer(b"".join(bufs), dtype=np_dtype)
-        elif tier == "offset_scan":
+        if tier == "offset_scan":
             fn = (lambda bufs=bufs, dec=make_vector_decoder(variable_layout(dtype, specs)): dec(bufs))
         else:
             fn = (lambda bufs=bufs, dec=make_decoder(dtype, specs): [dec(b) for b in bufs])
@@ -159,8 +149,8 @@ def _convert_layers(run: Run, rec: bagmaker.Recording, layer: dict) -> None:
     layer["convert.bytes_out_per_byte_in"] = nbytes / rec.nbytes
 
     rng = random.Random(run.seed)
-    query_mix(run, rec, out, rng, 1)  # unmeasured: first calls plan and compile
-    spans = query_mix(run, rec, out, rng, 1)
+    query_mix(run, rec, out, rng)  # unmeasured: first calls plan and compile
+    spans = query_mix(run, rec, out, rng)
     for kind, key in (
         ("range", "layout.range_ms"),
         ("join", "layout.join_ms"),
@@ -198,7 +188,7 @@ def _analytics_layers(run: Run, sf_dir: str, layer: dict) -> None:
 def layer_sweep(run: Run) -> dict:
     """Measure every per-layer metric; returns name → value."""
     rec = make_bag(run)
-    sf_dir, _ = make_fixture(run)
+    sf_dir = make_fixture(run)
     t0 = time.perf_counter()
     layer = start_session(run)
     if run.workload == "analytics":

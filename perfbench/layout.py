@@ -30,8 +30,7 @@ PROBE_COLUMNS = {
 }
 
 #: one round of the query mix, as (kind, table): every kind once, the join
-#: once per probed table. Seven entries, so the median of whole rounds
-#: falls inside one kind's latencies rather than in the gap between two.
+#: once per probed table
 MIX = (
     ("range", None),
     ("join", "geometry_msgs_Twist"),

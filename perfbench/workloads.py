@@ -22,7 +22,7 @@ import random
 import shutil
 import time
 from dataclasses import dataclass, field
-from statistics import median
+from statistics import geometric_mean, median
 
 import bagmaker
 import tablemaker
@@ -32,30 +32,17 @@ from layout import MIX, QUERY_TYPES, make_query, verify_layout
 
 MB = 1_000_000
 
-#: the ``--seconds`` at which a scale's phase counts apply unchanged
-NOMINAL_SECONDS = 30.0
+#: a run's work is fixed, so that two versions of the program are measured
+#: on the same work: a convert run measures this many rounds of the query
+#: mix, each followed by a steady convert; an analytics run this many
+#: steady passes over the suite
+STEADY_ROUNDS = 2
 
-#: run sizes: ``full`` is the benchmark, ``smoke`` drives the same code
+#: input sizes: ``full`` is the benchmark, ``smoke`` drives the same code
 #: path in seconds for the benchmark's own tests
 SCALES = {
-    "full": {
-        "bag_seconds": 10.0,
-        "image_bytes": 24_000,
-        "sf": 0.005,
-        "steady_converts": 1,
-        "query_rounds": 2,
-        "steady_passes": 1,
-        "kernel_seconds": 0.2,
-    },
-    "smoke": {
-        "bag_seconds": 1.0,
-        "image_bytes": 2_000,
-        "sf": 0.001,
-        "steady_converts": 1,
-        "query_rounds": 1,
-        "steady_passes": 1,
-        "kernel_seconds": 0.01,
-    },
+    "full": {"bag_seconds": 10.0, "image_bytes": 24_000, "sf": 0.005, "kernel_seconds": 0.2},
+    "smoke": {"bag_seconds": 1.0, "image_bytes": 2_000, "sf": 0.001, "kernel_seconds": 0.01},
 }
 
 
@@ -63,7 +50,6 @@ SCALES = {
 class Run:
     workload: str
     seed: int
-    seconds: float
     trace: bool
     scale: dict
     work: str
@@ -79,11 +65,6 @@ class Run:
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.work, *parts)
-
-    def count(self, key: str) -> int:
-        """Repetitions of a steady phase: the scale's count at the nominal
-        ``--seconds`` of 30, in proportion to ``--seconds`` otherwise."""
-        return max(1, round(self.scale[key] * self.seconds / NOMINAL_SECONDS))
 
     def take_fault(self) -> bool:
         """True once, when a deliberately wrong result was requested."""
@@ -106,12 +87,12 @@ def make_bag(run: Run) -> bagmaker.Recording:
     return rec
 
 
-def make_fixture(run: Run) -> tuple[str, int]:
+def make_fixture(run: Run) -> str:
     sf_dir = run.path("fixture")
     rows = tablemaker.make_tables(sf_dir, run.seed, run.scale["sf"])
     nbytes = sum(os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir))
     run.note(f"fixture sf={run.scale['sf']} bytes={nbytes} rows " + " ".join(f"{t}={n}" for t, n in rows.items()))
-    return sf_dir, nbytes
+    return sf_dir
 
 
 # ------------------------------------------------------------------- setup
@@ -156,11 +137,11 @@ def convert_once(run: Run, rec: bagmaker.Recording, i: int):
     return done
 
 
-def query_mix(run: Run, rec: bagmaker.Recording, layout_dir: str, rng: random.Random,
-              rounds: int) -> dict[str, list]:
-    """``rounds`` rounds of the query mix, all entries shuffled together
-    with seeded parameters; returns kind → spans."""
-    entries = list(MIX) * rounds
+def query_mix(run: Run, rec: bagmaker.Recording, layout_dir: str,
+              rng: random.Random) -> dict[str, list]:
+    """One round of the query mix in seeded order with seeded parameters;
+    returns kind → spans."""
+    entries = list(MIX)
     rng.shuffle(entries)
     spans: dict[str, list] = {k: [] for k in QUERY_TYPES}
     for n, (kind, table) in enumerate(entries):
@@ -177,32 +158,31 @@ def query_mix(run: Run, rec: bagmaker.Recording, layout_dir: str, rng: random.Ra
 
 
 def convert_workload(run: Run) -> dict:
-    """Cold convert, the query mix over its layout, then steady converts:
-    the steady converts come last so that they run on a warmed-up JVM."""
+    """Cold convert, one unmeasured round of the query mix over its layout,
+    then measured rounds of the mix, each followed by a steady convert, so
+    that queries and converts sample the same stretch of the run."""
     rec = make_bag(run)
     start_session(run)
     first = convert_once(run, rec, 0)
     cold_s = first[0].seconds if first else float("nan")
-    lat: list[float] = []
+    latencies: dict[str, list[float]] = {}
+    steady: list[float] = []
     if first is not None:
         rng = random.Random(run.seed)
-        # an unmeasured round first: each kind's first call plans and
-        # compiles, and costs about twice what the later ones do
-        query_mix(run, rec, first[1], rng, 1)
-        spans = query_mix(run, rec, first[1], rng, run.count("query_rounds"))
-        lat = [sp.seconds for v in spans.values() for sp in v]
-        run.note("query ms " + " ".join(
-            f"{k}=" + ",".join(f"{sp.seconds * 1000:.0f}" for sp in v) for k, v in spans.items()))
-    steady = []
-    for i in range(run.count("steady_converts")):
-        done = convert_once(run, rec, i + 1)
-        if done is not None:
-            steady.append(done[0].seconds)
-            shutil.rmtree(done[1], ignore_errors=True)
+        # each kind's first call plans and compiles, and costs about twice
+        # what the later ones do
+        query_mix(run, rec, first[1], rng)
+        for i in range(STEADY_ROUNDS):
+            for kind, spans in query_mix(run, rec, first[1], rng).items():
+                latencies.setdefault(kind, []).extend(sp.seconds for sp in spans)
+            done = convert_once(run, rec, i + 1)
+            if done is not None:
+                steady.append(done[0].seconds)
+                shutil.rmtree(done[1], ignore_errors=True)
     steady_s = median(steady) if steady else float("nan")
     run.note(f"convert cold={cold_s:.3f}s steady=" + ",".join(f"{x:.3f}" for x in steady)
-             + f" queries n={len(lat)}")
-    return end_to_end(run, cold_s, steady_s, rec.nbytes, lat)
+             + f" ({rec.nbytes / MB / steady_s:.2f} MB/s)")
+    return end_to_end(run, cold_s, steady_s, latencies)
 
 
 # ------------------------------------------------------------ analytics path
@@ -231,37 +211,44 @@ def analytics_pass(run: Run, sf_dir: str, oracle: dict, rng: random.Random) -> d
 
 
 def analytics_workload(run: Run) -> dict:
-    sf_dir, nbytes = make_fixture(run)
+    """A cold pass over the suite, then steady passes; a steady pass is
+    reported as the sum of each query's median over the steady passes."""
+    sf_dir = make_fixture(run)
     start_session(run)
     oracle = oracle_answers(sf_dir)
     rng = random.Random(run.seed)
     cold_s = sum(sp.seconds for sp in analytics_pass(run, sf_dir, oracle, rng).values())
-    passes: list[float] = []
-    lat: list[float] = []
-    for _ in range(run.count("steady_passes")):
-        spans = analytics_pass(run, sf_dir, oracle, rng)
-        passes.append(sum(sp.seconds for sp in spans.values()))
-        lat += [sp.seconds for sp in spans.values()]
-    run.note(f"analytics cold={cold_s:.3f}s steady=" + ",".join(f"{x:.3f}" for x in passes)
-             + f" queries n={len(lat)}")
-    return end_to_end(run, cold_s, median(passes), nbytes, lat)
+    latencies: dict[str, list[float]] = {}
+    for _ in range(STEADY_ROUNDS):
+        for name, sp in analytics_pass(run, sf_dir, oracle, rng).items():
+            latencies.setdefault(name, []).append(sp.seconds)
+    steady_s = sum(median(v) for v in latencies.values()) if latencies else float("nan")
+    run.note(f"analytics cold={cold_s:.3f}s steady={steady_s:.3f}s")
+    return end_to_end(run, cold_s, steady_s, latencies)
 
 
 # --------------------------------------------------------------- reporting
 
 
-def end_to_end(run: Run, cold_s: float, steady_s: float, input_bytes: int,
-               latencies: list[float]) -> dict:
-    """The end-to-end metrics; every workload reports all of them."""
-    lat_ms = [x * 1000.0 for x in latencies] or [float("nan")]
+def end_to_end(run: Run, cold_s: float, steady_s: float,
+               latencies: dict[str, list[float]]) -> dict:
+    """The end-to-end metrics; every workload reports all of them.
+
+    ``latencies`` maps each query kind to its measured latencies. The
+    query metric is the geometric mean over kinds of each kind's median:
+    every kind weighs alike whatever its cost or sample count, and the
+    metric rests on every kind, where a median over kinds would rest on
+    the one or two kinds in the middle."""
+    per_kind_ms = {k: median(v) * 1000.0 for k, v in latencies.items() if v}
+    run.note("query ms (median of n) " + " ".join(
+        f"{k}={ms:.0f}({len(latencies[k])})" for k, ms in per_kind_ms.items()))
     driver_mb, jvm_mb = peak_rss_mb(run.spark)
     run.note(f"peak rss driver={driver_mb:.0f}MB jvm={jvm_mb:.0f}MB")
     return {
         "setup_s": run.setup_s,
         "cold_s": cold_s,
         "steady_s": steady_s,
-        "input_mb_per_s": input_bytes / MB / steady_s,
-        "query_p50_ms": median(lat_ms),
+        "query_gmean_ms": geometric_mean(per_kind_ms.values()) if per_kind_ms else float("nan"),
         "peak_rss_mb": driver_mb + jvm_mb,
     }
 
