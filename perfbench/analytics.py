@@ -12,6 +12,9 @@ import datetime
 import decimal
 import math
 import os
+import pickle
+import subprocess
+import sys
 
 import numpy as np
 
@@ -84,12 +87,13 @@ def canonical(pdf) -> tuple[list[str], list[tuple[str, ...]]]:
 
 def oracle_answers(sf_dir: str) -> dict[str, tuple]:
     """Canonical DuckDB oracle result of every suite query, computed in a
-    child process so DuckDB's memory never counts in the driver's peak RSS."""
-    import multiprocessing
-    from concurrent.futures import ProcessPoolExecutor
-
-    with ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("spawn")) as pool:
-        return pool.submit(_oracle_answers, sf_dir).result()
+    child process so DuckDB's memory never counts in the driver's peak RSS.
+    The child is a plain interpreter run to completion, so it leaves no
+    helper process behind."""
+    out = sf_dir.rstrip(os.sep) + ".oracle.pkl"
+    subprocess.run([sys.executable, os.path.abspath(__file__), sf_dir, out], check=True)
+    with open(out, "rb") as fh:
+        return pickle.load(fh)
 
 
 def _oracle_answers(sf_dir: str) -> dict[str, tuple]:
@@ -119,3 +123,9 @@ def mismatch(want: tuple, got: tuple) -> "str | None":
         if w != g:
             return f"first differing row {g} != oracle {w}"
     return None
+
+
+if __name__ == "__main__":
+    answers = _oracle_answers(sys.argv[1])
+    with open(sys.argv[2], "wb") as fh:
+        pickle.dump(answers, fh)

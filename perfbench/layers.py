@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 import bagmaker
 from analytics import MODULES, SUITE, oracle_answers
+from harness import peak_rss_mb
 from layout import layout_bytes
 from workloads import (
     MB,
@@ -198,5 +199,6 @@ def layer_sweep(run: Run) -> dict:
         _convert_layers(run, rec, layer)
         _analytics_layers(run, sf_dir, layer)
     wall = time.perf_counter() - t0
+    layer["session.peak_rss_mb"] = sum(peak_rss_mb(run.spark))
     layer["trace.overhead_pct"] = 100.0 * run.tracer.overhead / (wall - run.tracer.overhead)
     return {k: float(v) for k, v in layer.items()}

@@ -8,7 +8,8 @@ end-to-end metric with ``--trace 0``, every per-layer metric with
 ``--trace 1``). Lines before it, prefixed ``#``, describe the inputs and
 the live Spark session. All scratch output lives in a temporary directory
 under ``perfbench/.work`` that is removed on exit; a traced run also writes
-its spans to ``perfbench/results/``.
+its spans to ``perfbench/results/``. Every process the run starts has
+ended by the time it exits.
 
 A run does a fixed amount of work (see ``workloads.py``), so that two
 versions of the program are measured on the same work; ``--seconds`` is
@@ -23,17 +24,21 @@ passed, and 2 when the program under test is not beside this directory.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import ctypes
 import json
 import math
 import os
 import shlex
 import shutil
+import signal
 import sys
 import tempfile
 import time
 
 BENCH = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(BENCH)
+PR_SET_CHILD_SUBREAPER = 36  # from <linux/prctl.h>
 
 
 def _environment(work: str) -> None:
@@ -63,16 +68,48 @@ def _environment(work: str) -> None:
             sys.path.insert(0, p)
 
 
-def _stop(spark) -> None:
-    """Stop the session, then the JVM it runs in, and wait for it."""
-    if spark is None:
-        return
-    gateway = spark.sparkContext._gateway
-    proc = gateway.proc
-    spark.stop()
-    gateway.shutdown()
-    proc.stdin.close()
-    proc.wait(timeout=60)
+def _adopt_descendants() -> None:
+    """Make this process the reaper of every process the run starts, so
+    that a Python worker whose parent JVM has exited is still ours to wait
+    for (Linux ``PR_SET_CHILD_SUBREAPER``)."""
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _children() -> list[int]:
+    me = str(os.getpid())
+    pids = []
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{name}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        if stat[stat.rindex(")") + 2:].split()[1] == me:
+            pids.append(int(name))
+    return pids
+
+
+def _reap(grace: float = 15.0) -> None:
+    """Wait until every child process has ended: after ``grace`` seconds
+    terminate those still running, and kill them after as long again."""
+    start = time.monotonic()
+    sent = None
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        except ChildProcessError:
+            return  # no children left
+        late = time.monotonic() - start
+        sig = signal.SIGKILL if late > 2 * grace else signal.SIGTERM if late > grace else None
+        if sig is not None and sig != sent:
+            for pid in _children():
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, sig)
+            sent = sig
+        time.sleep(0.05)
 
 
 def main(argv: "list[str] | None" = None) -> int:
@@ -91,13 +128,14 @@ def main(argv: "list[str] | None" = None) -> int:
                   file=sys.stderr)
             return 2
 
+    _adopt_descendants()
     os.makedirs(os.path.join(BENCH, ".work"), exist_ok=True)
     work = tempfile.mkdtemp(prefix=f"{args.workload}-{args.seed}-", dir=os.path.join(BENCH, ".work"))
     run = None
     try:
         _environment(work)
         from harness import calib_ms
-        from workloads import SCALES, WORKLOADS, Run
+        from workloads import SCALES, WORKLOADS, Run, stop_session
 
         run = Run(
             workload=args.workload,
@@ -119,8 +157,11 @@ def main(argv: "list[str] | None" = None) -> int:
         run.note(f"run wall {time.perf_counter() - t0:.1f}s; "
                  f"host calib {calib:.0f}ms before, {calib_ms():.0f}ms after")
     finally:
-        if run is not None:
-            _stop(run.spark)
+        try:
+            if run is not None and run.spark is not None:
+                stop_session(run.spark)
+        finally:
+            _reap()
         shutil.rmtree(work, ignore_errors=True)
 
     checks = run.checks

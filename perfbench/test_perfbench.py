@@ -101,11 +101,32 @@ def _result(out: str) -> dict:
     return json.loads(out.strip().splitlines()[-1])
 
 
+def _pids() -> set[int]:
+    return {int(p) for p in os.listdir("/proc") if p.isdigit()}
+
+
+def _survivors(before: set[int]) -> list[str]:
+    """Command lines of Python or Java processes started since ``before``
+    that are still running."""
+    left = []
+    for pid in _pids() - before:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                cmd = fh.read().replace(b"\0", b" ").decode(errors="replace")
+        except OSError:
+            continue  # ended meanwhile
+        if "java" in cmd or "python" in cmd:
+            left.append(f"{pid}: {cmd}")
+    return left
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("workload,trace", [("convert", 0), ("analytics", 0), ("convert", 1)])
 def test_smoke_run_reports_every_metric(workload, trace):
+    before = _pids()
     code, out = _run("--workload", workload, "--seed", "4", "--seconds", "1",
                      "--trace", str(trace), "--scale", "smoke")
+    assert _survivors(before) == []
     res = _result(out)
     assert code == 0, out
     assert set(res) == {"correct", "attempted", "failed", "metrics"}

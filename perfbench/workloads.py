@@ -35,7 +35,9 @@ MB = 1_000_000
 #: a run's work is fixed, so that two versions of the program are measured
 #: on the same work: a convert run measures this many rounds of the query
 #: mix, each followed by a steady convert; an analytics run this many
-#: steady passes over the suite
+#: steady passes over the suite. A run lasts 35 to 45 s on 4 idle cores;
+#: the host has been seen to run at half that speed for many minutes, and
+#: 48 runs must still fit in an hour.
 STEADY_ROUNDS = 2
 
 #: input sizes: ``full`` is the benchmark, ``smoke`` drives the same code
@@ -115,6 +117,16 @@ def start_session(run: Run) -> dict:
              f"SPARK_GRAFT_CPUS={os.environ.get('SPARK_GRAFT_CPUS')}")
     run.note(f"setup start={t1 - t0:.3f}s warm={t2 - t1:.3f}s")
     return {"session.start_s": t1 - t0, "session.warm_s": t2 - t1}
+
+
+def stop_session(spark) -> None:
+    """Stop the session, then the JVM it runs in, and wait for it."""
+    gateway = spark.sparkContext._gateway
+    proc = gateway.proc
+    spark.stop()
+    gateway.shutdown()
+    proc.stdin.close()
+    proc.wait(timeout=60)
 
 
 # ------------------------------------------------------------- convert path
@@ -249,7 +261,6 @@ def end_to_end(run: Run, cold_s: float, steady_s: float,
         "cold_s": cold_s,
         "steady_s": steady_s,
         "query_gmean_ms": geometric_mean(per_kind_ms.values()) if per_kind_ms else float("nan"),
-        "peak_rss_mb": driver_mb + jvm_mb,
     }
 
 
