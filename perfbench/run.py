@@ -129,6 +129,8 @@ def main(argv: "list[str] | None" = None) -> int:
             return 2
 
     _adopt_descendants()
+    # a terminated run still stops its JVM and waits for its children
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     os.makedirs(os.path.join(BENCH, ".work"), exist_ok=True)
     work = tempfile.mkdtemp(prefix=f"{args.workload}-{args.seed}-", dir=os.path.join(BENCH, ".work"))
     run = None
@@ -161,8 +163,10 @@ def main(argv: "list[str] | None" = None) -> int:
             if run is not None and run.spark is not None:
                 stop_session(run.spark)
         finally:
-            _reap()
-        shutil.rmtree(work, ignore_errors=True)
+            try:
+                _reap()
+            finally:
+                shutil.rmtree(work, ignore_errors=True)
 
     checks = run.checks
     with open(os.path.join(REPO, "BENCHMARK.json")) as fh:

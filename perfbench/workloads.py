@@ -33,12 +33,12 @@ from layout import MIX, QUERY_TYPES, make_query, verify_layout
 MB = 1_000_000
 
 #: a run's work is fixed, so that two versions of the program are measured
-#: on the same work: a convert run measures this many rounds of the query
-#: mix, each followed by a steady convert; an analytics run this many
-#: steady passes over the suite. A run lasts 35 to 45 s on 4 idle cores;
-#: the host has been seen to run at half that speed for many minutes, and
-#: 48 runs must still fit in an hour.
-STEADY_ROUNDS = 2
+#: on the same work: a convert run measures two rounds of the query mix,
+#: each followed by a steady convert; an analytics run one steady pass over
+#: the suite. A run lasts 35 to 45 s on 4 idle cores; the host has been
+#: seen to run at half that speed for many minutes, and 48 runs must still
+#: fit in an hour.
+STEADY_ROUNDS = {"convert": 2, "analytics": 1}
 
 #: input sizes: ``full`` is the benchmark, ``smoke`` drives the same code
 #: path in seconds for the benchmark's own tests
@@ -184,7 +184,7 @@ def convert_workload(run: Run) -> dict:
         # each kind's first call plans and compiles, and costs about twice
         # what the later ones do
         query_mix(run, rec, first[1], rng)
-        for i in range(STEADY_ROUNDS):
+        for i in range(STEADY_ROUNDS["convert"]):
             for kind, spans in query_mix(run, rec, first[1], rng).items():
                 latencies.setdefault(kind, []).extend(sp.seconds for sp in spans)
             done = convert_once(run, rec, i + 1)
@@ -231,7 +231,7 @@ def analytics_workload(run: Run) -> dict:
     rng = random.Random(run.seed)
     cold_s = sum(sp.seconds for sp in analytics_pass(run, sf_dir, oracle, rng).values())
     latencies: dict[str, list[float]] = {}
-    for _ in range(STEADY_ROUNDS):
+    for _ in range(STEADY_ROUNDS["analytics"]):
         for name, sp in analytics_pass(run, sf_dir, oracle, rng).items():
             latencies.setdefault(name, []).append(sp.seconds)
     steady_s = sum(median(v) for v in latencies.values()) if latencies else float("nan")
