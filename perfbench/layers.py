@@ -173,7 +173,7 @@ def _convert_layers(run: Run, rec: bagmaker.Recording, layer: dict) -> None:
 def _analytics_layers(run: Run, sf_dir: str, layer: dict) -> None:
     oracle = oracle_answers(sf_dir)
     rng = random.Random(run.seed)
-    analytics_pass(run, sf_dir, oracle, rng)  # cold pass: fills per-session caches
+    analytics_pass(run, sf_dir, oracle)  # cold pass, in suite order: fills per-session caches
     spans = analytics_pass(run, sf_dir, oracle, rng)
     per_query = {q: sp.seconds for q, sp in spans.items()}
     for q, s in per_query.items():
