@@ -32,7 +32,9 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+from typing import NamedTuple
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -550,7 +552,7 @@ def convert_bag(
     bag_path: str,
     out_dir: str,
     *,
-    num_partitions: int = 32,
+    num_partitions: "int | None" = None,
     arrays: str = "skip",
     unsigned: str = "signed",
     topics: "list[str] | None" = None,
@@ -572,13 +574,27 @@ def convert_bag(
     reference MessageTable.cpp:305-343: seqno, flattened fields,
     connection_id, raw data blob.
 
-    Plan shape: the bag scans once per consumer (cached); seqno is the
-    bucketed two-pass rank of the in-file offset (unique, bag-ordered);
-    each per-type table is a connection-filtered slice decoded via the
-    vectorized mapInPandas tiers and stitched to its global seqno by an
-    offset-keyed join (offset is unique, so the join is 1:1).
-    ``arrays='blobs'`` additionally extracts uint8[] payload fields as
-    binary columns (multimodal mode).
+    Plan shape: the bag scans once (cached) and every table reads the
+    cached ``seq`` frame. seqno comes from one of two plans:
+
+    - index path — a rosbag 2.0 file whose chunks ALL carry ChunkInfo
+      message counts, converted without ``topics``/``start_ns``/``end_ns``:
+      the scan numbers each message itself (chunk base from the counts'
+      prefix sum + ordinal in the chunk, checked per chunk against the
+      declared count), so ``seq`` is a narrow scan — no count job, no
+      exchange, no window — and each split covers one contiguous seqno
+      range;
+    - everywhere else (unindexed bags, filtered converts, MCAP, .db3,
+      SBAG, directories): the bucketed two-pass rank of the in-file
+      offset (``assign_seqno``; unique, bag-ordered).
+
+    Each per-type table is a connection-filtered slice of ``seq`` decoded
+    via the vectorized mapInPandas tiers, seqno and the raw blob riding
+    through the decoder. ``arrays='blobs'`` additionally extracts uint8[]
+    payload fields as binary columns (multimodal mode).
+
+    ``num_partitions=None`` sizes the scan the way Spark sizes a file
+    scan (`scan_partitions`); a directory keeps the fleet's own default.
 
     ``topics``/``start_ns``/``end_ns`` convert a SUBSET (the classic
     `rosbag filter` workflow): topic selection prunes whole connections
@@ -598,11 +614,15 @@ def convert_bag(
                 "topics/start_ns/end_ns subset conversion is per-file; "
                 "convert the directory without filters or pass one shard"
             )
+        # None keeps the fleet's own total, which it allocates across shards
+        fleet_opts = (
+            {} if num_partitions is None else {"num_partitions": num_partitions}
+        )
         return convert_bags(
             spark,
             bag_path,
             out_dir,
-            num_partitions=num_partitions,
+            **fleet_opts,
             arrays=arrays,
             unsigned=unsigned,
             max_mbs=max_mbs,
@@ -612,16 +632,34 @@ def convert_bag(
             on_error=on_error,
         )
 
-    # start/end push into the SOURCE plan where the container supports it
-    # (MCAP ChunkIndex time bounds prune whole chunks; .db3 pushes a WHERE
-    # into sqlite); the DataFrame filters below remain as the exact gate
-    # for formats whose planner can't skip (and cost nothing when the
-    # source already pruned)
-    msgs, conns_df = load_bag(
-        spark, bag_path, num_partitions=num_partitions, msgdefs=msgdefs,
-        start_ns=start_ns, end_ns=end_ns, on_error=on_error,
-    )
+    if num_partitions is None:
+        num_partitions = scan_partitions(spark, os.path.getsize(bag_path))
     fmt = _fmt(bag_path)
+    index_seqno = (
+        fmt == "rosbag"
+        and topics is None and start_ns is None and end_ns is None
+        and _rosbag_index_complete(bag_path)
+    )
+    if index_seqno:
+        from rosbag2parquet_spark.sources.rosbag import (
+            read_rosbag,
+            rosbag_connections_df,
+        )
+
+        msgs = read_rosbag(
+            spark, bag_path, num_partitions=num_partitions, seqno=True
+        )
+        conns_df = rosbag_connections_df(spark, bag_path)
+    else:
+        # start/end push into the SOURCE plan where the container supports
+        # it (MCAP ChunkIndex time bounds prune whole chunks; .db3 pushes a
+        # WHERE into sqlite); the DataFrame filters below remain as the
+        # exact gate for formats whose planner can't skip (and cost
+        # nothing when the source already pruned)
+        msgs, conns_df = load_bag(
+            spark, bag_path, num_partitions=num_partitions, msgdefs=msgdefs,
+            start_ns=start_ns, end_ns=end_ns, on_error=on_error,
+        )
     if fmt == "rosbag2":
         serialization = "cdr"
     elif fmt == "mcap":
@@ -674,14 +712,18 @@ def convert_bag(
     if end_ns is not None:
         msgs = msgs.filter(F.col("time_ns") < end_ns)
 
-    # explicit bucket sized to THIS bag's offset encoding: the default
-    # integer bucket (div 100000) makes ~2^shift/1e5 map entries per chunk
-    # on the sparse (chunk_index << shift) offsets — a planning blow-up on
-    # multi-GB bags (ADVICE r2)
-    width = seqno_bucket_width(bag_path)
-    seq = assign_seqno(
-        msgs, ["offset"], bucket=F.expr(f"offset div {width}")
-    )
+    if index_seqno:
+        # the scan already numbered every message from the ChunkInfo counts
+        seq = msgs
+    else:
+        # explicit bucket sized to THIS bag's offset encoding: the default
+        # integer bucket (div 100000) makes ~2^shift/1e5 map entries per
+        # chunk on the sparse (chunk_index << shift) offsets — a planning
+        # blow-up on multi-GB bags (ADVICE r2)
+        width = seqno_bucket_width(bag_path)
+        seq = assign_seqno(
+            msgs, ["offset"], bucket=F.expr(f"offset div {width}")
+        )
     if max_mbs is not None:
         # the reference's byte-bounded scan limit applies to BAG input
         # (rosbag2parquet.cpp:56-58: stop once cumulative payload bytes
@@ -725,20 +767,25 @@ def convert_bag(
     bags_df = spark.createDataFrame(
         [(0, os.path.basename(bag_path), bag_path, fmt)], _BAGS_SCHEMA
     )
-    count, size = _write_bag_tables(
-        seq,
-        conns_df,
-        out_dir,
-        arrays=arrays,
-        unsigned=unsigned,
-        max_records_per_file=max_records_per_file,
-        compression=compression,
-        serialization=serialization,
-        on_error=on_error,
-        attachments_df=att_df,
-        metadata_df=md_df,
-        bags_df=bags_df,
-    )
+    try:
+        totals = _write_bag_tables(
+            seq,
+            conns_df,
+            out_dir,
+            arrays=arrays,
+            unsigned=unsigned,
+            max_records_per_file=max_records_per_file,
+            compression=compression,
+            serialization=serialization,
+            on_error=on_error,
+            attachments_df=att_df,
+            metadata_df=md_df,
+            bags_df=bags_df,
+        )
+    except PySparkException as exc:
+        if index_seqno:
+            _raise_chunk_count_error(exc)
+        raise
     if (
         topics is None and start_ns is None and end_ns is None
         and max_mbs is None
@@ -746,18 +793,80 @@ def convert_bag(
         # complete, unfiltered conversion: record the incremental-resume
         # cursor so a GROWN bag (the .db3 recorder appends rows in place)
         # can convert only its delta later (resume_convert_bag)
-        tail = seq.agg(
-            F.max("offset").alias("mo"),
-            F.max_by("time_ns", "offset").alias("lt"),
-        ).collect()[0]
         _write_ingest_state(
             out_dir, bag_path, fmt,
-            last_offset=tail.mo, last_time_ns=tail.lt,
-            count=count, arrays=arrays, unsigned=unsigned,
+            last_offset=totals.last_offset,
+            last_time_ns=totals.last_time_ns,
+            count=totals.count, arrays=arrays, unsigned=unsigned,
             serialization=serialization,
         )
     seq.unpersist()
-    return ConvertInfo(bagname=bag_path, count=count, size=float(size))
+    return ConvertInfo(bagname=bag_path, count=totals.count, size=totals.size)
+
+
+def _raise_chunk_count_error(exc: PySparkException) -> None:
+    """Re-raise the reader's per-chunk count check as the ValueError it
+    was: Spark relays a worker's exception as its own error type with the
+    Python traceback in the message."""
+    from rosbag2parquet_spark.sources.rosbag import CHUNK_COUNT_MISMATCH
+
+    for line in str(exc).splitlines():
+        if CHUNK_COUNT_MISMATCH in line:
+            raise ValueError(line.split("ValueError: ", 1)[-1].strip()) from exc
+
+
+def _rosbag_index_complete(bag_path: str) -> bool:
+    """True when every chunk of this rosbag 2.0 file carries a ChunkInfo
+    message count — the condition for index-derived seqno."""
+    from rosbag2parquet_spark.sources.rosbag import (
+        index_seqno_bases,
+        scan_rosbag,
+    )
+
+    return index_seqno_bases(scan_rosbag(bag_path)[1]) is not None
+
+
+#: Spark's byte-string units (binary multiples), as in '134217728b'
+_BYTE_UNIT_SHIFT = {
+    "": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+    "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50,
+}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size session setting as an int (the session renders them as
+    byte strings such as '134217728b')."""
+    import re
+
+    raw = spark.conf.get(key)
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", raw.lower())
+    if m is None or m.group(2) not in _BYTE_UNIT_SHIFT:
+        raise ValueError(f"{key}={raw!r} is not a byte size")
+    return int(m.group(1)) << _BYTE_UNIT_SHIFT[m.group(2)]
+
+
+def split_count(
+    nbytes: int, parallelism: int, max_partition_bytes: int, open_cost: int
+) -> int:
+    """Splits for an ``nbytes`` input the way Spark sizes a file scan:
+    split bytes = min(maxPartitionBytes, max(openCostInBytes,
+    nbytes / parallelism)). Small inputs get few splits (every split is a
+    task each per-type decode job pays for), large ones one per
+    maxPartitionBytes."""
+    per_core = nbytes // max(1, parallelism)
+    split = max(1, min(max_partition_bytes, max(open_cost, per_core)))
+    return max(1, -(-nbytes // split))
+
+
+def scan_partitions(spark: SparkSession, nbytes: int) -> int:
+    """`split_count` under this session's ``spark.sql.files.*`` settings
+    and default parallelism."""
+    return split_count(
+        nbytes,
+        spark.sparkContext.defaultParallelism,
+        _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+        _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+    )
 
 
 #: incremental-resume sidecar, written beside the layout tables by every
@@ -1041,7 +1150,7 @@ def resume_convert_bag(
         seq = seq.withColumn(
             "seqno", (F.col("seqno") + F.lit(int(prev_max) + 1)).cast("long")
         )
-    count, size = _write_bag_tables(
+    count, size, *_ = _write_bag_tables(
         seq,
         conns_df,
         out_dir,
@@ -1333,6 +1442,15 @@ def _validate_convert_paths(in_path: str, out_dir: str) -> None:
         raise NotADirectoryError(f"output path is a file: {out_dir}")
 
 
+class _BatchTotals(NamedTuple):
+    """What `_write_bag_tables` reports about the batch it wrote."""
+
+    count: int
+    size: float
+    last_offset: "int | None"
+    last_time_ns: "int | None"
+
+
 def _write_bag_tables(
     seq: DataFrame,
     conns_df: DataFrame,
@@ -1351,10 +1469,11 @@ def _write_bag_tables(
     metadata_df: "DataFrame | None" = None,
     bags_df: "DataFrame | None" = None,
     base_bag_index: int = 0,
-) -> tuple[int, float]:
+) -> _BatchTotals:
     """Shared table-writing tail of :func:`convert_bag`/:func:`convert_bags`:
     ``seq`` already carries ``seqno``; write ``Messages``, ``Connections``,
-    one flattened typed table per datatype, and the DDL script.
+    one flattened typed table per datatype, the side-car tables, and the
+    DDL script. Returns the batch's totals from one trailing aggregate.
 
     ``seq`` rows carry seqno and the raw blob through the decoder in one
     pass (keep_cols) — no stitch join; see the inline comment at the
@@ -1632,11 +1751,25 @@ def _write_bag_tables(
                 )
         pertype_writes.append((table, table_path, pertype))
 
+    # side-car tables (Attachments/Metadata for MCAP, the Bags manifest)
+    sidecars = [
+        (name, df, os.path.join(out_dir, name))
+        for name, df in (
+            ("Attachments", attachments_df),
+            ("Metadata", metadata_df),
+            ("Bags", bags_df),
+        )
+        if df is not None
+    ]
     if mode == "append":
         messages = _pad_append_messages(
             messages.sparkSession, msg_path, messages
         )
         assert_append_compatible(messages.sparkSession, stats_path, stats.schema)
+        for _name, df, path in sidecars:
+            # same fingerprint guard as every other table — the unified
+            # 7-column provenance shape appends cleanly across batches
+            assert_append_compatible(df.sparkSession, path, df.schema)
     # Messages goes FIRST and alone: its scan populates the `seq` cache
     # every later table reads; racing another job here would make both
     # compute the uncached partitions instead of one filling them for all
@@ -1653,14 +1786,15 @@ def _write_bag_tables(
                 os.path.join(table_path, _BAG_INDEX_MIXED_MARKER), "w"
             ):
                 pass  # empty marker; presence is the signal
-    # r13 (guide §2.6): Connections, Stats and the per-type tables are
-    # INDEPENDENT jobs over the now-cached `seq` — submitted from a small
-    # thread pool so each job's task tail back-fills the executors the
-    # others free, instead of serializing ~4 full job latencies. Every
-    # append guard (schema fingerprint, mixed-vintage marker) already ran
-    # above, so ordering between these writes carries no correctness
-    # weight; a failure in any write re-raises at result() and fails the
-    # conversion exactly as the sequential form did.
+    # Connections, Stats, the per-type tables and the side-cars are
+    # INDEPENDENT jobs (over the now-cached `seq`, or tiny local frames) —
+    # submitted from a small thread pool so each job's task tail
+    # back-fills the executors the others free, instead of serializing ~4
+    # full job latencies. Every append guard (schema fingerprint,
+    # mixed-vintage marker) already ran above, so ordering between these
+    # writes carries no correctness weight; a failure in any write
+    # re-raises at result() and fails the conversion exactly as the
+    # sequential form did.
     from concurrent.futures import ThreadPoolExecutor
 
     def _write_table(df: DataFrame, path: str) -> None:
@@ -1679,41 +1813,15 @@ def _write_bag_tables(
             _pool.submit(_write_table, pertype, table_path)
             for _, table_path, pertype in pertype_writes
         ]
+        _futs += [
+            _pool.submit(_write_table, df, path) for _, df, path in sidecars
+        ]
         for _f in _futs:
             _f.result()
     for table, _table_path, pertype in pertype_writes:
         tables[table] = pertype.schema
-
-    if attachments_df is not None:
-        att_path = os.path.join(out_dir, "Attachments")
-        if mode == "append":
-            # same fingerprint guard as every other table — the unified
-            # 7-column provenance shape appends cleanly across batches
-            assert_append_compatible(
-                attachments_df.sparkSession, att_path, attachments_df.schema
-            )
-        attachments_df.write.options(**writer_opts).mode(mode).parquet(
-            att_path
-        )
-        tables["Attachments"] = attachments_df.schema
-
-    if metadata_df is not None:
-        md_path = os.path.join(out_dir, "Metadata")
-        if mode == "append":
-            assert_append_compatible(
-                metadata_df.sparkSession, md_path, metadata_df.schema
-            )
-        metadata_df.write.options(**writer_opts).mode(mode).parquet(md_path)
-        tables["Metadata"] = metadata_df.schema
-
-    if bags_df is not None:
-        bags_path = os.path.join(out_dir, "Bags")
-        if mode == "append":
-            assert_append_compatible(
-                bags_df.sparkSession, bags_path, bags_df.schema
-            )
-        bags_df.write.options(**writer_opts).mode(mode).parquet(bags_path)
-        tables["Bags"] = bags_df.schema
+    for name, df, _path in sidecars:
+        tables[name] = df.schema
 
     if mode == "append":
         # the DDL script must list EVERY table in the layout, including
@@ -1732,13 +1840,17 @@ def _write_bag_tables(
     with open(os.path.join(out_dir, "load_tables.sql"), "w") as f:
         f.write(load_script(tables))
 
-    # one job for both scalars (was two back-to-back actions on the
-    # same cached frame)
+    # one job for every scalar the callers need (count/size for the
+    # summary, the last offset and its time for the ingest-state cursor)
     _row = seq.agg(
         F.count(F.lit(1)).alias("__n"),
         F.sum(F.length("data")).alias("__sz"),
+        F.max("offset").alias("__mo"),
+        F.max_by("time_ns", "offset").alias("__lt"),
     ).collect()[0]
-    return int(_row["__n"]), float(_row["__sz"] or 0)
+    return _BatchTotals(
+        int(_row["__n"]), float(_row["__sz"] or 0), _row["__mo"], _row["__lt"]
+    )
 
 
 #: conn_id slot width in the combined (bag_index, conn_id) remap key — bags
@@ -2207,7 +2319,7 @@ def convert_bags(
         _BAGS_SCHEMA,
     )
 
-    count, size = _write_bag_tables(
+    count, size, *_ = _write_bag_tables(
         seq,
         conns_df,
         out_dir,

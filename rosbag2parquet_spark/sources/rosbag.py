@@ -21,8 +21,12 @@ Record ops (header field ``op``, 1 byte):
                        message_definition, callerid?, latching?)
     0x02 message data conn u32, time u64 (lo u32 = secs, hi u32 = nsecs)
                       (data = serialized message)
-    0x04 index data / 0x06 chunk info — skipped (indexes are a read
-                      optimization; the sequential scan needs neither)
+    0x06 chunk info   chunk_pos u64, start_time, end_time, count u32
+                      (data = count x (conn u32, msg_count u32)): per-chunk
+                      time bounds and connection set drive chunk pruning,
+                      and the message counts drive index-derived seqno
+    0x04 index data   skipped (per-connection message index; the
+                      sequential chunk walk does not need it)
 
 Distribution model: the driver makes ONE cheap header-walk over top-level
 records (seeks only — lengths, not payloads), listing chunk byte-ranges and
@@ -39,7 +43,11 @@ configurable — multi-MB bz2/lz4 chunks are spec-conformant, so a fixed
 shift would reject valid bags). The offset is monotone in bag order
 (chunks are laid out sequentially, messages sequentially within), unique,
 and stable across partitionings; seqno downstream is the rank of this
-offset, exactly like the SBAG path.
+offset, exactly like the SBAG path — or, when every chunk carries a
+ChunkInfo message count, the scan emits seqno itself: the driver
+prefix-sums the counts in file order into per-chunk bases, each message
+gets base + its ordinal in the chunk, and the reader checks every walked
+chunk against its declared count (``read_rosbag(seqno=True)``).
 """
 
 from __future__ import annotations
@@ -79,7 +87,9 @@ class ChunkRef(NamedTuple):
     ``size`` field; equal to data_len for uncompressed chunks).
     start_ns/end_ns/conn_ids come from the bag's ChunkInfo index records
     (0x06) when present — the pruning statistics for time-range and topic
-    filters; 0/() = unknown, never pruned."""
+    filters; 0/() = unknown, never pruned. ``count`` is the chunk's total
+    message count from the same record (the sum over its connections);
+    -1 = unknown."""
 
     pos: int
     compression: str
@@ -87,7 +97,12 @@ class ChunkRef(NamedTuple):
     start_ns: int = 0
     end_ns: int = 0
     conn_ids: tuple = ()
+    count: int = -1
 
+
+#: marker of the reader's per-chunk count check failure; the driver finds
+#: it in the error Spark relays from the Python worker
+CHUNK_COUNT_MISMATCH = "inconsistent ChunkInfo index"
 
 #: floor for the scan-derived shift — 20 bits = 1 MiB covers rosbag's
 #: default 768 KB chunk threshold, so typical bags all share one shift
@@ -266,21 +281,21 @@ def _scan_rosbag_uncached(
             elif op == OP_CHUNK_INFO and "chunk_pos" in fields:
                 # ChunkInfo (index region): per-chunk time bounds and the
                 # per-connection message counts — the chunk-pruning stats
+                # and the prefix sums of index-derived seqno
                 (cpos,) = struct.unpack("<Q", fields["chunk_pos"])
                 ssec, snsec = struct.unpack("<II", fields["start_time"])
                 esec, ensec = struct.unpack("<II", fields["end_time"])
                 f.seek(data_start)
                 data = f.read(dlen)
-                cids = tuple(
-                    sorted(
-                        struct.unpack_from("<I", data, 8 * k)[0]
-                        for k in range(dlen // 8)
-                    )
-                )
+                pairs = [
+                    struct.unpack_from("<II", data, 8 * k)
+                    for k in range(dlen // 8)
+                ]
                 chunk_infos[cpos] = (
                     ssec * 1_000_000_000 + snsec,
                     esec * 1_000_000_000 + ensec,
-                    cids,
+                    tuple(sorted(cid for cid, _ in pairs)),
+                    sum(n for _, n in pairs),
                 )
             # 0x04 skipped: per-connection message indexes
             pos = nxt
@@ -290,6 +305,7 @@ def _scan_rosbag_uncached(
                 start_ns=chunk_infos[c.pos][0],
                 end_ns=chunk_infos[c.pos][1],
                 conn_ids=chunk_infos[c.pos][2],
+                count=chunk_infos[c.pos][3],
             )
             if c.pos in chunk_infos
             else c
@@ -331,13 +347,21 @@ def _scan_rosbag_uncached(
 
 
 def iter_chunk_messages(
-    path: str, chunk_index: int, chunk_pos: int, compression: str, shift: int
+    path: str,
+    chunk_index: int,
+    chunk_pos: int,
+    compression: str,
+    shift: int,
+    count: int = -1,
 ):
     """Walk one chunk's inner records → (offset, time_ns, conn_id, payload).
     offset = (chunk_index << shift) | within-chunk position, with the shift
     scan-derived (`offset_shift`). Connection records inside the chunk are
     skipped here (the driver scan collects them from the index region;
-    rosbag writes them in both)."""
+    rosbag writes them in both). A known ``count`` (the chunk's ChunkInfo
+    total) must equal the number of messages walked: index-derived seqno
+    trusts it, so a wrong index fails loudly instead of numbering twice or
+    leaving gaps."""
     with open(path, "rb") as f:
         fields, data_start, dlen, _ = _read_record_at(f, chunk_pos)
         if fields["op"][0] != OP_CHUNK:
@@ -355,6 +379,7 @@ def iter_chunk_messages(
         )
 
     pos = 0
+    walked = 0
     import io
 
     bio = io.BytesIO(inner)
@@ -362,6 +387,7 @@ def iter_chunk_messages(
         rfields, dstart, rdlen, nxt = _read_record_at(bio, pos)
         op = rfields["op"][0]
         if op == OP_MSG:
+            walked += 1
             conn_id = struct.unpack("<I", rfields["conn"])[0]
             secs, nsecs = struct.unpack("<II", rfields["time"])
             bio.seek(dstart)
@@ -373,15 +399,59 @@ def iter_chunk_messages(
         pos = nxt
     if pos != len(inner):
         raise ValueError(f"{path}@{chunk_pos}: chunk not fully consumed")
+    if count >= 0 and walked != count:
+        raise ValueError(
+            f"{path}: chunk {chunk_index} at byte {chunk_pos} holds {walked} "
+            f"messages but its ChunkInfo declares {count} — "
+            f"{CHUNK_COUNT_MISMATCH} (run `rosbag reindex` upstream)"
+        )
 
 
 # -------------------------------------------------------------- datasource
 
 
+#: the scan schema of ``read_rosbag(seqno=True)``: MESSAGE_SCHEMA plus a
+#: trailing index-derived ``seqno``
+SEQNO_SCHEMA = T.StructType(
+    MESSAGE_SCHEMA.fields + [T.StructField("seqno", T.LongType(), False)]
+)
+
+
+def index_seqno_bases(chunks: "list[ChunkRef]") -> "list[int] | None":
+    """Per-chunk seqno base: the prefix sum of the ChunkInfo message counts
+    in file order (a rosbag's stored form of the reference's one global
+    counter, FlattenedRosWriter.cpp:256). None when any chunk lacks a
+    count — an unindexed or partly indexed bag cannot number itself."""
+    if any(c.count < 0 for c in chunks):
+        return None
+    bases, acc = [], 0
+    for c in chunks:
+        bases.append(acc)
+        acc += c.count
+    return bases
+
+
+def group_by_bytes(items: list, weights: "list[int]", n: int) -> "list[list]":
+    """Split ``items`` (in file order) into at most ``n`` CONTIGUOUS groups
+    of about equal total weight: each item joins the group its weight
+    midpoint falls in. Contiguity keeps every split one bag-order range,
+    so each output file covers one disjoint seqno range."""
+    w = [max(1, int(x)) for x in weights]
+    total = sum(w)
+    n = max(1, min(n, len(items)))
+    groups: list[list] = [[] for _ in range(n)]
+    cum = 0
+    for item, x in zip(items, w):
+        groups[min(n - 1, (2 * cum + x) * n // (2 * total))].append(item)
+        cum += x
+    return [g for g in groups if g]
+
+
 class _RosbagPartition(InputPartition):
-    def __init__(self, path: str, chunks: list[tuple[int, int, str]], shift: int):
+    def __init__(self, path: str, chunks: list[tuple], shift: int):
         self.path = path
-        self.chunks = chunks  # (chunk_index, pos, compression)
+        # (chunk_index, pos, compression, declared count, seqno base|None)
+        self.chunks = chunks
         self.shift = shift
 
 
@@ -397,38 +467,45 @@ class _RosbagReader(DataSourceReader):
         # entries carry the ORIGINAL file-order chunk index (pruning drops
         # entries, never renumbers) so offsets are filter-invariant
         self._chunks = (
-            [(i, ChunkRef(p, c, s)) for i, p, c, s in json.loads(cj)]
+            [(i, ChunkRef(p, c, s, count=n)) for i, p, c, s, n in json.loads(cj)]
             if cj
             else None
         )
         sh = options.get("offsetshift", options.get("offsetShift"))
         self._shift = int(sh) if sh else None
+        # index-derived seqno: one base per chunksJson entry
+        sb = options.get("seqnobases", options.get("seqnoBases"))
+        self._bases = json.loads(sb) if sb else None
 
     def partitions(self):
         if self._chunks is not None:
-            indexed = [(i, c.pos, c.compression) for i, c in self._chunks]
-            shift = self._shift or offset_shift([c for _, c in self._chunks])
-            if not indexed:
-                return [_RosbagPartition(self.path, [], shift)]
+            indexed = self._chunks
+            shift = self._shift or offset_shift([c for _, c in indexed])
         else:
             _, chunks = scan_rosbag(self.path)
+            indexed = list(enumerate(chunks))
             shift = offset_shift(chunks)
-            if not chunks:
-                return [_RosbagPartition(self.path, [], shift)]
-            indexed = [(i, c.pos, c.compression) for i, c in enumerate(chunks)]
-        n = max(1, min(self.n_partitions, len(indexed)))
-        per = (len(indexed) + n - 1) // n
+        if not indexed:
+            return [_RosbagPartition(self.path, [], shift)]
+        bases = self._bases or [None] * len(indexed)
+        entries = [
+            (i, c.pos, c.compression, c.count, base)
+            for (i, c), base in zip(indexed, bases)
+        ]
         return [
-            _RosbagPartition(self.path, indexed[i : i + per], shift)
-            for i in range(0, len(indexed), per)
+            _RosbagPartition(self.path, group, shift)
+            for group in group_by_bytes(
+                entries, [c.size for _, c in indexed], self.n_partitions
+            )
         ]
 
     def read(self, partition: _RosbagPartition):
         # Arrow-batched like the SBAG reader (one batch per chunk — rosbag
         # chunks are already the natural ≤1 MB batching unit)
+        import numpy as np
         import pyarrow as pa
 
-        for chunk_index, chunk_pos, compression in partition.chunks:
+        for chunk_index, chunk_pos, compression, count, base in partition.chunks:
             rows = list(
                 iter_chunk_messages(
                     partition.path,
@@ -436,20 +513,23 @@ class _RosbagReader(DataSourceReader):
                     chunk_pos,
                     compression,
                     partition.shift,
+                    count,
                 )
             )
             if not rows:
                 continue
             offs, times, conns, blobs = zip(*rows)
-            yield pa.record_batch(
-                [
-                    pa.array(offs, pa.int64()),
-                    pa.array(times, pa.int64()),
-                    pa.array(conns, pa.int32()),
-                    pa.array(blobs, pa.binary()),
-                ],
-                names=["offset", "time_ns", "conn_id", "data"],
-            )
+            cols = [
+                pa.array(offs, pa.int64()),
+                pa.array(times, pa.int64()),
+                pa.array(conns, pa.int32()),
+                pa.array(blobs, pa.binary()),
+            ]
+            if base is not None:
+                cols.append(
+                    pa.array(np.arange(base, base + len(rows), dtype=np.int64))
+                )
+            yield pa.record_batch(cols, names=SEQNO_SCHEMA.names[: len(cols)])
 
 
 class RosbagDataSource(DataSource):
@@ -460,6 +540,8 @@ class RosbagDataSource(DataSource):
         return "rosbag"
 
     def schema(self):
+        if self.options.get("seqnobases", self.options.get("seqnoBases")):
+            return SEQNO_SCHEMA
         return MESSAGE_SCHEMA
 
     def reader(self, schema):
@@ -478,29 +560,48 @@ def read_rosbag(
     start_ns: "int | None" = None,
     end_ns: "int | None" = None,
     conn_ids: "list[int] | None" = None,
+    seqno: bool = False,
 ) -> DataFrame:
     """``chunks``: pass the refs from an existing ``scan_rosbag`` walk so
     the datasource planner (a separate Python worker) skips its own.
     ``start_ns``/``end_ns``/``conn_ids`` prune whole chunks at PLAN time
     from the bag's ChunkInfo index stats (time bounds + per-connection
     counts — the container's row-group min/max); unknown-stat chunks are
-    kept, and an exact DataFrame filter gates the surviving rows."""
+    kept, and an exact DataFrame filter gates the surviving rows.
+
+    ``seqno=True`` adds a trailing global ``seqno`` numbered in the scan
+    from the ChunkInfo counts (`index_seqno_bases`) — equal to
+    ``assign_seqno`` over ``offset``, without its count job, shuffle and
+    window. It needs a count for every chunk and numbers the WHOLE bag, so
+    it refuses unindexed bags and filters (a filtered subset renumbers
+    through ``assign_seqno``). Chunks are split into ``num_partitions``
+    contiguous byte-balanced ranges either way."""
     register(spark)
-    if (start_ns is not None or end_ns is not None or conn_ids is not None) and (
-        chunks is None
-    ):
+    filtered = start_ns is not None or end_ns is not None or conn_ids is not None
+    if seqno and filtered:
+        raise ValueError(
+            "seqno=True numbers the whole bag; a filtered read must "
+            "renumber its kept rows with assign_seqno"
+        )
+    if (filtered or seqno) and chunks is None:
         chunks = scan_rosbag(path)[1]
+    bases = index_seqno_bases(chunks) if seqno else None
+    if seqno and bases is None:
+        raise ValueError(
+            f"{path}: seqno=True needs a ChunkInfo message count for "
+            "every chunk (unindexed bag — use assign_seqno)"
+        )
     r = (
         spark.read.format("rosbag")
         .option("path", path)
         .option("numPartitions", str(num_partitions))
     )
     if chunks is not None:
-        # serialize [ORIGINAL file-order index, pos, compression, size] and
-        # the shift derived from the FULL chunk list: a filtered read must
-        # yield the same offsets as the unfiltered read of the same bag
-        # (the MCAP pruning contract — seqno stays stable across filters),
-        # so pruning may drop entries but never renumber them
+        # serialize [ORIGINAL file-order index, pos, compression, size,
+        # count] and the shift derived from the FULL chunk list: a filtered
+        # read must yield the same offsets as the unfiltered read of the
+        # same bag (the MCAP pruning contract — seqno stays stable across
+        # filters), so pruning may drop entries but never renumber them
         shift = offset_shift(chunks)
         kept_ids = {
             id(c) for c in prune_chunks(chunks, start_ns, end_ns, conn_ids)
@@ -509,12 +610,14 @@ def read_rosbag(
             "chunksJson",
             json.dumps(
                 [
-                    [i, c.pos, c.compression, c.size]
+                    [i, c.pos, c.compression, c.size, c.count]
                     for i, c in enumerate(chunks)
                     if id(c) in kept_ids
                 ]
             ),
         ).option("offsetShift", str(shift))
+    if bases is not None:
+        r = r.option("seqnoBases", json.dumps(bases))
     df = r.load()
     from pyspark.sql import functions as F
 

@@ -537,3 +537,154 @@ def test_single_bag_layout_has_bags_manifest(spark, tmp_path):
 
     got = pertype_with_provenance(spark, out, "sensor_msgs_Imu")
     assert {(r.bag_index, r.bag) for r in got.collect()} == {(0, "solo.sbag")}
+
+
+def _multi_chunk_rosbag(path: str, n: int = 60, per_chunk: int = 7) -> None:
+    """Two types on three connections over ceil(n/per_chunk) chunks."""
+    conns = [
+        ConnectionInfo(1, "/imu", "sensor_msgs/Imu", "imu_md5", IMU_DEF),
+        ConnectionInfo(2, "/gps", "nav_msgs/Gps", "gps_md5", GPS_DEF),
+        ConnectionInfo(3, "/gps2", "nav_msgs/Gps", "gps_md5", GPS_DEF),
+    ]
+    imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
+    msgs = [
+        (1, 1_000 * (i + 1), imu) if i % 3 == 0
+        else (2 + i % 2, 1_000 * (i + 1), _gps_payload(i))
+        for i in range(n)
+    ]
+    write_rosbag(path, conns, msgs, compression="lz4", messages_per_chunk=per_chunk)
+
+
+def _messages_rows(spark, out: str) -> list:
+    return [
+        tuple(r)
+        for r in spark.read.parquet(os.path.join(out, "Messages"))
+        .select("seqno", "time_sec", "time_nsec", "size", "connection_id")
+        .orderBy("seqno")
+        .collect()
+    ]
+
+
+def _file_seqno_ranges(out: str, table: str) -> list:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in glob.glob(os.path.join(out, table, "*.parquet")):
+        col = pq.read_table(f, columns=["seqno"]).column("seqno")
+        if len(col):
+            ranges.append((col.to_pandas().min(), col.to_pandas().max()))
+    return sorted(ranges)
+
+
+def test_index_seqno_count_mismatch_raises(spark, tmp_path):
+    """A ChunkInfo that under-declares one chunk must never yield
+    duplicate or missing seqnos: convert_bag raises naming the chunk."""
+    from tests.test_rosbag import under_declare_chunk
+
+    path = str(tmp_path / "short.bag")
+    _multi_chunk_rosbag(path)
+    pos = under_declare_chunk(path, 3)
+    with pytest.raises(ValueError, match=f"chunk 3 at byte {pos} holds 7"):
+        convert_bag(spark, path, str(tmp_path / "out"), num_partitions=2)
+
+
+def test_unindexed_rosbag_converts_to_same_layout(spark, tmp_path):
+    """Without the index region (a crashed recorder) the bag numbers through
+    assign_seqno and lands the same layout as the indexed bag's scan-derived
+    seqno."""
+    from rosbag2parquet_spark.convert import _rosbag_index_complete
+    from rosbag2parquet_spark.sources.rosbag import _read_record_at, scan_rosbag
+
+    path = str(tmp_path / "indexed.bag")
+    _multi_chunk_rosbag(path)
+    _, chunks = scan_rosbag(path)
+    with open(path, "rb") as f:
+        end = _read_record_at(f, chunks[-1].pos)[3]
+        f.seek(0)
+        head = f.read(end)
+    unindexed = str(tmp_path / "unindexed.bag")
+    with open(unindexed, "wb") as f:
+        f.write(head)
+    assert _rosbag_index_complete(path)
+    assert not _rosbag_index_complete(unindexed)
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    assert convert_bag(spark, path, a).count == 60
+    assert convert_bag(spark, unindexed, b).count == 60
+    assert _messages_rows(spark, a) == _messages_rows(spark, b)
+    assert [r[0] for r in _messages_rows(spark, a)] == list(range(60))
+    for table in ("sensor_msgs_Imu", "nav_msgs_Gps"):
+        ta = spark.read.parquet(os.path.join(a, table)).drop("bag_index")
+        tb = spark.read.parquet(os.path.join(b, table)).drop("bag_index")
+        assert ta.count() > 0 and ta.exceptAll(tb).count() == 0
+        assert tb.exceptAll(ta).count() == 0
+
+
+def test_filtered_rosbag_convert_renumbers(spark, tmp_path):
+    """Topic- and time-filtered converts of an indexed multi-chunk bag keep
+    the assign_seqno plan: the kept rows renumber 0..N-1 in bag order."""
+    path = str(tmp_path / "filt.bag")
+    _multi_chunk_rosbag(path)
+    out = str(tmp_path / "topics")
+    info = convert_bag(spark, path, out, topics=["/gps"])
+    rows = _messages_rows(spark, out)
+    assert info.count == len(rows) == 20
+    assert [r[0] for r in rows] == list(range(20))
+    assert {r[4] for r in rows} == {2}
+    # time window [10 us, 30 us): messages 9..28 in bag order
+    out = str(tmp_path / "window")
+    info = convert_bag(spark, path, out, start_ns=10_000, end_ns=30_000)
+    rows = _messages_rows(spark, out)
+    assert [r[0] for r in rows] == list(range(20))
+    assert [r[2] for r in rows] == [1_000 * (i + 1) for i in range(9, 29)]
+
+
+def test_messages_files_disjoint_seqno_ranges(spark, tmp_path):
+    """Scan splits are contiguous chunk ranges, so each Messages and
+    per-type file covers one disjoint seqno range — file-level min/max
+    skipping on seqno works."""
+    path = str(tmp_path / "ranges.bag")
+    _multi_chunk_rosbag(path, n=90, per_chunk=10)
+    out = str(tmp_path / "out")
+    convert_bag(spark, path, out, num_partitions=3)
+    for table in ("Messages", "nav_msgs_Gps"):
+        ranges = _file_seqno_ranges(out, table)
+        assert len(ranges) == 3
+        assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+    ranges = _file_seqno_ranges(out, "Messages")
+    assert ranges[0][0] == 0 and ranges[-1][1] == 89
+    assert all(hi + 1 == lo for (_, hi), (lo, _) in zip(ranges, ranges[1:]))
+
+
+def test_scan_split_sizing(spark, tmp_path):
+    """num_partitions=None sizes the scan like a Spark file scan from the
+    session's settings: 2 splits for a ~4.7 MB bag on 4 cores, ~800 for
+    100 GB; an explicit num_partitions is still honored."""
+    from rosbag2parquet_spark.convert import (
+        _conf_bytes,
+        scan_partitions,
+        split_count,
+    )
+
+    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
+    assert split_count(4_726_474, 4, max_bytes, open_cost) == 2
+    assert split_count(100 << 30, 4, max_bytes, open_cost) == 800
+    assert split_count(0, 4, max_bytes, open_cost) == 1
+    assert scan_partitions(spark, 100 << 30) == 800
+    key = "spark.sql.files.openCostInBytes"
+    spark.conf.set(key, "1m")
+    try:
+        assert _conf_bytes(spark, key) == 1 << 20
+    finally:
+        spark.conf.unset(key)
+
+    path = str(tmp_path / "small.bag")
+    _multi_chunk_rosbag(path, n=90, per_chunk=10)
+    default_out, explicit_out = str(tmp_path / "d"), str(tmp_path / "e")
+    convert_bag(spark, path, default_out)
+    convert_bag(spark, path, explicit_out, num_partitions=4)
+    assert len(_file_seqno_ranges(default_out, "Messages")) == 1
+    assert len(_file_seqno_ranges(explicit_out, "Messages")) == 4

@@ -369,3 +369,101 @@ def test_rosbag_offsets_stable_across_filters(spark, tmp_path):
     assert len(by_conn) == 20
     for r in by_conn:
         assert r.offset == full[(r.time_ns, r.conn_id)]
+
+
+def _two_conn_messages(n: int) -> list:
+    t0 = 1_700_000_000_000_000_000
+    return [
+        (1 if i % 3 else 2, t0 + i * 1_000_000, bytes([i % 256]) * (1 + i % 5))
+        for i in range(n)
+    ]
+
+
+def under_declare_chunk(path: str, k: int) -> int:
+    """Lower the first per-connection count of chunk k's ChunkInfo record by
+    one, in place (same record length); returns that chunk's byte position."""
+    import os
+    import struct
+
+    import rosbag2parquet_spark.sources.rosbag as rb
+
+    _, chunks = scan_rosbag(path)
+    target = chunks[k].pos
+    with open(path, "r+b") as f:
+        pos, size = len(rb.ROSBAG_MAGIC), os.path.getsize(path)
+        while pos + 8 <= size:
+            fields, data_start, _dlen, nxt = rb._read_record_at(f, pos)
+            if (
+                fields["op"][0] == rb.OP_CHUNK_INFO
+                and struct.unpack("<Q", fields["chunk_pos"])[0] == target
+            ):
+                f.seek(data_start + 4)
+                (n,) = struct.unpack("<I", f.read(4))
+                f.seek(data_start + 4)
+                f.write(struct.pack("<I", n - 1))
+                return target
+            pos = nxt
+    raise AssertionError(f"no ChunkInfo for chunk {k}")
+
+
+@pytest.mark.parametrize("compression", ["none", "bz2", "lz4"])
+def test_index_seqno_equals_assign_seqno(spark, tmp_path, compression):
+    """The seqno the scan derives from ChunkInfo counts equals
+    assign_seqno's rank of the offset, row for row, on a multi-chunk
+    two-connection bag under every chunk codec."""
+    from rosbag2parquet_spark.operators.keys import assign_seqno
+
+    path = str(tmp_path / f"idx_{compression}.bag")
+    write_rosbag(
+        path, _PRUNE_CONNS, _two_conn_messages(60),
+        compression=compression, messages_per_chunk=7,
+    )
+    _, chunks = scan_rosbag(path)
+    assert [c.count for c in chunks] == [7] * 8 + [4]
+    got = read_rosbag(spark, path, num_partitions=3, seqno=True)
+    assert got.columns == ["offset", "time_ns", "conn_id", "data", "seqno"]
+    assert got.rdd.getNumPartitions() == 3
+    want = assign_seqno(read_rosbag(spark, path), ["offset"])
+    got_map = {r.offset: r.seqno for r in got.collect()}
+    assert got_map == {r.offset: r.seqno for r in want.collect()}
+    assert sorted(got_map.values()) == list(range(60))
+
+
+def test_chunk_count_check_in_every_read(spark, tmp_path):
+    """A ChunkInfo that under-declares a chunk fails the read loudly,
+    naming the chunk — with and without index-derived seqno."""
+    path = str(tmp_path / "short.bag")
+    write_rosbag(path, _PRUNE_CONNS, _two_conn_messages(40), messages_per_chunk=10)
+    pos = under_declare_chunk(path, 2)
+    for seqno in (True, False):
+        with pytest.raises(Exception, match=f"chunk 2 at byte {pos} holds 10"):
+            read_rosbag(spark, path, num_partitions=2, seqno=seqno).collect()
+
+
+def test_index_seqno_refuses_unindexed_and_filtered(tmp_path, spark):
+    from rosbag2parquet_spark.sources.rosbag import index_seqno_bases
+
+    path = str(tmp_path / "idx.bag")
+    write_rosbag(path, _PRUNE_CONNS, _two_conn_messages(25), messages_per_chunk=10)
+    _, chunks = scan_rosbag(path)
+    assert index_seqno_bases(chunks) == [0, 10, 20]
+    assert index_seqno_bases(chunks[:1] + [chunks[1]._replace(count=-1)]) is None
+    with pytest.raises(ValueError, match="renumber"):
+        read_rosbag(spark, path, start_ns=0, seqno=True)
+    empty = str(tmp_path / "empty.bag")
+    write_rosbag(empty, _PRUNE_CONNS, [])  # one empty chunk, no ChunkInfo
+    with pytest.raises(ValueError, match="ChunkInfo message count"):
+        read_rosbag(spark, empty, seqno=True)
+
+
+def test_group_by_bytes_contiguous_and_balanced():
+    from rosbag2parquet_spark.sources.rosbag import group_by_bytes
+
+    items = list(range(10))
+    groups = group_by_bytes(items, [100] * 10, 8)
+    assert len(groups) == 8 and [i for g in groups for i in g] == items
+    assert group_by_bytes(items, [100] * 10, 2) == [items[:5], items[5:]]
+    # weights, not item counts, decide the cut
+    assert group_by_bytes(items, [900] + [100] * 9, 2) == [[0], items[1:]]
+    assert group_by_bytes(items, [0] * 10, 1) == [items]
+    assert group_by_bytes([0, 1], [5, 5], 8) == [[0], [1]]

@@ -91,9 +91,7 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
         t0 = time.perf_counter()
         # the reference's full program: Messages + Connections + one
         # FLATTENED typed table per type (blob per MessageTable.cpp:339)
-        info = convert_bag(
-            spark, bag, os.path.join(work, "out"), num_partitions=32
-        )
+        info = convert_bag(spark, bag, os.path.join(work, "out"))
         dt = time.perf_counter() - t0
 
         out_mb = sum(
@@ -239,7 +237,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
         spark.range(1).count()
         load_bag(spark, bag, num_partitions=4)[0].limit(1).count()
         t0 = time.perf_counter()
-        info = convert_bag(spark, bag, os.path.join(work, "out"), num_partitions=32)
+        info = convert_bag(spark, bag, os.path.join(work, "out"))
         dt = time.perf_counter() - t0
         return {
             "bag_mb": round(bag_mb, 1),
@@ -404,7 +402,7 @@ def run_export(
         spark = spark or get_spark("bench_convert")
         spark.range(1).count()
         layout = os.path.join(work, "layout")
-        convert_bag(spark, bag, layout, num_partitions=32)
+        convert_bag(spark, bag, layout)
 
         t0 = time.perf_counter()
         info = export_mcap(spark, layout, os.path.join(work, "exp"), parts=4)
