@@ -29,6 +29,7 @@ Returns the same summary the reference's library API returns
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -1303,7 +1304,7 @@ def _leading_stamp_offset(
     stamp)"). Handles both Header shapes: ros1 (uint32 seq, time stamp,
     string frame_id — stamp at +4) and ros2 (builtin_interfaces/Time
     stamp first — stamp at the origin)."""
-    from rosbag2parquet_spark.sources.decode import _FIXED_SIZE
+    from rosbag2parquet_spark.sources.decode import WIRE
     from rosbag2parquet_spark.sources.jsonschema import JSON_DEF_PREFIX
     from rosbag2parquet_spark.sources.msgdef import (
         TIME_TYPES,
@@ -1312,7 +1313,7 @@ def _leading_stamp_offset(
     )
     from rosbag2parquet_spark.sources.protobuf import PROTOBUF_DEF_PREFIX
 
-    if serialization not in ("ros1", "cdr") or not msg_def.strip():
+    if serialization not in WIRE or not msg_def.strip():
         return None
     if msg_def.startswith((PROTOBUF_DEF_PREFIX, JSON_DEF_PREFIX)):
         return None
@@ -1330,19 +1331,15 @@ def _leading_stamp_offset(
     hdr = _resolve(f0.type_name, pkg, specs)
     if hdr is None:
         return None
-    off = 4 if serialization == "cdr" else 0  # CDR: post-encapsulation
-
-    def align(o: int, sz: int) -> int:
-        if serialization != "cdr":
-            return o
-        return o + (-(o - 4)) % min(sz, 8)
-
+    wire = WIRE[serialization]
+    sizes = {t: s[0] for t, s in wire.scalars().items()}
+    off = wire.origin
     for f in hdr.fields:
         if f.is_array:
             return None
         if f.type_name in TIME_TYPES:
-            return align(off, 4)
-        if f.type_name not in _FIXED_SIZE:
+            return wire.pad(off, 4)
+        if f.type_name not in sizes:
             # the ros2 spelling: builtin_interfaces/Time stamp — a nested
             # struct of exactly two 4-byte ints (sec, nanosec)
             sub = _resolve(f.type_name, pkg, specs)
@@ -1351,15 +1348,14 @@ def _leading_stamp_offset(
                 and sub is not None
                 and len(sub.fields) == 2
                 and all(
-                    (not sf.is_array)
-                    and _FIXED_SIZE.get(sf.type_name) == 4
+                    (not sf.is_array) and sizes.get(sf.type_name) == 4
                     for sf in sub.fields
                 )
             ):
-                return align(off, 4)
+                return wire.pad(off, 4)
             return None
-        sz = _FIXED_SIZE[f.type_name]
-        off = align(off, sz) + sz
+        sz = sizes[f.type_name]
+        off = wire.pad(off, sz) + sz
     return None
 
 
@@ -1487,13 +1483,6 @@ def _write_bag_tables(
     decode."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    if serialization == "cdr":
-        from rosbag2parquet_spark.sources.rosbag2 import (
-            decode_messages_cdr as decode_messages,
-        )
-    else:
-        from rosbag2parquet_spark.sources.decode import decode_messages
-
     from rosbag2parquet_spark.sources import conn_rows_of
 
     # tiny dim (reference snapshots it at open); the driver-parsed memo
@@ -1618,6 +1607,7 @@ def _write_bag_tables(
             slice_df = seq.filter(
                 F.col("conn_id").isin(conn_ids)
             ).withColumnRenamed("data", "__raw__")
+            keep = ("seqno", "conn_id", "__raw__", "__bag_index__")
             if not msg_def.strip():
                 # blob-preserving fallback: no decodable schema text for
                 # this type (e.g. an MCAP ros2idl-encoded schema) — the
@@ -1625,53 +1615,41 @@ def _write_bag_tables(
                 # connection + the raw payload blob still land, and a
                 # later pass with real msgdefs can flatten from this
                 # table alone
-                flat = slice_df.select(
-                    "seqno", "conn_id", "__raw__", "__bag_index__"
-                )
-            elif msg_def.startswith(PROTOBUF_DEF_PREFIX):
-                # protobuf channel (MCAP schema encoding 'protobuf'): the
-                # msg_def slot carries the marked FileDescriptorSet; the
-                # protobuf tier flattens with the same column conventions
-                # as the ros decoders (sources/protobuf.py)
-                from rosbag2parquet_spark.sources.protobuf import (
-                    decode_messages_protobuf,
-                )
-
-                flat = decode_messages_protobuf(
-                    slice_df,
-                    datatype,
-                    msg_def,
-                    data_col="__raw__",
-                    keep_cols=("seqno", "conn_id", "__raw__", "__bag_index__"),
-                    arrays=arrays,
-                    unsigned=unsigned,
-                    on_error=on_error,
-                )
-            elif msg_def.startswith(JSON_DEF_PREFIX):
-                # jsonschema channel (MCAP schema encoding 'jsonschema'):
-                # decodes ENTIRELY JVM-side — from_json against the
-                # schema-compiled StructType, no Python worker at all
-                from rosbag2parquet_spark.sources.jsonschema import (
-                    decode_messages_json,
-                )
-
-                flat = decode_messages_json(
-                    slice_df,
-                    datatype,
-                    msg_def,
-                    data_col="__raw__",
-                    keep_cols=("seqno", "conn_id", "__raw__", "__bag_index__"),
-                    arrays=arrays,
-                    unsigned=unsigned,
-                    on_error=on_error,
-                )
+                flat = slice_df.select(*keep)
             else:
-                flat = decode_messages(
+                if msg_def.startswith(PROTOBUF_DEF_PREFIX):
+                    # protobuf channel (MCAP schema encoding 'protobuf'):
+                    # the msg_def slot carries the marked
+                    # FileDescriptorSet; the protobuf tier flattens with
+                    # the same column conventions as the ros decoders
+                    # (sources/protobuf.py)
+                    from rosbag2parquet_spark.sources.protobuf import (
+                        decode_messages_protobuf as decode,
+                    )
+                elif msg_def.startswith(JSON_DEF_PREFIX):
+                    # jsonschema channel (MCAP schema encoding
+                    # 'jsonschema'): decodes ENTIRELY JVM-side — from_json
+                    # against the schema-compiled StructType, no Python
+                    # worker at all
+                    from rosbag2parquet_spark.sources.jsonschema import (
+                        decode_messages_json as decode,
+                    )
+                else:
+                    # ros1 / cdr: one decoder, the wire rules picked by
+                    # the container's serialization
+                    from rosbag2parquet_spark.sources.decode import (
+                        decode_messages,
+                    )
+
+                    decode = functools.partial(
+                        decode_messages, serialization=serialization
+                    )
+                flat = decode(
                     slice_df,
                     datatype,
                     msg_def,
                     data_col="__raw__",
-                    keep_cols=("seqno", "conn_id", "__raw__", "__bag_index__"),
+                    keep_cols=keep,
                     arrays=arrays,
                     unsigned=unsigned,
                     on_error=on_error,

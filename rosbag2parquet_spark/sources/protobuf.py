@@ -355,7 +355,7 @@ def compile_proto(
 ) -> _Compiled:
     """One walk builds BOTH the flattened Spark schema and the decode plan,
     so column order and decode slots always agree (the same invariant the
-    msg-def compiler keeps, decode.py:519-521)."""
+    msg-def compiler keeps with its decoder, ``decode.make_decoder``)."""
     if arrays not in ("skip", "blobs", "native"):
         raise ValueError(f"arrays must be skip|blobs|native, got {arrays!r}")
     if unsigned not in ("signed", "exact"):
@@ -563,74 +563,29 @@ def decode_messages_protobuf(
     unsigned: str = "signed",
     on_error: str = "fail",
 ) -> DataFrame:
-    """Protobuf payloads → flattened typed columns; same contract as the
-    ros1/CDR tiers (decode.py:506, rosbag2.py:867): Arrow-batched
-    mapInPandas, ``on_error='permissive'`` dead-letters bad rows with a
-    ``_decode_error`` column instead of killing the conversion. Decode is
-    a per-row wire walk (the tier-3 analog — protobuf's tag-length
-    framing has no fixed stride to vectorize over)."""
-    import pandas as pd
+    """Protobuf payloads → flattened typed columns through the shared
+    Arrow-batched driver (:func:`sources.decode.map_decode`), the same
+    contract as the ROS 1/CDR tiers: ``on_error='permissive'``
+    dead-letters bad rows with a ``_decode_error`` column instead of
+    killing the conversion. Decode is a per-row wire walk (the tier-3
+    analog — protobuf's tag-length framing has no fixed stride to
+    vectorize over)."""
+    from rosbag2parquet_spark.sources.decode import map_decode
 
-    if on_error not in ("fail", "permissive"):
-        raise ValueError(f"on_error must be fail|permissive, got {on_error!r}")
     compiled = compile_proto(
         root_type, fds_from_msgdef(msg_def), arrays=arrays, unsigned=unsigned
     )
-    decode = make_proto_decoder(compiled)
-    flat = compiled.schema
-    if on_error == "permissive":
-        flat = T.StructType(
-            [T.StructField(f.name, f.dataType, True) for f in flat.fields]
-        )
-    extra = (
-        [T.StructField("_decode_error", T.StringType(), True)]
-        if on_error == "permissive"
-        else []
+    # exact-mode uint64 columns ship as DECIMAL(20,0); this tier's
+    # repeated-uint64 decode yields plain-int lists, which the driver's
+    # decimal conversion passes through
+    return map_decode(
+        df,
+        compiled.schema,
+        make_proto_decoder(compiled),
+        data_col=data_col,
+        keep_cols=keep_cols,
+        on_error=on_error,
     )
-    out_schema = T.StructType(
-        [df.schema[c] for c in keep_cols] + list(flat.fields) + extra
-    )
-    from rosbag2parquet_spark.sources.decode import (
-        decimal_col_names,
-        decimalize_cols,
-    )
-
-    flat_names = [f.name for f in flat.fields]
-    # exact-mode uint64 columns ship as DECIMAL(20,0) — the shared scan
-    # covers array<DECIMAL> too (this tier's repeated-uint64 decode
-    # yields plain-int lists, which the shared converter passes through)
-    dec_names, dec_arr_names = decimal_col_names(flat)
-
-    def run(batches) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cols: dict = {c: pdf[c].values for c in keep_cols}
-            if on_error == "permissive":
-                per_col: dict = {n: [] for n in flat_names}
-                errs = []
-                for b in pdf[data_col]:
-                    try:
-                        row = decode(bytes(b))
-                    except Exception as exc:
-                        for n in flat_names:
-                            per_col[n].append(None)
-                        errs.append(f"{type(exc).__name__}: {exc}")
-                    else:
-                        for i, n in enumerate(flat_names):
-                            per_col[n].append(row[i])
-                        errs.append(None)
-                per_col["_decode_error"] = errs
-                cols.update(per_col)
-            else:
-                decoded = [decode(bytes(b)) for b in pdf[data_col]]
-                for i, n in enumerate(flat_names):
-                    cols[n] = [row[i] for row in decoded]
-            decimalize_cols(cols, dec_names, dec_arr_names)
-            yield pd.DataFrame(cols)
-
-    sel = list(keep_cols) + ([data_col] if data_col not in keep_cols else [])
-    return df.select(*sel).mapInPandas(run, schema=out_schema)
 
 
 # ------------------------------------------------- wire write (fixtures)

@@ -260,14 +260,12 @@ def test_decode_permissive_salvages_bad_rows(spark, tmp_path):
 
 
 def test_decode_permissive_cdr(spark, tmp_path):
-    """Same dead-letter behavior on the CDR twin."""
+    """Same dead-letter behavior with the CDR wire rules."""
     import sqlite3
     import struct
 
-    from rosbag2parquet_spark.sources.rosbag2 import (
-        decode_messages_cdr,
-        read_rosbag2,
-    )
+    from rosbag2parquet_spark.sources.decode import decode_messages
+    from rosbag2parquet_spark.sources.rosbag2 import read_rosbag2
 
     deftext = "uint32 a\nstring s\n"
     hdr = b"\x00\x01\x00\x00"
@@ -293,13 +291,44 @@ def test_decode_permissive_cdr(spark, tmp_path):
     con.close()
     raw = read_rosbag2(spark, path, num_partitions=1)
     out = (
-        decode_messages_cdr(raw, "demo/P", deftext, on_error="permissive")
+        decode_messages(
+            raw, "demo/P", deftext, on_error="permissive", serialization="cdr"
+        )
         .orderBy("offset")
         .collect()
     )
     assert len(out) == 5
     assert sum(1 for r in out if r._decode_error is not None) == 1
     assert [r.s for r in out if r._decode_error is None] == ["ok"] * 4
+
+
+@pytest.mark.parametrize("grammar", ["ros1", "cdr", "protobuf"])
+def test_decode_rejects_unknown_on_error(spark, grammar):
+    """A misspelled on_error must raise, never silently run as 'fail' —
+    one check in the shared decode driver covers every payload grammar."""
+    from rosbag2parquet_spark.sources.decode import decode_messages
+    from rosbag2parquet_spark.sources.protobuf import (
+        TYPE_INT32,
+        build_fds,
+        decode_messages_protobuf,
+        msgdef_from_fds,
+    )
+
+    df = spark.createDataFrame(
+        [(0, 1, 1, bytearray(b"\x00\x01\x00\x00\x05\x00\x00\x00"))],
+        "offset long, time_ns long, conn_id int, data binary",
+    )
+    with pytest.raises(ValueError, match="on_error"):
+        if grammar == "protobuf":
+            fds = build_fds("demo", {"P": [("a", 1, TYPE_INT32)]})
+            decode_messages_protobuf(
+                df, "demo.P", msgdef_from_fds(fds), on_error="permisive"
+            )
+        else:
+            decode_messages(
+                df, "demo/P", "int32 a\n", on_error="permisive",
+                serialization=grammar,
+            )
 
 
 def test_append_pads_to_older_messages_vintage(spark, tmp_path):

@@ -241,7 +241,7 @@ def test_unsigned_exact_uint64_array_cdr(spark):
 
     from pyspark.sql import Row
 
-    from rosbag2parquet_spark.sources.rosbag2 import decode_messages_cdr
+    from rosbag2parquet_spark.sources.decode import decode_messages
 
     big = (1 << 63) + 424242
     enc = b"\x00\x01\x00\x00"
@@ -273,14 +273,17 @@ def test_unsigned_exact_uint64_array_cdr(spark):
         df = spark.createDataFrame(
             [Row(offset=0, time_ns=1, conn_id=1, data=bytearray(payload))]
         )
-        got = decode_messages_cdr(
-            df, "demo/T", msgdef, arrays="native", unsigned="exact"
+        got = decode_messages(
+            df, "demo/T", msgdef, arrays="native", unsigned="exact",
+            serialization="cdr",
         )
         assert (
             got.schema["xs"].dataType.simpleString() == "array<decimal(20,0)>"
         ), msgdef
         assert [int(x) for x in got.collect()[0]["xs"]] == [big, 7], msgdef
-        parity = decode_messages_cdr(df, "demo/T", msgdef, arrays="native")
+        parity = decode_messages(
+            df, "demo/T", msgdef, arrays="native", serialization="cdr"
+        )
         assert parity.schema["xs"].dataType.simpleString() == "array<bigint>"
         assert list(parity.collect()[0]["xs"]) == [big - (1 << 64), 7]
 
@@ -292,7 +295,7 @@ def test_unsigned_exact_uint64_decimal_cdr(spark):
 
     from pyspark.sql import Row
 
-    from rosbag2parquet_spark.sources.rosbag2 import decode_messages_cdr
+    from rosbag2parquet_spark.sources.decode import decode_messages
 
     big = (1 << 63) + 98765
     enc = b"\x00\x01\x00\x00"  # CDR_LE encapsulation
@@ -314,10 +317,12 @@ def test_unsigned_exact_uint64_decimal_cdr(spark):
         df = spark.createDataFrame(
             [Row(offset=0, time_ns=1, conn_id=1, data=bytearray(payload))]
         )
-        exact = decode_messages_cdr(df, "demo/T", msgdef, unsigned="exact")
+        exact = decode_messages(
+            df, "demo/T", msgdef, unsigned="exact", serialization="cdr"
+        )
         assert exact.schema[col].dataType.simpleString() == "decimal(20,0)", msgdef
         assert int(exact.collect()[0][col]) == big, msgdef
-        parity = decode_messages_cdr(df, "demo/T", msgdef)
+        parity = decode_messages(df, "demo/T", msgdef, serialization="cdr")
         assert parity.collect()[0][col] == big - (1 << 64), msgdef
 
 

@@ -377,20 +377,20 @@ def test_cdr_tiers_agree_on_random_messages(case):
 
     import numpy as np
 
-    from rosbag2parquet_spark.sources.rosbag2 import (
-        cdr_variable_layout,
-        make_cdr_decoder,
-        make_cdr_vector_decoder,
+    from rosbag2parquet_spark.sources.decode import (
+        make_decoder,
+        make_vector_decoder,
+        variable_layout,
     )
 
     msgdef, payloads, mode = case
     specs = parse_msgdef("fuzz/T", msgdef)
     flat = to_struct_type("fuzz/T", specs, arrays=mode)
     names = [f.name for f in flat.fields]
-    row_dec = make_cdr_decoder("fuzz/T", specs, arrays=mode)
-    ops = cdr_variable_layout("fuzz/T", specs, arrays=mode)
+    row_dec = make_decoder("fuzz/T", specs, arrays=mode, serialization="cdr")
+    ops = variable_layout("fuzz/T", specs, arrays=mode, serialization="cdr")
     assert ops is not None, "strategy only emits scan-supported shapes"
-    vec = make_cdr_vector_decoder(ops)(payloads)
+    vec = make_vector_decoder(ops, serialization="cdr")(payloads)
     rows = [row_dec(p) for p in payloads]
 
     def eq(a, b):

@@ -9,12 +9,11 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources.decode import decode_messages, make_decoder
 from rosbag2parquet_spark.sources.msgdef import parse_msgdef, to_struct_type
 from rosbag2parquet_spark.sources.rosbag2 import (
     CDR_LE_HEADER,
-    decode_messages_cdr,
     is_rosbag2,
-    make_cdr_decoder,
     read_rosbag2,
     read_topics,
     rosbag2_connections_df,
@@ -155,7 +154,7 @@ def test_scan_partitioned(spark, db3_bag):
 
 def test_cdr_decoder_values():
     specs = parse_msgdef("geometry_msgs/PoseLite", POSE_DEF)
-    dec = make_cdr_decoder("geometry_msgs/PoseLite", specs)
+    dec = make_decoder("geometry_msgs/PoseLite", specs, serialization="cdr")
     vals = dec(encode_pose(7, 123, 456, "map", 2.5, -1.25, 3, "home"))
     # flattened order: header_seq, header_stamp_sec, header_stamp_nanosec,
     # header_frame_id, x, y, flags, label
@@ -166,7 +165,7 @@ def test_cdr_decoder_alignment_odd_strings():
     """Strings of varying length force realignment before the doubles —
     the case that distinguishes CDR from ROS 1 packed serialization."""
     specs = parse_msgdef("geometry_msgs/PoseLite", POSE_DEF)
-    dec = make_cdr_decoder("geometry_msgs/PoseLite", specs)
+    dec = make_decoder("geometry_msgs/PoseLite", specs, serialization="cdr")
     for frame in ("", "a", "ab", "abc", "abcd", "abcde"):
         vals = dec(encode_pose(1, 2, 3, frame, 1.0, 2.0, 9, "x"))
         assert vals[3] == frame and vals[4] == 1.0 and vals[5] == 2.0
@@ -174,19 +173,153 @@ def test_cdr_decoder_alignment_odd_strings():
 
 def test_cdr_native_arrays():
     specs = parse_msgdef("sensor_msgs/ImuLite", IMU_DEF)
-    dec = make_cdr_decoder("sensor_msgs/ImuLite", specs, arrays="native")
+    dec = make_decoder(
+        "sensor_msgs/ImuLite", specs, arrays="native", serialization="cdr"
+    )
     vals = dec(encode_imu(5, (1.0, 2.0, 3.0), "base"))
     assert vals == (5, [1.0, 2.0, 3.0], "base")
     # skip mode: array omitted, scalars still aligned correctly after it
-    dec_skip = make_cdr_decoder("sensor_msgs/ImuLite", specs, arrays="skip")
+    dec_skip = make_decoder(
+        "sensor_msgs/ImuLite", specs, arrays="skip", serialization="cdr"
+    )
     assert dec_skip(encode_imu(5, (1.0, 2.0, 3.0), "base")) == (5, "base")
+
+
+_TF_DEPS = """
+================================================================================
+MSG: geometry_msgs/TransformStamped
+std_msgs/Header header
+string child_frame_id
+geometry_msgs/Transform transform
+================================================================================
+MSG: std_msgs/Header
+builtin_interfaces/Time stamp
+string frame_id
+================================================================================
+MSG: builtin_interfaces/Time
+int32 sec
+uint32 nanosec
+================================================================================
+MSG: geometry_msgs/Transform
+geometry_msgs/Vector3 translation
+geometry_msgs/Quaternion rotation
+================================================================================
+MSG: geometry_msgs/Vector3
+float64 x
+float64 y
+float64 z
+================================================================================
+MSG: geometry_msgs/Quaternion
+float64 x
+float64 y
+float64 z
+float64 w
+"""
+# tf2_msgs/TFMessage verbatim, and a twin with fields around the array so
+# the walk's position after it is observable
+TF_DEF = "geometry_msgs/TransformStamped[] transforms" + _TF_DEPS
+TF_TAGGED_DEF = (
+    "string name\ngeometry_msgs/TransformStamped[] transforms\nint32 tail"
+    + _TF_DEPS
+)
+
+
+def _cdr_transforms(buf: bytearray, transforms) -> None:
+    _align(buf, 4)
+    buf.extend(struct.pack("<I", len(transforms)))
+    for sec, nanosec, frame, child, xyz, quat in transforms:
+        _align(buf, 4)
+        buf.extend(struct.pack("<iI", sec, nanosec))
+        _cdr_string(buf, frame)
+        _cdr_string(buf, child)
+        _align(buf, 8)
+        buf.extend(struct.pack("<3d", *xyz))
+        buf.extend(struct.pack("<4d", *quat))
+
+
+def _tf_transforms(i: int):
+    # odd-length frame names move every element's 8-byte alignment
+    return [
+        (i, 10 * k, "o" * ((i + k) % 4), "c" * (k + 1), (k, -k, 0.5),
+         (0.0, 0.0, 0.0, 1.0))
+        for k in range(i % 3)
+    ]
+
+
+def encode_tf(transforms) -> bytes:
+    buf = bytearray(CDR_LE_HEADER)
+    _cdr_transforms(buf, transforms)
+    return bytes(buf)
+
+
+def encode_tf_tagged(name, transforms, tail) -> bytes:
+    buf = bytearray(CDR_LE_HEADER)
+    _cdr_string(buf, name)
+    _cdr_transforms(buf, transforms)
+    _align(buf, 4)
+    buf.extend(struct.pack("<i", tail))
+    return bytes(buf)
+
+
+def test_cdr_skips_arrays_of_nested_messages():
+    """An array of variable-size messages (TFMessage's TransformStamped[])
+    is skipped in both skip and native modes — the schema has no column
+    for it — and the walk lands exactly on the fields after it."""
+    tf = parse_msgdef("tf2_msgs/TFMessage", TF_DEF)
+    tagged = parse_msgdef("demo/TaggedTF", TF_TAGGED_DEF)
+    for mode in ("skip", "native"):
+        dec_tf = make_decoder(
+            "tf2_msgs/TFMessage", tf, arrays=mode, serialization="cdr"
+        )
+        dec = make_decoder(
+            "demo/TaggedTF", tagged, arrays=mode, serialization="cdr"
+        )
+        for i in range(6):
+            assert dec_tf(encode_tf(_tf_transforms(i))) == ()
+            got = dec(encode_tf_tagged("ab"[: i % 3], _tf_transforms(i), 7 - i))
+            assert got == ("ab"[: i % 3], 7 - i), (mode, i)
+
+
+def test_convert_bag_rosbag2_tf_topic(spark, tmp_path):
+    """A .db3 with a TFMessage topic converts: its per-type tables land
+    with every message, the tagged twin's fields decoded around the
+    skipped array."""
+    from rosbag2parquet_spark.convert import convert_bag
+    from rosbag2parquet_spark.sources.baglike import ConnectionInfo
+    from rosbag2parquet_spark.sources.rosbag2 import write_db3
+
+    path = str(tmp_path / "tf.db3")
+    t0 = 1_700_000_000_000_000_000
+    msgs = []
+    for i in range(12):
+        msgs.append((1, t0 + 2 * i, encode_tf(_tf_transforms(i))))
+        msgs.append(
+            (2, t0 + 2 * i + 1,
+             encode_tf_tagged(f"n{i}", _tf_transforms(i), 100 + i))
+        )
+    write_db3(
+        path,
+        [
+            ConnectionInfo(1, "/tf", "tf2_msgs/TFMessage", "", TF_DEF),
+            ConnectionInfo(2, "/tagged", "demo/TaggedTF", "", TF_TAGGED_DEF),
+        ],
+        msgs,
+    )
+    out = str(tmp_path / "out")
+    info = convert_bag(spark, path, out)
+    assert info.count == 24
+    assert spark.read.parquet(out + "/tf2_msgs_TFMessage").count() == 12
+    rows = spark.read.parquet(out + "/demo_TaggedTF").orderBy("seqno").collect()
+    assert [(r.name, r.tail) for r in rows] == [
+        (f"n{i}", 100 + i) for i in range(12)
+    ]
 
 
 def test_decode_messages_cdr_distributed(spark, db3_bag):
     msgs = read_rosbag2(spark, db3_bag, num_partitions=3)
     pose = msgs.filter(F.col("conn_id") == 1)
-    flat = decode_messages_cdr(
-        pose, "geometry_msgs/PoseLite", POSE_DEF
+    flat = decode_messages(
+        pose, "geometry_msgs/PoseLite", POSE_DEF, serialization="cdr"
     ).orderBy("offset")
     rows = flat.collect()
     assert len(rows) == 20
@@ -276,26 +409,51 @@ def encode_fixed(seq, sec, nanosec, accel, temp, valid) -> bytes:
 
 
 def test_cdr_fixed_layout_detection():
-    from rosbag2parquet_spark.sources.rosbag2 import cdr_fixed_layout
+    from rosbag2parquet_spark.sources.decode import fixed_layout
 
     specs = parse_msgdef("sensor_msgs/Fixed", FIXED_DEF)
-    dt = cdr_fixed_layout("sensor_msgs/Fixed", specs, arrays="native")
+    dt = fixed_layout(
+        "sensor_msgs/Fixed", specs, arrays="native", serialization="cdr"
+    )
     assert dt is not None
     # u32(0..4) + time(4..12) + pad(12..16) + 3d(16..40) + i16(40..42) + bool
     assert dt.itemsize == 43
     assert dt.fields["accel"][1] == 16
     # any string field disables the tier
     pose_specs = parse_msgdef("geometry_msgs/PoseLite", POSE_DEF)
-    assert cdr_fixed_layout("geometry_msgs/PoseLite", pose_specs) is None
+    assert fixed_layout(
+        "geometry_msgs/PoseLite", pose_specs, serialization="cdr"
+    ) is None
+
+
+def test_cdr_fixed_tier_tolerates_trailing_pad():
+    """CDR writers may pad a payload by up to 7 bytes: the fixed-stride
+    tier decodes padded batches like the per-row walk does and refuses
+    anything past that."""
+    from rosbag2parquet_spark.sources.decode import (
+        fixed_layout,
+        make_fixed_decoder,
+    )
+
+    specs = parse_msgdef("sensor_msgs/Fixed", FIXED_DEF)
+    dec = make_fixed_decoder(
+        fixed_layout("sensor_msgs/Fixed", specs, serialization="cdr"), "cdr"
+    )
+    rows = [encode_fixed(i, i, i, (0.5, 1.5, 2.5), -i, True) for i in range(4)]
+    want = dec(rows)
+    got = dec([r + b"\x00" for r in rows])
+    assert [list(v) for v in got.values()] == [list(v) for v in want.values()]
+    with pytest.raises(ValueError, match="fixed-stride"):
+        dec([r + b"\x00" * 8 for r in rows])
 
 
 def test_cdr_vectorized_tier_matches_per_row(spark):
     """The frombuffer tier and the per-row walk must agree value-for-value
     (the ROS 1 decoder has the same cross-tier fuzz guarantee)."""
-    from rosbag2parquet_spark.sources.rosbag2 import make_cdr_decoder
-
     specs = parse_msgdef("sensor_msgs/Fixed", FIXED_DEF)
-    dec = make_cdr_decoder("sensor_msgs/Fixed", specs, arrays="native")
+    dec = make_decoder(
+        "sensor_msgs/Fixed", specs, arrays="native", serialization="cdr"
+    )
     payloads = [
         encode_fixed(i, 100 + i, i * 7, (i * 0.5, -i, 9.81), i - 5, i % 2 == 0)
         for i in range(50)
@@ -304,8 +462,9 @@ def test_cdr_vectorized_tier_matches_per_row(spark):
     df = spark.createDataFrame(
         rows, "offset long, time_ns long, conn_id int, data binary"
     ).repartition(3)
-    flat = decode_messages_cdr(
-        df, "sensor_msgs/Fixed", FIXED_DEF, arrays="native"
+    flat = decode_messages(
+        df, "sensor_msgs/Fixed", FIXED_DEF, arrays="native",
+        serialization="cdr",
     )
     got = {r.offset: r for r in flat.collect()}
     assert len(got) == 50
@@ -426,24 +585,23 @@ def test_convert_bag_rosbag2_self_describing(spark, db3_bag_embedded, tmp_path):
 
 
 def _vector_tier(root, deftext, payloads, arrays="skip", unsigned="signed"):
-    from rosbag2parquet_spark.sources.rosbag2 import (
-        cdr_variable_layout,
-        make_cdr_vector_decoder,
+    from rosbag2parquet_spark.sources.decode import (
+        make_vector_decoder,
+        variable_layout,
     )
 
     specs = parse_msgdef(root, deftext)
-    ops = cdr_variable_layout(specs=specs, root_type=root, arrays=arrays,
-                              unsigned=unsigned)
+    ops = variable_layout(specs=specs, root_type=root, arrays=arrays,
+                          unsigned=unsigned, serialization="cdr")
     assert ops is not None, "expected the vector tier to engage"
-    return make_cdr_vector_decoder(ops)(payloads)
+    return make_vector_decoder(ops, serialization="cdr")(payloads)
 
 
 def _row_tier(root, deftext, payloads, arrays="skip", unsigned="signed"):
-    from rosbag2parquet_spark.sources.rosbag2 import make_cdr_decoder
-
     specs = parse_msgdef(root, deftext)
     flat = to_struct_type(root, specs, arrays=arrays, unsigned=unsigned)
-    dec = make_cdr_decoder(root, specs, arrays=arrays, unsigned=unsigned)
+    dec = make_decoder(root, specs, arrays=arrays, unsigned=unsigned,
+                       serialization="cdr")
     names = [f.name for f in flat.fields]
     rows = [dec(p) for p in payloads]
     return {n: [r[i] for r in rows] for i, n in enumerate(names)}
@@ -455,7 +613,7 @@ def _assert_tiers_agree(vec, row):
     # vec is keyed by the walker's ORIGINAL field names, row by the
     # sanitized schema names (msgdef._sanitize_flat_names, e.g. a blob
     # field named `data` → `data_`); the walk order is identical, so
-    # compare positionally — the same remap decode_messages_cdr does
+    # compare positionally — the same remap the shared decode driver does
     assert len(vec) == len(row)
     for (kv, gv), (k, wv) in zip(vec.items(), row.items()):
         assert k == kv or k.rstrip("_") == kv, (k, kv)
@@ -545,13 +703,13 @@ def test_cdr_vector_tier_blobs():
 
 
 def test_cdr_vector_tier_distributed_matches(spark, db3_bag):
-    """The wired decode_messages_cdr path (which now picks the vector tier
+    """The wired decode_messages(serialization='cdr') path (which now picks the vector tier
     for PoseLite — strings make it variable) must still match the golden
     values end-to-end."""
     msgs = read_rosbag2(spark, db3_bag, num_partitions=3)
     pose = msgs.filter(F.col("conn_id") == 1)
-    flat = decode_messages_cdr(
-        pose, "geometry_msgs/PoseLite", POSE_DEF
+    flat = decode_messages(
+        pose, "geometry_msgs/PoseLite", POSE_DEF, serialization="cdr"
     ).orderBy("offset")
     rows = flat.collect()
     assert len(rows) == 20
@@ -560,11 +718,13 @@ def test_cdr_vector_tier_distributed_matches(spark, db3_bag):
 
 
 def test_cdr_vector_tier_rejects_string_arrays():
-    from rosbag2parquet_spark.sources.rosbag2 import cdr_variable_layout
+    from rosbag2parquet_spark.sources.decode import variable_layout
 
     d = "string[] names\nuint32 n\n"
     specs = parse_msgdef("x/StrArr", d)
-    assert cdr_variable_layout("x/StrArr", specs, arrays="native") is None
+    assert variable_layout(
+        "x/StrArr", specs, arrays="native", serialization="cdr"
+    ) is None
 
 
 # ----------------------------------------------- multi-shard directories
