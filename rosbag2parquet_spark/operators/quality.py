@@ -354,7 +354,7 @@ def validate(
     # the rows), and the scalar piece folds n / v_i / that key's surplus
     # out of the reduced rows — the fact table is scanned ONCE, and every
     # coarser key / FK re-aggregates the reduced table, whose exchange the
-    # planner shares via ReusedExchange (plan-asserted in plans/r14).
+    # planner shares via ReusedExchange.
     # Cost shape at 100 TB: the keyed shuffle (already paid by the
     # uniqueness rule) carries len(row_local) extra longs per DISTINCT
     # key row; in exchange a whole second fact scan disappears.

@@ -31,10 +31,13 @@ from the ChunkIndex records — on a 100 GB MCAP over object storage that
 is a few KB of ranged reads instead of a seek-walk across the whole file.
 Files without a summary (or with top-level unchunked messages, which the
 summary cannot enumerate) fall back to the single top-level seek-walk,
-which still never decompresses chunk bodies. Each task then decompresses
-and walks only its own chunks. Offsets are ``(chunk_index << shift) |
-inner_pos`` for chunked files and raw record offsets for unchunked ones
-(mixing both in one file is refused — the orderings don't compose).
+which still never decompresses chunk bodies. That plan feeds the
+container interface (`sources/container.py`): ``open_container`` turns it
+into scan units (chunks, or counted spans of top-level messages) and
+``read_units`` decompresses and walks only the units of one split.
+Offsets are ``(chunk_index << shift) | inner_pos`` for chunked files and
+raw record offsets for unchunked ones (mixing both in one file is
+refused — the orderings don't compose).
 """
 
 from __future__ import annotations
@@ -44,11 +47,17 @@ import struct
 import zlib
 from dataclasses import dataclass
 from functools import lru_cache
-from typing import Iterator, NamedTuple
-
-from pyspark.sql import DataFrame, SparkSession
+from typing import NamedTuple
 
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo
+from rosbag2parquet_spark.sources.container import (
+    Container,
+    ConnRow,
+    Unit,
+    message_batch,
+    offset_shift,
+    record_spans,
+)
 
 MCAP_MAGIC = b"\x89MCAP0\r\n"
 
@@ -68,9 +77,6 @@ OP_DATA_END = 0x0F
 
 #: Footer record: opcode(1) + length(8) + payload(20), then trailing magic
 _FOOTER_RECORD_LEN = 29
-
-_MIN_CHUNK_SHIFT = 20
-
 
 class McapChunkRef(NamedTuple):
     """records_off/records_size locate the (possibly compressed) inner
@@ -600,11 +606,6 @@ def point_read(
     return None
 
 
-def offset_shift(chunks: list) -> int:
-    largest = max((c.size or c.records_size for c in chunks), default=0)
-    return max(_MIN_CHUNK_SHIFT, int(largest).bit_length())
-
-
 def _parse_message(buf: bytes, s: int, ln: int):
     (cid,) = struct.unpack_from("<H", buf, s)
     (log_time,) = struct.unpack_from("<Q", buf, s + 6)
@@ -619,8 +620,8 @@ def mcap_connection_rows(path: str) -> list[tuple]:
     other encoding (ros2idl, jsonschema, ...) gets an EMPTY msg_def so
     the converter blob-preserves that type (Messages/Connections + raw
     data, no flatten) — the reference's own array posture (columnarize
-    what you can, keep the blob). Shared by the single-bag dim and the
-    fleet planner so both paths agree on decodability."""
+    what you can, keep the blob). ``open_container`` serves them to the
+    single-bag and the fleet converter alike."""
     from rosbag2parquet_spark.sources.protobuf import msgdef_from_fds, parse_fds
 
     scan = scan_mcap(path)
@@ -662,23 +663,6 @@ def mcap_connection_rows(path: str) -> list[tuple]:
         else:
             rows.append((cid, topic, name, "", "", "", ""))
     return rows
-
-
-def mcap_connections_df(spark: SparkSession, path: str) -> DataFrame:
-    """Connections dim from the embedded Channel+Schema records — the
-    engine's 7-column shape; see :func:`mcap_connection_rows` for the
-    per-encoding msg_def contract."""
-    from rosbag2parquet_spark.sources import attach_conn_rows
-
-    rows = mcap_connection_rows(path)
-    return attach_conn_rows(
-        spark.createDataFrame(
-            rows,
-            "connection_id int, topic string, datatype string, md5sum string, "
-            "msg_def string, callerid string, latching string",
-        ),
-        rows,
-    )
 
 
 def _parse_attachment(buf: bytes, s: int, ln: int, path: str) -> tuple:
@@ -840,19 +824,6 @@ def mcap_metadata(path: str) -> "list[tuple[str, dict]]":
     return out
 
 
-def mcap_attachments_df(spark: SparkSession, path: str) -> "DataFrame | None":
-    """Attachments as a table (None when the bag carries none):
-    (name, media_type, log_time, create_time, data)."""
-    rows = mcap_attachments(path)
-    if not rows:
-        return None
-    return spark.createDataFrame(
-        [(n, m, lt, ct, bytes(d)) for lt, ct, n, m, d in rows],
-        "name string, media_type string, log_time long, create_time long, "
-        "data binary",
-    )
-
-
 def mcap_serialization(path: str) -> str:
     """'cdr' | 'ros1' — from the msg-def-DECODABLE channels'
     message_encoding (one per file; mixed decodable encodings are refused,
@@ -880,44 +851,6 @@ def mcap_serialization(path: str) -> str:
     return mapped[decodable.pop()] if decodable else "cdr"
 
 
-def seqno_bucket_width(path: str) -> int:
-    scan = scan_mcap(path)
-    if scan.chunks:
-        shift = offset_shift(scan.chunks)
-        stride = 1 << shift
-        return stride * max(1, -(-len(scan.chunks) // 64))
-    return max(100_000, os.path.getsize(path) // 64 + 1)
-
-
-def chunks_in_range(
-    chunks: list,
-    start_ns: "int | None",
-    end_ns: "int | None",
-    conn_ids: "list[int] | None" = None,
-) -> list:
-    """Plan-time pruning: keep (original_index, ref) for chunks whose
-    [start_time, end_time] bounds overlap [start_ns, end_ns) AND whose
-    MessageIndex channel membership intersects ``conn_ids``. Chunks with
-    unknown bounds (0,0) or unknown membership (()) are never pruned.
-    This is the index-side predicate pushdown: a time-windowed or
-    topic-filtered query over a 100 GB MCAP decompresses only the chunks
-    that can contain matches — the same role parquet row-group min/max
-    and dictionary filters play."""
-    want = set(conn_ids) if conn_ids is not None else None
-    out = []
-    for i, c in enumerate(chunks):
-        known = c.start_time or c.end_time
-        if known:
-            if start_ns is not None and c.end_time < start_ns:
-                continue
-            if end_ns is not None and c.start_time >= end_ns:
-                continue
-        if want is not None and c.channels and not (set(c.channels) & want):
-            continue
-        out.append((i, c))
-    return out
-
-
 def _walk_records_salvage(buf: bytes):
     """Defensive record walk for permissive reads of a CRC-failed chunk:
     yields records until the first malformed header instead of raising —
@@ -935,138 +868,85 @@ def _walk_records_salvage(buf: bytes):
         pos = start + ln
 
 
-def read_mcap(
-    spark: SparkSession,
-    path: str,
-    num_partitions: int = 8,
-    start_ns: "int | None" = None,
-    end_ns: "int | None" = None,
-    conn_ids: "list[int] | None" = None,
-    on_error: str = "fail",
-    start_chunk: "int | None" = None,
-) -> DataFrame:
-    """(offset, time_ns, conn_id=channel_id, data) — the shared scan schema.
-    Chunked files partition by chunk (each task decompresses its own);
-    unchunked files partition the top-level message list by record offset
-    (records are self-delimiting, so any record boundary is a valid task
-    start). ``start_ns``/``end_ns`` push the time range into the PLAN:
-    chunks outside the range are dropped before any task runs (their
-    ChunkIndex/header time bounds are the pruning statistics — the same
-    role parquet row-group min/max play), and surviving tasks apply the
-    exact per-message filter. Offsets are unchanged by pruning (the chunk
-    keeps its file-order index), so seqno stays stable across filters."""
-    import pandas as pd
+# --------------------------------------------------------------- container
 
-    from rosbag2parquet_spark.sources.baglike import MESSAGE_SCHEMA
 
-    path = os.path.abspath(path)
+def open_container(
+    path: str, msgdefs: "dict[str, str] | None" = None, start: "int | None" = None
+) -> Container:
+    """Units from the memoized plan (`scan_mcap`): one per chunk — ChunkIndex
+    or chunk-header time bounds, MessageIndex channel set, count unknown —
+    or, for unchunked files, counted spans of top-level Message records.
+    ``start`` is a chunk index: earlier chunks drop at plan time (the resume
+    cursor — an appender extends the chunk list and rewrites only the
+    summary). ``msgdefs`` is unused: MCAP embeds its schemas."""
     scan = scan_mcap(path)
-    lo_ns = start_ns if start_ns is not None else -1
-    hi_ns = end_ns if end_ns is not None else (1 << 63) - 1
-    want_cids = frozenset(int(c) for c in conn_ids) if conn_ids is not None else None
-
     if scan.chunks:
-        shift = offset_shift(scan.chunks)
-        rows = [
-            (i, c.records_off, c.records_size, c.compression, c.size)
-            for i, c in chunks_in_range(scan.chunks, start_ns, end_ns, conn_ids)
-            # incremental-resume cursor: whole already-converted chunks
-            # drop at PLAN time (the chunk keeps its file-order index, so
-            # delta offsets stay monotone after the converted prefix)
-            if start_chunk is None or i >= start_chunk
+        shift = offset_shift([c.size or c.records_size for c in scan.chunks])
+        units = [
+            Unit((i, c.records_off, c.records_size, c.compression, c.size, shift),
+                 c.size or c.records_size, -1, c.start_time, c.end_time,
+                 c.channels)
+            for i, c in enumerate(scan.chunks)
+            if start is None or i >= start
         ]
-        if not rows:
-            return spark.createDataFrame([], MESSAGE_SCHEMA)
-        n = max(1, min(num_partitions, len(rows)))
-        plan_df = spark.createDataFrame(
-            rows, "idx long, off long, sz long, comp string, usz long"
-        ).repartition(n, "idx")
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                for idx, off, sz, comp, usz in zip(
-                    pdf["idx"], pdf["off"], pdf["sz"], pdf["comp"], pdf["usz"]
-                ):
-                    ref = McapChunkRef(int(off), int(sz), comp, int(usz))
-                    walk = _walk_records
-                    try:
-                        inner = _read_chunk_records(path, ref)
-                    except McapCrcError as e:
-                        if on_error != "permissive":
-                            raise
-                        # salvage: keep the decompressed bytes, walk what
-                        # still parses (defensive walk stops at the first
-                        # malformed header); corrupt payloads dead-letter
-                        # per row at decode
-                        inner = e.data
-                        walk = _walk_records_salvage
-                    if len(inner) > (1 << shift):
-                        raise ValueError(
-                            f"{path}: chunk {idx} larger than its declared "
-                            f"size implies (shift {shift})"
-                        )
-                    out = {"offset": [], "time_ns": [], "conn_id": [], "data": []}
-                    for op, s, ln, rpos in walk(inner):
-                        if op != OP_MESSAGE:
-                            continue
-                        cid, t, payload = _parse_message(inner, s, ln)
-                        if not (lo_ns <= t < hi_ns):
-                            continue
-                        if want_cids is not None and cid not in want_cids:
-                            continue
-                        out["offset"].append((int(idx) << shift) | rpos)
-                        out["time_ns"].append(t)
-                        out["conn_id"].append(cid)
-                        out["data"].append(payload)
-                    if out["offset"]:
-                        yield pd.DataFrame(out)
-
-        return plan_df.mapInPandas(run, schema=MESSAGE_SCHEMA)
-
-    offs = scan.message_offsets
-    if not offs:
-        return spark.createDataFrame([], MESSAGE_SCHEMA)
-    n = max(1, min(num_partitions, len(offs)))
-    per = (len(offs) + n - 1) // n
-    spans = [
-        (offs[i], offs[min(i + per, len(offs)) - 1] + 1)
-        for i in range(0, len(offs), per)
-    ]
-    plan_df = spark.createDataFrame(spans, "lo long, hi long").repartition(
-        len(spans), "lo"
+        max_offset, label = (len(scan.chunks) << shift) - 1, "chunk {0}"
+    else:
+        offs = scan.message_offsets
+        units = record_spans(offs, offs[-1] + 1 if offs else 0)
+        max_offset, label = (offs[-1] if offs else 0), "records at bytes {0}-{1}"
+    return Container(
+        path, "mcap", mcap_serialization(path),
+        [ConnRow(*r) for r in mcap_connection_rows(path)],
+        max_offset, units, label=label, index="record walk",
     )
 
-    def run_flat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        size = os.path.getsize(path)
-        for pdf in batches:
-            for lo, hi in zip(pdf["lo"], pdf["hi"]):
-                lo, hi = int(lo), int(hi)
-                out = {"offset": [], "time_ns": [], "conn_id": [], "data": []}
-                with open(path, "rb") as f:
-                    pos = lo
-                    while pos < min(hi + 9, size - 8) and pos + 9 <= size:
-                        f.seek(pos)
-                        head = f.read(9)
-                        op = head[0]
-                        (ln,) = struct.unpack("<Q", head[1:])
-                        if pos >= hi:
-                            break
-                        if op == OP_MESSAGE:
-                            f.seek(pos + 9)
-                            payload = f.read(ln)
-                            cid, t, data = _parse_message(payload, 0, ln)
-                            if lo_ns <= t < hi_ns and (
-                                want_cids is None or cid in want_cids
-                            ):
-                                out["offset"].append(pos)
-                                out["time_ns"].append(t)
-                                out["conn_id"].append(cid)
-                                out["data"].append(data)
-                        pos += 9 + ln
-                if out["offset"]:
-                    yield pd.DataFrame(out)
 
-    return plan_df.mapInPandas(run_flat, schema=MESSAGE_SCHEMA)
+def read_units(path: str, keys: list, start_ns=None, end_ns=None,
+               conn_ids=None, on_error="fail"):
+    """One Arrow batch per chunk or record span; the filters are left to the
+    driver. A chunk key is (index, records_off, records_size, compression,
+    size, shift) and a span key (lo, hi). ``on_error='permissive'``
+    salvages a CRC-failed chunk: whatever records still parse are kept
+    (corrupt payloads then dead-letter per row at decode)."""
+    for key in keys:
+        rows = []
+        if len(key) == 2:
+            lo, hi = key
+            with open(path, "rb") as f:
+                pos = lo
+                while pos < hi:
+                    f.seek(pos)
+                    head = f.read(9)
+                    if len(head) < 9:
+                        raise ValueError(f"{path}: truncated record header at {pos}")
+                    (ln,) = struct.unpack("<Q", head[1:])
+                    if head[0] == OP_MESSAGE:
+                        cid, t, data = _parse_message(f.read(ln), 0, ln)
+                        rows.append((pos, t, cid, data))
+                    pos += 9 + ln
+        else:
+            idx, off, size_c, comp, size_u, shift = key
+            walk = _walk_records
+            try:
+                inner = _read_chunk_records(
+                    path, McapChunkRef(off, size_c, comp, size_u)
+                )
+            except McapCrcError as e:
+                if on_error != "permissive":
+                    raise
+                inner, walk = e.data, _walk_records_salvage
+            if len(inner) > (1 << shift):
+                raise ValueError(
+                    f"{path}: chunk {idx} larger than its declared size "
+                    f"implies (shift {shift})"
+                )
+            for op, s, ln, rpos in walk(inner):
+                if op == OP_MESSAGE:
+                    cid, t, data = _parse_message(inner, s, ln)
+                    rows.append(((idx << shift) | rpos, t, cid, data))
+        if rows:
+            yield message_batch(*zip(*rows))
 
 
 # ---------------------------------------------------------------- writer

@@ -9,11 +9,11 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from rosbag2parquet_spark.sources.baglike import (
-    ConnectionInfo,
+from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
+from rosbag2parquet_spark.sources.container import (
     connections_df,
-    read_bag,
-    write_bag,
+    open_bag,
+    read_messages,
 )
 from rosbag2parquet_spark.sources.decode import decode_messages, make_decoder
 from rosbag2parquet_spark.sources.msgdef import parse_msgdef
@@ -68,7 +68,7 @@ def bag_path(tmp_path_factory):
 
 def test_bag_scan_rows_and_order(spark, bag_path):
     """Source returns every message with stable offsets (bag order)."""
-    df = read_bag(spark, bag_path, num_partitions=2)
+    df = read_messages(spark, bag_path, num_partitions=2)
     rows = df.orderBy("offset").collect()
     assert len(rows) == 2
     assert rows[0].time_ns == 3_000_000_004 and rows[1].time_ns == 5_000_000_006
@@ -78,7 +78,7 @@ def test_bag_scan_rows_and_order(spark, bag_path):
 
 def test_connections_header_round_trip(spark, bag_path):
     """Connections metadata round-trips (ref test :229-244)."""
-    conns = connections_df(spark, bag_path).collect()
+    conns = connections_df(spark, open_bag(bag_path).conn_rows).collect()
     assert len(conns) == 1
     c = conns[0]
     assert (c.connection_id, c.topic, c.datatype, c.md5sum) == (
@@ -91,8 +91,8 @@ def test_decode_flattened_values(spark, bag_path):
     """The golden value assertions (ref test :283-301): header_seq,
     frame_id, stamp pair, orientation_w, angular_velocity_x — through the
     full distributed pipeline (DataSource scan → mapInPandas decode)."""
-    msgs = read_bag(spark, bag_path, num_partitions=2)
-    conns = connections_df(spark, bag_path).collect()[0]
+    msgs = read_messages(spark, bag_path, num_partitions=2)
+    conns = connections_df(spark, open_bag(bag_path).conn_rows).collect()[0]
     flat = decode_messages(msgs, conns.datatype, conns.msg_def)
     rows = flat.orderBy("offset").collect()
     assert len(rows) == 2
@@ -122,8 +122,8 @@ def test_decoder_asserts_full_consumption(bag_path):
 def test_partitioned_scan_consistency(spark, bag_path):
     """Different partition counts must yield identical content — byte-range
     splitting at record boundaries is exact."""
-    a = read_bag(spark, bag_path, num_partitions=1).collect()
-    b = read_bag(spark, bag_path, num_partitions=4).collect()
+    a = read_messages(spark, bag_path, num_partitions=1).collect()
+    b = read_messages(spark, bag_path, num_partitions=4).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
@@ -133,8 +133,8 @@ def test_bag_to_parquet_end_to_end(spark, bag_path, tmp_path):
     path."""
     from rosbag2parquet_spark.convert import convert
 
-    msgs = read_bag(spark, bag_path)
-    conns = connections_df(spark, bag_path)
+    msgs = read_messages(spark, bag_path)
+    conns = connections_df(spark, open_bag(bag_path).conn_rows)
     stream = (
         msgs.join(F.broadcast(conns), msgs.conn_id == conns.connection_id)
         .select(
@@ -160,7 +160,7 @@ def test_empty_bag_yields_zero_rows(spark, tmp_path):
     error (regression: range step 0 when the offset index is empty)."""
     path = str(tmp_path / "empty.sbag")
     write_bag(path, [ConnectionInfo(1, "/t", "demo/Reading", "m5", "uint32 x")], [])
-    assert read_bag(spark, path).count() == 0
+    assert read_messages(spark, path).count() == 0
 
 
 def test_bag_info_rollup(spark, bag_path):
@@ -225,7 +225,7 @@ def test_vectorized_decode_equals_row_loop(spark, tmp_path):
         [ConnectionInfo(1, "/t", "fix/Fast", "m", d)],
         [(1, 10 + i, pay(i)) for i in range(6)],
     )
-    msgs = read_bag(spark, path, num_partitions=2)
+    msgs = read_messages(spark, path, num_partitions=2)
     out = decode_messages(msgs, "fix/Fast", d).orderBy("offset").collect()
     decode = make_decoder("fix/Fast", specs)
     for i, r in enumerate(out):
@@ -413,7 +413,7 @@ def test_blob_extraction_mode(spark, tmp_path):
         [ConnectionInfo(1, "/cam", "sensor_msgs/CompressedImage", "m", IMG_BLOB_DEF)],
         [(1, 100 + i, bufs[i]) for i in range(len(bufs))],
     )
-    msgs = read_bag(spark, path, num_partitions=2).withColumnRenamed("data", "__raw")
+    msgs = read_messages(spark, path, num_partitions=2).withColumnRenamed("data", "__raw")
     out = decode_messages(
         msgs, "sensor_msgs/CompressedImage", IMG_BLOB_DEF,
         data_col="__raw", arrays="blobs",

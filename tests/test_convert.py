@@ -231,7 +231,7 @@ def test_decode_permissive_salvages_bad_rows(spark, tmp_path):
     import pytest as _pytest
 
     from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
-    from rosbag2parquet_spark.sources.baglike import read_bag
+    from rosbag2parquet_spark.sources.container import read_messages
     from rosbag2parquet_spark.sources.decode import decode_messages
 
     deftext = "uint32 a\nstring s\n"
@@ -241,7 +241,7 @@ def test_decode_permissive_salvages_bad_rows(spark, tmp_path):
     msgs = [(1, 1_000_000_000 + i, good(i)) for i in range(5)]
     msgs.insert(3, (1, 1_000_000_003, bad))
     write_bag(path, [ConnectionInfo(1, "/t", "demo/P", "", deftext)], msgs)
-    raw = read_bag(spark, path, num_partitions=1)
+    raw = read_messages(spark, path, num_partitions=1)
 
     with _pytest.raises(Exception):
         decode_messages(raw, "demo/P", deftext).collect()
@@ -265,7 +265,7 @@ def test_decode_permissive_cdr(spark, tmp_path):
     import struct
 
     from rosbag2parquet_spark.sources.decode import decode_messages
-    from rosbag2parquet_spark.sources.rosbag2 import read_rosbag2
+    from rosbag2parquet_spark.sources.container import read_messages
 
     deftext = "uint32 a\nstring s\n"
     hdr = b"\x00\x01\x00\x00"
@@ -289,7 +289,7 @@ def test_decode_permissive_cdr(spark, tmp_path):
     con.executemany("INSERT INTO messages VALUES (?,?,?,?)", rows)
     con.commit()
     con.close()
-    raw = read_rosbag2(spark, path, num_partitions=1)
+    raw = read_messages(spark, path, num_partitions=1)
     out = (
         decode_messages(
             raw, "demo/P", deftext, on_error="permissive", serialization="cdr"
@@ -413,38 +413,3 @@ def test_publish_scratch_race_drops_loser_and_reraises_real_errors(tmp_path):
     with pytest.raises(OSError):
         publish_scratch(str(work2), str(tmp_path / "no_parent" / "x"))
     assert work2.exists()  # nothing silently discarded on a real error
-
-
-def test_conn_rows_memo_matches_collect(spark, tmp_path):
-    """r13: the driver-parsed Connections memo served to the converter
-    must equal a real collect of the same frame, field for field — and a
-    DERIVED frame (filter) must fall back to collect, never serve the
-    parent's memo."""
-    from rosbag2parquet_spark.sources import conn_rows_of
-    from rosbag2parquet_spark.sources.baglike import (
-        ConnectionInfo,
-        connections_df,
-        write_bag,
-    )
-
-    bag = str(tmp_path / "memo.sbag")
-    conns = [
-        ConnectionInfo(
-            conn_id=i,
-            topic=f"/t{i}",
-            datatype="std_msgs/String",
-            md5sum=f"md5-{i}",
-            msg_def="string data\n",
-        )
-        for i in range(3)
-    ]
-    write_bag(bag, conns, [(0, 1, b"\x00\x00\x00\x00")])
-    df = connections_df(spark, bag)
-    memo = conn_rows_of(df)
-    collected = df.collect()
-    assert [tuple(r) for r in memo] == [tuple(r) for r in collected]
-    assert [r.asDict() for r in memo] == [r.asDict() for r in collected]
-    filtered = df.filter("connection_id = 1")
-    assert [tuple(r) for r in conn_rows_of(filtered)] == [
-        tuple(r) for r in filtered.collect()
-    ]

@@ -594,7 +594,7 @@ def test_unindexed_rosbag_converts_to_same_layout(spark, tmp_path):
     """Without the index region (a crashed recorder) the bag numbers through
     assign_seqno and lands the same layout as the indexed bag's scan-derived
     seqno."""
-    from rosbag2parquet_spark.convert import _rosbag_index_complete
+    from rosbag2parquet_spark.sources.container import index_seqno_bases, open_bag
     from rosbag2parquet_spark.sources.rosbag import _read_record_at, scan_rosbag
 
     path = str(tmp_path / "indexed.bag")
@@ -607,8 +607,8 @@ def test_unindexed_rosbag_converts_to_same_layout(spark, tmp_path):
     unindexed = str(tmp_path / "unindexed.bag")
     with open(unindexed, "wb") as f:
         f.write(head)
-    assert _rosbag_index_complete(path)
-    assert not _rosbag_index_complete(unindexed)
+    assert index_seqno_bases(open_bag(path).units) is not None
+    assert index_seqno_bases(open_bag(unindexed).units) is None
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     assert convert_bag(spark, path, a).count == 60

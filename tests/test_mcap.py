@@ -8,11 +8,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, bag_format
+from rosbag2parquet_spark.sources.container import (
+    connections_df,
+    open_bag,
+    prune,
+    read_messages,
+)
 from rosbag2parquet_spark.sources.mcap import (
     is_mcap,
-    mcap_connections_df,
     mcap_serialization,
-    read_mcap,
     scan_mcap,
     write_mcap,
 )
@@ -67,20 +71,20 @@ def test_scan_dim(mcap_file):
 
 
 def test_connections_df(spark, mcap_file):
-    conns = mcap_connections_df(spark, mcap_file)
+    conns = connections_df(spark, open_bag(mcap_file).conn_rows)
     rows = {r.connection_id: r for r in conns.collect()}
     assert rows[1].topic == "/pose" and rows[1].datatype == "geometry_msgs/PoseLite"
     assert rows[2].msg_def == IMU_DEF
 
 
 def test_read_partitioned_matches_single(spark, mcap_file):
-    df = read_mcap(spark, mcap_file, num_partitions=4)
+    df = read_messages(spark, mcap_file, num_partitions=4)
     rows = df.orderBy("offset").collect()
     assert len(rows) == 40
     # bag order preserved by offset rank
     assert [r.conn_id for r in rows[:4]] == [1, 2, 1, 2]
     assert all(bytes(r.data).startswith(CDR_LE_HEADER) for r in rows[:2])
-    one = read_mcap(spark, mcap_file, num_partitions=1)
+    one = read_messages(spark, mcap_file, num_partitions=1)
     assert df.exceptAll(one).count() == 0 and one.exceptAll(df).count() == 0
 
 
@@ -292,8 +296,8 @@ def test_indexed_and_walk_paths_identical(spark, tmp_path):
     # equal because the files differ only after the data section)
     assert si.chunks == sw.chunks
     assert si.message_offsets == [] and sw.message_offsets == []
-    ri = read_mcap(spark, pi, num_partitions=3).orderBy("offset").collect()
-    rw = read_mcap(spark, pw, num_partitions=3).orderBy("offset").collect()
+    ri = read_messages(spark, pi, num_partitions=3).orderBy("offset").collect()
+    rw = read_messages(spark, pw, num_partitions=3).orderBy("offset").collect()
     assert [tuple(r) for r in ri] == [tuple(r) for r in rw]
     assert len(ri) == 120
 
@@ -305,7 +309,7 @@ def test_lz4_zstd_indexed_roundtrip(spark, tmp_path):
         p = str(tmp_path / f"c_{comp}.mcap")
         write_mcap(p, CONNS, _messages(60), chunked=True,
                    compression=comp, chunk_messages=13, indexed=True)
-        rows = read_mcap(spark, p, num_partitions=2).orderBy("offset").collect()
+        rows = read_messages(spark, p, num_partitions=2).orderBy("offset").collect()
         assert len(rows) == 60
         assert rows[0].conn_id == 1 and rows[1].conn_id == 2
 
@@ -314,8 +318,6 @@ def test_time_range_chunk_pruning(spark, tmp_path):
     """start/end prune whole chunks at PLAN time (ChunkIndex time bounds
     = the row-group min/max of this container) and the surviving tasks
     filter exactly; results equal the full read filtered after the fact."""
-    from rosbag2parquet_spark.sources.mcap import chunks_in_range, scan_mcap
-
     p = str(tmp_path / "t.mcap")
     msgs = _messages(200)  # 1 ms apart, chunked below in groups of 20
     write_mcap(p, CONNS, msgs, chunked=True, chunk_messages=20)
@@ -323,24 +325,24 @@ def test_time_range_chunk_pruning(spark, tmp_path):
     assert len(scan.chunks) == 10
     t0 = msgs[0][1]
     lo, hi = t0 + 50 * 1_000_000, t0 + 100 * 1_000_000  # msgs 50..99
-    kept = chunks_in_range(scan.chunks, lo, hi)
+    kept = prune(open_bag(p).units, lo, hi)
     # messages 50..99 live in chunks 2..4 — everything else pruned
-    assert [i for i, _ in kept] == [2, 3, 4]
-    got = read_mcap(spark, p, num_partitions=3, start_ns=lo, end_ns=hi)
+    assert [u.key[0] for u in kept] == [2, 3, 4]
+    got = read_messages(spark, p, num_partitions=3, start_ns=lo, end_ns=hi)
     rows = got.orderBy("offset").collect()
     assert len(rows) == 50
     assert all(lo <= r.time_ns < hi for r in rows)
-    full = read_mcap(spark, p, num_partitions=3)
+    full = read_messages(spark, p, num_partitions=3)
     want = (
         full.filter((full.time_ns >= lo) & (full.time_ns < hi))
         .orderBy("offset").collect()
     )
     assert [tuple(r) for r in rows] == [tuple(r) for r in want]
     # unknown bounds (0,0) are never pruned
-    from rosbag2parquet_spark.sources.mcap import McapChunkRef
+    from rosbag2parquet_spark.sources.container import Unit
 
-    unk = [McapChunkRef(0, 0, "", 0, 0, 0)]
-    assert chunks_in_range(unk, lo, hi) == [(0, unk[0])]
+    unk = [Unit((0,), 0, -1, 0, 0)]
+    assert prune(unk, lo, hi) == unk
 
 
 def test_time_range_empty_and_open_ended(spark, tmp_path):
@@ -348,9 +350,9 @@ def test_time_range_empty_and_open_ended(spark, tmp_path):
     msgs = _messages(60)
     write_mcap(p, CONNS, msgs, chunked=True, chunk_messages=10)
     t0 = msgs[0][1]
-    assert read_mcap(spark, p, start_ns=t0 + 10**15).count() == 0
-    assert read_mcap(spark, p, start_ns=t0 + 30 * 1_000_000).count() == 30
-    assert read_mcap(spark, p, end_ns=t0 + 30 * 1_000_000).count() == 30
+    assert read_messages(spark, p, start_ns=t0 + 10**15).count() == 0
+    assert read_messages(spark, p, start_ns=t0 + 30 * 1_000_000).count() == 30
+    assert read_messages(spark, p, end_ns=t0 + 30 * 1_000_000).count() == 30
 
 
 def test_message_index_channel_membership(tmp_path):
@@ -378,8 +380,6 @@ def test_topic_chunk_pruning(spark, tmp_path):
     """conn_ids prunes chunks whose MessageIndex lacks the channel — a
     single-topic read of a 2-topic file touches half the chunks — and the
     result equals the full read filtered."""
-    from rosbag2parquet_spark.sources.mcap import chunks_in_range, scan_mcap
-
     p = str(tmp_path / "t.mcap")
     write_mcap(p, CONNS, _messages(100), chunked=True, chunk_messages=2)
     scan = scan_mcap(p)
@@ -388,13 +388,12 @@ def test_topic_chunk_pruning(spark, tmp_path):
     assert all(c.channels == (1, 2) for c in scan.chunks)
     p1 = str(tmp_path / "t1.mcap")
     write_mcap(p1, CONNS, _messages(100), chunked=True, chunk_messages=1)
-    scan1 = scan_mcap(p1)
-    kept = chunks_in_range(scan1.chunks, None, None, conn_ids=[2])
-    assert len(kept) == 50 and all(c.channels == (2,) for _, c in kept)
-    got = read_mcap(spark, p1, num_partitions=3, conn_ids=[2])
+    kept = prune(open_bag(p1).units, None, None, conn_ids=[2])
+    assert len(kept) == 50 and all(u.conns == (2,) for u in kept)
+    got = read_messages(spark, p1, num_partitions=3, conn_ids=[2])
     rows = got.orderBy("offset").collect()
     assert len(rows) == 50 and all(r.conn_id == 2 for r in rows)
-    full = read_mcap(spark, p1, num_partitions=3)
+    full = read_messages(spark, p1, num_partitions=3)
     want = full.filter(full.conn_id == 2).orderBy("offset").collect()
     assert [tuple(r) for r in rows] == [tuple(r) for r in want]
 
@@ -491,7 +490,7 @@ def test_chunk_crc_roundtrip_and_detection(spark, tmp_path):
     write_mcap(path, CONNS, _messages(60), chunked=True, chunk_messages=12,
                crcs=True)
     _scan_mcap_uncached.cache_clear()
-    rows = read_mcap(spark, path, num_partitions=2).collect()
+    rows = read_messages(spark, path, num_partitions=2).collect()
     assert len(rows) == 60  # nonzero CRCs all validate
 
     # flip one byte in the middle of the SECOND chunk's records
@@ -507,8 +506,8 @@ def test_chunk_crc_roundtrip_and_detection(spark, tmp_path):
     with pytest.raises(McapCrcError, match="uncompressed_crc"):
         _read_chunk_records(path, scan_mcap(path).chunks[1])
     with pytest.raises(Exception):
-        read_mcap(spark, path, num_partitions=2).collect()
-    got = read_mcap(
+        read_messages(spark, path, num_partitions=2).collect()
+    got = read_messages(
         spark, path, num_partitions=2, on_error="permissive"
     ).collect()
     # the 4 intact chunks' 48 rows all survive; the corrupt chunk
@@ -529,7 +528,7 @@ def test_chunk_crc_roundtrip_and_detection(spark, tmp_path):
     with open(p0, "wb") as f:
         f.write(bytes(raw0))
     _scan_mcap_uncached.cache_clear()
-    assert len(read_mcap(spark, p0, num_partitions=1).collect()) == 24
+    assert len(read_messages(spark, p0, num_partitions=1).collect()) == 24
 
 
 def test_summary_crc_detection(tmp_path):
@@ -601,7 +600,7 @@ def test_idl_only_schema_blob_preserves(spark, tmp_path):
     path = str(tmp_path / "idl.mcap")
     write_mcap(path, CONNS, msgs, schema_encoding="ros2idl",
                chunk_messages=7)
-    conns = mcap_connections_df(spark, path).collect()
+    conns = connections_df(spark, open_bag(path).conn_rows).collect()
     assert all(c.msg_def == "" for c in conns)
 
     out = str(tmp_path / "out_idl")

@@ -520,9 +520,9 @@ def test_rosbag_container_roundtrip_fuzz(case, tmp_path_factory):
     import os as _os
 
     from rosbag2parquet_spark.sources.baglike import ConnectionInfo
+    from rosbag2parquet_spark.sources.container import offset_shift
     from rosbag2parquet_spark.sources.rosbag import (
         iter_chunk_messages,
-        offset_shift,
         scan_rosbag,
         write_rosbag,
     )
@@ -541,7 +541,7 @@ def test_rosbag_container_roundtrip_fuzz(case, tmp_path_factory):
     write_rosbag(path, conns, msgs, compression=case["compression"],
                  messages_per_chunk=case["per_chunk"])
     _, chunks = scan_rosbag(path)
-    shift = offset_shift(chunks)
+    shift = offset_shift([c.size for c in chunks])
     got = []
     for i, c in enumerate(chunks):
         for off, t, cid, blob in iter_chunk_messages(

@@ -167,11 +167,10 @@ def test_resume_sbag_pure_append(spark, tmp_path):
 
 
 def test_resume_source_pushdown_reads_only_delta(spark, tmp_path):
-    """The cursor prunes at PLAN time: the .db3 scan with start_offset
+    """The cursor prunes at PLAN time: the .db3 scan with start
     returns exactly the delta rowids (the WHERE rides the pk b-tree), and
     the SBAG planner drops pre-cursor offsets before any executor reads."""
-    from rosbag2parquet_spark.sources.baglike import read_bag
-    from rosbag2parquet_spark.sources.rosbag2 import read_rosbag2
+    from rosbag2parquet_spark.sources.container import read_messages
 
     db3 = str(tmp_path / "p.db3")
     write_db3(
@@ -179,19 +178,19 @@ def test_resume_source_pushdown_reads_only_delta(spark, tmp_path):
         [ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_DEF)],
         _imu_msgs(0, 30),
     )
-    got = read_rosbag2(spark, db3, start_offset=21).select("offset").collect()
+    got = read_messages(spark, db3, start=21).select("offset").collect()
     assert sorted(r.offset for r in got) == list(range(21, 31))
 
     sb = str(tmp_path / "p.sbag")
     msgs = [(1, T0 + i, struct.pack("<Id", i, 0.0)) for i in range(10)]
     write_bag(sb, [ConnectionInfo(1, "/t", "d/S", "", "uint32 a\nfloat64 b")], msgs)
     all_offs = sorted(
-        r.offset for r in read_bag(spark, sb).select("offset").collect()
+        r.offset for r in read_messages(spark, sb).select("offset").collect()
     )
     cut = all_offs[6]
     got = sorted(
         r.offset
-        for r in read_bag(spark, sb, start_offset=cut).select("offset").collect()
+        for r in read_messages(spark, sb, start=cut).select("offset").collect()
     )
     assert got == all_offs[6:]
 

@@ -9,12 +9,12 @@ from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo
 from rosbag2parquet_spark.sources.decode import decode_messages
-from rosbag2parquet_spark.sources.rosbag import (
-    read_rosbag,
-    rosbag_connections_df,
-    scan_rosbag,
-    write_rosbag,
+from rosbag2parquet_spark.sources.container import (
+    connections_df,
+    open_bag,
+    read_messages,
 )
+from rosbag2parquet_spark.sources.rosbag import scan_rosbag, write_rosbag
 from tests.test_baglike import ANGVEL, FRAME, LINACC, QUAT, SEQ, STAMP, _imu_payload
 from tests.test_msgdef import IMU_DEF
 
@@ -53,7 +53,7 @@ def test_scan_connections_and_chunks(bag_path):
 
 
 def test_messages_scan_order_and_time(spark, bag_path):
-    rows = read_rosbag(spark, bag_path, num_partitions=2).orderBy("offset").collect()
+    rows = read_messages(spark, bag_path, num_partitions=2).orderBy("offset").collect()
     assert len(rows) == 2
     assert rows[0].time_ns == 3_000_000_004 and rows[1].time_ns == 5_000_000_006
     assert rows[0].conn_id == rows[1].conn_id == 3
@@ -63,8 +63,8 @@ def test_messages_scan_order_and_time(spark, bag_path):
 def test_golden_decode_values(spark, bag_path):
     """Reference assertions :283-301: header_seq, frame_id, stamp pair,
     orientation_w through the full distributed pipeline."""
-    msgs = read_rosbag(spark, bag_path)
-    conns = rosbag_connections_df(spark, bag_path).collect()[0]
+    msgs = read_messages(spark, bag_path)
+    conns = connections_df(spark, open_bag(bag_path).conn_rows).collect()[0]
     rows = decode_messages(msgs, conns.datatype, conns.msg_def).orderBy("offset").collect()
     assert len(rows) == 2
     for r in rows:
@@ -82,8 +82,8 @@ def test_rosbag_to_parquet_end_to_end(spark, bag_path, tmp_path):
 
     from rosbag2parquet_spark.convert import convert
 
-    msgs = read_rosbag(spark, bag_path)
-    conns = rosbag_connections_df(spark, bag_path)
+    msgs = read_messages(spark, bag_path)
+    conns = connections_df(spark, open_bag(bag_path).conn_rows)
     stream = (
         msgs.join(F.broadcast(conns), msgs.conn_id == conns.connection_id)
         .select(
@@ -118,8 +118,8 @@ def test_multi_chunk_partitioning(spark, tmp_path):
     )
     _, chunks = scan_rosbag(path)
     assert len(chunks) == 10
-    a = read_rosbag(spark, path, num_partitions=1).collect()
-    b = read_rosbag(spark, path, num_partitions=8).collect()
+    a = read_messages(spark, path, num_partitions=1).collect()
+    b = read_messages(spark, path, num_partitions=8).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) == 50
     ordered = sorted(a, key=lambda r: r.offset)
@@ -144,11 +144,13 @@ def test_callerid_latching_roundtrip(spark, tmp_path):
     write_rosbag(path, [conn], [(7, 10**9, payload)])
     conns, _ = scan_rosbag(path)
     assert (conns[0].callerid, conns[0].latching) == ("/imu_node", "1")
-    row = rosbag_connections_df(spark, path).collect()[0]
+    row = connections_df(spark, open_bag(path).conn_rows).collect()[0]
     assert (row.callerid, row.latching) == ("/imu_node", "1")
     # absent fields stay NULL (SBAG parity: the dim schema is shared)
     write_rosbag(str(tmp_path / "nocaller.bag"), [CONN], [(3, 10**9, payload)])
-    row2 = rosbag_connections_df(spark, str(tmp_path / "nocaller.bag")).collect()[0]
+    row2 = connections_df(
+        spark, open_bag(str(tmp_path / "nocaller.bag")).conn_rows
+    ).collect()[0]
     assert row2.callerid is None and row2.latching is None
 
 
@@ -156,7 +158,7 @@ def test_large_chunk_scan_derived_shift(spark, tmp_path):
     """A chunk decompressing past 1 MiB is spec-conformant (rosbag's chunk
     threshold is configurable) — the scan-derived shift must accept it
     (the fixed 20-bit shift hard-failed; ADVICE r2)."""
-    from rosbag2parquet_spark.sources.rosbag import offset_shift
+    from rosbag2parquet_spark.sources.container import offset_shift
 
     path = str(tmp_path / "bigchunk.bag")
     big_payload = bytes(range(256)) * 8192  # 2 MiB message
@@ -168,9 +170,9 @@ def test_large_chunk_scan_derived_shift(spark, tmp_path):
         messages_per_chunk=2,  # first chunk decompresses to >4 MiB
     )
     _, chunks = scan_rosbag(path)
-    shift = offset_shift(chunks)
+    shift = offset_shift([c.size for c in chunks])
     assert shift > 20 and max(c.size for c in chunks) < (1 << shift)
-    rows = read_rosbag(spark, path, num_partitions=2).orderBy("offset").collect()
+    rows = read_messages(spark, path, num_partitions=2).orderBy("offset").collect()
     assert [r.time_ns for r in rows] == [10**9, 10**9 + 1, 10**9 + 2]
     assert all(len(r.data) == len(big_payload) for r in rows)
 
@@ -314,29 +316,25 @@ def test_chunk_info_stats_parsed(tmp_path):
 def test_rosbag_time_and_topic_pruning(spark, tmp_path):
     """start/end/conn_ids prune whole chunks from the ChunkInfo stats and
     the result equals the full read filtered after the fact."""
-    from rosbag2parquet_spark.sources.rosbag import (
-        prune_chunks,
-        read_rosbag,
-        scan_rosbag,
-        write_rosbag,
-    )
+    from rosbag2parquet_spark.sources.container import prune
+    from rosbag2parquet_spark.sources.rosbag import scan_rosbag, write_rosbag
 
     path = str(tmp_path / "pr.bag")
     t0 = 1_700_000_000_000_000_000
     # chunks 0-1 are conn 1 only, chunks 2-3 conn 2 only
     msgs = [(1 if i < 20 else 2, t0 + i * 1_000_000, b"y" * 8) for i in range(40)]
     write_rosbag(path, _PRUNE_CONNS, msgs, messages_per_chunk=10)
-    _, chunks = scan_rosbag(path)
-    assert len(prune_chunks(chunks, None, None, conn_ids=[2])) == 2
+    units = open_bag(path).units
+    assert len(prune(units, None, None, conn_ids=[2])) == 2
     lo, hi = t0 + 5 * 1_000_000, t0 + 15 * 1_000_000
-    assert len(prune_chunks(chunks, lo, hi)) == 2
-    got = read_rosbag(
+    assert len(prune(units, lo, hi)) == 2
+    got = read_messages(
         spark, path, num_partitions=2, start_ns=lo, end_ns=hi
     ).orderBy("offset").collect()
     assert len(got) == 10 and all(lo <= r.time_ns < hi for r in got)
-    got2 = read_rosbag(spark, path, num_partitions=2, conn_ids=[2])
+    got2 = read_messages(spark, path, num_partitions=2, conn_ids=[2])
     assert got2.count() == 20
-    full = read_rosbag(spark, path, num_partitions=2)
+    full = read_messages(spark, path, num_partitions=2)
     want = full.filter(full.conn_id == 2)
     assert got2.select("time_ns", "conn_id", "data").exceptAll(
         want.select("time_ns", "conn_id", "data")
@@ -348,7 +346,7 @@ def test_rosbag_offsets_stable_across_filters(spark, tmp_path):
     offsets must equal the unfiltered read's offsets for the same rows
     (the MCAP contract — seqno stays stable across filters). Catches both
     chunk_index renumbering and a shift recomputed over the pruned list."""
-    from rosbag2parquet_spark.sources.rosbag import read_rosbag, write_rosbag
+    from rosbag2parquet_spark.sources.rosbag import write_rosbag
 
     path = str(tmp_path / "stab.bag")
     t0 = 1_700_000_000_000_000_000
@@ -356,16 +354,16 @@ def test_rosbag_offsets_stable_across_filters(spark, tmp_path):
     write_rosbag(path, _PRUNE_CONNS, msgs, messages_per_chunk=10)
     full = {
         (r.time_ns, r.conn_id): r.offset
-        for r in read_rosbag(spark, path, num_partitions=2).collect()
+        for r in read_messages(spark, path, num_partitions=2).collect()
     }
     lo, hi = t0 + 12 * 1_000_000, t0 + 33 * 1_000_000
-    filt = read_rosbag(
+    filt = read_messages(
         spark, path, num_partitions=2, start_ns=lo, end_ns=hi
     ).collect()
     assert len(filt) == 21
     for r in filt:
         assert r.offset == full[(r.time_ns, r.conn_id)]
-    by_conn = read_rosbag(spark, path, num_partitions=2, conn_ids=[2]).collect()
+    by_conn = read_messages(spark, path, num_partitions=2, conn_ids=[2]).collect()
     assert len(by_conn) == 20
     for r in by_conn:
         assert r.offset == full[(r.time_ns, r.conn_id)]
@@ -406,24 +404,41 @@ def under_declare_chunk(path: str, k: int) -> int:
     raise AssertionError(f"no ChunkInfo for chunk {k}")
 
 
-@pytest.mark.parametrize("compression", ["none", "bz2", "lz4"])
-def test_index_seqno_equals_assign_seqno(spark, tmp_path, compression):
-    """The seqno the scan derives from ChunkInfo counts equals
-    assign_seqno's rank of the offset, row for row, on a multi-chunk
-    two-connection bag under every chunk codec."""
-    from rosbag2parquet_spark.operators.keys import assign_seqno
+def write_counted(path: str, container: str, msgs: list) -> None:
+    """A bag whose scan units all declare counts: a rosbag (chunk codec
+    ``container``) with ChunkInfo counts, an SBAG file, or an unchunked
+    MCAP file."""
+    from rosbag2parquet_spark.sources.baglike import write_bag
+    from rosbag2parquet_spark.sources.mcap import write_mcap
 
-    path = str(tmp_path / f"idx_{compression}.bag")
-    write_rosbag(
-        path, _PRUNE_CONNS, _two_conn_messages(60),
-        compression=compression, messages_per_chunk=7,
-    )
-    _, chunks = scan_rosbag(path)
-    assert [c.count for c in chunks] == [7] * 8 + [4]
-    got = read_rosbag(spark, path, num_partitions=3, seqno=True)
+    if container == "sbag":
+        write_bag(path, _PRUNE_CONNS, msgs)
+    elif container == "mcap":
+        write_mcap(path, _PRUNE_CONNS, msgs, chunked=False, encoding="ros1",
+                   schema_encoding="ros1msg")
+    else:
+        write_rosbag(path, _PRUNE_CONNS, msgs, compression=container,
+                     messages_per_chunk=7)
+
+
+@pytest.mark.parametrize("container", ["none", "bz2", "lz4", "sbag", "mcap"])
+def test_index_seqno_equals_assign_seqno(spark, tmp_path, monkeypatch, container):
+    """The seqno the scan derives from declared unit counts equals
+    assign_seqno's rank of the offset, row for row, on a multi-unit
+    two-connection bag: a rosbag under every chunk codec (ChunkInfo
+    counts), SBAG and unchunked MCAP (counted record spans, cut at 7
+    records here so the bag has several units)."""
+    from rosbag2parquet_spark.operators.keys import assign_seqno
+    from rosbag2parquet_spark.sources import container as ct
+
+    monkeypatch.setattr(ct, "SPAN_RECORDS", 7)
+    path = str(tmp_path / f"idx_{container}.bag")
+    write_counted(path, container, _two_conn_messages(60))
+    assert [u.count for u in open_bag(path).units] == [7] * 8 + [4]
+    got = read_messages(spark, path, num_partitions=3, seqno=True)
     assert got.columns == ["offset", "time_ns", "conn_id", "data", "seqno"]
     assert got.rdd.getNumPartitions() == 3
-    want = assign_seqno(read_rosbag(spark, path), ["offset"])
+    want = assign_seqno(read_messages(spark, path), ["offset"])
     got_map = {r.offset: r.seqno for r in got.collect()}
     assert got_map == {r.offset: r.seqno for r in want.collect()}
     assert sorted(got_map.values()) == list(range(60))
@@ -437,27 +452,27 @@ def test_chunk_count_check_in_every_read(spark, tmp_path):
     pos = under_declare_chunk(path, 2)
     for seqno in (True, False):
         with pytest.raises(Exception, match=f"chunk 2 at byte {pos} holds 10"):
-            read_rosbag(spark, path, num_partitions=2, seqno=seqno).collect()
+            read_messages(spark, path, num_partitions=2, seqno=seqno).collect()
 
 
 def test_index_seqno_refuses_unindexed_and_filtered(tmp_path, spark):
-    from rosbag2parquet_spark.sources.rosbag import index_seqno_bases
+    from rosbag2parquet_spark.sources.container import index_seqno_bases
 
     path = str(tmp_path / "idx.bag")
     write_rosbag(path, _PRUNE_CONNS, _two_conn_messages(25), messages_per_chunk=10)
-    _, chunks = scan_rosbag(path)
-    assert index_seqno_bases(chunks) == [0, 10, 20]
-    assert index_seqno_bases(chunks[:1] + [chunks[1]._replace(count=-1)]) is None
+    units = open_bag(path).units
+    assert index_seqno_bases(units) == [0, 10, 20]
+    assert index_seqno_bases(units[:1] + [units[1]._replace(count=-1)]) is None
     with pytest.raises(ValueError, match="renumber"):
-        read_rosbag(spark, path, start_ns=0, seqno=True)
+        read_messages(spark, path, start_ns=0, seqno=True)
     empty = str(tmp_path / "empty.bag")
     write_rosbag(empty, _PRUNE_CONNS, [])  # one empty chunk, no ChunkInfo
     with pytest.raises(ValueError, match="ChunkInfo message count"):
-        read_rosbag(spark, empty, seqno=True)
+        read_messages(spark, empty, seqno=True)
 
 
 def test_group_by_bytes_contiguous_and_balanced():
-    from rosbag2parquet_spark.sources.rosbag import group_by_bytes
+    from rosbag2parquet_spark.sources.container import group_by_bytes
 
     items = list(range(10))
     groups = group_by_bytes(items, [100] * 10, 8)

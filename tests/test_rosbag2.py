@@ -11,12 +11,15 @@ from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.sources.decode import decode_messages, make_decoder
 from rosbag2parquet_spark.sources.msgdef import parse_msgdef, to_struct_type
+from rosbag2parquet_spark.sources.container import (
+    connections_df,
+    open_bag,
+    read_messages,
+)
 from rosbag2parquet_spark.sources.rosbag2 import (
     CDR_LE_HEADER,
     is_rosbag2,
-    read_rosbag2,
     read_topics,
-    rosbag2_connections_df,
 )
 
 POSE_DEF = """std_msgs/Header header
@@ -131,24 +134,24 @@ def test_topics_and_connections(spark, db3_bag):
         (1, "/pose", "geometry_msgs/PoseLite"),
         (2, "/imu", "sensor_msgs/ImuLite"),
     ]
-    conns = rosbag2_connections_df(spark, db3_bag, MSGDEFS)
+    conns = connections_df(spark, open_bag(db3_bag, MSGDEFS).conn_rows)
     assert conns.columns == [
         "connection_id", "topic", "datatype", "md5sum", "msg_def",
         "callerid", "latching",
     ]
     assert conns.count() == 2
     with pytest.raises(ValueError, match="no message definition"):
-        rosbag2_connections_df(spark, db3_bag, {})
+        connections_df(spark, open_bag(db3_bag, {}).conn_rows)
 
 
 def test_scan_partitioned(spark, db3_bag):
-    df = read_rosbag2(spark, db3_bag, num_partitions=4)
+    df = read_messages(spark, db3_bag, num_partitions=4)
     rows = df.orderBy("offset").collect()
     assert len(rows) == 40
     assert [r.offset for r in rows] == list(range(1, 41))
     assert rows[0].conn_id == 1 and rows[1].conn_id == 2
     # partitioned scan must equal the single-partition scan exactly
-    one = read_rosbag2(spark, db3_bag, num_partitions=1)
+    one = read_messages(spark, db3_bag, num_partitions=1)
     assert df.exceptAll(one).count() == 0 and one.exceptAll(df).count() == 0
 
 
@@ -316,7 +319,7 @@ def test_convert_bag_rosbag2_tf_topic(spark, tmp_path):
 
 
 def test_decode_messages_cdr_distributed(spark, db3_bag):
-    msgs = read_rosbag2(spark, db3_bag, num_partitions=3)
+    msgs = read_messages(spark, db3_bag, num_partitions=3)
     pose = msgs.filter(F.col("conn_id") == 1)
     flat = decode_messages(
         pose, "geometry_msgs/PoseLite", POSE_DEF, serialization="cdr"
@@ -552,7 +555,7 @@ def test_embedded_msgdefs_read(db3_bag_embedded, db3_bag):
 
 
 def test_connections_from_embedded_defs(spark, db3_bag_embedded):
-    conns = rosbag2_connections_df(spark, db3_bag_embedded).collect()
+    conns = connections_df(spark, open_bag(db3_bag_embedded).conn_rows).collect()
     assert {(c.datatype, c.msg_def) for c in conns} == {
         ("geometry_msgs/PoseLite", POSE_DEF),
         ("sensor_msgs/ImuLite", IMU_DEF),
@@ -561,8 +564,8 @@ def test_connections_from_embedded_defs(spark, db3_bag_embedded):
     override = {"sensor_msgs/ImuLite": IMU_DEF + "# override\n"}
     conns2 = {
         c.datatype: c.msg_def
-        for c in rosbag2_connections_df(
-            spark, db3_bag_embedded, override
+        for c in connections_df(
+            spark, open_bag(db3_bag_embedded, override).conn_rows
         ).collect()
     }
     assert conns2["sensor_msgs/ImuLite"].endswith("# override\n")
@@ -706,7 +709,7 @@ def test_cdr_vector_tier_distributed_matches(spark, db3_bag):
     """The wired decode_messages(serialization='cdr') path (which now picks the vector tier
     for PoseLite — strings make it variable) must still match the golden
     values end-to-end."""
-    msgs = read_rosbag2(spark, db3_bag, num_partitions=3)
+    msgs = read_messages(spark, db3_bag, num_partitions=3)
     pose = msgs.filter(F.col("conn_id") == 1)
     flat = decode_messages(
         pose, "geometry_msgs/PoseLite", POSE_DEF, serialization="cdr"
@@ -903,10 +906,10 @@ def test_cli_converts_rosbag2_directory(spark, rosbag2_dir, tmp_path, capsys):
 def test_db3_time_pushdown(spark, db3_bag):
     """start/end push a WHERE into sqlite on both the min/max probe and
     the per-task slice; results equal the unfiltered read filtered."""
-    full = read_rosbag2(spark, db3_bag, num_partitions=3)
+    full = read_messages(spark, db3_bag, num_partitions=3)
     t0 = 1_700_000_000_000_000_000
     lo, hi = t0 + 10 * 1_000_000, t0 + 30 * 1_000_000
-    got = read_rosbag2(
+    got = read_messages(
         spark, db3_bag, num_partitions=3, start_ns=lo, end_ns=hi
     ).orderBy("offset").collect()
     want = (
@@ -915,7 +918,7 @@ def test_db3_time_pushdown(spark, db3_bag):
     )
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) == 20
-    assert read_rosbag2(spark, db3_bag, start_ns=t0 + 10**15).count() == 0
+    assert read_messages(spark, db3_bag, start_ns=t0 + 10**15).count() == 0
 
 
 def test_convert_bag_time_subset_db3(spark, db3_bag_embedded, tmp_path):
@@ -935,7 +938,7 @@ def test_convert_bag_time_subset_db3(spark, db3_bag_embedded, tmp_path):
 
 
 def test_db3_topic_pushdown(spark, db3_bag):
-    got = read_rosbag2(spark, db3_bag, num_partitions=3, conn_ids=[2])
+    got = read_messages(spark, db3_bag, num_partitions=3, conn_ids=[2])
     rows = got.orderBy("offset").collect()
     assert len(rows) == 20 and all(r.conn_id == 2 for r in rows)
 
@@ -1074,11 +1077,14 @@ def test_header_stamp_big_endian_cdr_yields_null(spark):
     body = struct.pack("<iI", 123, 456) + b"\x00" * 16
     le = b"\x00\x01\x00\x00" + body
     be = b"\x00\x00\x00\x00" + body
+    pl = b"\x00\x03\x00\x00" + body  # PL_CDR_LE: little-endian too
     df = spark.createDataFrame(
-        [(0, bytearray(le)), (0, bytearray(be))], "conn_id int, data binary"
+        [(0, bytearray(le)), (0, bytearray(be)), (0, bytearray(pl))],
+        "conn_id int, data binary",
     )
     rows = df.select(
         F.expr(sec_sql).alias("s"), F.expr(nsec_sql).alias("n")
     ).collect()
     assert (rows[0].s, rows[0].n) == (123, 456)  # LE decodes
     assert (rows[1].s, rows[1].n) == (None, None)  # BE guards to NULL
+    assert (rows[2].s, rows[2].n) == (123, 456)  # PL_CDR_LE decodes

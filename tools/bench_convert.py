@@ -70,11 +70,11 @@ def synth_bag(path: str, n_msgs: int, blob_bytes: int) -> None:
 
 
 def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
-    """Synthesize, convert, measure; reusable from bench.py with a shared
+    """Synthesize, convert, measure; reusable with a shared
     session (the warm-ups then cost nothing extra)."""
     from rosbag2parquet_spark.convert import convert_bag
     from rosbag2parquet_spark.session import get_spark
-    from rosbag2parquet_spark.sources.baglike import read_bag
+    from rosbag2parquet_spark.sources.container import read_messages
 
     work = tempfile.mkdtemp(prefix="bench_convert_")
     try:
@@ -86,7 +86,7 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
         spark.range(1).count()  # session warm-up outside the timed region
         # python-worker spin-up is also excluded (a fixed ~5 s per executor
         # lifetime, amortized away on any long-lived cluster)
-        read_bag(spark, bag, num_partitions=4).limit(1).count()
+        read_messages(spark, bag, 4).limit(1).count()
 
         t0 = time.perf_counter()
         # the reference's full program: Messages + Connections + one
@@ -225,7 +225,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
     """Shared measure loop for the .db3 / MCAP walkthrough twins: same
     corpus, same converter, same exclusions as run()."""
     from rosbag2parquet_spark.convert import convert_bag
-    from rosbag2parquet_spark.info import load_bag
+    from rosbag2parquet_spark.sources.container import read_messages
     from rosbag2parquet_spark.session import get_spark
 
     work = tempfile.mkdtemp(prefix=f"bench_convert_{suffix}_")
@@ -235,7 +235,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
         bag_mb = os.path.getsize(bag) / (1 << 20)
         spark = spark or get_spark("bench_convert")
         spark.range(1).count()
-        load_bag(spark, bag, num_partitions=4)[0].limit(1).count()
+        read_messages(spark, bag, 4).limit(1).count()
         t0 = time.perf_counter()
         info = convert_bag(spark, bag, os.path.join(work, "out"))
         dt = time.perf_counter() - t0
@@ -433,7 +433,7 @@ def run_fleet(
     connection remap, and the cross-bag continuous seqno."""
     from rosbag2parquet_spark.convert import convert_bags
     from rosbag2parquet_spark.session import get_spark
-    from rosbag2parquet_spark.sources.baglike import read_bag
+    from rosbag2parquet_spark.sources.container import read_messages
 
     work = tempfile.mkdtemp(prefix="bench_fleet_")
     try:
@@ -452,7 +452,7 @@ def run_fleet(
         # (plan-worker spawn, decode-UDF pickle) are session setup, not
         # conversion work — warm EVERY path like run() warms its one bag
         for p in paths:
-            read_bag(spark, p, num_partitions=4).limit(1).count()
+            read_messages(spark, p, 4).limit(1).count()
 
         t0 = time.perf_counter()
         info = convert_bags(
