@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.sources.baglike import bag_format
 from rosbag2parquet_spark.sources.container import (
-    bucket_width,
     connections_df,
     open_bag,
     read_messages,
@@ -46,10 +45,11 @@ def load_bag(
 
 
 def seqno_bucket_width(path: str) -> int:
-    """Bucket width for ``assign_seqno`` over this bag's offsets, sized so
-    the driver-side prefix-sum map stays <= ~64 entries whatever the bag
-    size (`container.bucket_width` of the container's largest offset)."""
-    return bucket_width(open_bag(path).max_offset)
+    """Bucket width for ``assign_seqno`` over this bag's offsets: at most
+    64 buckets over [0, max_offset] whatever the offset encoding (dense
+    rowids, byte positions or sparse chunk-index offsets), so the
+    driver-side prefix-sum map stays small."""
+    return open_bag(path).max_offset // 64 + 1
 
 
 def bag_info(spark: SparkSession, path: str) -> DataFrame:

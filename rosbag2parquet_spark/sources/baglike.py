@@ -208,8 +208,8 @@ def open_container(
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
-    """One Arrow batch per record span; the filters are left to the
-    driver."""
+    """One Arrow batch per record span; the container DataSource
+    applies the filters."""
     with open(path, "rb") as f:
         for lo, hi in keys:
             offs, times, conns, blobs = [], [], [], []

@@ -19,18 +19,24 @@ functions:
 This module holds everything they share: the format dispatch
 (:func:`open_bag`), unit pruning from index stats (:func:`prune`),
 contiguous byte-balanced splits (:func:`group_by_bytes`), the chunked
-offset encoding (:func:`offset_shift`), the seqno bucket width
-(:func:`bucket_width`), index-derived seqno (:func:`index_seqno_bases`),
-the Connections frame (:func:`connections_df`), and the one Python
-DataSource that reads planned splits (:func:`read_messages`)."""
+offset encoding (:func:`offset_shift`), the Connections frame
+(:func:`connections_df`), and the one Python DataSource that reads
+planned splits of one bag or a whole fleet (:func:`read_messages`). The
+DataSource also applies the exact row filter and numbers messages by one
+rule: each split from a base plus the row's ordinal within the split,
+the bases from declared unit counts (:func:`index_seqno_bases`) or from
+one count job over the same splits."""
 
 from __future__ import annotations
 
+import functools
 import importlib
+import itertools
 import json
 import os
 from typing import NamedTuple
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -199,14 +205,6 @@ def offset_shift(sizes) -> int:
     return max(_MIN_SHIFT, int(max(sizes, default=0)).bit_length())
 
 
-def bucket_width(max_offset: int) -> int:
-    """`assign_seqno` bucket width over offsets in [0, max_offset]: at most
-    64 buckets whatever the offset encoding (dense rowids, byte positions
-    or sparse chunk-index offsets), so the driver-side prefix-sum map
-    stays small."""
-    return max(1, max_offset // 64 + 1)
-
-
 def index_seqno_bases(units: "list[Unit]") -> "list[int] | None":
     """Per-unit seqno base: the prefix sum of the declared counts in file
     order (the container's stored form of the reference's one global
@@ -247,54 +245,128 @@ def connections_df(spark: SparkSession, rows: list) -> DataFrame:
 # -------------------------------------------------------------- datasource
 
 
+def raise_count_error(exc: Exception) -> None:
+    """Re-raise the scan's count check as the ValueError it was: Spark
+    relays a worker's exception as its own error type with the Python
+    traceback in the message."""
+    for line in str(exc).splitlines():
+        if COUNT_MISMATCH in line:
+            raise ValueError(line.split("ValueError: ", 1)[-1].strip()) from exc
+
+
 class _Split(InputPartition):
-    def __init__(self, units: list):
-        #: [[unit key, declared count, seqno base (-1 = none)], ...]
+    def __init__(self, units: list, base: int = -1, count: int = -1):
+        #: [[bag ordinal, unit key, declared count (-1 = none)], ...]
         self.units = units
+        #: seqno of the split's first kept row (-1 = not numbered) and its
+        #: kept-row total, which the numbering pass checks
+        self.base = base
+        self.count = count
 
 
 class _SplitReader(DataSourceReader):
     def __init__(self, options):
-        self.path = options["path"]
-        self.fmt = options["fmt"]
+        #: [[path, fmt, label, index, [[local, global conn id], ...] | None]]
+        self.bags = json.loads(options["bags"])
         self.splits = json.loads(options["splits"])
         self.filters = json.loads(options["filters"])
-        self.label = options["label"]
-        self.index = options["index"]
+        self.fleet = options["fleet"] == "true"
 
     def partitions(self):
         # the driver planned every split: no file I/O here
-        return [_Split(s) for s in self.splits] or [_Split([])]
+        return [_Split(*s) for s in self.splits] or [_Split([])]
+
+    def _walk(self, units: list):
+        """(bag ordinal, Arrow batch) over ``units`` in file order; a unit
+        that declares a count is checked against its walked rows."""
+        for bag, run in itertools.groupby(units, key=lambda u: u[0]):
+            path, fmt, label, index, _ = self.bags[bag]
+            read_units = _module(fmt).read_units
+            run = list(run)
+            if all(count < 0 for _, _, count in run):
+                for batch in read_units(path, [k for _, k, _ in run], **self.filters):
+                    yield bag, batch
+                continue
+            for _, key, count in run:
+                walked = 0
+                for batch in read_units(path, [key], **self.filters):
+                    walked += batch.num_rows
+                    yield bag, batch
+                # declared counts number the scan: a wrong index fails
+                # loudly instead of numbering twice or leaving gaps
+                if count >= 0 and walked != count:
+                    raise ValueError(
+                        f"{path}: {label.format(*key)} holds {walked} "
+                        f"messages but its {index} declares {count} — "
+                        f"{COUNT_MISMATCH}"
+                    )
+
+    def _keep(self, batch):
+        """The exact time and connection filter (planning pruned whole
+        units by their index stats only)."""
+        f, masks = self.filters, []
+        if f["start_ns"] is None and f["end_ns"] is None and f["conn_ids"] is None:
+            return batch
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        if f["start_ns"] is not None:
+            masks.append(pc.greater_equal(batch["time_ns"], f["start_ns"]))
+        if f["end_ns"] is not None:
+            masks.append(pc.less(batch["time_ns"], f["end_ns"]))
+        if f["conn_ids"] is not None:
+            ids = pa.array(f["conn_ids"], pa.int32())
+            masks.append(pc.is_in(batch["conn_id"], value_set=ids))
+        return batch.filter(functools.reduce(pc.and_, masks))
+
+    def _globalize(self, batch, bag: int):
+        """Fleet columns: the bag ordinal, and conn_id through the bag's
+        local -> global connection map."""
+        import numpy as np
+        import pyarrow as pa
+
+        path, *_, pairs = self.bags[bag]
+        if pairs is not None:
+            local, glob = np.array(pairs, np.int64).reshape(-1, 2).T
+            ids = batch["conn_id"].to_numpy()
+            pos = np.searchsorted(local, ids)
+            hit = pos < len(local)
+            hit[hit] = local[pos[hit]] == ids[hit]
+            if not hit.all():
+                raise ValueError(
+                    f"{path}: unmapped connection key {ids[~hit][0]} — a "
+                    "message names a connection the container never declared"
+                )
+            batch = batch.set_column(2, "conn_id", pa.array(glob[pos], pa.int32()))
+        return batch.append_column(
+            "bag_index", pa.array(np.full(batch.num_rows, bag, np.int32))
+        )
 
     def read(self, split: _Split):
         import numpy as np
         import pyarrow as pa
 
-        read_units = _module(self.fmt).read_units
-        if all(count < 0 for _, count, _ in split.units):
-            yield from read_units(
-                self.path, [key for key, _, _ in split.units], **self.filters
+        walked = 0
+        for bag, batch in self._walk(split.units):
+            batch = self._keep(batch)
+            if not batch.num_rows:
+                continue
+            if self.fleet:
+                batch = self._globalize(batch, bag)
+            if split.base >= 0:
+                lo = split.base + walked
+                seqno = np.arange(lo, lo + batch.num_rows, dtype=np.int64)
+                batch = batch.append_column("seqno", pa.array(seqno))
+            walked += batch.num_rows
+            yield batch
+        if split.count >= 0 and walked != split.count:
+            bag, key, _ = split.units[0]
+            path, _, label, _, _ = self.bags[bag]
+            raise ValueError(
+                f"{path}: the split from {label.format(*key)} holds {walked} "
+                f"messages but the count job counted {split.count} — "
+                f"{COUNT_MISMATCH}"
             )
-            return
-        for key, count, base in split.units:
-            walked = 0
-            for batch in read_units(self.path, [key], **self.filters):
-                if base >= 0:
-                    lo = base + walked
-                    batch = batch.append_column(
-                        "seqno",
-                        pa.array(np.arange(lo, lo + batch.num_rows, dtype=np.int64)),
-                    )
-                walked += batch.num_rows
-                yield batch
-            # index-derived seqno trusts the declared count: a wrong index
-            # fails loudly instead of numbering twice or leaving gaps
-            if count >= 0 and walked != count:
-                raise ValueError(
-                    f"{self.path}: {self.label.format(*key)} holds {walked} "
-                    f"messages but its {self.index} declares {count} — "
-                    f"{COUNT_MISMATCH}"
-                )
 
 
 class ContainerDataSource(DataSource):
@@ -308,19 +380,31 @@ class ContainerDataSource(DataSource):
     def schema(self):
         from rosbag2parquet_spark.sources.baglike import MESSAGE_SCHEMA
 
-        if self.options.get("seqno") != "true":
-            return MESSAGE_SCHEMA
-        return T.StructType(
-            MESSAGE_SCHEMA.fields + [T.StructField("seqno", T.LongType(), False)]
-        )
+        fields = list(MESSAGE_SCHEMA.fields)
+        if self.options["fleet"] == "true":
+            fields.append(T.StructField("bag_index", T.IntegerType(), False))
+        if self.options["seqno"] == "true":
+            fields.append(T.StructField("seqno", T.LongType(), False))
+        return T.StructType(fields)
 
     def reader(self, schema):
         return _SplitReader(self.options)
 
 
+def _split_counts(scan: DataFrame, n: int) -> "list[int]":
+    """Rows in each of the ``n`` splits of ``scan``: one narrow count job
+    (Spark's zipWithIndex shape)."""
+    try:
+        got = dict(scan.groupBy(F.spark_partition_id()).count().collect())
+    except PySparkException as exc:
+        raise_count_error(exc)
+        raise
+    return [got.get(i, 0) for i in range(n)]
+
+
 def read_messages(
     spark: SparkSession,
-    path: str,
+    path: "str | list[str]",
     num_partitions: int = 8,
     *,
     start_ns: "int | None" = None,
@@ -329,61 +413,72 @@ def read_messages(
     start: "int | None" = None,
     on_error: str = "fail",
     seqno: bool = False,
+    conn_maps: "list[dict[int, int]] | None" = None,
 ) -> DataFrame:
     """(offset, time_ns, conn_id, data) of any bag, in one scan shape: the
     driver opens the container, prunes its units by the time range and
     ``conn_ids``, groups the survivors into at most ``num_partitions``
     contiguous byte-balanced splits, and one DataSource reads each split
-    in one task. The exact time/connection filter then runs once on the
-    result (``.db3`` also pushes it into its sqlite ``WHERE``). Offsets do
-    not depend on pruning or splitting. ``start`` is the resume cursor in
-    the container's own unit (``.db3`` rowid, SBAG byte offset, MCAP chunk
-    index). ``on_error='permissive'`` salvages CRC-failed MCAP chunks.
+    in one task, applying the exact time/connection filter itself (``.db3``
+    also pushes it into its sqlite ``WHERE``). Offsets do not depend on
+    pruning or splitting. ``start`` is the resume cursor in the
+    container's own unit (``.db3`` rowid, SBAG or unchunked-MCAP byte
+    offset, MCAP chunk index). ``on_error='permissive'`` salvages
+    CRC-failed MCAP chunks.
 
-    ``seqno=True`` adds a trailing global ``seqno`` numbered in the scan
-    from the units' declared counts (`index_seqno_bases`), each unit
-    checked against its count — equal to ``assign_seqno`` over ``offset``
-    without its count job, shuffle and window. It numbers every unit, so
-    it refuses filters and units without a count."""
-    filtered = start_ns is not None or end_ns is not None or conn_ids is not None
-    if seqno and filtered:
-        raise ValueError(
-            "seqno=True numbers the whole bag; a filtered read must "
-            "renumber its kept rows with assign_seqno"
-        )
-    bag = open_bag(path, start=start)
-    units = prune(bag.units, start_ns, end_ns, conn_ids)
-    bases = index_seqno_bases(units) if seqno else [-1] * len(units)
-    if bases is None:
-        raise ValueError(
-            f"{path}: seqno=True needs a {bag.index} message count for every "
-            "unit — number this bag with assign_seqno"
-        )
-    splits = group_by_bytes(
-        [[list(u.key), u.count, b] for u, b in zip(units, bases)],
-        [u.weight for u in units],
+    A LIST of paths is a fleet read as one scan: the splits cover the
+    bags' units in (bag, file) order, and a trailing ``bag_index`` (the
+    bag's position in the list) follows ``data``; ``conn_maps[i]`` maps bag
+    i's connection ids to global ones, and an id missing from it fails
+    the read.
+
+    ``seqno=True`` adds a trailing global ``seqno`` by one rule: each
+    split numbers its kept rows from a base, the prefix sum of the rows of
+    the splits before it (the reference's one counter,
+    FlattenedRosWriter.cpp:256). Without a row filter over units that all
+    declare a count (`index_seqno_bases`) the counts give the bases;
+    otherwise one count job over the same splits does. Each split checks
+    its rows against its total — equal to ``assign_seqno`` over
+    (bag, offset) with no exchange and no window in the numbered scan."""
+    fleet = not isinstance(path, str)
+    bags = [open_bag(p, start=start) for p in (path if fleet else [path])]
+    kept = [
+        (i, u) for i, b in enumerate(bags)
+        for u in prune(b.units, start_ns, end_ns, conn_ids)
+    ]
+    groups = group_by_bytes(
+        [[i, list(u.key), u.count] for i, u in kept],
+        [u.weight for _, u in kept],
         num_partitions,
     )
     filters = {
         "start_ns": start_ns, "end_ns": end_ns, "on_error": on_error,
         "conn_ids": None if conn_ids is None else [int(c) for c in conn_ids],
     }
+    bag_opts = [
+        [os.path.abspath(b.path), b.fmt, b.label, b.index,
+         None if conn_maps is None else sorted(conn_maps[i].items())]
+        for i, b in enumerate(bags)
+    ]
     spark.dataSource.register(ContainerDataSource)
-    df = (
-        spark.read.format("bagscan")
-        .option("path", os.path.abspath(path))
-        .option("fmt", bag.fmt)
-        .option("splits", json.dumps(splits))
-        .option("filters", json.dumps(filters))
-        .option("label", bag.label)
-        .option("index", bag.index)
-        .option("seqno", "true" if seqno else "false")
-        .load()
-    )
-    if start_ns is not None:
-        df = df.filter(F.col("time_ns") >= start_ns)
-    if end_ns is not None:
-        df = df.filter(F.col("time_ns") < end_ns)
-    if conn_ids is not None:
-        df = df.filter(F.col("conn_id").isin(filters["conn_ids"]))
-    return df
+
+    def load(splits: list, numbered: bool) -> DataFrame:
+        return (
+            spark.read.format("bagscan")
+            .option("bags", json.dumps(bag_opts))
+            .option("splits", json.dumps(splits))
+            .option("filters", json.dumps(filters))
+            .option("fleet", "true" if fleet else "false")
+            .option("seqno", "true" if numbered else "false")
+            .load()
+        )
+
+    if not seqno:
+        return load([[g] for g in groups], False)
+    filtered = start_ns is not None or end_ns is not None or conn_ids is not None
+    if filtered or index_seqno_bases([u for _, u in kept]) is None:
+        counts = _split_counts(load([[g] for g in groups], False), len(groups))
+    else:
+        counts = [sum(c for _, _, c in g) for g in groups]
+    bases = [0, *itertools.accumulate(counts)]
+    return load([[g, b, c] for g, b, c in zip(groups, bases, counts)], True)

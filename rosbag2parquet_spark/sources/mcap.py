@@ -42,6 +42,7 @@ refused — the orderings don't compose).
 
 from __future__ import annotations
 
+import bisect
 import os
 import struct
 import zlib
@@ -877,9 +878,11 @@ def open_container(
     """Units from the memoized plan (`scan_mcap`): one per chunk — ChunkIndex
     or chunk-header time bounds, MessageIndex channel set, count unknown —
     or, for unchunked files, counted spans of top-level Message records.
-    ``start`` is a chunk index: earlier chunks drop at plan time (the resume
-    cursor — an appender extends the chunk list and rewrites only the
-    summary). ``msgdefs`` is unused: MCAP embeds its schemas."""
+    ``start`` is the resume cursor, dropping earlier units at plan time: a
+    chunk index for chunked files (an appender extends the chunk list and
+    rewrites only the summary), a byte offset for unchunked ones (earlier
+    Message records keep their positions). ``msgdefs`` is unused: MCAP
+    embeds its schemas."""
     scan = scan_mcap(path)
     if scan.chunks:
         shift = offset_shift([c.size or c.records_size for c in scan.chunks])
@@ -893,7 +896,9 @@ def open_container(
         max_offset, label = (len(scan.chunks) << shift) - 1, "chunk {0}"
     else:
         offs = scan.message_offsets
-        units = record_spans(offs, offs[-1] + 1 if offs else 0)
+        units = record_spans(
+            offs[bisect.bisect_left(offs, start or 0):], offs[-1] + 1 if offs else 0
+        )
         max_offset, label = (offs[-1] if offs else 0), "records at bytes {0}-{1}"
     return Container(
         path, "mcap", mcap_serialization(path),
@@ -904,9 +909,9 @@ def open_container(
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
-    """One Arrow batch per chunk or record span; the filters are left to the
-    driver. A chunk key is (index, records_off, records_size, compression,
-    size, shift) and a span key (lo, hi). ``on_error='permissive'``
+    """One Arrow batch per chunk or record span; the container DataSource
+    applies the filters. A chunk key is (index, records_off, records_size,
+    compression, size, shift) and a span key (lo, hi). ``on_error='permissive'``
     salvages a CRC-failed chunk: whatever records still parse are kept
     (corrupt payloads then dead-letter per row at decode)."""
     for key in keys:

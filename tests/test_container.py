@@ -1,7 +1,7 @@
 """One container scan for every bag grammar: the shape of the scan plan
-(no exchange, contiguous file-order splits, every message exactly once,
-at most ``num_partitions`` splits) and the per-unit count check through
-the converter."""
+(no exchange, numbered or not; contiguous file-order splits, every
+message exactly once, at most ``num_partitions`` splits) and the per-unit
+and per-split count checks through the converter."""
 
 import struct
 
@@ -47,6 +47,10 @@ def test_scan_shape(spark, tmp_path, monkeypatch, container):
     df = read_messages(spark, path, n)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+    for filters in ({}, {"conn_ids": [2]}, {"start_ns": 0}):
+        seq = read_messages(spark, path, n, seqno=True, **filters)
+        plan = seq._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "Window" not in plan, plan
 
     rows = df.select(
         F.spark_partition_id().alias("pid"), "offset", "time_ns", "conn_id", "data"
@@ -87,4 +91,25 @@ def test_count_check_fails_convert_for_record_spans(spark, tmp_path, monkeypatch
         match=f"records at bytes {lo}-{hi} holds 7 messages but its record "
         "walk declares 6",
     ):
+        convert_bag(spark, path, str(tmp_path / "out"), num_partitions=2)
+
+
+def test_split_count_mismatch_fails_convert(spark, tmp_path, monkeypatch):
+    """A split whose rows disagree with the count job's total fails the
+    numbering pass with the count-check ValueError instead of numbering
+    twice or leaving a gap — here a ``.db3``, whose splits the count job
+    numbers, with the first split's count inflated by one."""
+    from rosbag2parquet_spark.convert import convert_bag
+
+    path = str(tmp_path / "c.db3")
+    _write(path, "db3", _two_conn_messages(30))
+    real = ct._split_counts
+
+    def off_by_one(scan, n):
+        counts = real(scan, n)
+        return [counts[0] + 1, *counts[1:]]
+
+    monkeypatch.setattr(ct, "_split_counts", off_by_one)
+    with pytest.raises(ValueError, match="the count job counted 1[0-9] — "
+                       + ct.COUNT_MISMATCH):
         convert_bag(spark, path, str(tmp_path / "out"), num_partitions=2)

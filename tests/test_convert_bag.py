@@ -591,9 +591,9 @@ def test_index_seqno_count_mismatch_raises(spark, tmp_path):
 
 
 def test_unindexed_rosbag_converts_to_same_layout(spark, tmp_path):
-    """Without the index region (a crashed recorder) the bag numbers through
-    assign_seqno and lands the same layout as the indexed bag's scan-derived
-    seqno."""
+    """Without the index region (a crashed recorder) the bag's split bases
+    come from the count job, and it lands the same layout as the indexed
+    bag, whose bases come from its declared counts."""
     from rosbag2parquet_spark.sources.container import index_seqno_bases, open_bag
     from rosbag2parquet_spark.sources.rosbag import _read_record_at, scan_rosbag
 
@@ -623,8 +623,8 @@ def test_unindexed_rosbag_converts_to_same_layout(spark, tmp_path):
 
 
 def test_filtered_rosbag_convert_renumbers(spark, tmp_path):
-    """Topic- and time-filtered converts of an indexed multi-chunk bag keep
-    the assign_seqno plan: the kept rows renumber 0..N-1 in bag order."""
+    """Topic- and time-filtered converts of an indexed multi-chunk bag
+    number the kept rows 0..N-1 in bag order."""
     path = str(tmp_path / "filt.bag")
     _multi_chunk_rosbag(path)
     out = str(tmp_path / "topics")

@@ -186,30 +186,27 @@ def test_cli_append_mode(fleet, tmp_path, capsys, spark):
     assert not os.path.exists(out + ".1")
 
 
-def test_remap_key_no_int32_wrap(spark):
-    """The (bag_index, conn_id) remap key is LONG: at bag_index >= 2048 an
-    int32 key wraps past 2^31 (non-ANSI → silent), misses the remap probe,
-    and rows vanish — the exact fleet size this path exists for."""
-    from rosbag2parquet_spark.convert import _CONN_KEY_STRIDE, _remap_key_col
+def test_fleet_scan_maps_conn_ids_at_high_bag_ordinals(spark, tmp_path):
+    """The fleet scan maps each split's local connection ids through its
+    bag's map and stamps the bag ordinal, with no combined key that could
+    wrap at 2048 bags: a 5001-bag scan (one SBAG listed 5001 times) gives
+    bag 5000's rows its own global id and ``bag_index = 5000``."""
+    from rosbag2parquet_spark.sources.container import read_messages
 
-    df = spark.createDataFrame(
-        [(2048, 7), (4096, 123), (100_000, 0)], "bag_index int, conn_id int"
-    )
-    vals = [r[0] for r in df.select(_remap_key_col()).collect()]
-    assert vals == [
-        2048 * _CONN_KEY_STRIDE + 7,
-        4096 * _CONN_KEY_STRIDE + 123,
-        100_000 * _CONN_KEY_STRIDE,
+    p = str(tmp_path / "one.sbag")
+    imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
+    write_bag(p, [ConnectionInfo(3, **IMU_CONN)], [(3, 1_000, imu)])
+    maps = [{3: 0}] * 5000 + [{3: 77}]
+    df = read_messages(spark, [p] * 5001, 4, seqno=True, conn_maps=maps)
+    assert df.columns == [
+        "offset", "time_ns", "conn_id", "data", "bag_index", "seqno"
     ]
-    assert all(v >= 2**31 for v in vals)  # every one would have wrapped
-    # and the probe against a create_map literal finds the long key
-    from pyspark.sql import functions as F
-
-    m = F.create_map(
-        F.lit(2048 * _CONN_KEY_STRIDE + 7).cast("long"), F.lit(42)
-    )
-    hit = df.filter("bag_index = 2048").select(m[_remap_key_col()]).collect()
-    assert hit[0][0] == 42
+    assert df.rdd.getNumPartitions() <= 4
+    last = df.filter("bag_index = 5000").collect()
+    assert [(r.conn_id, r.seqno) for r in last] == [(77, 5000)]
+    rest = df.filter("bag_index < 5000").select("conn_id", "bag_index", "seqno")
+    assert {r.conn_id for r in rest.collect()} == {0}
+    assert sorted(r.bag_index for r in rest.collect()) == list(range(5000))
 
 
 def test_unmapped_conn_id_fails_fast(spark, tmp_path):
@@ -272,26 +269,69 @@ def test_single_header_walk_per_bag(spark, tmp_path, monkeypatch):
     assert walks == [p]
 
 
-def test_fleet_remap_broadcast_path(spark, fleet, tmp_path, monkeypatch):
-    """Above the literal threshold the remap ships as a broadcast dim; the
-    output must be identical to the create_map path (same layout run at
-    threshold 0)."""
+def test_mixed_grammar_fleet_is_one_scan(spark, fleet, tmp_path, monkeypatch):
+    """A rosbag, an SBAG and a ros1 MCAP convert as ONE bagscan relation —
+    no Union — of at most ``num_partitions`` splits, numbered 0..N-1 in
+    bag order with each bag's ordinal; adding a CDR ``.db3`` is refused
+    up front."""
     import importlib
+
+    from rosbag2parquet_spark.sources.mcap import write_mcap
+    from rosbag2parquet_spark.sources.rosbag2 import write_db3
 
     # the package __init__ re-exports the convert FUNCTION under the same
     # name, so attribute-style module import resolves to the function
     cv = importlib.import_module("rosbag2parquet_spark.convert")
-
     _, paths = fleet
-    monkeypatch.setattr(cv, "_REMAP_LITERAL_MAX", 0)
-    out = str(tmp_path / "bcast")
-    info = convert_bags(spark, paths, out)
-    assert info.count == 6
-    import os
+    mc = str(tmp_path / "c.mcap")
+    write_mcap(mc, [ConnectionInfo(4, "/n", "demo/N", "", "uint32 n\n")],
+               [(4, 7_000 + i, struct.pack("<I", i)) for i in range(5)],
+               chunk_messages=2, encoding="ros1", schema_encoding="ros1msg")
+    scans = []
+    real = cv.read_messages
 
-    messages = spark.read.parquet(os.path.join(out, "Messages"))
-    assert sorted(r.seqno for r in messages.collect()) == list(range(6))
-    assert {r.connection_id for r in messages.collect()} == {0, 1}
+    def spy(*args, **kwargs):
+        scans.append(real(*args, **kwargs))
+        return scans[-1]
+
+    monkeypatch.setattr(cv, "read_messages", spy)
+    out = str(tmp_path / "mixed")
+    assert convert_bags(spark, paths + [mc], out, num_partitions=2).count == 11
+    assert len(scans) == 1
+    plan = scans[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan and plan.count("bagscan") == 1, plan
+    assert scans[0].rdd.getNumPartitions() <= 2
+    rows = spark.read.parquet(os.path.join(out, "Messages")).orderBy("seqno")
+    got = [(r.seqno, r.bag_index, r.connection_id) for r in rows.collect()]
+    assert [g[0] for g in got] == list(range(11))
+    assert [g[1] for g in got] == [0] * 3 + [1] * 3 + [2] * 5
+    assert [g[2] for g in got[6:]] == [2] * 5  # after the fleet's /imu, /gps
+    n = spark.read.parquet(os.path.join(out, "demo_N")).orderBy("seqno")
+    assert [(r.seqno, r.n) for r in n.collect()] == [(6 + i, i) for i in range(5)]
+
+    db3 = str(tmp_path / "d.db3")
+    write_db3(db3, [ConnectionInfo(1, **IMU_CONN)], [])
+    with pytest.raises(ValueError, match="mixes payload serializations"):
+        convert_bags(spark, paths + [db3], str(tmp_path / "refused"))
+
+
+def test_fleet_append_reuses_callerless_connection(spark, tmp_path):
+    """A rosbag connection without callerid/latching is stored NULL by
+    convert_bag; a fleet append of another bag with the same connection
+    keeps its id instead of adding a second Connections row."""
+    from rosbag2parquet_spark.convert import convert_bag
+
+    imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
+    a, b = str(tmp_path / "a.bag"), str(tmp_path / "b.bag")
+    write_rosbag(a, [ConnectionInfo(1, **IMU_CONN)], [(1, 1_000, imu)])
+    write_rosbag(b, [ConnectionInfo(1, **IMU_CONN)], [(1, 2_000, imu)])
+    out = str(tmp_path / "lay")
+    convert_bag(spark, a, out)
+    assert convert_bags(spark, [b], out, mode="append").count == 1
+    conns = spark.read.parquet(os.path.join(out, "Connections")).collect()
+    assert [(c.connection_id, c.callerid) for c in conns] == [(1, None)]
+    msgs = spark.read.parquet(os.path.join(out, "Messages")).collect()
+    assert sorted((m.seqno, m.connection_id) for m in msgs) == [(0, 1), (1, 1)]
 
 
 def test_convert_bags_append_equals_one_fleet(spark, tmp_path):

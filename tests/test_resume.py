@@ -344,3 +344,38 @@ def test_resume_mcap_grown_chunks(spark, tmp_path):
     # metadata likewise diff-appended once: ver row from the first pass,
     # session row from the resume, no duplicates after the no-op pass
     assert spark.read.parquet(f"{lay}/Metadata").count() == 2
+
+
+def test_resume_mcap_unchunked_grown(spark, tmp_path):
+    """An unchunked MCAP (top-level Message records) resumes from the byte
+    offset after its last converted Message record: grown from 10 to 15
+    messages, the layout holds 15 rows numbered 0..14, equal to one-shot
+    conversion; a second resume is a no-op, and a re-recorded file (same
+    length prefix, different stamps) is refused before any write."""
+    from rosbag2parquet_spark.sources.mcap import write_mcap
+
+    bag = str(tmp_path / "flat.mcap")
+    conns = [ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_DEF)]
+    write_mcap(bag, conns, _imu_msgs(0, 10), chunked=False)
+    lay = str(tmp_path / "lay")
+    assert convert_bag(spark, bag, lay).count == 10
+    state = json.load(open(os.path.join(lay, INGEST_STATE)))
+    assert state["n_chunks"] == 0 and state["last_offset"] is not None
+
+    write_mcap(bag, conns, _imu_msgs(0, 15), chunked=False)
+    assert resume_convert_bag(spark, bag, lay).count == 5
+    msgs = spark.read.parquet(os.path.join(lay, "Messages")).orderBy("seqno")
+    assert [r.seqno for r in msgs.collect()] == list(range(15))
+    lay2 = str(tmp_path / "oneshot")
+    convert_bag(spark, bag, lay2)
+    assert _typed_rows(spark, lay) == _typed_rows(spark, lay2)
+    assert resume_convert_bag(spark, bag, lay).count == 0
+
+    write_mcap(
+        bag, conns,
+        [(1, T0 + 7 + i * 999, encode_imu(i, (1, 1, 1), "x")) for i in range(20)],
+        chunked=False,
+    )
+    with pytest.raises(ValueError, match="re-recorded"):
+        resume_convert_bag(spark, bag, lay)
+    assert spark.read.parquet(os.path.join(lay, "Messages")).count() == 15

@@ -421,27 +421,76 @@ def write_counted(path: str, container: str, msgs: list) -> None:
                      messages_per_chunk=7)
 
 
-@pytest.mark.parametrize("container", ["none", "bz2", "lz4", "sbag", "mcap"])
-def test_index_seqno_equals_assign_seqno(spark, tmp_path, monkeypatch, container):
-    """The seqno the scan derives from declared unit counts equals
-    assign_seqno's rank of the offset, row for row, on a multi-unit
-    two-connection bag: a rosbag under every chunk codec (ChunkInfo
-    counts), SBAG and unchunked MCAP (counted record spans, cut at 7
-    records here so the bag has several units)."""
+def write_unindexed(path: str, msgs: list) -> None:
+    """A rosbag cut after its last chunk (a crashed recorder): no index
+    region, so no chunk declares a count."""
+    from rosbag2parquet_spark.sources.rosbag import _read_record_at
+
+    full = path + ".full"
+    write_rosbag(full, _PRUNE_CONNS, msgs, compression="lz4", messages_per_chunk=7)
+    _, chunks = scan_rosbag(full)
+    with open(full, "rb") as f:
+        end = _read_record_at(f, chunks[-1].pos)[3]
+        f.seek(0)
+        head = f.read(end)
+    with open(path, "wb") as f:
+        f.write(head)
+
+
+_T0 = 1_700_000_000_000_000_000
+
+#: case -> (writer, read filter); the counted cases number from declared
+#: counts, the rest through the count job
+SEQNO_CASES = {
+    "none": ("none", {}),
+    "bz2": ("bz2", {}),
+    "lz4": ("lz4", {}),
+    "sbag": ("sbag", {}),
+    "mcap": ("mcap", {}),
+    "mcap_chunked": ("mcap_chunked", {}),
+    "db3": ("db3", {}),
+    "unindexed": ("unindexed", {}),
+    "topic": ("lz4", {"conn_ids": [2]}),
+    "time": ("lz4", {"start_ns": _T0 + 9_500_000, "end_ns": _T0 + 47_000_000}),
+}
+
+
+@pytest.mark.parametrize("case", list(SEQNO_CASES))
+def test_index_seqno_equals_assign_seqno(spark, tmp_path, monkeypatch, case):
+    """The seqno the scan numbers itself with equals assign_seqno's rank of
+    the offset over the same read, row for row, and covers 0..N-1, on a
+    multi-unit two-connection bag: from declared counts for a rosbag under
+    every chunk codec (ChunkInfo counts), SBAG and unchunked MCAP (counted
+    record spans, cut at 7 records here), and from the count job for
+    chunked MCAP, ``.db3``, an unindexed rosbag and topic- or
+    time-filtered reads."""
     from rosbag2parquet_spark.operators.keys import assign_seqno
     from rosbag2parquet_spark.sources import container as ct
+    from rosbag2parquet_spark.sources.mcap import write_mcap
+    from rosbag2parquet_spark.sources.rosbag2 import write_db3
 
     monkeypatch.setattr(ct, "SPAN_RECORDS", 7)
-    path = str(tmp_path / f"idx_{container}.bag")
-    write_counted(path, container, _two_conn_messages(60))
-    assert [u.count for u in open_bag(path).units] == [7] * 8 + [4]
-    got = read_messages(spark, path, num_partitions=3, seqno=True)
+    kind, filters = SEQNO_CASES[case]
+    path = str(tmp_path / f"idx_{case}.bag")
+    msgs = _two_conn_messages(60)
+    if kind == "mcap_chunked":
+        write_mcap(path, _PRUNE_CONNS, msgs, chunk_messages=7,
+                   encoding="ros1", schema_encoding="ros1msg")
+    elif kind == "db3":
+        write_db3(path, _PRUNE_CONNS, msgs)
+    elif kind == "unindexed":
+        write_unindexed(path, msgs)
+    else:
+        write_counted(path, kind, msgs)
+        assert [u.count for u in open_bag(path).units] == [7] * 8 + [4]
+    got = read_messages(spark, path, num_partitions=3, seqno=True, **filters)
     assert got.columns == ["offset", "time_ns", "conn_id", "data", "seqno"]
     assert got.rdd.getNumPartitions() == 3
-    want = assign_seqno(read_messages(spark, path), ["offset"])
+    want = assign_seqno(read_messages(spark, path, **filters), ["offset"])
     got_map = {r.offset: r.seqno for r in got.collect()}
     assert got_map == {r.offset: r.seqno for r in want.collect()}
-    assert sorted(got_map.values()) == list(range(60))
+    n = 20 if case == "topic" else 37 if case == "time" else 60
+    assert sorted(got_map.values()) == list(range(n))
 
 
 def test_chunk_count_check_in_every_read(spark, tmp_path):
@@ -456,6 +505,9 @@ def test_chunk_count_check_in_every_read(spark, tmp_path):
 
 
 def test_index_seqno_refuses_unindexed_and_filtered(tmp_path, spark):
+    """Declared counts give per-unit bases only when every unit has one;
+    a filtered read and a bag without ChunkInfo counts still number
+    contiguously (through the count job)."""
     from rosbag2parquet_spark.sources.container import index_seqno_bases
 
     path = str(tmp_path / "idx.bag")
@@ -463,12 +515,13 @@ def test_index_seqno_refuses_unindexed_and_filtered(tmp_path, spark):
     units = open_bag(path).units
     assert index_seqno_bases(units) == [0, 10, 20]
     assert index_seqno_bases(units[:1] + [units[1]._replace(count=-1)]) is None
-    with pytest.raises(ValueError, match="renumber"):
-        read_messages(spark, path, start_ns=0, seqno=True)
+    got = read_messages(spark, path, start_ns=_T0 + 5_000_000, seqno=True)
+    rows = sorted((r.offset, r.seqno) for r in got.collect())
+    assert [s for _, s in rows] == list(range(20))
     empty = str(tmp_path / "empty.bag")
     write_rosbag(empty, _PRUNE_CONNS, [])  # one empty chunk, no ChunkInfo
-    with pytest.raises(ValueError, match="ChunkInfo message count"):
-        read_messages(spark, empty, seqno=True)
+    assert index_seqno_bases(open_bag(empty).units) is None
+    assert read_messages(spark, empty, seqno=True).count() == 0
 
 
 def test_group_by_bytes_contiguous_and_balanced():

@@ -9,8 +9,11 @@ binary scan (byte-range partitioned DataSource) → schema-driven decode
 the raw column, reference MessageTable.cpp:63-67) → converter layout write
 (Messages/Connections/per-type SNAPPY parquet).
 
-Usage: python tools/bench_convert.py [n_messages] [blob_bytes]
+Usage: python tools/bench_convert.py [n_messages] [blob_bytes] [mode]
 Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":…}.
+``mode`` picks the corpus: omitted = the SBAG walkthrough, ``mcap`` or
+``db3`` = the same corpus in that container, ``fleet`` = 4 SBAG bags of
+``n_messages`` each through ``convert_bags``.
 """
 
 from __future__ import annotations
@@ -429,8 +432,9 @@ def run_fleet(
     """Fleet conversion throughput: N bags → ONE table layout via
     ``convert_bags`` (the reference's multi-file union claim, README.md:16)
     at the same total volume as the single-bag walkthrough, so the delta is
-    the fleet machinery itself — per-bag header walks, the unioned DAG, the
-    connection remap, and the cross-bag continuous seqno."""
+    the fleet machinery itself — per-bag header walks and the one fleet
+    scan that remaps connection ids and numbers the rows, sized by
+    ``convert_bags``' default."""
     from rosbag2parquet_spark.convert import convert_bags
     from rosbag2parquet_spark.session import get_spark
     from rosbag2parquet_spark.sources.container import read_messages
@@ -455,9 +459,7 @@ def run_fleet(
             read_messages(spark, p, 4).limit(1).count()
 
         t0 = time.perf_counter()
-        info = convert_bags(
-            spark, paths, os.path.join(work, "out"), num_partitions=32
-        )
+        info = convert_bags(spark, paths, os.path.join(work, "out"))
         dt = time.perf_counter() - t0
         assert info.count == n_bags * msgs_per_bag
         return {
@@ -474,10 +476,16 @@ def run_fleet(
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000
     blob_bytes = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
-    if len(sys.argv) > 3 and sys.argv[3] == "fleet":
-        print(json.dumps(run_fleet(msgs_per_bag=n_msgs, blob_bytes=blob_bytes)))
-        return
-    print(json.dumps(run(n_msgs, blob_bytes)))
+    modes = {
+        "walkthrough": lambda: run(n_msgs, blob_bytes),
+        "mcap": lambda: run_mcap(n_msgs, blob_bytes),
+        "db3": lambda: run_db3(n_msgs, blob_bytes),
+        "fleet": lambda: run_fleet(msgs_per_bag=n_msgs, blob_bytes=blob_bytes),
+    }
+    mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
+    if mode not in modes:
+        raise SystemExit(f"mode must be one of {sorted(modes)}, got {mode!r}")
+    print(json.dumps(modes[mode]()))
 
 
 if __name__ == "__main__":
