@@ -21,8 +21,10 @@ reference's View setup does), and describes the message region as counted
 record spans; ``read_units`` reads the spans of one split. The offset is
 the record's byte position: stable, unique, and in file order, so seqno is
 either the rank of the offset or — every span being counted — numbered in
-the scan. Schema inference for the per-type tables then uses the msg_def
-text from the header via :mod:`rosbag2parquet_spark.sources.msgdef` —
+the scan. The same offsets are the resume cursor: pure append keeps them,
+and a resume refuses a changed header (every record shifts). Schema
+inference for the per-type tables then uses the msg_def text from the
+header via :mod:`rosbag2parquet_spark.sources.msgdef` —
 exactly the reference's two-layer design (connections metadata +
 schema-driven payload decode).
 """
@@ -41,7 +43,9 @@ from rosbag2parquet_spark.sources.container import (
     Container,
     ConnRow,
     message_batch,
+    record_cursor,
     record_spans,
+    record_start,
 )
 
 MAGIC = b"SBAG"
@@ -204,6 +208,42 @@ def open_container(
         label="records at bytes {0}-{1}",
         index="record walk",
     )
+
+
+def _record_time(path: str, offset: int) -> "int | None":
+    """time_ns of the record at ``offset`` (u32 length, u32 conn, u64
+    time), or None when no whole record starts there."""
+    size = os.path.getsize(path)
+    if offset + 16 > size:
+        return None
+    with open(path, "rb") as f:
+        f.seek(offset)
+        rec_len, _conn, time_ns = struct.unpack("<IIQ", f.read(16))
+    if rec_len < 12 or offset + 4 + rec_len > size:
+        return None
+    return time_ns
+
+
+def cursor(bag: Container) -> dict:
+    """The byte-offset cursor plus the message-region start: offsets are
+    header-relative, so a header that declares new connections shifts
+    every record and must refuse the resume."""
+    return {
+        **record_cursor(bag, _record_time),
+        "msg_region_start": read_header(bag.path)[1],
+    }
+
+
+def resume_start(path: str, state: dict) -> int:
+    was = state.get("msg_region_start")
+    if was is not None:
+        now = read_header(path)[1]
+        if now != was:
+            raise ValueError(
+                f"{path}: header changed since conversion ({was} -> {now} "
+                "bytes) — byte offsets shifted; re-convert from scratch"
+            )
+    return record_start(path, state, _record_time)
 
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,

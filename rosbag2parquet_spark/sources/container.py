@@ -3,8 +3,8 @@ the rosbag2 ``.db3`` sqlite storage (the reference reads every bag through
 one ``rosbag::View`` and takes one connection snapshot,
 rosbag2parquet.cpp:44-47 / FlattenedRosWriter.cpp:30-32).
 
-Each format module describes its file and reads its own bytes with two
-functions:
+Each grammar module describes its file, reads its own bytes and owns its
+resume cursor and side-car records:
 
 - ``open_container(path, msgdefs=None, start=None)`` returns a
   :class:`Container`: grammar, payload serialization, the 7-column
@@ -14,10 +14,23 @@ functions:
   the resume cursor in the container's own unit;
 - ``read_units(path, keys, start_ns=None, end_ns=None, conn_ids=None,
   on_error="fail")`` yields ``MESSAGE_SCHEMA`` Arrow batches of the units
-  with those keys, in file order.
+  with those keys, in file order;
+- ``cursor(bag)`` gives the resume cursor after the container's planned
+  units — the ``_ingest_state.json`` keys the grammar owns, derived from
+  the plan the open made (never a rescan after the write) — or None where
+  the grammar cannot resume (rosbag);
+- ``resume_start(path, state)`` proves a saved cursor's converted prefix
+  is still the same recording and returns the ``start`` to open with;
+- optionally ``sidecar_rows(path, payloads=True)``: the file's Attachments
+  and Metadata rows (MCAP only).
+
+One open per convert: callers open each file once (:func:`open_bag`) and
+pass the :class:`Container` to :func:`read_messages`, so the Connections
+dim, the scan plan, the side-cars and the cursor describe one snapshot.
 
 This module holds everything they share: the format dispatch
-(:func:`open_bag`), unit pruning from index stats (:func:`prune`),
+(:func:`open_bag` and the hook dispatchers), the record-offset cursor
+(:func:`record_cursor`), unit pruning from index stats (:func:`prune`),
 contiguous byte-balanced splits (:func:`group_by_bytes`), the chunked
 offset encoding (:func:`offset_shift`), the Connections frame
 (:func:`connections_df`), and the one Python DataSource that reads
@@ -126,16 +139,79 @@ def _module(fmt: str):
     return importlib.import_module(f"rosbag2parquet_spark.sources.{_MODULES[fmt]}")
 
 
+def _format(path: str) -> str:
+    """The grammar from magic bytes (content wins over extension; the
+    extension only breaks the tie for magicless files, so the matching
+    reader raises its own error)."""
+    from rosbag2parquet_spark.sources.baglike import bag_format
+
+    return bag_format(path) or ("rosbag" if path.endswith(".bag") else "sbag")
+
+
 def open_bag(
     path: str, msgdefs: "dict[str, str] | None" = None, start: "int | None" = None
 ) -> Container:
-    """The container at ``path``, its grammar detected from magic bytes
-    (content wins over extension; the extension only breaks the tie for
-    magicless files, so the matching reader raises its own error)."""
-    from rosbag2parquet_spark.sources.baglike import bag_format
+    """The container at ``path``, its grammar detected from magic bytes."""
+    return _module(_format(path)).open_container(path, msgdefs, start)
 
-    fmt = bag_format(path) or ("rosbag" if path.endswith(".bag") else "sbag")
-    return _module(fmt).open_container(path, msgdefs, start)
+
+def ingest_cursor(bag: Container) -> "dict | None":
+    """The grammar's resume cursor after ``bag``'s planned units (None =
+    the grammar cannot resume)."""
+    return _module(bag.fmt).cursor(bag)
+
+
+def resume_start(path: str, state: dict) -> int:
+    """The ``start`` that resumes the layout whose ``_ingest_state.json``
+    is ``state`` from the file at ``path``: the file must be the recorded
+    bag in the recorded grammar, and its grammar proves the converted
+    prefix unchanged."""
+    fmt = _format(path)
+    if os.path.basename(path) != state["bag"] or fmt != state["format"]:
+        raise ValueError(
+            f"{path} ({fmt}) does not match the layout's recorded bag "
+            f"{state['bag']} ({state['format']})"
+        )
+    return _module(fmt).resume_start(path, state)
+
+
+def sidecar_rows(bag: Container, payloads: bool = True) -> "tuple[list, list]":
+    """(Attachments, Metadata) rows of ``bag`` — empty for grammars without
+    side-car records (see the grammar's ``sidecar_rows``)."""
+    rows = getattr(_module(bag.fmt), "sidecar_rows", None)
+    return rows(bag.path, payloads) if rows else ([], [])
+
+
+def record_cursor(bag: Container, probe) -> dict:
+    """Cursor of a grammar whose offsets are append-stable record
+    addresses (``.db3`` rowid, SBAG or unchunked-MCAP byte offset): the
+    first unconverted offset, plus the last planned record's offset and
+    its ``probe(path, offset)`` time — the identity :func:`record_start`
+    re-reads. {} when nothing is planned."""
+    if not bag.units:
+        return {}
+    last = bag.max_offset
+    return {
+        "next_offset": last + 1,
+        "last_offset": last,
+        "last_time_ns": probe(bag.path, last),
+    }
+
+
+def record_start(path: str, state: dict, probe) -> int:
+    """The saved ``next_offset`` once the last converted record still
+    reads back with its recorded time (O(1): one b-tree lookup or one
+    seek) — a restarted recording at the same path is refused."""
+    last = state["last_offset"]
+    if last is not None:
+        got = probe(path, last)
+        if got != state["last_time_ns"]:
+            raise ValueError(
+                f"{path}: record at offset {last} has time_ns {got}, layout "
+                f"recorded {state['last_time_ns']} — the bag was "
+                "re-recorded, not grown; re-convert from scratch"
+            )
+    return int(state["next_offset"])
 
 
 def prune(
@@ -404,7 +480,7 @@ def _split_counts(scan: DataFrame, n: int) -> "list[int]":
 
 def read_messages(
     spark: SparkSession,
-    path: "str | list[str]",
+    path: "str | Container | list",
     num_partitions: int = 8,
     *,
     start_ns: "int | None" = None,
@@ -421,16 +497,18 @@ def read_messages(
     contiguous byte-balanced splits, and one DataSource reads each split
     in one task, applying the exact time/connection filter itself (``.db3``
     also pushes it into its sqlite ``WHERE``). Offsets do not depend on
-    pruning or splitting. ``start`` is the resume cursor in the
+    pruning or splitting. ``path`` may be an opened :class:`Container`
+    (the converters pass the one they opened, so the scan plans from that
+    snapshot). ``start`` is the resume cursor a path opens with, in the
     container's own unit (``.db3`` rowid, SBAG or unchunked-MCAP byte
     offset, MCAP chunk index). ``on_error='permissive'`` salvages
     CRC-failed MCAP chunks.
 
-    A LIST of paths is a fleet read as one scan: the splits cover the
-    bags' units in (bag, file) order, and a trailing ``bag_index`` (the
-    bag's position in the list) follows ``data``; ``conn_maps[i]`` maps bag
-    i's connection ids to global ones, and an id missing from it fails
-    the read.
+    A LIST of paths or containers is a fleet read as one scan: the splits
+    cover the bags' units in (bag, file) order, and a trailing
+    ``bag_index`` (the bag's position in the list) follows ``data``;
+    ``conn_maps[i]`` maps bag i's connection ids to global ones, and an id
+    missing from it fails the read.
 
     ``seqno=True`` adds a trailing global ``seqno`` by one rule: each
     split numbers its kept rows from a base, the prefix sum of the rows of
@@ -440,8 +518,11 @@ def read_messages(
     otherwise one count job over the same splits does. Each split checks
     its rows against its total — equal to ``assign_seqno`` over
     (bag, offset) with no exchange and no window in the numbered scan."""
-    fleet = not isinstance(path, str)
-    bags = [open_bag(p, start=start) for p in (path if fleet else [path])]
+    fleet = not isinstance(path, (str, Container))
+    bags = [
+        p if isinstance(p, Container) else open_bag(p, start=start)
+        for p in (path if fleet else [path])
+    ]
     kept = [
         (i, u) for i, b in enumerate(bags)
         for u in prune(b.units, start_ns, end_ns, conn_ids)

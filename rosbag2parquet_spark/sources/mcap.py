@@ -37,7 +37,11 @@ into scan units (chunks, or counted spans of top-level messages) and
 ``read_units`` decompresses and walks only the units of one split.
 Offsets are ``(chunk_index << shift) | inner_pos`` for chunked files and
 raw record offsets for unchunked ones (mixing both in one file is
-refused — the orderings don't compose).
+refused — the orderings don't compose). A chunked file resumes by CHUNK
+index (an appender extends the chunk list and rewrites only the summary;
+the last converted chunk's identity proves the prefix), an unchunked one
+by byte offset; ``sidecar_rows`` supplies the Attachment and Metadata
+records the converter lands as their own tables.
 """
 
 from __future__ import annotations
@@ -57,7 +61,9 @@ from rosbag2parquet_spark.sources.container import (
     Unit,
     message_batch,
     offset_shift,
+    record_cursor,
     record_spans,
+    record_start,
 )
 
 MCAP_MAGIC = b"\x89MCAP0\r\n"
@@ -905,6 +911,95 @@ def open_container(
         [ConnRow(*r) for r in mcap_connection_rows(path)],
         max_offset, units, label=label, index="record walk",
     )
+
+
+def _message_time(path: str, offset: int) -> "int | None":
+    """log_time of the top-level Message record at ``offset`` (u8 opcode,
+    u64 length, u16 channel, u32 sequence, u64 log_time), or None when no
+    whole Message record starts there."""
+    size = os.path.getsize(path)
+    if offset + 23 > size:
+        return None
+    with open(path, "rb") as f:
+        f.seek(offset)
+        head = f.read(23)
+    (rec_len,) = struct.unpack_from("<Q", head, 1)
+    if head[0] != OP_MESSAGE or rec_len < 22 or offset + 9 + rec_len > size:
+        return None
+    return struct.unpack_from("<Q", head, 15)[0]
+
+
+def _chunk_identity(*values) -> dict:
+    keys = ("records_off", "records_size", "start_time", "end_time")
+    return dict(zip(keys, values))
+
+
+def cursor(bag: Container) -> dict:
+    """A chunked file's cursor is the converted chunk-prefix length plus
+    the last planned chunk's identity (synthetic message offsets can
+    re-encode as the file grows, closed chunks never move), with the last
+    message's offset and time read from the last planned chunk that holds
+    one; an unchunked file (``n_chunks`` 0) keeps the byte-offset
+    cursor."""
+    if not bag.units or len(bag.units[0].key) == 2:
+        return {**record_cursor(bag, _message_time), "n_chunks": 0}
+    last = bag.units[-1]
+    cur = {
+        "n_chunks": last.key[0] + 1,
+        "last_chunk": _chunk_identity(
+            last.key[1], last.key[2], last.start_ns, last.end_ns
+        ),
+    }
+    for u in reversed(bag.units):
+        batches = list(read_units(bag.path, [u.key], on_error="permissive"))
+        if batches:
+            off = batches[-1]["offset"][-1].as_py()
+            t = batches[-1]["time_ns"][-1].as_py()
+            return {"next_offset": off + 1, "last_offset": off,
+                    "last_time_ns": t, **cur}
+    return cur
+
+
+def resume_start(path: str, state: dict) -> int:
+    n_prev = int(state.get("n_chunks", 0))
+    if not n_prev:
+        return record_start(path, state, _message_time)
+    chunks = scan_mcap(path).chunks
+    if len(chunks) < n_prev:
+        raise ValueError(
+            f"{path}: {len(chunks)} chunks, layout converted {n_prev} — "
+            "the bag shrank (re-recorded); re-convert"
+        )
+    c = chunks[n_prev - 1]
+    got = _chunk_identity(c.records_off, c.records_size, c.start_time, c.end_time)
+    if got != state["last_chunk"]:
+        raise ValueError(
+            f"{path}: chunk {n_prev - 1} identity changed "
+            f"({state['last_chunk']} -> {got}) — the bag was re-recorded, "
+            "not grown; re-convert from scratch"
+        )
+    return n_prev
+
+
+def sidecar_rows(path: str, payloads: bool = True) -> "tuple[list, list]":
+    """The file's side-car records as layout rows: Attachments (name,
+    media_type, log_time, create_time, data), and Metadata (name, key,
+    value) one row per key — an empty-map record keeps a (name, None,
+    None) row so the record itself survives. ``payloads=False`` lists the
+    attachments as (name, media_type, byte size) instead, from the
+    AttachmentIndex when the file has one — no payload bytes read."""
+    if payloads:
+        att = [
+            (n, m, lt, ct, bytes(d)) for lt, ct, n, m, d in mcap_attachments(path)
+        ]
+    else:
+        att = mcap_attachment_stats(path)
+    md = [
+        (name, k, v)
+        for name, kv in mcap_metadata(path)
+        for k, v in (list(kv.items()) or [(None, None)])
+    ]
+    return att, md
 
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,

@@ -409,6 +409,20 @@ def open_container(
     )
 
 
+def cursor(bag: Container) -> None:
+    """No resume cursor: an appended .bag needs a reindex that may reframe
+    chunks."""
+    return None
+
+
+def resume_start(path: str, state: dict) -> int:
+    raise ValueError(
+        "resume is not supported for rosbag: an appended .bag needs a "
+        "reindex that may reframe chunks; ingest new FILES via "
+        "convert_bags(mode='append') instead"
+    )
+
+
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
     """One Arrow batch per chunk (rosbag chunks are already the natural

@@ -51,6 +51,8 @@ from rosbag2parquet_spark.sources.container import (
     ConnRow,
     Unit,
     message_batch,
+    record_cursor,
+    record_start,
 )
 
 SQLITE_MAGIC = b"SQLite format 3\x00"
@@ -271,11 +273,13 @@ def open_container(
     type left without one carries msg_def None, which the converter
     refuses. ``start`` is the resume cursor, a rowid: sqlite rowids are
     append-stable, so a GROWING recording converts its delta via the
-    primary-key b-tree — O(new rows), not O(bag)."""
+    primary-key b-tree — O(new rows), not O(bag).
+
+    The rowid bound is read BEFORE the topics and definitions: a recorder
+    registers a topic before its first message, so every planned row's
+    connection is in the dim even while the file grows."""
     if not is_rosbag2(path):
         raise ValueError(f"not a rosbag2 sqlite3 file: {path}")
-    defs = read_embedded_msgdefs(path)
-    defs.update(msgdefs or {})
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
         lo, hi = con.execute(
@@ -284,6 +288,8 @@ def open_container(
         ).fetchone()
     finally:
         con.close()
+    defs = read_embedded_msgdefs(path)
+    defs.update(msgdefs or {})
     units = []
     if lo is not None:
         step = min(_UNIT_ROWS, max(1, (hi - lo + 1) // 64))
@@ -299,6 +305,27 @@ def open_container(
         ],
         hi or 0, units, label="rows {0}-{1}", index="rowid range",
     )
+
+
+def _row_time(path: str, rowid: int) -> "int | None":
+    """timestamp of the message row ``rowid``, or None if absent."""
+    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+    try:
+        row = con.execute(
+            "SELECT timestamp FROM messages WHERE id = ?", (int(rowid),)
+        ).fetchone()
+    finally:
+        con.close()
+    return None if row is None else int(row[0])
+
+
+def cursor(bag: Container) -> dict:
+    """The rowid cursor after the planned ranges."""
+    return record_cursor(bag, _row_time)
+
+
+def resume_start(path: str, state: dict) -> int:
+    return record_start(path, state, _row_time)
 
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,

@@ -471,6 +471,59 @@ def test_append_evolve_additive_schema(spark, tmp_path):
     assert read_layout_table(spark, out, "demo_Evolving").count() == before_rows
 
 
+def test_strict_fleet_refuses_db3_definition_drift(spark, tmp_path):
+    """``.db3`` connections carry no md5sum (""), which is UNKNOWN, not a
+    shared value: two recordings whose shared type has different
+    definitions are refused by a strict fleet before any write, and
+    ``evolve=True`` still lands them padded to the union."""
+    from rosbag2parquet_spark.convert import read_layout_table
+    from rosbag2parquet_spark.sources.rosbag2 import write_db3
+
+    def mk(name, deftext, payloads):
+        p = str(tmp_path / name)
+        conns = [ConnectionInfo(1, "/t", "demo/Evolving", "", deftext)]
+        write_db3(p, conns, payloads)
+        return p
+
+    cdr = b"\x00\x01\x00\x00"
+    a = mk("a.db3", "uint32 a\n",
+           [(1, 10**18 + i, cdr + struct.pack("<I", i)) for i in range(3)])
+    b = mk("b.db3", "uint32 a\nuint32 b\n",
+           [(1, 10**18 + 10**9 + i, cdr + struct.pack("<II", i, 100 + i))
+            for i in range(2)])
+    out = str(tmp_path / "strict")
+    with pytest.raises(ValueError, match="disagree on the message definition"):
+        convert_bags(spark, [a, b], out)
+    assert not os.path.exists(os.path.join(out, "Messages"))
+
+    out = str(tmp_path / "evolved")
+    assert convert_bags(spark, [a, b], out, evolve=True).count == 5
+    rows = read_layout_table(spark, out, "demo_Evolving").orderBy("seqno").collect()
+    assert [(r.bag_index, r.a, r.b) for r in rows] == [
+        (0, 0, None), (0, 1, None), (0, 2, None), (1, 0, 100), (1, 1, 101)
+    ]
+
+
+def test_ros1_mcap_and_rosbag_share_a_type(spark, tmp_path):
+    """A ros1 MCAP channel has no md5sum field; carrying the SAME
+    definition text as a rosbag connection (md5 known) it joins the
+    rosbag's type table in one strict fleet instead of being refused."""
+    from rosbag2parquet_spark.sources.mcap import write_mcap
+
+    deftext = "uint32 a\nfloat64 b\n"
+    rb = str(tmp_path / "a.bag")
+    write_rosbag(rb, [ConnectionInfo(1, "/s", "demo/Simple", "m1", deftext)],
+                 [(1, 1_000 + i, struct.pack("<Id", i, i * 0.5)) for i in range(3)])
+    mc = str(tmp_path / "b.mcap")
+    write_mcap(mc, [ConnectionInfo(1, "/s", "demo/Simple", "", deftext)],
+               [(1, 5_000 + i, struct.pack("<Id", 10 + i, 0.0)) for i in range(4)],
+               encoding="ros1", schema_encoding="ros1msg")
+    out = str(tmp_path / "out")
+    assert convert_bags(spark, [rb, mc], out).count == 7
+    rows = spark.read.parquet(os.path.join(out, "demo_Simple")).orderBy("seqno")
+    assert [r.a for r in rows.collect()] == [0, 1, 2, 10, 11, 12, 13]
+
+
 def test_pertype_with_provenance_resolves_bag_names(spark, fleet_out):
     """The layout-level provenance read (reference TODO
     FlattenedRosWriter.cpp:183 surfaced end to end): per-type rows join

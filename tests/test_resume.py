@@ -379,3 +379,84 @@ def test_resume_mcap_unchunked_grown(spark, tmp_path):
     with pytest.raises(ValueError, match="re-recorded"):
         resume_convert_bag(spark, bag, lay)
     assert spark.read.parquet(os.path.join(lay, "Messages")).count() == 15
+
+
+def _dangling(spark, layout):
+    """Messages connection ids with no Connections row."""
+    msgs = spark.read.parquet(os.path.join(layout, "Messages"))
+    conns = spark.read.parquet(os.path.join(layout, "Connections"))
+    return {
+        r.connection_id
+        for r in msgs.join(conns, "connection_id", "left_anti").collect()
+    }
+
+
+def test_resume_mcap_grown_during_convert(spark, tmp_path, monkeypatch):
+    """Chunks the recorder appends WHILE convert_bag writes stay out of
+    the layout AND out of its cursor: the cursor covers the chunks the scan
+    planned, so the next resume converts the rest and the layout equals a
+    one-shot conversion of the grown file (30 rows)."""
+    from rosbag2parquet_spark import convert as cv
+    from rosbag2parquet_spark.sources.mcap import write_mcap
+
+    bag = str(tmp_path / "race.mcap")
+    conns = [ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_DEF)]
+    write_mcap(bag, conns, _imu_msgs(0, 18), chunk_messages=9)
+    real = cv._write_bag_tables
+
+    def grow_then_write(*args, **kwargs):
+        write_mcap(bag, conns, _imu_msgs(0, 30), chunk_messages=9)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cv, "_write_bag_tables", grow_then_write)
+    lay = str(tmp_path / "lay")
+    assert convert_bag(spark, bag, lay).count == 18
+    monkeypatch.undo()
+    assert resume_convert_bag(spark, bag, lay).count == 12
+
+    lay2 = str(tmp_path / "oneshot")
+    assert convert_bag(spark, bag, lay2).count == 30
+    assert _typed_rows(spark, lay) == _typed_rows(spark, lay2)
+    a = sorted(map(tuple, spark.read.parquet(f"{lay}/Messages").collect()))
+    b = sorted(map(tuple, spark.read.parquet(f"{lay2}/Messages").collect()))
+    assert len(a) == 30 and a == b
+
+
+def test_resume_db3_topic_added_during_convert(spark, tmp_path, monkeypatch):
+    """A topic and rows the recorder adds between convert_bag's open and
+    its scan stay out of that convert: no Messages row names a connection
+    the Connections dim lacks, and the next resume converts the new rows
+    with their connection and per-type table."""
+    from rosbag2parquet_spark import convert as cv
+
+    bag = str(tmp_path / "race.db3")
+    conns = [ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_DEF)]
+    write_db3(bag, conns, _imu_msgs(0, 20))
+    real = cv.read_messages
+
+    def grow_then_read(*args, **kwargs):
+        _grow_db3(
+            bag,
+            [(2, T0 + (20 + i) * 1_000_000, _gps(i)) for i in range(5)],
+            new_topics=[(2, "/gps", "demo/GpsLite")],
+            new_defs=[("demo/GpsLite", GPS_DEF)],
+        )
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(cv, "read_messages", grow_then_read)
+    lay = str(tmp_path / "lay")
+    assert convert_bag(spark, bag, lay).count == 20
+    monkeypatch.undo()
+    assert _dangling(spark, lay) == set()
+
+    assert resume_convert_bag(spark, bag, lay).count == 5
+    assert _dangling(spark, lay) == set()
+    lay2 = str(tmp_path / "oneshot")
+    convert_bag(spark, bag, lay2)
+    assert _typed_rows(spark, lay, "demo_GpsLite") == _typed_rows(
+        spark, lay2, "demo_GpsLite"
+    )
+    for t in ("Messages", "Connections"):
+        a = sorted(map(tuple, spark.read.parquet(f"{lay}/{t}").collect()))
+        b = sorted(map(tuple, spark.read.parquet(f"{lay2}/{t}").collect()))
+        assert a == b, t

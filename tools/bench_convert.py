@@ -13,7 +13,9 @@ Usage: python tools/bench_convert.py [n_messages] [blob_bytes] [mode]
 Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":…}.
 ``mode`` picks the corpus: omitted = the SBAG walkthrough, ``mcap`` or
 ``db3`` = the same corpus in that container, ``fleet`` = 4 SBAG bags of
-``n_messages`` each through ``convert_bags``.
+``n_messages`` each through ``convert_bags``, ``resume`` = a ``.db3`` and
+a chunked MCAP converted at half their messages, grown to
+``n_messages``, then timed through ``resume_convert_bag``.
 """
 
 from __future__ import annotations
@@ -138,13 +140,18 @@ def _cdr_image_payload(i: int, blob: bytes, frame: bytes, fmt: bytes) -> bytes:
     return bytes(buf)
 
 
-def synth_db3(path: str, n_msgs: int, blob_bytes: int) -> None:
+def synth_db3(path: str, n_msgs: int, blob_bytes: int, first: int = 0) -> None:
     """Self-describing (Iron+/v4) rosbag2 sqlite bag with the walkthrough
-    corpus — message_definitions embedded, so conversion needs no msgdefs."""
+    corpus — message_definitions embedded, so conversion needs no msgdefs.
+    ``first`` > 0 grows an existing bag by messages first..n_msgs-1, the
+    way a recorder INSERTs into the same file."""
     import sqlite3
 
     blob = bytes(range(256)) * (blob_bytes // 256)
     con = sqlite3.connect(path)
+    if first:
+        _db3_messages(con, first, n_msgs, blob)
+        return
     con.execute(
         "CREATE TABLE topics(id INTEGER PRIMARY KEY, name TEXT, type TEXT,"
         " serialization_format TEXT, offered_qos_profiles TEXT,"
@@ -168,13 +175,17 @@ def synth_db3(path: str, n_msgs: int, blob_bytes: int) -> None:
         " (1, 'sensor_msgs/CompressedImage', 'ros2msg', ?, 'h1')",
         (IMG_DEF,),
     )
+    _db3_messages(con, 0, n_msgs, blob)
+
+
+def _db3_messages(con, lo: int, hi: int, blob: bytes) -> None:
     t0 = 1_700_000_000_000_000_000
     con.executemany(
         "INSERT INTO messages VALUES (?,?,?,?)",
         [
             (None, 1, t0 + i * 33_000_000,
              _cdr_image_payload(i, blob, b"camera_link", b"jpeg"))
-            for i in range(n_msgs)
+            for i in range(lo, hi)
         ],
     )
     con.commit()
@@ -473,6 +484,39 @@ def run_fleet(
         shutil.rmtree(work, ignore_errors=True)
 
 
+def run_resume(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
+    """Incremental resume time: a ``.db3`` and a chunked MCAP of the
+    walkthrough corpus converted at half their messages (untimed, which
+    also warms the session), grown to ``n_msgs`` — sqlite INSERTs, whole
+    MCAP chunks appended — then ``resume_convert_bag`` timed over the
+    delta."""
+    from rosbag2parquet_spark.convert import convert_bag, resume_convert_bag
+    from rosbag2parquet_spark.session import get_spark
+
+    half = n_msgs // 400 * 200  # whole 200-message MCAP chunks
+    work = tempfile.mkdtemp(prefix="bench_resume_")
+    try:
+        spark = spark or get_spark("bench_convert")
+        spark.range(1).count()
+        out = {"messages": n_msgs, "delta": n_msgs - half}
+        for suffix, synth in (
+            ("db3", synth_db3),
+            ("mcap", lambda p, n, b, first: synth_mcap(p, n, b)),
+        ):
+            bag = os.path.join(work, f"live.{suffix}")
+            layout = os.path.join(work, f"layout_{suffix}")
+            synth(bag, half, blob_bytes, 0)
+            convert_bag(spark, bag, layout)
+            synth(bag, n_msgs, blob_bytes, half)
+            t0 = time.perf_counter()
+            info = resume_convert_bag(spark, bag, layout)
+            out[f"{suffix}_resume_s"] = round(time.perf_counter() - t0, 2)
+            assert info.count == n_msgs - half, info
+        return out
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000
     blob_bytes = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
@@ -481,6 +525,7 @@ def main() -> None:
         "mcap": lambda: run_mcap(n_msgs, blob_bytes),
         "db3": lambda: run_db3(n_msgs, blob_bytes),
         "fleet": lambda: run_fleet(msgs_per_bag=n_msgs, blob_bytes=blob_bytes),
+        "resume": lambda: run_resume(n_msgs, blob_bytes),
     }
     mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
     if mode not in modes:
