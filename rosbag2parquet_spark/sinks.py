@@ -36,7 +36,7 @@ conns AS (
 #: the /tmp scratch below persists ACROSS processes, and a stale
 #: pre-change layout under the old key would feed the driver's sink gate
 #: a wrong schema
-LAYOUT_CACHE_VERSION = 5  # r11: per-type tables gained the bag_index stamp
+LAYOUT_CACHE_VERSION = 6  # files written by the one-job pyarrow layout write
 
 
 def _cached_layout(sf_dir: str, suffix: str, build) -> str:
@@ -1239,9 +1239,8 @@ def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     1%-slice of events (event_id % 100 == 25) is serialized driver-side as
     UTF-8 JSON payloads (nested object + integer/number/string/boolean on
     the hot path), written as an indexed MCAP whose Schema record carries
-    a ``jsonschema`` document, converted by the pure-Catalyst from_json
-    tier (sources/jsonschema.py — the only decode tier with ZERO Python in
-    the row loop), and the flattened typed table is compared to DuckDB's
+    a ``jsonschema`` document, converted by the JSON tier
+    (sources/jsonschema.py), and the flattened typed table is compared to DuckDB's
     direct select over events. Proves the FOURTH message grammar
     (ros1/cdr, protobuf, json) end-to-end in the correctness gate.
     Memoized per (session, sf_dir) like the other converter gates."""

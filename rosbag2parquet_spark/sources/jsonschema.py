@@ -1,11 +1,12 @@
 """JSON message-encoding tier for MCAP channels (the Foxglove/websocket
 recording shape beside ``protobuf``): Schema records with encoding
 ``jsonschema`` carry a JSON Schema document, Message payloads are UTF-8
-JSON. Unlike the CDR/ros1/protobuf tiers — byte-walking decoders that
-need a Python worker — JSON decodes ENTIRELY JVM-side: the JSON Schema
-compiles to a Spark ``StructType`` and the payload goes through
-``from_json`` inside whole-stage codegen. Zero Python in the row loop;
-this tier is the engine's best case.
+JSON. The JSON Schema compiles to a Spark ``StructType`` (the table
+schema) and each payload decodes by one ``json.loads`` walk into the
+flattened leaf tuple — the same per-row ``decode(payload) -> tuple``
+contract as protobuf, run by the shared decode driver
+(:func:`rosbag2parquet_spark.sources.decode.decode_columns`), so the
+``on_error`` modes behave alike across grammars.
 
 Supported JSON Schema subset (everything a telemetry recorder emits):
 ``object`` with ``properties`` (nested objects flatten to
@@ -28,7 +29,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: msg_def marker the per-type decode dispatches on (the slot convention
@@ -92,9 +92,7 @@ def _flat_leaves(
     struct: T.StructType, path: "tuple[str, ...]" = (), flat: str = ""
 ) -> "list[tuple[tuple, str, T.DataType]]":
     """(field-name path, flat_name, type) leaves in schema order — the
-    path navigates the parsed struct via getField (robust to names a dot
-    string couldn't address), the flat name carries the underscore
-    convention of the other tiers."""
+    flat name carries the underscore convention of the other tiers."""
     out = []
     for f in struct.fields:
         p = path + (f.name,)
@@ -104,6 +102,101 @@ def _flat_leaves(
         else:
             out.append((p, fl, f.dataType))
     return out
+
+
+def _scalar_conv(t: T.DataType):
+    """A JSON value -> the column value of type ``t`` (never None), under
+    ``from_json``'s rules: integers only for long, any number for double,
+    the JSON text of a non-string value for string, booleans only for
+    boolean; anything else raises."""
+    if isinstance(t, T.LongType):
+        def conv(v):
+            if type(v) is not int or not -(1 << 63) <= v < (1 << 63):
+                raise ValueError(f"not a 64-bit JSON integer: {v!r}")
+            return v
+    elif isinstance(t, T.DoubleType):
+        def conv(v):
+            if type(v) not in (int, float):
+                raise ValueError(f"not a JSON number: {v!r}")
+            return float(v)
+    elif isinstance(t, T.BooleanType):
+        def conv(v):
+            if type(v) is not bool:
+                raise ValueError(f"not a JSON boolean: {v!r}")
+            return v
+    else:
+        def conv(v):
+            return v if type(v) is str else json.dumps(v, separators=(",", ":"))
+    return conv
+
+
+def _leaf_conv(t: T.DataType):
+    if not isinstance(t, T.ArrayType):
+        return _scalar_conv(t)
+    elem = _scalar_conv(t.elementType)
+
+    def conv(v):
+        if type(v) is not list:
+            raise ValueError(f"not a JSON array: {v!r}")
+        return [None if e is None else elem(e) for e in v]
+
+    return conv
+
+
+def make_json_decoder(struct: T.StructType):
+    """Compile a decode function(bytes) -> tuple of the flattened leaf
+    values in :func:`_flat_leaves` order: a missing or null field is NULL,
+    a payload that is not a JSON object (or nests a non-object where the
+    schema has one) raises."""
+
+    def plan(st: T.StructType) -> list:
+        return [
+            (f.name, plan(f.dataType) if isinstance(f.dataType, T.StructType)
+             else _leaf_conv(f.dataType))
+            for f in st.fields
+        ]
+
+    root = plan(struct)
+
+    def walk(obj, fields: list, out: list) -> None:
+        for name, sub in fields:
+            v = None if obj is None else obj.get(name)
+            if isinstance(sub, list):
+                if v is not None and type(v) is not dict:
+                    raise ValueError(f"field {name!r} is not a JSON object")
+                walk(v, sub, out)
+            else:
+                out.append(None if v is None else sub(v))
+
+    def decode(payload: bytes) -> tuple:
+        doc = json.loads(payload)
+        if type(doc) is not dict:
+            raise ValueError("json payload is not an object")
+        out: list = []
+        walk(doc, root, out)
+        return tuple(out)
+
+    return decode
+
+
+def json_tier(msg_def: str) -> tuple:
+    """``(flat, decode, None)`` for :func:`sources.decode.decode_columns`:
+    the flattened leaf columns (nested ``parent_child`` names, reserved
+    names sanitized like every other tier) and a per-row ``json.loads``
+    walk. ``arrays``/``unsigned`` do not apply (JSON arrays are always
+    native; JSON numbers carry no signedness)."""
+    from rosbag2parquet_spark.sources.msgdef import _sanitize_flat_names
+
+    text = msg_def[len(JSON_DEF_PREFIX):] if msg_def.startswith(
+        JSON_DEF_PREFIX
+    ) else msg_def
+    struct = spark_schema_from_jsonschema(text)
+    flat = T.StructType(
+        _sanitize_flat_names(
+            [T.StructField(fl, t, True) for _p, fl, t in _flat_leaves(struct)]
+        )
+    )
+    return flat, make_json_decoder(struct), None
 
 
 def decode_messages_json(
@@ -117,59 +210,21 @@ def decode_messages_json(
     unsigned: str = "signed",
     on_error: str = "fail",
 ) -> DataFrame:
-    """Decode UTF-8 JSON payloads into flattened typed columns — pure
-    Catalyst (``from_json`` + nested-field projection), no Python worker.
-    ``arrays``/``unsigned`` are accepted for tier-signature parity and do
-    not apply (JSON arrays are always native; JSON numbers carry no
-    signedness). ``on_error='fail'`` parses FAILFAST (a malformed payload
-    aborts the convert); ``'permissive'`` NULLs the typed columns and
-    routes the reason to the ``_decode_error`` dead-letter column like the
-    byte-walking tiers."""
-    from rosbag2parquet_spark.sources.msgdef import _sanitize_flat_names
+    """Decode UTF-8 JSON payloads into flattened typed columns through the
+    shared Arrow-batched driver (:func:`sources.decode.map_decode`), the
+    same contract as the ROS 1/CDR/protobuf tiers: ``on_error='fail'``
+    raises on a malformed payload, ``'permissive'`` NULLs the typed
+    columns and routes the reason to the ``_decode_error`` dead-letter
+    column. ``arrays``/``unsigned`` are accepted for tier-signature parity
+    and do not apply."""
+    from rosbag2parquet_spark.sources.decode import map_decode
 
-    text = msg_def[len(JSON_DEF_PREFIX):] if msg_def.startswith(
-        JSON_DEF_PREFIX
-    ) else msg_def
-    struct = spark_schema_from_jsonschema(text)
-    leaves = _flat_leaves(struct)
-    sanitized = _sanitize_flat_names(
-        [T.StructField(fl, t, True) for _p, fl, t in leaves]
+    flat, decode, _ = json_tier(msg_def)
+    return map_decode(
+        df,
+        flat,
+        decode,
+        data_col=data_col,
+        keep_cols=keep_cols,
+        on_error=on_error,
     )
-    if on_error == "fail":
-        opts = {"mode": "FAILFAST"}
-        parse_struct = struct
-    else:
-        # PERMISSIVE yields a struct of NULL FIELDS on malformed input
-        # (not a NULL struct) — detection needs the corrupt-record column
-        # declared inside the parse schema
-        corrupt = "__corrupt__"
-        while corrupt in {f.name for f in struct.fields}:
-            corrupt += "_"
-        opts = {
-            "mode": "PERMISSIVE",
-            "columnNameOfCorruptRecord": corrupt,
-        }
-        parse_struct = T.StructType(
-            list(struct.fields)
-            + [T.StructField(corrupt, T.StringType(), True)]
-        )
-    parsed = df.withColumn(
-        "__parsed__",
-        F.from_json(F.decode(F.col(data_col), "UTF-8"), parse_struct, opts),
-    )
-    cols = list(keep_cols)
-    # positional: leaf i (by nested path) lands in sanitized name i — the
-    # same walk-order invariant every other tier keeps
-    for (path, _fl, _t), fld in zip(leaves, sanitized):
-        c = F.col("__parsed__")
-        for name in path:
-            c = c.getField(name)
-        cols.append(c.alias(fld.name))
-    if on_error == "permissive":
-        cols.append(
-            F.when(
-                F.col("__parsed__").getField(corrupt).isNotNull(),
-                F.lit("malformed json payload"),
-            ).alias("_decode_error")
-        )
-    return parsed.select(*cols)

@@ -837,7 +837,7 @@ def mcap_serialization(path: str) -> str:
     the per-type decode can't dispatch). ``protobuf`` channels dispatch to
     their own decode tier via the msg_def marker (protobuf.py) and
     ``ros2idl`` channels are blob-preserved, ``jsonschema`` channels
-    dispatch to the pure-Catalyst from_json tier (jsonschema.py) — so
+    dispatch to the JSON tier (jsonschema.py) — so
     none of them constrains the file's ros serialization — a protobuf-only Foxglove recording converts
     with typed tables, an idl-only one blob-preserves, and neither is
     refused outright."""

@@ -553,6 +553,20 @@ def make_proto_decoder(compiled: _Compiled):
     return decode
 
 
+def protobuf_tier(
+    root_type: str, msg_def: str, arrays: str = "skip", unsigned: str = "signed"
+) -> tuple:
+    """``(flat, decode, None)`` for :func:`sources.decode.decode_columns`:
+    a per-row wire walk (the tier-3 analog — protobuf's tag-length framing
+    has no fixed stride to vectorize over). Exact-mode uint64 columns ship
+    as DECIMAL(20,0); this tier's repeated-uint64 decode yields plain-int
+    lists, which the driver's decimal conversion passes through."""
+    compiled = compile_proto(
+        root_type, fds_from_msgdef(msg_def), arrays=arrays, unsigned=unsigned
+    )
+    return compiled.schema, make_proto_decoder(compiled), None
+
+
 def decode_messages_protobuf(
     df: DataFrame,
     root_type: str,
@@ -567,21 +581,14 @@ def decode_messages_protobuf(
     Arrow-batched driver (:func:`sources.decode.map_decode`), the same
     contract as the ROS 1/CDR tiers: ``on_error='permissive'``
     dead-letters bad rows with a ``_decode_error`` column instead of
-    killing the conversion. Decode is a per-row wire walk (the tier-3
-    analog — protobuf's tag-length framing has no fixed stride to
-    vectorize over)."""
+    killing the conversion."""
     from rosbag2parquet_spark.sources.decode import map_decode
 
-    compiled = compile_proto(
-        root_type, fds_from_msgdef(msg_def), arrays=arrays, unsigned=unsigned
-    )
-    # exact-mode uint64 columns ship as DECIMAL(20,0); this tier's
-    # repeated-uint64 decode yields plain-int lists, which the driver's
-    # decimal conversion passes through
+    flat, decode, _ = protobuf_tier(root_type, msg_def, arrays, unsigned)
     return map_decode(
         df,
-        compiled.schema,
-        make_proto_decoder(compiled),
+        flat,
+        decode,
         data_col=data_col,
         keep_cols=keep_cols,
         on_error=on_error,

@@ -529,7 +529,7 @@ def _cdc_evolve_oracle() -> str:
     exists from the SECOND file on, so a user's merged row carries it iff
     the latest change's global index ≥ n//3 — pure integer arithmetic
     DuckDB reproduces exactly, NULL otherwise (including base-only
-    users — the NULL-filled history the batch `_pad_union` contract
+    users — the NULL-filled history the batch `_union_fields` contract
     promises)."""
     from rosbag2parquet_spark.operators.behavior import _MERGE_CUTOFF_US
 
@@ -587,7 +587,7 @@ def write_cdc_landing(spark: SparkSession, sf_dir: str, evolve: bool = False):
     micro-batch each. Returns (landing_dir, spark_schema).
 
     ``evolve=True`` plays the producer-upgrade scenario the batch layout
-    handles with `_pad_union` (convert.py:999): the extractor starts
+    handles with `_union_fields` (convert.py): the extractor starts
     stamping a ``source_seq`` column (here = the change's event_id, so
     the oracle can reproduce it) FROM THE SECOND CHANGE DROP ON — files
     000/001 lack the column entirely, files 002/003 carry it. Readers
@@ -636,7 +636,7 @@ def write_cdc_landing(spark: SparkSession, sf_dir: str, evolve: bool = False):
 
 def landing_union_schema(spark: SparkSession, landing: str):
     """The UNION schema of every parquet file in a landing directory —
-    the source-side mirror of batch `_pad_union` (convert.py:999) under
+    the source-side mirror of batch `_union_fields` (convert.py) under
     the same additive-evolution contract as `assert_append_compatible`
     (convert.py): a column present in several files must agree on type
     (a changed type is refused loudly, never coerced), new columns append
@@ -683,7 +683,7 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival order — the convergence tests drop files AFTER a first run
     and resume from the checkpoint (tests/test_streaming.py).
 
-    The landing EVOLVES mid-stream (the batch `_pad_union` contract on
+    The landing EVOLVES mid-stream (the batch `_union_fields` contract on
     the streaming path, convert.py:999): the extractor starts stamping a
     ``source_seq`` column from the second change drop on; the stream
     declares the union schema (`landing_union_schema`), the parquet

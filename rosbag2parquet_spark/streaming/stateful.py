@@ -278,7 +278,7 @@ def make_merge_updater(cutoff_us: int, extra_col: "str | None" = None):
     than the SCD2 twin). Emission is update-mode: the current merged row
     per key, the finishing query keeps the last.
 
-    ``extra_col`` is the streaming-side `_pad_union` (convert.py:999): an
+    ``extra_col`` is the streaming-side `_union_fields` (convert.py): an
     EVOLVED landing schema's added nullable column. Pre-evolution rows
     carry NULL there (the parquet source NULL-fills a declared column a
     file lacks); the value RIDES THE ARGMAX — whenever the latest-change

@@ -713,15 +713,14 @@ def test_mixed_marker_lands_before_the_append_commits(
     spark, fleet, tmp_path, monkeypatch
 ):
     """r12 (advisor low): the mixed marker is written BEFORE the evolve
-    append's parquet write — a crash between the two fails SAFE (spurious
-    marker = join fallback, always correct) rather than leaving a
-    committed mixed table unmarked (fast path would NULL-fill pre-append
-    rows). Simulated by making the parquet write raise and asserting the
-    marker is already on disk."""
+    append's files are published — a crash between the two fails SAFE
+    (spurious marker = join fallback, always correct) rather than leaving
+    a committed mixed table unmarked (fast path would NULL-fill pre-append
+    rows). Simulated by making the driver's publish step for that table
+    dir raise and asserting the marker is already on disk."""
     import shutil
 
-    from pyspark.sql import DataFrameWriter
-
+    from rosbag2parquet_spark import layout_write
     from rosbag2parquet_spark.convert import _BAG_INDEX_MIXED_MARKER
 
     _, paths = fleet
@@ -734,14 +733,14 @@ def test_mixed_marker_lands_before_the_append_commits(
     shutil.rmtree(tdir)
     legacy.write.parquet(tdir)
 
-    real_parquet = DataFrameWriter.parquet
+    real_publish = layout_write.publish_table
 
-    def crashing_parquet(self, path, **kw):
-        if path == tdir:
+    def crashing_publish(table_dir, files, overwrite):
+        if table_dir == tdir:
             raise RuntimeError("injected crash before the append commits")
-        return real_parquet(self, path, **kw)
+        return real_publish(table_dir, files, overwrite)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", crashing_parquet)
+    monkeypatch.setattr(layout_write, "publish_table", crashing_publish)
     with pytest.raises(RuntimeError, match="injected crash"):
         convert_bags(spark, [paths[1]], out, mode="append", evolve=True)
     # the marker preceded the (failed) write: the table is still pure

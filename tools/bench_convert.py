@@ -10,7 +10,8 @@ the raw column, reference MessageTable.cpp:63-67) → converter layout write
 (Messages/Connections/per-type SNAPPY parquet).
 
 Usage: python tools/bench_convert.py [n_messages] [blob_bytes] [mode]
-Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":…}.
+Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":…,
+"jobs":…}; ``jobs`` counts the Spark jobs the timed convert ran.
 ``mode`` picks the corpus: omitted = the SBAG walkthrough, ``mcap`` or
 ``db3`` = the same corpus in that container, ``fleet`` = 4 SBAG bags of
 ``n_messages`` each through ``convert_bags``, ``resume`` = a ``.db3`` and
@@ -74,6 +75,21 @@ def synth_bag(path: str, n_msgs: int, blob_bytes: int) -> None:
     )
 
 
+def timed(spark, fn):
+    """``fn()``'s result, its wall seconds and the Spark jobs it ran: the
+    status tracker's job ids above the highest one before the call."""
+    def last_job() -> int:
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+    before = last_job()
+    t0 = time.perf_counter()
+    out = fn()
+    dt = time.perf_counter() - t0
+    return out, dt, last_job() - before
+
+
 def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
     """Synthesize, convert, measure; reusable with a shared
     session (the warm-ups then cost nothing extra)."""
@@ -93,11 +109,11 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
         # lifetime, amortized away on any long-lived cluster)
         read_messages(spark, bag, 4).limit(1).count()
 
-        t0 = time.perf_counter()
         # the reference's full program: Messages + Connections + one
         # FLATTENED typed table per type (blob per MessageTable.cpp:339)
-        info = convert_bag(spark, bag, os.path.join(work, "out"))
-        dt = time.perf_counter() - t0
+        info, dt, jobs = timed(
+            spark, lambda: convert_bag(spark, bag, os.path.join(work, "out"))
+        )
 
         out_mb = sum(
             os.path.getsize(os.path.join(dp, f))
@@ -110,6 +126,7 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
             "convert_s": round(dt, 2),
             "mb_per_s": round(bag_mb / dt, 1),
             "output_mb": round(out_mb, 1),
+            "jobs": jobs,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -250,14 +267,15 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
         spark = spark or get_spark("bench_convert")
         spark.range(1).count()
         read_messages(spark, bag, 4).limit(1).count()
-        t0 = time.perf_counter()
-        info = convert_bag(spark, bag, os.path.join(work, "out"))
-        dt = time.perf_counter() - t0
+        info, dt, jobs = timed(
+            spark, lambda: convert_bag(spark, bag, os.path.join(work, "out"))
+        )
         return {
             "bag_mb": round(bag_mb, 1),
             "messages": info.count,
             "convert_s": round(dt, 2),
             "mb_per_s": round(bag_mb / dt, 1),
+            "jobs": jobs,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -339,8 +357,7 @@ def synth_json_mcap(path: str, n_msgs: int, blob_bytes: int) -> None:
     """Indexed chunked MCAP with JSON-encoded payloads at the same
     walkthrough corpus shape (seq + stamp object + strings + a
     blob-length data string) — the json grammar's throughput beside the
-    others; decode is the pure-Catalyst from_json tier (jsonschema.py),
-    the only tier with zero Python in the row loop."""
+    others; decode is the per-row ``json.loads`` walk (jsonschema.py)."""
     import json
 
     from rosbag2parquet_spark.sources.baglike import ConnectionInfo
@@ -469,9 +486,9 @@ def run_fleet(
         for p in paths:
             read_messages(spark, p, 4).limit(1).count()
 
-        t0 = time.perf_counter()
-        info = convert_bags(spark, paths, os.path.join(work, "out"))
-        dt = time.perf_counter() - t0
+        info, dt, jobs = timed(
+            spark, lambda: convert_bags(spark, paths, os.path.join(work, "out"))
+        )
         assert info.count == n_bags * msgs_per_bag
         return {
             "bags": n_bags,
@@ -479,6 +496,7 @@ def run_fleet(
             "messages": info.count,
             "convert_s": round(dt, 2),
             "mb_per_s": round(total_mb / dt, 1),
+            "jobs": jobs,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -508,9 +526,11 @@ def run_resume(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict
             synth(bag, half, blob_bytes, 0)
             convert_bag(spark, bag, layout)
             synth(bag, n_msgs, blob_bytes, half)
-            t0 = time.perf_counter()
-            info = resume_convert_bag(spark, bag, layout)
-            out[f"{suffix}_resume_s"] = round(time.perf_counter() - t0, 2)
+            info, dt, jobs = timed(
+                spark, lambda: resume_convert_bag(spark, bag, layout)
+            )
+            out[f"{suffix}_resume_s"] = round(dt, 2)
+            out[f"{suffix}_resume_jobs"] = jobs
             assert info.count == n_msgs - half, info
         return out
     finally:
