@@ -76,16 +76,156 @@ def schema_fingerprint(schema) -> str:
     return hashlib.md5(canon.encode()).hexdigest()
 
 
+class _AskSpark(Exception):
+    """A footer merge only Spark's own rules settle (decimal precision,
+    interval ranges, user-defined types)."""
+
+
+def _merge_type(a: T.DataType, b: T.DataType, cs: bool) -> T.DataType:
+    """Spark's ``StructType.merge`` rule for one column's two types."""
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        return _merge_struct(a, b, cs)
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(
+            _merge_type(a.elementType, b.elementType, cs),
+            a.containsNull or b.containsNull,
+        )
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(
+            _merge_type(a.keyType, b.keyType, cs),
+            _merge_type(a.valueType, b.valueType, cs),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    if a == b:
+        return a
+    if type(a) is type(b):
+        raise _AskSpark
+    raise ValueError(
+        f"failed to merge incompatible data types {a.simpleString()} "
+        f"and {b.simpleString()}"
+    )
+
+
+def _merge_struct(a: T.StructType, b: T.StructType, cs: bool) -> T.StructType:
+    """``a.merge(b)`` as Spark does it: ``a``'s fields in order, each
+    widened by ``b``'s same-named field, then ``b``'s new fields; names
+    match case-insensitively unless ``cs``."""
+    key = (lambda n: n) if cs else str.lower
+    right = {key(f.name): f for f in b.fields}
+    out = []
+    for f in a.fields:
+        g = right.get(key(f.name))
+        if g is None:
+            out.append(f)
+            continue
+        try:
+            merged = _merge_type(f.dataType, g.dataType, cs)
+        except ValueError as e:
+            raise ValueError(f"failed to merge fields {f.name!r} and {g.name!r}: {e}") from e
+        out.append(T.StructField(f.name, merged, f.nullable or g.nullable, f.metadata))
+    left = {key(f.name) for f in a.fields}
+    return T.StructType(out + [g for g in b.fields if key(g.name) not in left])
+
+
+def _as_nullable(t: T.DataType) -> T.DataType:
+    """Every field, element and map value nullable, as file sources read
+    back (Spark's ``asNullable``)."""
+    if isinstance(t, T.StructType):
+        return T.StructType([
+            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+def _data_files(table_dir: str) -> "list[str] | None":
+    """The parquet files Spark lists for a table dir, in its order (sorted
+    by name); None where planning needs Spark's own listing: a summary
+    file, a subdirectory (partition columns), or no data file at all."""
+    if not os.path.isdir(table_dir):
+        return None
+    files = []
+    for name in sorted(os.listdir(table_dir)):
+        if name.startswith(("_metadata", "_common_metadata")):
+            return None
+        if (
+            (name.startswith("_") and "=" not in name)
+            or name.startswith(".") or name.endswith("._COPYING_")
+        ):
+            continue  # hidden: markers, _SUCCESS, .crc files
+        path = os.path.join(table_dir, name)
+        if os.path.isdir(path):
+            return None
+        if os.path.getsize(path):
+            files.append(path)
+    return files or None
+
+
+def _footer_struct(path: str) -> "T.StructType | None":
+    """The Spark schema a file's footer key records, if it has one."""
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(path).metadata or {}).get(
+            lw.SPARK_SCHEMA_KEY.encode()
+        )
+        return None if raw is None else T.StructType.fromJson(json.loads(raw))
+    except Exception:
+        return None  # not parquet, or a key this client cannot parse
+
+
+def footer_schema(spark: SparkSession, table_dir: str) -> "T.StructType | None":
+    """A table's schema from its files' footers, read on the driver: what
+    ``spark.read.option("mergeSchema", "true").parquet(table_dir).schema``
+    infers, field order included, without the inference job. Each file's
+    Spark schema key (`layout_write.SPARK_SCHEMA_KEY`) is merged in listing
+    order by Spark's rule and every field made nullable; columns whose
+    types conflict raise the ValueError Spark's merge would.
+
+    None when only Spark can tell: a file without the key (an older layout
+    or an externally written table), a partitioned or summarized dir, or a
+    merge Spark widens by its own rules — the caller then infers through
+    Spark."""
+    files = _data_files(table_dir)
+    if files is None:
+        return None
+    schemas = [_footer_struct(f) for f in files]
+    if any(s is None for s in schemas):
+        return None
+    cs = spark.conf.get("spark.sql.caseSensitive").lower() == "true"
+    merged = schemas[0]
+    try:
+        for s in schemas[1:]:
+            merged = _merge_struct(merged, s, cs)
+    except _AskSpark:
+        return None
+    return _as_nullable(merged)
+
+
+def table_schema(spark: SparkSession, table_dir: str) -> T.StructType:
+    """A layout table's merged schema: `footer_schema`, else Spark's
+    mergeSchema inference."""
+    schema = footer_schema(spark, table_dir)
+    if schema is None:
+        schema = spark.read.option("mergeSchema", "true").parquet(table_dir).schema
+    return schema
+
+
 def _read_existing_schema(spark: SparkSession, path: str):
     """The existing table's schema under the mergeSchema determinism rule
-    (see the callers' docstrings). On an EXTERNALLY-produced table whose
-    files carry genuinely conflicting types for one column, Spark's
-    schema merge itself fails — re-raised here as the append guard's
+    (see the callers' docstrings), from the footers when they carry
+    Spark's key (`table_schema`). On an EXTERNALLY-produced table whose
+    files carry genuinely conflicting types for one column, the schema
+    merge itself fails — re-raised here as the append guard's
     structured refusal (r12 advisor), so incompatible tables are
     rejected with the same actionable never-silently-coerced message on
     both code paths instead of surfacing a raw merge exception."""
     try:
-        return spark.read.option("mergeSchema", "true").parquet(path).schema
+        return table_schema(spark, path)
     except Exception as e:
         # only the schema-merge conflict is ours to translate; anything
         # else (missing files, corrupt footers, permissions) keeps its
@@ -124,12 +264,13 @@ def assert_append_compatible(spark: SparkSession, path: str, schema, evolve: boo
     a superset schema. Returns the existing on-disk schema (None when the
     table doesn't exist yet) so the caller can pad.
 
-    The existing schema is read with mergeSchema — the same determinism
-    rule as `_append_schema` (r12): on a table whose files carry
-    different (superset) schemas — repeated evolve appends, or the
-    bag_index-mixed vintage — a plain read samples an arbitrary footer,
-    making the evolve union pad (and the strict fingerprint verdict)
-    vary run to run; the merged schema is the true union and is stable."""
+    The existing schema is the merged one (`_read_existing_schema`) —
+    the same determinism rule as `_append_schema` (r12): on a table whose
+    files carry different (superset) schemas — repeated evolve appends,
+    or the bag_index-mixed vintage — a plain read samples an arbitrary
+    footer, making the evolve union pad (and the strict fingerprint
+    verdict) vary run to run; the merged schema is the true union and is
+    stable."""
     if not os.path.isdir(path):
         return None
     existing = _read_existing_schema(spark, path)
@@ -207,13 +348,13 @@ def _append_schema(
     provenance reader falls back to the seqno join). Any other difference
     still refuses via the fingerprint guard.
 
-    The existing schema is read with mergeSchema: on a MIXED-vintage table
-    (some files stamped, some not) a plain read samples an arbitrary
-    footer, so whether the batch keeps or projects away the stamp would be
-    nondeterministic run to run (reads stay correct via the mixed marker,
-    but the file vintages written would diverge unpredictably). The merged
-    schema is deterministic — it includes the stamp, so strict appends
-    into a mixed table keep stamping."""
+    The existing schema is the merged one (`_read_existing_schema`): on a
+    MIXED-vintage table (some files stamped, some not) a plain read samples
+    an arbitrary footer, so whether the batch keeps or projects away the
+    stamp would be nondeterministic run to run (reads stay correct via the
+    mixed marker, but the file vintages written would diverge
+    unpredictably). The merged schema is deterministic — it includes the
+    stamp, so strict appends into a mixed table keep stamping."""
     if not os.path.isdir(path):
         return schema
     existing = _read_existing_schema(spark, path)
@@ -240,13 +381,17 @@ def _pad_append_trailing(
 
 
 def read_layout_table(spark: SparkSession, layout_dir: str, table: str) -> DataFrame:
-    """Read a converted-layout table with schema merging ON — required for
-    layouts built with ``evolve=True`` appends, where files carry different
-    (superset) schemas; harmless elsewhere (one footer more to read)."""
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(os.path.join(layout_dir, table))
-    )
+    """Read a converted-layout table under its MERGED schema — required
+    for layouts built with ``evolve=True`` appends, where files carry
+    different (superset) schemas. The schema comes from the footers on the
+    driver (`footer_schema`), so planning the read starts no Spark job;
+    tables whose footers lack Spark's key are read with mergeSchema
+    inference."""
+    path = os.path.join(layout_dir, table)
+    schema = footer_schema(spark, path)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(schema).parquet(path)
 
 
 #: marker file an evolve-append drops in a per-type table dir when it
@@ -1391,9 +1536,7 @@ def _write_bag_tables(
             p = os.path.join(out_dir, d)
             if d not in tables and os.path.isdir(p):
                 try:
-                    tables[d] = (
-                        spark.read.option("mergeSchema", "true").parquet(p).schema
-                    )
+                    tables[d] = table_schema(spark, p)
                 except Exception:
                     pass  # non-table dir (e.g. checkpoints)
     with open(os.path.join(out_dir, "load_tables.sql"), "w") as f:
@@ -1617,7 +1760,11 @@ def pertype_with_provenance(
     removes). Either way ``bag_index`` resolves to the source bag's NAME
     via the ``Bags`` fleet manifest (every `convert_bags` layout has one;
     the Metadata side-car serves older/MCAP-only layouts; a
-    DataFrame-stream layout has no files, so ``bag`` stays NULL there)."""
+    DataFrame-stream layout has no files, so ``bag`` stays NULL there).
+
+    Planning runs no Spark job: the schemas come from the footers
+    (`read_layout_table`) and the name dim is read on the driver
+    (`_bag_names`) and broadcast as a local relation."""
     pertype = read_layout_table(spark, out_dir, table)
     mixed = os.path.isfile(
         os.path.join(out_dir, table, _BAG_INDEX_MIXED_MARKER)
@@ -1645,7 +1792,7 @@ def pertype_with_provenance(
         # marker — the mergeSchema read would NULL-fill pre-append rows
         # whose ordinals Messages still records): resolve via the seqno
         # join, which is complete for every vintage Messages covers.
-        msgs = spark.read.parquet(os.path.join(out_dir, "Messages"))
+        msgs = read_layout_table(spark, out_dir, "Messages")
         if "bag_index" in msgs.columns:
             msgs = msgs.select("seqno", "bag_index")
         else:
@@ -1659,24 +1806,38 @@ def pertype_with_provenance(
         # drop the partial mergeSchema column (mixed vintage) so the join
         # provides THE bag_index — never two same-named columns
         out = pertype.drop("bag_index").join(msgs, "seqno")
-    # the name dim UNIONS both side-cars: a pre-Bags layout appended into
-    # by a newer converter has a PARTIAL manifest (only the appended
-    # ordinals) while the Metadata side-car still names the older bags —
-    # preferring one table alone would NULL the other's names. Both
-    # derive the name from basename(path), so same-ordinal rows agree
-    # and distinct() collapses them; still one row per bag — a broadcast
-    # dim by construction.
-    dims = [
-        spark.read.parquet(p).select("bag_index", "bag")
-        for p in (
-            os.path.join(out_dir, side_car)
-            for side_car in ("Bags", "Metadata")
-        )
-        if os.path.isdir(p)
-    ]
-    if not dims:
+    bags = _bag_names(out_dir)
+    if bags is None:
         return out.withColumn("bag", F.lit(None).cast("string"))
-    bags = dims[0]
-    for d in dims[1:]:
-        bags = bags.unionAll(d)
-    return out.join(F.broadcast(bags.distinct()), "bag_index", "left")
+    return out.join(F.broadcast(spark.createDataFrame(bags)), "bag_index", "left")
+
+
+def _bag_names(out_dir: str):
+    """The (bag_index, bag) name dim of a layout as an Arrow table, read
+    on the driver; None when the layout has neither side-car. The dim
+    UNIONS both side-cars: a pre-Bags layout appended into by a newer
+    converter has a PARTIAL manifest (only the appended ordinals) while
+    the Metadata side-car still names the older bags — preferring one
+    table alone would NULL the other's names. Both derive the name from
+    basename(path), so same-ordinal rows agree and collapse to one; still
+    one row per bag — a broadcast dim by construction."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    paths = [
+        os.path.join(out_dir, side_car) for side_car in ("Bags", "Metadata")
+    ]
+    paths = [p for p in paths if os.path.isdir(p)]
+    if not paths:
+        return None
+    pairs: dict = {}
+    for p in paths:
+        t = pq.read_table(p, columns=["bag_index", "bag"])
+        pairs.update(dict.fromkeys(zip(*(c.to_pylist() for c in t.columns))))
+    return pa.table(
+        [
+            pa.array([k[0] for k in pairs], pa.int32()),
+            pa.array([k[1] for k in pairs], pa.string()),
+        ],
+        names=["bag_index", "bag"],
+    )

@@ -60,17 +60,18 @@ def seqno_bucket_width(path: str) -> int:
 
 def _with_rates(agg: DataFrame) -> DataFrame:
     """The info rows of a (datatype, topic) rollup: NULL keys read <all>,
-    plus the derived frequency and data rate (rosbag_example.cpp:71-72)."""
-    span_s = (F.col("max_ns") - F.col("min_ns")) / 1e9
-    return agg.select(
-        F.coalesce("datatype", F.lit("<all>")).alias("datatype"),
-        F.coalesce("topic", F.lit("<all>")).alias("topic"),
+    plus the derived frequency and data rate (rosbag_example.cpp:71-72).
+    SQL text: one expression parse instead of a JVM call per column
+    operator."""
+    span_s = "((max_ns - min_ns) / 1e9)"
+    return agg.selectExpr(
+        "coalesce(datatype, '<all>') AS datatype",
+        "coalesce(topic, '<all>') AS topic",
         "n_msgs",
         "total_bytes",
-        F.when(span_s > 0, F.round(F.col("n_msgs") / span_s, 3)).alias("freq_hz"),
-        F.when(span_s > 0, F.round(F.col("total_bytes") / span_s, 1)).alias(
-            "bytes_per_s"
-        ),
+        f"CASE WHEN {span_s} > 0 THEN round(n_msgs / {span_s}, 3) END AS freq_hz",
+        f"CASE WHEN {span_s} > 0 THEN round(total_bytes / {span_s}, 1) END"
+        " AS bytes_per_s",
     )
 
 
@@ -109,48 +110,94 @@ def print_info(spark: SparkSession, path: str) -> None:
         print(f"  metadata: {name}: " + ", ".join(f"{k}={v}" for k, v in pairs))
 
 
+def _nn(op, a, b):
+    """``op(a, b)`` skipping NULLs, as SQL aggregates do."""
+    return a if b is None else b if a is None else op(a, b)
+
+
+def _stats_rollup(layout_dir: str):
+    """The (datatype, topic) rollup of a layout's ``Stats`` rows joined to
+    its ``Connections``, computed on the driver from the two small tables:
+    one row per pair, per datatype (topic NULL) and the grand total (both
+    NULL), with SQL's NULL-skipping sum/min/max. An empty join yields no
+    rows, as Spark's rollup does."""
+    import operator
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names: dict = {}
+    conns = pq.read_table(
+        os.path.join(layout_dir, "Connections"),
+        columns=["connection_id", "datatype", "topic"],
+    )
+    for cid, dt, topic in zip(*(c.to_pylist() for c in conns.columns)):
+        names.setdefault(cid, []).append((dt, topic))
+    stats = pq.read_table(
+        os.path.join(layout_dir, "Stats"),
+        columns=["connection_id", "n_messages", "total_bytes",
+                 "min_time_ns", "max_time_ns"],
+    )
+    ops = (operator.add, operator.add, min, max)
+    acc: dict = {}
+    for cid, *vals in zip(*(c.to_pylist() for c in stats.columns)):
+        for dt, topic in names.get(cid, ()):
+            # the level keeps a NULL datatype apart from the subtotals
+            for key in ((0, dt, topic), (1, dt, None), (2, None, None)):
+                got = acc.get(key)
+                acc[key] = vals if got is None else [
+                    _nn(op, a, b) for op, a, b in zip(ops, got, vals)
+                ]
+    keys = sorted(acc, key=repr)
+    return pa.table(
+        [
+            pa.array([k[1] for k in keys], pa.string()),
+            pa.array([k[2] for k in keys], pa.string()),
+            *(
+                pa.array([acc[k][i] for k in keys], pa.int64())
+                for i in range(4)
+            ),
+        ],
+        names=["datatype", "topic", "n_msgs", "total_bytes", "min_ns", "max_ns"],
+    )
+
+
 def layout_info(spark: SparkSession, layout_dir: str) -> DataFrame:
     """`bag_info` over a CONVERTED layout instead of a bag: the same
     per-(datatype, topic) stats + rollup rows. Layouts written since r8
     persist the aggregates as a ``Stats`` table (reference TODO #2.1 —
     one row per batch x connection), so info is a rollup of a
-    KILOBYTE-scale table: at 100 TB, `rosbag info` answers without
-    touching Messages at all. Legacy layouts fall back to the
-    column-pruned Messages scan (still no per-type blob ever read — the
-    reason the metadata tables exist, FlattenedRosWriter.cpp:49-137).
-    Both paths compute identical values (sums/mins/maxes re-aggregate
-    exactly); pinned in tests/test_convert_bag.py."""
+    KILOBYTE-scale table, done on the driver (`_stats_rollup`) and handed
+    to Spark as a local relation: answering it runs no Spark job, and at
+    100 TB `rosbag info` answers without touching Messages at all. Legacy
+    layouts fall back to the column-pruned Messages scan (still no
+    per-type blob ever read — the reason the metadata tables exist,
+    FlattenedRosWriter.cpp:49-137). Both paths compute identical values
+    (sums/mins/maxes re-aggregate exactly); pinned in
+    tests/test_convert_bag.py."""
     import os
 
+    if os.path.isdir(os.path.join(layout_dir, "Stats")):
+        return _with_rates(spark.createDataFrame(_stats_rollup(layout_dir)))
     conns = spark.read.parquet(os.path.join(layout_dir, "Connections"))
-    stats_path = os.path.join(layout_dir, "Stats")
-    if os.path.isdir(stats_path):
-        rows = spark.read.parquet(stats_path)
-        joined = rows.join(F.broadcast(conns), "connection_id")
-        agg = joined.rollup("datatype", "topic").agg(
-            F.sum("n_messages").alias("n_msgs"),
-            F.sum("total_bytes").alias("total_bytes"),
-            F.min("min_time_ns").alias("min_ns"),
-            F.max("max_time_ns").alias("max_ns"),
-        )
-    else:
-        msgs = spark.read.parquet(
-            os.path.join(layout_dir, "Messages")
-        ).select(
-            "connection_id",
-            "size",
-            (
-                F.col("time_sec").cast("long") * 1_000_000_000
-                + F.col("time_nsec")
-            ).alias("time_ns"),
-        )
-        joined = msgs.join(F.broadcast(conns), "connection_id")
-        agg = joined.rollup("datatype", "topic").agg(
-            F.count(F.lit(1)).alias("n_msgs"),
-            F.sum("size").alias("total_bytes"),
-            F.min("time_ns").alias("min_ns"),
-            F.max("time_ns").alias("max_ns"),
-        )
+    msgs = spark.read.parquet(
+        os.path.join(layout_dir, "Messages")
+    ).select(
+        "connection_id",
+        "size",
+        (
+            F.col("time_sec").cast("long") * 1_000_000_000
+            + F.col("time_nsec")
+        ).alias("time_ns"),
+    )
+    joined = msgs.join(F.broadcast(conns), "connection_id")
+    agg = joined.rollup("datatype", "topic").agg(
+        F.count(F.lit(1)).alias("n_msgs"),
+        F.sum("size").alias("total_bytes"),
+        F.min("time_ns").alias("min_ns"),
+        F.max("time_ns").alias("max_ns"),
+    )
     return _with_rates(agg)
 
 

@@ -17,8 +17,11 @@ staging are never listed, and staging is removed whatever happens. A
 convert that fails before the publish leaves the layout as it was.
 
 Files look like Spark's: each footer carries the Spark schema and version
-keys, so ``spark.read.parquet`` sees the same logical types, and
-TimestampType columns are INT96 as Spark writes them.
+keys (:data:`SPARK_SCHEMA_KEY`, :data:`SPARK_VERSION_KEY`), so
+``spark.read.parquet`` sees the same logical types, reads INT96 as a file
+Spark wrote, and a reader can plan from the footers alone
+(`convert.footer_schema`). TimestampType columns are INT96 as Spark writes
+them; pyarrow reads them back as ``timestamp[ns]``.
 """
 
 from __future__ import annotations
@@ -87,6 +90,13 @@ STATS_SCHEMA = T.StructType([
 ])
 
 
+#: the footer keys Spark writes: its schema of the file (JSON) and the
+#: writer's version (without it, Spark reads INT96 under the session's
+#: rebase mode instead of as its own files)
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+SPARK_VERSION_KEY = "org.apache.spark.version"
+
+
 def arrow_schema(schema: T.StructType, spark_version: str) -> pa.Schema:
     """The Arrow schema a table's files are written with, footer keys
     included: Spark reads its own schema key back as the table's logical
@@ -94,15 +104,17 @@ def arrow_schema(schema: T.StructType, spark_version: str) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(schema).with_metadata({
-        "org.apache.spark.version": spark_version,
-        "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+        SPARK_VERSION_KEY: spark_version,
+        SPARK_SCHEMA_KEY: schema.json(),
     })
 
 
 def _open_writer(path: str, schema: pa.Schema, codec: str) -> pq.ParquetWriter:
+    # store_schema=False would drop the schema's key-value metadata, and
+    # with it both Spark keys
     return pq.ParquetWriter(
         path, schema, compression=_CODECS[codec],
-        use_deprecated_int96_timestamps=True, store_schema=False,
+        use_deprecated_int96_timestamps=True, store_schema=True,
     )
 
 
@@ -304,7 +316,7 @@ def messages_batch(plan: WritePlan, batch: pa.RecordBatch, bag_index) -> pa.Reco
     return pa.RecordBatch.from_arrays([cols[n] for n in schema.names], schema=schema)
 
 
-def _column(values, typ: pa.DataType) -> pa.Array:
+def arrow_column(values, typ: pa.DataType) -> pa.Array:
     """A decoded column as Arrow: NaN stays a float value (never NULL),
     and a value the type cannot hold raises."""
     if isinstance(values, np.ndarray) and values.ndim == 1:
@@ -329,7 +341,7 @@ def pertype_batch(
         decoded = decode(sub.column("data").to_pylist())
         for f in schema:
             if f.name in decoded:
-                cols[f.name] = _column(decoded[f.name], f.type)
+                cols[f.name] = arrow_column(decoded[f.name], f.type)
     n = sub.num_rows
     return pa.RecordBatch.from_arrays(
         [cols[f.name] if f.name in cols else pa.nulls(n, f.type) for f in schema],

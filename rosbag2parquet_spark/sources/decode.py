@@ -14,7 +14,7 @@ payload origin, alignment, string NUL, trailing bytes, ``byte``
 signedness — which every tier reads; the flattened schema
 (``to_struct_type``) is the same for both.
 
-Execution: the decoder runs inside ``mapInPandas`` — Arrow-batched Python.
+Execution: the decoder runs inside ``mapInArrow`` — Arrow-batched Python.
 This is the one hot path where Python is genuinely warranted: a custom
 binary codec with per-message control flow that no built-in expression can
 express. Batches stream; memory is bounded per task; the decode parallelizes
@@ -745,7 +745,7 @@ def decode_columns(
     ``decode_batch(payloads) -> {field: column}`` (a vectorized tier whose
     columns match ``flat`` by position) or, without one, from
     ``decode(payload) -> tuple`` per row. :func:`map_decode` runs it inside
-    ``mapInPandas``; the converter's layout write runs it in-process.
+    ``mapInArrow``; the converter's layout write runs it in-process.
 
     ``on_error``: ``'fail'`` (reference parity — the C++ asserts and dies,
     MessageTable.cpp:38) raises on the first undecodable payload;
@@ -822,25 +822,40 @@ def map_decode(
     on_error: str,
     decode_batch=None,
 ) -> DataFrame:
-    """The Arrow-batched ``mapInPandas`` driver every payload grammar (ROS 1,
+    """The Arrow-batched ``mapInArrow`` driver every payload grammar (ROS 1,
     CDR, protobuf, JSON) shares: ``keep_cols`` pass through; the decoded
-    columns come from :func:`decode_columns` (see it for ``on_error``)."""
+    columns come from :func:`decode_columns` (see it for ``on_error``) and
+    become Arrow as the layout write's do (`layout_write.arrow_column`): a
+    NaN stays a float value and an int64 stays exact, even in a permissive
+    batch whose dead-lettered rows are NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rosbag2parquet_spark.layout_write import arrow_column
+
     fields, decode_cols = decode_columns(
         flat, decode, on_error=on_error, decode_batch=decode_batch
     )
     out_schema = T.StructType([df.schema[c] for c in keep_cols] + fields)
+    arrow = to_arrow_schema(out_schema)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            cols = {c: pdf[c].values for c in keep_cols}
-            cols.update(decode_cols(pdf[data_col].tolist()))
-            yield pd.DataFrame(cols)
+            cols = decode_cols(batch.column(data_col).to_pylist())
+            out = []
+            for f in arrow:
+                if f.name in keep_cols:
+                    col = batch.column(f.name)
+                    out.append(col if col.type == f.type else col.cast(f.type))
+                else:
+                    out.append(arrow_column(cols[f.name], f.type))
+            yield pa.RecordBatch.from_arrays(out, schema=arrow)
 
     # data_col may itself be a keep_col — select it once
     sel = list(keep_cols) + ([data_col] if data_col not in keep_cols else [])
-    return df.select(*sel).mapInPandas(run, schema=out_schema)
+    return df.select(*sel).mapInArrow(run, schema=out_schema)
 
 
 def ros_tier(

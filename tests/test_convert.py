@@ -302,6 +302,49 @@ def test_decode_permissive_cdr(spark, tmp_path):
     assert [r.s for r in out if r._decode_error is None] == ["ok"] * 4
 
 
+def _payload_df(spark, payloads):
+    """One partition of (offset, time_ns, conn_id, data) rows, so every
+    payload lands in the same Arrow batch."""
+    return spark.createDataFrame(
+        [(i, 10**18 + i, 1, bytearray(p)) for i, p in enumerate(payloads)],
+        "offset long, time_ns long, conn_id int, data binary",
+    ).coalesce(1)
+
+
+def test_decode_keeps_nan_in_non_nullable_field(spark):
+    """A float NaN payload value is a value, not NULL: the strict decode
+    of a non-nullable float64 field returns it."""
+    import math
+    import struct
+
+    from rosbag2parquet_spark.sources.decode import decode_messages
+
+    df = _payload_df(spark, [struct.pack("<dq", float("nan"), 1),
+                             struct.pack("<dq", 2.5, 2)])
+    out = decode_messages(df, "demo/F", "float64 x\nint64 y\n")
+    assert not out.schema["x"].nullable
+    rows = out.orderBy("offset").collect()
+    assert math.isnan(rows[0].x) and rows[1].x == 2.5
+    assert [r.y for r in rows] == [1, 2]
+
+
+def test_decode_permissive_batch_keeps_exact_int64(spark):
+    """A permissive batch with one dead-lettered row keeps the int64 values
+    of its good rows exact (no float round trip near 2^63)."""
+    import struct
+
+    from rosbag2parquet_spark.sources.decode import decode_messages
+
+    df = _payload_df(spark, [struct.pack("<q", -9223372036854775801), b"\x01"])
+    rows = (
+        decode_messages(df, "demo/I", "int64 y\n", on_error="permissive")
+        .orderBy("offset")
+        .collect()
+    )
+    assert rows[0].y == -9223372036854775801 and rows[0]._decode_error is None
+    assert rows[1].y is None and rows[1]._decode_error is not None
+
+
 @pytest.mark.parametrize("grammar", ["ros1", "cdr", "protobuf"])
 def test_decode_rejects_unknown_on_error(spark, grammar):
     """A misspelled on_error must raise, never silently run as 'fail' —

@@ -16,7 +16,10 @@ Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":
 ``db3`` = the same corpus in that container, ``fleet`` = 4 SBAG bags of
 ``n_messages`` each through ``convert_bags``, ``resume`` = a ``.db3`` and
 a chunked MCAP converted at half their messages, grown to
-``n_messages``, then timed through ``resume_convert_bag``.
+``n_messages``, then timed through ``resume_convert_bag``, ``reads`` = the
+walkthrough SBAG converted untimed, then the layout readers timed on it
+(``layout_info``, ``pertype_with_provenance``, ``read_layout_table``: ms
+and Spark jobs of each, best of 3 after a warm-up).
 """
 
 from __future__ import annotations
@@ -537,6 +540,47 @@ def run_resume(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict
         shutil.rmtree(work, ignore_errors=True)
 
 
+def run_reads(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
+    """The layout readers on a converted walkthrough SBAG: each query
+    plans the reader and collects a small answer, as the benchmark's
+    query mix does; ``<reader>_ms`` is the best of 3 runs after a warm-up
+    and ``<reader>_jobs`` the Spark jobs one run starts."""
+    from pyspark.sql import functions as F
+
+    from rosbag2parquet_spark.convert import (
+        convert_bag,
+        pertype_with_provenance,
+        read_layout_table,
+    )
+    from rosbag2parquet_spark.info import layout_info
+    from rosbag2parquet_spark.session import get_spark
+
+    work = tempfile.mkdtemp(prefix="bench_reads_")
+    try:
+        bag = os.path.join(work, "walkthrough.sbag")
+        layout = os.path.join(work, "out")
+        synth_bag(bag, n_msgs, blob_bytes)
+        spark = spark or get_spark("bench_convert")
+        convert_bag(spark, bag, layout)
+        table = "sensor_msgs_CompressedImage"
+        queries = {
+            "layout_info": lambda: layout_info(spark, layout).collect(),
+            "provenance": lambda: pertype_with_provenance(spark, layout, table)
+            .groupBy("bag").count().collect(),
+            "read_layout_table": lambda: read_layout_table(spark, layout, "Messages")
+            .agg(F.count(F.lit(1))).collect(),
+        }
+        out = {"messages": n_msgs}
+        for name, query in queries.items():
+            query()
+            runs = [timed(spark, query) for _ in range(3)]
+            out[f"{name}_ms"] = round(min(dt for _, dt, _ in runs) * 1000, 1)
+            out[f"{name}_jobs"] = runs[-1][2]
+        return out
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000
     blob_bytes = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
@@ -546,6 +590,7 @@ def main() -> None:
         "db3": lambda: run_db3(n_msgs, blob_bytes),
         "fleet": lambda: run_fleet(msgs_per_bag=n_msgs, blob_bytes=blob_bytes),
         "resume": lambda: run_resume(n_msgs, blob_bytes),
+        "reads": lambda: run_reads(n_msgs, blob_bytes),
     }
     mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
     if mode not in modes:
