@@ -34,12 +34,11 @@ __all__ = [
 __version__ = "0.1.0"
 
 #: PEP 562 lazy re-exports (r13, guide §5 "the driver should do almost no
-#: data work"): every Python DataSource plan/read round-trip forks a worker
-#: that unpickles the source class and therefore imports this package. The
-#: eager re-exports dragged convert/session/catalog (11 modules, ~52 ms
-#: measured marginal with pyspark preloaded) into every one of those forks —
-#: 2 driver-side planner children per scan action plus each executor read
-#: worker's first task — for names none of those workers ever touch. Resolved
+#: data work"): every Python worker that unpickles a task function of this
+#: package (a scan or write task) imports it. The eager re-exports dragged
+#: convert/session/catalog (11 modules, ~52 ms measured marginal with
+#: pyspark preloaded) into each worker's first task for names none of those
+#: workers ever touch. Resolved
 #: on first attribute access instead; the public surface is unchanged.
 _LAZY = {
     "convert": ("rosbag2parquet_spark.convert", "convert"),

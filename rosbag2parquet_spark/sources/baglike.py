@@ -248,8 +248,8 @@ def resume_start(path: str, state: dict) -> int:
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
-    """One Arrow batch per record span; the container DataSource
-    applies the filters."""
+    """One Arrow batch per record span; the split reader
+    (`container.read_split`) applies the filters."""
     with open(path, "rb") as f:
         for lo, hi in keys:
             offs, times, conns, blobs = [], [], [], []

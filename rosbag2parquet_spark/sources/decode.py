@@ -18,7 +18,7 @@ Execution: the decoder runs inside ``mapInArrow`` — Arrow-batched Python.
 This is the one hot path where Python is genuinely warranted: a custom
 binary codec with per-message control flow that no built-in expression can
 express. Batches stream; memory is bounded per task; the decode parallelizes
-with the scan partitions of the bag DataSource. (A production build would
+with the splits of the bag scan. (A production build would
 move exactly this function to a JVM/C++ kernel — the surrounding plan would
 not change.)
 """
@@ -29,7 +29,6 @@ import struct
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -165,6 +164,10 @@ def decimalize_cols(
     ints Arrow takes against DECIMAL(20,0): scalar cells to int, array
     cells via numpy ``tolist()`` (ONE C call per cell — u64→int is exact;
     the per-row tier's plain-int lists pass through untouched)."""
+    if not dec_names and not dec_arr_names:
+        return
+    import pandas as pd
+
     for n in dec_names:
         v = cols[n]
         vals = v.tolist() if hasattr(v, "tolist") else list(v)

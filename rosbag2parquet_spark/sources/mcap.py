@@ -1004,8 +1004,8 @@ def sidecar_rows(path: str, payloads: bool = True) -> "tuple[list, list]":
 
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
-    """One Arrow batch per chunk or record span; the container DataSource
-    applies the filters. A chunk key is (index, records_off, records_size,
+    """One Arrow batch per chunk or record span; the split reader
+    (`container.read_split`) applies the filters. A chunk key is (index, records_off, records_size,
     compression, size, shift) and a span key (lo, hi). ``on_error='permissive'``
     salvages a CRC-failed chunk: whatever records still parse are kept
     (corrupt payloads then dead-letter per row at decode)."""

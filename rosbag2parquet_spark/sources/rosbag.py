@@ -426,7 +426,8 @@ def resume_start(path: str, state: dict) -> int:
 def read_units(path: str, keys: list, start_ns=None, end_ns=None,
                conn_ids=None, on_error="fail"):
     """One Arrow batch per chunk (rosbag chunks are already the natural
-    <= 1 MB batching unit); the container DataSource applies the filters."""
+    <= 1 MB batching unit); the split reader (`container.read_split`)
+    applies the filters."""
     for chunk_index, pos, compression, shift in keys:
         rows = list(iter_chunk_messages(path, chunk_index, pos, compression, shift))
         if rows:

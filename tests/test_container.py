@@ -103,13 +103,13 @@ def test_split_count_mismatch_fails_convert(spark, tmp_path, monkeypatch):
 
     path = str(tmp_path / "c.db3")
     _write(path, "db3", _two_conn_messages(30))
-    real = ct._split_counts
+    real = ct.split_totals
 
-    def off_by_one(scan, n):
-        counts = real(scan, n)
-        return [counts[0] + 1, *counts[1:]]
+    def off_by_one(spark, plan):
+        (rows, nbytes), *rest = real(spark, plan)
+        return [(rows + 1, nbytes), *rest]
 
-    monkeypatch.setattr(ct, "_split_counts", off_by_one)
+    monkeypatch.setattr(ct, "split_totals", off_by_one)
     with pytest.raises(ValueError, match="the count job counted 1[0-9] — "
                        + ct.COUNT_MISMATCH):
         convert_bag(spark, path, str(tmp_path / "out"), num_partitions=2)

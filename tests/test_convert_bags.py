@@ -270,14 +270,16 @@ def test_single_header_walk_per_bag(spark, tmp_path, monkeypatch):
 
 
 def test_mixed_grammar_fleet_is_one_scan(spark, fleet, tmp_path, monkeypatch):
-    """A rosbag, an SBAG and a ros1 MCAP convert as ONE bagscan relation —
-    no Union — of at most ``num_partitions`` splits, numbered 0..N-1 in
-    bag order with each bag's ordinal; adding a CDR ``.db3`` is refused
-    up front."""
+    """A rosbag, an SBAG and a ros1 MCAP convert as ONE planned scan over
+    all three bags — of at most ``num_partitions`` splits, read by one
+    write job (plus the count job the chunked MCAP's undeclared counts
+    need) — numbered 0..N-1 in bag order with each bag's ordinal; adding
+    a CDR ``.db3`` is refused up front."""
     import importlib
 
     from rosbag2parquet_spark.sources.mcap import write_mcap
     from rosbag2parquet_spark.sources.rosbag2 import write_db3
+    from tests.test_layout_write import _jobs_since, _last_job
 
     # the package __init__ re-exports the convert FUNCTION under the same
     # name, so attribute-style module import resolves to the function
@@ -288,19 +290,24 @@ def test_mixed_grammar_fleet_is_one_scan(spark, fleet, tmp_path, monkeypatch):
                [(4, 7_000 + i, struct.pack("<I", i)) for i in range(5)],
                chunk_messages=2, encoding="ros1", schema_encoding="ros1msg")
     scans = []
-    real = cv.read_messages
+    real = cv.plan_scan
 
     def spy(*args, **kwargs):
         scans.append(real(*args, **kwargs))
         return scans[-1]
 
-    monkeypatch.setattr(cv, "read_messages", spy)
+    monkeypatch.setattr(cv, "plan_scan", spy)
     out = str(tmp_path / "mixed")
+    before = _last_job(spark)
     assert convert_bags(spark, paths + [mc], out, num_partitions=2).count == 11
+    assert _jobs_since(spark, before) == 2
     assert len(scans) == 1
-    plan = scans[0]._jdf.queryExecution().optimizedPlan().toString()
-    assert "Union" not in plan and plan.count("bagscan") == 1, plan
-    assert scans[0].rdd.getNumPartitions() <= 2
+    (plan,) = scans
+    assert [os.path.basename(b[0]) for b in plan.bags] == [
+        os.path.basename(p) for p in paths + [mc]
+    ]
+    assert 1 <= len(plan.splits) <= 2
+    assert sorted({u[0] for s in plan.splits for u in s}) == [0, 1, 2]
     rows = spark.read.parquet(os.path.join(out, "Messages")).orderBy("seqno")
     got = [(r.seqno, r.bag_index, r.connection_id) for r in rows.collect()]
     assert [g[0] for g in got] == list(range(11))

@@ -424,7 +424,7 @@ def test_resume_mcap_grown_during_convert(spark, tmp_path, monkeypatch):
 
 def test_resume_db3_topic_added_during_convert(spark, tmp_path, monkeypatch):
     """A topic and rows the recorder adds between convert_bag's open and
-    its scan stay out of that convert: no Messages row names a connection
+    its scan plan (so before the job) stay out of that convert: no Messages row names a connection
     the Connections dim lacks, and the next resume converts the new rows
     with their connection and per-type table."""
     from rosbag2parquet_spark import convert as cv
@@ -432,9 +432,9 @@ def test_resume_db3_topic_added_during_convert(spark, tmp_path, monkeypatch):
     bag = str(tmp_path / "race.db3")
     conns = [ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_DEF)]
     write_db3(bag, conns, _imu_msgs(0, 20))
-    real = cv.read_messages
+    real = cv.plan_scan
 
-    def grow_then_read(*args, **kwargs):
+    def grow_then_plan(*args, **kwargs):
         _grow_db3(
             bag,
             [(2, T0 + (20 + i) * 1_000_000, _gps(i)) for i in range(5)],
@@ -443,7 +443,7 @@ def test_resume_db3_topic_added_during_convert(spark, tmp_path, monkeypatch):
         )
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(cv, "read_messages", grow_then_read)
+    monkeypatch.setattr(cv, "plan_scan", grow_then_plan)
     lay = str(tmp_path / "lay")
     assert convert_bag(spark, bag, lay).count == 20
     monkeypatch.undo()

@@ -19,7 +19,10 @@ a chunked MCAP converted at half their messages, grown to
 ``n_messages``, then timed through ``resume_convert_bag``, ``reads`` = the
 walkthrough SBAG converted untimed, then the layout readers timed on it
 (``layout_info``, ``pertype_with_provenance``, ``read_layout_table``: ms
-and Spark jobs of each, best of 3 after a warm-up).
+and Spark jobs of each, best of 3 after a warm-up), ``scan`` = the
+walkthrough SBAG read as a DataFrame (``read_messages(...).count()``, the
+path ``load_bag`` and sampling take: ms and Spark jobs, best of 3 after a
+warm-up).
 """
 
 from __future__ import annotations
@@ -581,6 +584,39 @@ def run_reads(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def run_scan(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
+    """``read_messages(...).count()`` over the walkthrough SBAG, split the
+    way a convert splits it: planning plus one task per split whose rows
+    all reach the JVM; ``scan_ms`` is the best of 3 runs after a warm-up
+    and ``scan_jobs`` the Spark jobs one run starts."""
+    from rosbag2parquet_spark.convert import scan_partitions
+    from rosbag2parquet_spark.session import get_spark
+    from rosbag2parquet_spark.sources.container import read_messages
+
+    work = tempfile.mkdtemp(prefix="bench_scan_")
+    try:
+        bag = os.path.join(work, "walkthrough.sbag")
+        synth_bag(bag, n_msgs, blob_bytes)
+        spark = spark or get_spark("bench_convert")
+        n = scan_partitions(spark, os.path.getsize(bag))
+
+        def query():
+            return read_messages(spark, bag, n).count()
+
+        if query() != n_msgs:
+            raise AssertionError("scan lost messages")
+        runs = [timed(spark, query) for _ in range(3)]
+        return {
+            "bag_mb": round(os.path.getsize(bag) / (1 << 20), 1),
+            "messages": n_msgs,
+            "splits": n,
+            "scan_ms": round(min(dt for _, dt, _ in runs) * 1000, 1),
+            "scan_jobs": runs[-1][2],
+        }
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000
     blob_bytes = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
@@ -591,6 +627,7 @@ def main() -> None:
         "fleet": lambda: run_fleet(msgs_per_bag=n_msgs, blob_bytes=blob_bytes),
         "resume": lambda: run_resume(n_msgs, blob_bytes),
         "reads": lambda: run_reads(n_msgs, blob_bytes),
+        "scan": lambda: run_scan(n_msgs, blob_bytes),
     }
     mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
     if mode not in modes:
