@@ -70,13 +70,14 @@ def main(argv: list[str] | None = None) -> int:
             validate,
         )
         from rosbag2parquet_spark.session import get_spark
+        from rosbag2parquet_spark.sources.catalog import read_parquet
 
         spark = get_spark("rosbag2parquet_spark_validate")
         with open(args.rules) as f:
             spec = _json.load(f)
         rules, parent_frames = rules_from_spec(spark, spec)
         rows = (
-            validate(spark.read.parquet(args.table), rules, parent_frames)
+            validate(read_parquet(spark, args.table), rules, parent_frames)
             .orderBy("rule")
             .collect()
         )
@@ -529,7 +530,9 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        stream = spark.read.parquet(args.input)
+        from rosbag2parquet_spark.sources.catalog import read_parquet
+
+        stream = read_parquet(spark, args.input)
         if "ts" in stream.columns and dict(stream.dtypes).get("ts") == "bigint":
             stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         order_cols = ["ts", "event_id"] if "event_id" in stream.columns else None

@@ -41,6 +41,7 @@ from pyspark.sql import types as T
 
 from rosbag2parquet_spark import layout_write as lw
 from rosbag2parquet_spark.plans.ddl import load_script
+from rosbag2parquet_spark.sources.catalog import read_parquet
 from rosbag2parquet_spark.sources.container import (
     ConnRow,
     ScanPlan,
@@ -78,143 +79,11 @@ def schema_fingerprint(schema) -> str:
     return hashlib.md5(canon.encode()).hexdigest()
 
 
-class _AskSpark(Exception):
-    """A footer merge only Spark's own rules settle (decimal precision,
-    interval ranges, user-defined types)."""
-
-
-def _merge_type(a: T.DataType, b: T.DataType, cs: bool) -> T.DataType:
-    """Spark's ``StructType.merge`` rule for one column's two types."""
-    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
-        return _merge_struct(a, b, cs)
-    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
-        return T.ArrayType(
-            _merge_type(a.elementType, b.elementType, cs),
-            a.containsNull or b.containsNull,
-        )
-    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
-        return T.MapType(
-            _merge_type(a.keyType, b.keyType, cs),
-            _merge_type(a.valueType, b.valueType, cs),
-            a.valueContainsNull or b.valueContainsNull,
-        )
-    if a == b:
-        return a
-    if type(a) is type(b):
-        raise _AskSpark
-    raise ValueError(
-        f"failed to merge incompatible data types {a.simpleString()} "
-        f"and {b.simpleString()}"
-    )
-
-
-def _merge_struct(a: T.StructType, b: T.StructType, cs: bool) -> T.StructType:
-    """``a.merge(b)`` as Spark does it: ``a``'s fields in order, each
-    widened by ``b``'s same-named field, then ``b``'s new fields; names
-    match case-insensitively unless ``cs``."""
-    key = (lambda n: n) if cs else str.lower
-    right = {key(f.name): f for f in b.fields}
-    out = []
-    for f in a.fields:
-        g = right.get(key(f.name))
-        if g is None:
-            out.append(f)
-            continue
-        try:
-            merged = _merge_type(f.dataType, g.dataType, cs)
-        except ValueError as e:
-            raise ValueError(f"failed to merge fields {f.name!r} and {g.name!r}: {e}") from e
-        out.append(T.StructField(f.name, merged, f.nullable or g.nullable, f.metadata))
-    left = {key(f.name) for f in a.fields}
-    return T.StructType(out + [g for g in b.fields if key(g.name) not in left])
-
-
-def _as_nullable(t: T.DataType) -> T.DataType:
-    """Every field, element and map value nullable, as file sources read
-    back (Spark's ``asNullable``)."""
-    if isinstance(t, T.StructType):
-        return T.StructType([
-            T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in t.fields
-        ])
-    if isinstance(t, T.ArrayType):
-        return T.ArrayType(_as_nullable(t.elementType), True)
-    if isinstance(t, T.MapType):
-        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
-    return t
-
-
-def _data_files(table_dir: str) -> "list[str] | None":
-    """The parquet files Spark lists for a table dir, in its order (sorted
-    by name); None where planning needs Spark's own listing: a summary
-    file, a subdirectory (partition columns), or no data file at all."""
-    if not os.path.isdir(table_dir):
-        return None
-    files = []
-    for name in sorted(os.listdir(table_dir)):
-        if name.startswith(("_metadata", "_common_metadata")):
-            return None
-        if (
-            (name.startswith("_") and "=" not in name)
-            or name.startswith(".") or name.endswith("._COPYING_")
-        ):
-            continue  # hidden: markers, _SUCCESS, .crc files
-        path = os.path.join(table_dir, name)
-        if os.path.isdir(path):
-            return None
-        if os.path.getsize(path):
-            files.append(path)
-    return files or None
-
-
-def _footer_struct(path: str) -> "T.StructType | None":
-    """The Spark schema a file's footer key records, if it has one."""
-    import pyarrow.parquet as pq
-
-    try:
-        raw = (pq.read_metadata(path).metadata or {}).get(
-            lw.SPARK_SCHEMA_KEY.encode()
-        )
-        return None if raw is None else T.StructType.fromJson(json.loads(raw))
-    except Exception:
-        return None  # not parquet, or a key this client cannot parse
-
-
-def footer_schema(spark: SparkSession, table_dir: str) -> "T.StructType | None":
-    """A table's schema from its files' footers, read on the driver: what
-    ``spark.read.option("mergeSchema", "true").parquet(table_dir).schema``
-    infers, field order included, without the inference job. Each file's
-    Spark schema key (`layout_write.SPARK_SCHEMA_KEY`) is merged in listing
-    order by Spark's rule and every field made nullable; columns whose
-    types conflict raise the ValueError Spark's merge would.
-
-    None when only Spark can tell: a file without the key (an older layout
-    or an externally written table), a partitioned or summarized dir, or a
-    merge Spark widens by its own rules — the caller then infers through
-    Spark."""
-    files = _data_files(table_dir)
-    if files is None:
-        return None
-    schemas = [_footer_struct(f) for f in files]
-    if any(s is None for s in schemas):
-        return None
-    cs = spark.conf.get("spark.sql.caseSensitive").lower() == "true"
-    merged = schemas[0]
-    try:
-        for s in schemas[1:]:
-            merged = _merge_struct(merged, s, cs)
-    except _AskSpark:
-        return None
-    return _as_nullable(merged)
-
-
 def table_schema(spark: SparkSession, table_dir: str) -> T.StructType:
-    """A layout table's merged schema: `footer_schema`, else Spark's
+    """A layout table's merged schema (`catalog.read_parquet` with
+    ``merge``): from the footers when they resolve, else Spark's
     mergeSchema inference."""
-    schema = footer_schema(spark, table_dir)
-    if schema is None:
-        schema = spark.read.option("mergeSchema", "true").parquet(table_dir).schema
-    return schema
+    return read_parquet(spark, table_dir, merge=True).schema
 
 
 def _read_existing_schema(spark: SparkSession, path: str):
@@ -386,14 +255,10 @@ def read_layout_table(spark: SparkSession, layout_dir: str, table: str) -> DataF
     """Read a converted-layout table under its MERGED schema — required
     for layouts built with ``evolve=True`` appends, where files carry
     different (superset) schemas. The schema comes from the footers on the
-    driver (`footer_schema`), so planning the read starts no Spark job;
-    tables whose footers lack Spark's key are read with mergeSchema
-    inference."""
-    path = os.path.join(layout_dir, table)
-    schema = footer_schema(spark, path)
-    if schema is None:
-        return spark.read.option("mergeSchema", "true").parquet(path)
-    return spark.read.schema(schema).parquet(path)
+    driver (`catalog.read_parquet` with ``merge``), so planning the read
+    starts no Spark job; a table the resolver cannot plan is read with
+    mergeSchema inference."""
+    return read_parquet(spark, os.path.join(layout_dir, table), merge=True)
 
 
 #: marker file an evolve-append drops in a per-type table dir when it
@@ -532,7 +397,7 @@ def convert(
     base_id = 0
     existing_conns = None
     if mode == "append" and os.path.isdir(conn_path):
-        existing_conns = spark.read.parquet(conn_path)
+        existing_conns = read_parquet(spark, conn_path)
         base_id = (
             existing_conns.agg(F.max("connection_id")).collect()[0][0] or -1
         ) + 1

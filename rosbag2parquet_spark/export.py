@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources.catalog import read_parquet
+
 #: layout directories that are not per-type message tables
 _META_TABLES = {
     "Messages", "Connections", "Attachments", "Metadata", "Stats", "Bags",
@@ -93,7 +95,7 @@ def _layout_connections(spark: SparkSession, layout_dir: str) -> list:
         raise ValueError(f"{layout_dir}: no per-type tables to export")
 
     rows = (
-        spark.read.parquet(os.path.join(layout_dir, "Connections"))
+        read_parquet(spark, os.path.join(layout_dir, "Connections"))
         .orderBy("connection_id")
         .collect()
     )
@@ -135,7 +137,7 @@ def _export_parts(
     if not type_tables:
         raise ValueError(f"{layout_dir}: no per-type tables to export")
 
-    msgs = spark.read.parquet(os.path.join(layout_dir, "Messages"))
+    msgs = read_parquet(spark, os.path.join(layout_dir, "Messages"))
 
     # subset filters — the converter's --topics/--start-ns/--end-ns
     # mirrored on the way OUT. Topic resolves to connection ids driver-side
@@ -148,9 +150,7 @@ def _export_parts(
     if topics is not None:
         wanted = sorted(
             int(r.connection_id)
-            for r in spark.read.parquet(
-                os.path.join(layout_dir, "Connections")
-            )
+            for r in read_parquet(spark, os.path.join(layout_dir, "Connections"))
             .filter(F.col("topic").isin(list(topics)))
             .collect()
         )
@@ -172,7 +172,7 @@ def _export_parts(
 
     blobs = None
     for p in type_tables:
-        t = spark.read.parquet(p).select("seqno", "connection_id", "data")
+        t = read_parquet(spark, p).select("seqno", "connection_id", "data")
         if wanted is not None:
             t = t.filter(F.col("connection_id").isin(wanted))
         blobs = t if blobs is None else blobs.unionByName(t)
@@ -294,7 +294,7 @@ def export_mcap(
         att_rows = [
             (int(r.log_time), int(r.create_time), r.name, r.media_type,
              bytes(r.data))
-            for r in spark.read.parquet(att_path).orderBy("name").collect()
+            for r in read_parquet(spark, att_path).orderBy("name").collect()
         ]
 
     # Metadata records reconstruct from the flattened table: one record
@@ -305,7 +305,7 @@ def export_mcap(
     if os.path.isdir(md_path):
         grouped: dict = {}
         for r in (
-            spark.read.parquet(md_path)
+            read_parquet(spark, md_path)
             .orderBy("bag_index", "name", "key")
             .collect()
         ):

@@ -58,7 +58,11 @@ from rosbag2parquet_spark.functions.similarity import (
     _dec12,
     _normalized,
 )
-from rosbag2parquet_spark.sources.catalog import load_table, publish_scratch
+from rosbag2parquet_spark.sources.catalog import (
+    load_table,
+    publish_scratch,
+    read_parquet,
+)
 
 PQ_M = 8  # subspaces
 PQ_SUB = 8  # dims per subspace (PQ_M * PQ_SUB = EMBED_DIM = 64)
@@ -1455,7 +1459,7 @@ def _ivfadc_serve_from(
 
     with open(os.path.join(index_dir, "quantizer.json")) as f:
         meta = json.load(f)
-    coded = spark.read.parquet(os.path.join(index_dir, "codes"))
+    coded = read_parquet(spark, os.path.join(index_dir, "codes"))
     score = _ivfadc_score_expr(
         spark, sf_dir, meta["ncent"], meta["books"]
     )

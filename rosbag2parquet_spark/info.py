@@ -14,6 +14,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.sources.catalog import read_parquet
 from rosbag2parquet_spark.sources.container import (
     Container,
     connections_df,
@@ -180,10 +181,8 @@ def layout_info(spark: SparkSession, layout_dir: str) -> DataFrame:
 
     if os.path.isdir(os.path.join(layout_dir, "Stats")):
         return _with_rates(spark.createDataFrame(_stats_rollup(layout_dir)))
-    conns = spark.read.parquet(os.path.join(layout_dir, "Connections"))
-    msgs = spark.read.parquet(
-        os.path.join(layout_dir, "Messages")
-    ).select(
+    conns = read_parquet(spark, os.path.join(layout_dir, "Connections"))
+    msgs = read_parquet(spark, os.path.join(layout_dir, "Messages")).select(
         "connection_id",
         "size",
         (

@@ -23,7 +23,7 @@ Files look like Spark's: each footer carries the Spark schema and version
 keys (:data:`SPARK_SCHEMA_KEY`, :data:`SPARK_VERSION_KEY`), so
 ``spark.read.parquet`` sees the same logical types, reads INT96 as a file
 Spark wrote, and a reader can plan from the footers alone
-(`convert.footer_schema`). TimestampType columns are INT96 as Spark writes
+(`catalog.read_parquet`). TimestampType columns are INT96 as Spark writes
 them; pyarrow reads them back as ``timestamp[ns]``.
 """
 
@@ -40,6 +40,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import types as T
+
+from rosbag2parquet_spark.sources.catalog import SPARK_SCHEMA_KEY
 
 #: one row per file a task wrote (``path`` relative to the staging dir)
 #: and one per connection a task saw (``table`` = :data:`STATS`, no
@@ -93,10 +95,9 @@ STATS_SCHEMA = T.StructType([
 ])
 
 
-#: the footer keys Spark writes: its schema of the file (JSON) and the
-#: writer's version (without it, Spark reads INT96 under the session's
-#: rebase mode instead of as its own files)
-SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+#: the footer keys Spark writes: its schema of the file (JSON,
+#: `catalog.SPARK_SCHEMA_KEY`) and the writer's version (without it, Spark
+#: reads INT96 under the session's rebase mode instead of as its own files)
 SPARK_VERSION_KEY = "org.apache.spark.version"
 
 

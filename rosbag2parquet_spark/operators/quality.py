@@ -35,7 +35,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rosbag2parquet_spark.sources.catalog import load_table
+from rosbag2parquet_spark.sources.catalog import load_table, read_parquet
 
 
 # Spark's `div` truncates toward zero while DuckDB's `//` floors — the two
@@ -584,7 +584,7 @@ def rules_from_spec(
                     tuple(r["columns"]), tuple(r["parent_columns"]), label
                 )
             )
-            parents[label] = spark.read.parquet(r["parent"])
+            parents[label] = read_parquet(spark, r["parent"])
         else:
             raise ValueError(f"unknown rule type {t!r}")
     return rules, parents

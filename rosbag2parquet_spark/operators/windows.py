@@ -14,7 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from rosbag2parquet_spark.sources.catalog import load_table, publish_scratch
+from rosbag2parquet_spark.sources.catalog import (
+    load_table,
+    publish_scratch,
+    read_parquet,
+)
 
 SESSION_GAP_MIN = 30
 
@@ -281,7 +285,7 @@ def q_incr_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
 
         shutil.rmtree(work, ignore_errors=True)  # emptied (or stale) shell
-    base = spark.read.parquet(base_path)
+    base = read_parquet(spark, base_path)
     delta = rollup_partials(
         ev.filter(F.unix_micros("ts") >= _REFRESH_CUTOFF_US)
     )

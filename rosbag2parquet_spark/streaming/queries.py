@@ -18,6 +18,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 
 from rosbag2parquet_spark.operators import windows as batch_windows
+from rosbag2parquet_spark.sources.catalog import read_parquet
 from rosbag2parquet_spark.streaming.windowed import (
     run_to_memory,
     sessionized,
@@ -653,7 +654,7 @@ def landing_union_schema(spark: SparkSession, landing: str):
     for f in sorted(os.listdir(landing)):
         if not f.endswith(".parquet"):
             continue
-        sch = spark.read.parquet(os.path.join(landing, f)).schema
+        sch = read_parquet(spark, os.path.join(landing, f)).schema
         for fld in sch.fields:
             simple = fld.dataType.simpleString()
             if fld.name in seen:

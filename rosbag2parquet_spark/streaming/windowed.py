@@ -82,11 +82,11 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture was written."""
     import os
 
-    from rosbag2parquet_spark.sources.catalog import _nanos_timestamp_cols
+    from rosbag2parquet_spark.sources.catalog import nanos_columns
 
     stage = stage_stream_file(sf_dir, "events.parquet", "stream")
 
-    ts_is_nanos = "ts" in _nanos_timestamp_cols(os.path.join(sf_dir, "events.parquet"))
+    ts_is_nanos = "ts" in nanos_columns(os.path.join(sf_dir, "events.parquet"))
     if ts_is_nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = (

@@ -1,5 +1,5 @@
 """Layout reads planned on the driver: the footer keys every bag-convert
-file carries, the schema resolver built on them (`convert.footer_schema`)
+file carries, the schema resolver built on them (`catalog.footer_schema`)
 against Spark's own mergeSchema inference on every layout vintage, and
 the Spark jobs the layout readers start."""
 
@@ -19,13 +19,13 @@ from rosbag2parquet_spark.convert import (
     _read_existing_schema,
     convert_bag,
     convert_bags,
-    footer_schema,
     pertype_with_provenance,
     read_layout_table,
     table_schema,
 )
 from rosbag2parquet_spark.info import layout_info
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
+from rosbag2parquet_spark.sources.catalog import footer_schema
 from rosbag2parquet_spark.sources.container import CONN_SCHEMA
 from rosbag2parquet_spark.sources.rosbag import write_rosbag
 from tests.test_baglike import ANGVEL, FRAME, LINACC, QUAT, SEQ, STAMP, _imu_payload
@@ -86,15 +86,11 @@ def _spark_merged(spark, table_dir: str) -> T.StructType:
     return spark.read.option("mergeSchema", "true").parquet(table_dir).schema
 
 
-def _assert_parity(spark, table_dir: str, planned: bool = True) -> None:
-    """The resolver's schema equals Spark's mergeSchema inference, field
-    order included, and (``planned``) comes from the footers alone."""
+def _assert_parity(spark, table_dir: str) -> None:
+    """The resolver's schema, from the footers alone, equals Spark's
+    mergeSchema inference, field order included."""
     want = _spark_merged(spark, table_dir)
-    got = footer_schema(spark, table_dir)
-    if planned:
-        assert got == want, table_dir
-    else:
-        assert got is None, table_dir
+    assert footer_schema(spark, table_dir, merge=True) == want, table_dir
     assert table_schema(spark, table_dir) == want
     layout, table = os.path.split(table_dir)
     assert read_layout_table(spark, layout, table).schema == want
@@ -192,14 +188,15 @@ def test_resolver_equals_spark_merge_on_mixed_vintage(spark, bags, tmp_path):
     convert_bags(spark, [bags[1]], out, mode="append", evolve=True)
     assert os.path.isfile(os.path.join(tdir, "_bag_index_mixed"))
     _assert_parity(spark, tdir)
-    names = footer_schema(spark, tdir).names
+    names = footer_schema(spark, tdir, merge=True).names
     assert names.index("bag_index") > names.index("data")
 
 
-def test_resolver_falls_back_without_footer_keys(spark, fleet_layout, tmp_path):
+def test_resolver_reads_footers_without_spark_keys(spark, fleet_layout, tmp_path):
     """Files without Spark's schema key — a layout written before the
     footer-key fix, an external pyarrow table, or a table mixing both —
-    are inferred through Spark, with the same answer."""
+    resolve from their Parquet schemas to Spark's own answer; a type
+    outside the resolver's mapped set is inferred through Spark."""
     out = str(tmp_path / "prefix")
     shutil.copytree(fleet_layout, out)
     for table in _tables(out):
@@ -209,7 +206,7 @@ def test_resolver_falls_back_without_footer_keys(spark, fleet_layout, tmp_path):
                            use_deprecated_int96_timestamps=True)
             assert pq.read_metadata(f).metadata is None
     for table in _tables(out):
-        _assert_parity(spark, os.path.join(out, table), planned=False)
+        _assert_parity(spark, os.path.join(out, table))
     got = sorted(tuple(r) for r in layout_info(spark, out).collect())
     assert got == sorted(tuple(r) for r in layout_info(spark, fleet_layout).collect())
 
@@ -217,11 +214,15 @@ def test_resolver_falls_back_without_footer_keys(spark, fleet_layout, tmp_path):
     os.makedirs(ext)
     pq.write_table(pa.table({"x": [1, 2], "y": ["a", "b"]}),
                    os.path.join(ext, "part-0.parquet"))
-    _assert_parity(spark, ext, planned=False)
-    # one keyed file beside a key-less one: Spark decides
+    _assert_parity(spark, ext)
+    # one keyed file beside a key-less one: each file's own schema, merged
     keyed = _data_files(os.path.join(fleet_layout, "Stats"))[0]
     shutil.copy(keyed, os.path.join(out, "Stats", "part-zzz.parquet"))
-    _assert_parity(spark, os.path.join(out, "Stats"), planned=False)
+    _assert_parity(spark, os.path.join(out, "Stats"))
+    # a TIME column beside them: Spark decides (and refuses)
+    pq.write_table(pa.table({"x": [3], "t": pa.array([1], pa.time64("us"))}),
+                   os.path.join(ext, "part-1.parquet"))
+    assert footer_schema(spark, ext, merge=True) is None
 
 
 def test_resolver_refuses_conflicting_types_without_a_job(spark, tmp_path):
@@ -245,7 +246,7 @@ def test_resolver_refuses_conflicting_types_without_a_job(spark, tmp_path):
         _spark_merged(spark, tdir)
     before = _last_job(spark)
     with pytest.raises(ValueError, match="failed to merge"):
-        footer_schema(spark, tdir)
+        footer_schema(spark, tdir, merge=True)
     with pytest.raises(ValueError, match="never\\s+silently coerced"):
         _read_existing_schema(spark, tdir)
     assert _jobs_since(spark, before) == 0

@@ -3,6 +3,10 @@
 compare row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Each passing query prints its time and the Spark jobs its Spark side
+started (planning and fetch; from the status tracker), so a per-query job
+regression shows without a traced benchmark run.
 """
 
 from __future__ import annotations
@@ -148,6 +152,17 @@ def _pandas_rows(pdf):
     ]
 
 
+def _last_job(sc) -> int:
+    """The newest Spark job id the status tracker has seen (-1: none)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+
+
+def _jobs_since(sc, before: int) -> int:
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sum(1 for j in sc.statusTracker().getJobIdsForGroup() if j > before)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -168,6 +183,7 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.monotonic()
+        before = _last_job(spark.sparkContext)
         try:
             sdf = fn(spark, sf_dir)
             bincols = unhashable_columns(sdf.schema)
@@ -182,6 +198,7 @@ def main() -> int:
                 continue
             scols = sdf.columns
             srows = _pandas_rows(sdf.toPandas())
+            jobs = _jobs_since(spark.sparkContext, before)
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
@@ -243,7 +260,7 @@ def main() -> int:
             print(f"FAIL {name}: " + "; ".join(problems))
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(srows)} rows) [{dt:.2f}s]")
+            print(f"PASS {name} ({len(srows)} rows) [{dt:.2f}s, {jobs} jobs]")
 
     print(f"\ntotal {time.monotonic() - t_start:.1f}s")
     print(f"\n{n_fail} failures")
