@@ -12,7 +12,15 @@ on ``local[N]``. All scale-sensitive knobs live here so every entry point
   clusters should override via ``spark.sql.shuffle.partitions``);
 - session timezone pinned to UTC so timestamp semantics match external
   oracles (DuckDB is UTC-naive);
-- Arrow enabled for the Pandas-UDF slow path.
+- Arrow enabled for the Pandas-UDF slow path;
+- ``spark.python.daemon.module`` = :mod:`rosbag2parquet_spark._daemon`, so
+  a Python worker does not re-read ~27k zip directory entries (pyspark.zip,
+  py4j, the spark-core jar) at the start of every task: that stdlib call,
+  ``importlib.invalidate_caches()``, was most of a small task's fixed cost
+  (a no-op 16-task job 1.2 s -> 0.34 s on 4 cores). Workers import the
+  package from the driver's cwd or ``PYTHONPATH``, as package tasks already
+  need; the conf is set only when the package is found there, and being
+  static it does not reach a session this function did not build.
 """
 
 from __future__ import annotations
@@ -20,6 +28,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: the package's parent dir, which a worker must find on its sys.path
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _workers_find_package() -> bool:
+    """Whether a worker started by this driver imports the package: Spark
+    starts it in the driver's cwd with the driver's ``PYTHONPATH``."""
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(d and os.path.realpath(d) == os.path.realpath(_ROOT) for d in dirs)
 
 
 def get_spark(app_name: str = "rosbag2parquet_spark", cpus: int | None = None) -> SparkSession:
@@ -52,6 +70,10 @@ def get_spark(app_name: str = "rosbag2parquet_spark", cpus: int | None = None) -
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if _workers_find_package():
+        builder = builder.config(
+            "spark.python.daemon.module", "rosbag2parquet_spark._daemon"
+        )
     active = SparkSession.getActiveSession()
     if active is not None:
         return active

@@ -29,8 +29,10 @@ the schema with its own job, when:
 - two field names collide under ``spark.sql.caseSensitive``.
 
 One footer read per file version ((path, inode, size, mtime_ns)) serves
-both the schema and :func:`nanos_columns`. No pyarrow import: the footer's
-Thrift is decoded here.
+both the schema and :func:`nanos_columns`, and :func:`load_table` memoizes
+its DataFrame on the session, the resolved schema and the versions of every
+listed file (a read Spark infers is not memoized). No pyarrow import: the
+footer's Thrift is decoded here.
 """
 
 from __future__ import annotations
@@ -347,15 +349,22 @@ def _read_footer(path: str, ino: int, size: int, mtime_ns: int) -> "_Footer | No
     return footer if footer.elements else None
 
 
-def _footer(path: str) -> "_Footer | None":
-    """The footer of ``path`` as it is now (memoized per file version)."""
+def _file_version(path: str) -> "tuple[str, int, int, int] | None":
+    """``(path, inode, size, mtime_ns)`` of ``path`` now; None when it
+    cannot be read."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    if st.st_size < 12:
+    return path, st.st_ino, st.st_size, st.st_mtime_ns
+
+
+def _footer(path: str) -> "_Footer | None":
+    """The footer of ``path`` as it is now (memoized per file version)."""
+    version = _file_version(path)
+    if version is None or version[2] < 12:
         return None
-    return _read_footer(path, st.st_ino, st.st_size, st.st_mtime_ns)
+    return _read_footer(*version)
 
 
 # ------------------------------------------------------ Parquet -> Spark
@@ -732,7 +741,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # hidden per-read mutation: the values never vary per table.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = read_parquet(spark, path)
+    # the versions before the schema: a file rewritten during this call
+    # keys a new entry next time rather than leaving a stale one
+    versions = tuple(map(_file_version, _data_files(path) or ()))
+    schema = footer_schema(spark, path)
+    if schema is None:  # Spark infers: never memoized
+        return _with_micros(read_parquet(spark, path), path)
+    return _resolved_table(spark, path, schema, versions)
+
+
+@lru_cache(maxsize=256)
+def _resolved_table(
+    spark: SparkSession, path: str, schema: T.StructType, versions: tuple
+) -> DataFrame:
+    """:func:`load_table`'s DataFrame per session, resolved schema and file
+    versions: an unchanged table skips resolving the relation in the JVM
+    (~11 ms a read), while a rewritten, added or removed file, or a conf
+    change that changes the schema, gets a new DataFrame."""
+    return _with_micros(spark.read.schema(schema).parquet(path), path)
+
+
+def _with_micros(df: DataFrame, path: str) -> DataFrame:
     for c in nanos_columns(path):
         # integer `div`, not `/`: float division loses precision at 1e18 ns
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

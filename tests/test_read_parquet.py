@@ -1,7 +1,7 @@
 """The package's one Parquet read path (`sources.catalog.read_parquet`):
 its footer schema resolver against Spark's own inference over a matrix of
-Parquet types, the footer memo across a rewrite, and the Spark jobs the
-fixture reads start."""
+Parquet types, the footer and table memos across a rewrite, and the Spark
+jobs the fixture reads start."""
 
 import datetime
 import decimal
@@ -206,6 +206,55 @@ def test_footer_memo_follows_a_rewrite(spark, tmp_path):
         assert nanos_columns(p) == (("ts",) if unit == "ns" else ())
         rows = load_table(spark, str(tmp_path), "events").collect()
         assert [r.ts for r in rows] == ts
+
+
+def test_table_memo_follows_a_rewrite(spark, tmp_path):
+    """`load_table` hands back the same DataFrame while the table's files
+    are unchanged, and the new rows once a file is rewritten in place or
+    a file is added."""
+    d = tmp_path / "region.parquet"
+    d.mkdir()
+
+    def write(name: str, keys: list) -> None:
+        pq.write_table(
+            pa.table({"r_regionkey": pa.array(keys, pa.int64()),
+                      "r_name": pa.array([f"r{k}" for k in keys])}),
+            str(d / name),
+        )
+
+    def keys(df) -> list:
+        return sorted(r.r_regionkey for r in df.collect())
+
+    write("part-0.parquet", [1, 2])
+    first = load_table(spark, str(tmp_path), "region")
+    assert keys(first) == [1, 2]
+    assert load_table(spark, str(tmp_path), "region") is first
+    write("part-0.parquet", [3, 4, 5])
+    assert keys(load_table(spark, str(tmp_path), "region")) == [3, 4, 5]
+    write("part-1.parquet", [6])
+    assert keys(load_table(spark, str(tmp_path), "region")) == [3, 4, 5, 6]
+
+
+def test_table_memo_follows_the_schema_conf(spark, confs, tmp_path):
+    """A conf change that changes the resolved schema gets a new
+    DataFrame; a table Spark infers is never memoized."""
+    p = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"doc_id": pa.array([1], pa.int64()),
+                             "body": pa.array([b"x"])}), p)
+    as_binary = load_table(spark, str(tmp_path), "documents")
+    spark.conf.set(_BIN, "true")
+    as_string = load_table(spark, str(tmp_path), "documents")
+    assert as_string is not as_binary
+    assert as_string.schema["body"].dataType.simpleString() == "string"
+    assert as_string.collect()[0].body == "x"
+
+    part = tmp_path / "events.parquet" / "k=1"  # partitioned: Spark infers
+    part.mkdir(parents=True)
+    pq.write_table(pa.table({"event_id": pa.array([1], pa.int64())}),
+                   str(part / "part-0.parquet"))
+    inferred = load_table(spark, str(tmp_path), "events")
+    assert inferred.columns == ["event_id", "k"]
+    assert load_table(spark, str(tmp_path), "events") is not inferred
 
 
 def test_fixture_reads_start_no_job(spark):

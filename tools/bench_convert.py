@@ -22,7 +22,10 @@ walkthrough SBAG converted untimed, then the layout readers timed on it
 and Spark jobs of each, best of 3 after a warm-up), ``scan`` = the
 walkthrough SBAG read as a DataFrame (``read_messages(...).count()``, the
 path ``load_bag`` and sampling take: ms and Spark jobs, best of 3 after a
-warm-up).
+warm-up), ``tasks`` = the fixed cost of a Python task: the median ms of a
+no-op ``container.split_job`` over 4 and 16 splits beside a JVM-only
+``spark.range`` job of the same width (no bag; the first two arguments are
+ignored).
 """
 
 from __future__ import annotations
@@ -617,6 +620,32 @@ def run_scan(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def _noop_split(ids):
+    yield from ids
+
+
+def run_tasks(widths=(4, 16), reps: int = 9, spark=None) -> dict:
+    """Median ms of a no-op Python job (``split_job``, one task per split)
+    and of a JVM-only job of the same width, after one warm-up run each:
+    the gap is what each Python task costs before it does any work."""
+    from rosbag2parquet_spark.session import get_spark
+    from rosbag2parquet_spark.sources.container import ScanPlan, split_job
+
+    spark = spark or get_spark("bench_convert")
+    out = {}
+    for n in widths:
+        plan = ScanPlan(bags=[], splits=[[]] * n, filters={}, fleet=False)
+        jobs = {
+            "python": lambda: split_job(spark, plan, _noop_split, "id long").collect(),
+            "jvm": lambda: spark.range(0, n, 1, n).collect(),
+        }
+        for name, job in jobs.items():
+            job()
+            runs = sorted(timed(spark, job)[1] for _ in range(reps))
+            out[f"{name}_{n}_ms"] = round(runs[reps // 2] * 1000, 1)
+    return out
+
+
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 24_000
     blob_bytes = int(sys.argv[2]) if len(sys.argv) > 2 else 4_096
@@ -628,6 +657,7 @@ def main() -> None:
         "resume": lambda: run_resume(n_msgs, blob_bytes),
         "reads": lambda: run_reads(n_msgs, blob_bytes),
         "scan": lambda: run_scan(n_msgs, blob_bytes),
+        "tasks": run_tasks,
     }
     mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
     if mode not in modes:
