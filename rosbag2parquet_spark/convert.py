@@ -87,14 +87,11 @@ def table_schema(spark: SparkSession, table_dir: str) -> T.StructType:
 
 
 def _read_existing_schema(spark: SparkSession, path: str):
-    """The existing table's schema under the mergeSchema determinism rule
-    (see the callers' docstrings), from the footers when they carry
-    Spark's key (`table_schema`). On an EXTERNALLY-produced table whose
-    files carry genuinely conflicting types for one column, the schema
-    merge itself fails — re-raised here as the append guard's
-    structured refusal (r12 advisor), so incompatible tables are
-    rejected with the same actionable never-silently-coerced message on
-    both code paths instead of surfacing a raw merge exception."""
+    """The existing table's merged schema (`table_schema`), from the
+    footers when they resolve. Files that carry conflicting types for one
+    column (an externally produced table) fail the merge; that failure is
+    re-raised as the append guard's structured refusal, so both guard
+    paths refuse with the same never-silently-coerced message."""
     try:
         return table_schema(spark, path)
     except Exception as e:
@@ -124,7 +121,8 @@ def _read_existing_schema(spark: SparkSession, path: str):
 def assert_append_compatible(spark: SparkSession, path: str, schema, evolve: bool = False):
     """Refuse to append into an existing table whose schema fingerprint
     differs — silent unionByName coercion would mask exactly the drift the
-    reference's md5 assert exists to catch.
+    reference's md5 assert exists to catch. A layout written by an older
+    converter (fewer Messages or per-type columns) is refused here too.
 
     ``evolve=True`` relaxes the guard to ADDITIVE evolution (the real-world
     fleet case the reference's hard md5 assert cannot ingest at all: a
@@ -135,13 +133,9 @@ def assert_append_compatible(spark: SparkSession, path: str, schema, evolve: boo
     a superset schema. Returns the existing on-disk schema (None when the
     table doesn't exist yet) so the caller can pad.
 
-    The existing schema is the merged one (`_read_existing_schema`) —
-    the same determinism rule as `_append_schema` (r12): on a table whose
-    files carry different (superset) schemas — repeated evolve appends,
-    or the bag_index-mixed vintage — a plain read samples an arbitrary
-    footer, making the evolve union pad (and the strict fingerprint
-    verdict) vary run to run; the merged schema is the true union and is
-    stable."""
+    The existing schema is the merged one (`_read_existing_schema`): after
+    evolve appends a table's files differ, and only the merged schema is
+    their stable union."""
     if not os.path.isdir(path):
         return None
     existing = _read_existing_schema(spark, path)
@@ -175,119 +169,12 @@ _STREAM_PERTYPE_META = (
     "datatype",
 )
 
-#: Messages columns added AFTER the reference's 5-column layout, in the
-#: order they were introduced (r8: the TODO-#6 header-stamp pair; r9: the
-#: TODO-#7 derived timestamp; r10: the file-provenance ordinal of
-#: FlattenedRosWriter.cpp:183). They are always TRAILING, so any older
-#: layout's Messages schema is a column-prefix of a newer batch's.
-_MESSAGES_OPTIONAL = ("header_stamp_sec", "header_stamp_nsec", "time", "bag_index")
-
-
-def _pad_append_messages(
-    spark: SparkSession, msg_path: str, messages: DataFrame
-) -> DataFrame:
-    """Append path for Messages across SCHEMA VINTAGES: a layout converted
-    before the header-stamp pair (r8) or the derived ``time`` column (r9)
-    must stay appendable — when the only difference is that the incoming
-    batch carries trailing optional columns the on-disk files lack, the
-    batch PROJECTS DOWN to the on-disk column set (never the reverse:
-    old files are immutable, and NULL-padding them on read would claim
-    the old batches recorded stamps they didn't). Any other difference
-    still refuses via the fingerprint guard. (The shared projection rule
-    lives in `_append_schema` — one implementation for Messages and the
-    per-type tables, so the vintage semantics cannot drift.)"""
-    messages = _pad_append_trailing(
-        spark, msg_path, messages, optional=_MESSAGES_OPTIONAL
-    )
-    assert_append_compatible(spark, msg_path, messages.schema)
-    return messages
-
-
-def _append_schema(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    optional: tuple = ("bag_index",),
-) -> T.StructType:
-    """The columns a batch of ``schema`` keeps when it appends to the table
-    at ``path``: per-type tables gained a trailing ``bag_index``
-    provenance column in r11 (reference TODO FlattenedRosWriter.cpp:183
-    asks for a file ID on ALL entries) and Messages gained its trailing
-    ``_MESSAGES_OPTIONAL`` columns — appending into an older-vintage table
-    PROJECTS the batch DOWN to the on-disk column set (old files are
-    immutable; per-row ordinals simply don't exist there and the
-    provenance reader falls back to the seqno join). Any other difference
-    still refuses via the fingerprint guard.
-
-    The existing schema is the merged one (`_read_existing_schema`): on a
-    MIXED-vintage table (some files stamped, some not) a plain read samples
-    an arbitrary footer, so whether the batch keeps or projects away the
-    stamp would be nondeterministic run to run (reads stay correct via the
-    mixed marker, but the file vintages written would diverge
-    unpredictably). The merged schema is deterministic — it includes the
-    stamp, so strict appends into a mixed table keep stamping."""
-    if not os.path.isdir(path):
-        return schema
-    existing = _read_existing_schema(spark, path)
-    have = [f.name for f in existing.fields]
-    names = [f.name for f in schema.fields]
-    extra = [c for c in names if c not in have]
-    if extra and set(extra) <= set(optional) and set(have) <= set(names):
-        projected = T.StructType([schema[c] for c in have])
-        if schema_fingerprint(projected) == schema_fingerprint(existing):
-            return projected
-    return schema
-
-
-def _pad_append_trailing(
-    spark: SparkSession,
-    path: str,
-    df: DataFrame,
-    optional: tuple = ("bag_index",),
-) -> DataFrame:
-    """``df`` projected to the columns it keeps when appending to the
-    table at ``path`` (`_append_schema`)."""
-    keep = _append_schema(spark, path, df.schema, optional).names
-    return df if keep == df.columns else df.select(*keep)
-
-
 def read_layout_table(spark: SparkSession, layout_dir: str, table: str) -> DataFrame:
-    """Read a converted-layout table under its MERGED schema — required
-    for layouts built with ``evolve=True`` appends, where files carry
-    different (superset) schemas. The schema comes from the footers on the
-    driver (`catalog.read_parquet` with ``merge``), so planning the read
-    starts no Spark job; a table the resolver cannot plan is read with
-    mergeSchema inference."""
+    """Read a converted-layout table under its MERGED schema: after
+    ``evolve=True`` appends its files carry different (superset) schemas.
+    The schema comes from the footers on the driver (`catalog.read_parquet`
+    with ``merge``), so planning the read starts no Spark job."""
     return read_parquet(spark, os.path.join(layout_dir, table), merge=True)
-
-
-#: marker file an evolve-append drops in a per-type table dir when it
-#: stamps bag_index into a table whose older files predate the stamp —
-#: the O(1) mixed-vintage signal `pertype_with_provenance` dispatches on
-#: (underscore-prefixed, so parquet listings ignore it). The evolve
-#: append is the only converter path that can create a mix (the strict
-#: path projects the batch down); a mix assembled by hand outside the
-#: converter API must carry the marker too.
-_BAG_INDEX_MIXED_MARKER = "_bag_index_mixed"
-
-
-def _all_files_have_column(table_dir: str, column: str) -> bool:
-    """True iff EVERY parquet file under ``table_dir`` carries ``column``
-    in its footer schema — the exhaustive homogeneity check (driver-side
-    metadata reads, O(#files)). The provenance READER dispatches on the
-    O(1) `_BAG_INDEX_MIXED_MARKER` instead; this helper is the
-    verification tool tests pin the marker contract with."""
-    import pyarrow.parquet as _pq
-
-    found = False
-    for root, _dirs, files in os.walk(table_dir):
-        for fn in files:
-            if not fn.endswith(".parquet"):
-                continue
-            found = True
-            if column not in _pq.read_schema(os.path.join(root, fn)).names:
-                return False
-    return found
 
 
 def checked_union(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -383,8 +270,6 @@ def convert(
             .drop("__b", "__running")
         )
 
-    seq = seq.cache()  # read by three sinks below — one materialization
-
     # ---- Connections dim (reference FlattenedRosWriter.cpp:90-137, 209-224):
     # distinct (connection, datatype) keys → dense connection_id. On append,
     # keys already in the existing dim KEEP their ids (only genuinely-new
@@ -464,8 +349,7 @@ def convert(
         # reference TODO #7 ("want native timestamps"): the derived
         # TimestampType view of the same instant, MICROSECOND precision
         # (parquet TIMESTAMP(MICROS); the sec/nsec pair remains the
-        # bit-exact ns-precision record) — trailing so older layouts stay
-        # a column-prefix (see _pad_append_messages)
+        # bit-exact ns-precision record)
         F.col(time_col).alias("time"),
         # file provenance (reference TODO FlattenedRosWriter.cpp:183) —
         # NULL by default on this path (a DataFrame stream has no source
@@ -484,19 +368,6 @@ def convert(
     )
     stats_path = os.path.join(out_dir, "Stats")
 
-    writer_opts = {
-        "maxRecordsPerFile": str(_MAX_RECORDS_PER_FILE),
-        "compression": compression,
-    }
-    if mode == "append":
-        messages = _pad_append_messages(spark, msg_path, messages)
-        assert_append_compatible(spark, conn_path, connections.schema)
-        assert_append_compatible(spark, stats_path, stats.schema)
-    messages.write.options(**writer_opts).mode(mode).parquet(msg_path)
-    # append writes only the genuinely-new dim rows (existing ids kept)
-    connections.write.options(**writer_opts).mode(mode).parquet(conn_path)
-    stats.write.options(**writer_opts).mode(mode).parquet(stats_path)
-
     # ---- per-type demux: ONE partitioned write (reference GetHandler routing,
     # FlattenedRosWriter.cpp:273-289). Layout per MessageTable.cpp:326-343:
     # seqno, flattened payload fields, connection_id, raw data blob. The
@@ -514,7 +385,7 @@ def convert(
         # tuple the select below is built from): a payload field named
         # data/bag_index/... sanitizes with trailing underscores (the bag
         # decoders' msgdef.RESERVED_COLUMNS rule), so the stamp below —
-        # and the provenance reader's column dispatch — is UNCONDITIONAL
+        # and the provenance reader's column check — is UNCONDITIONAL
         flat_cols = flatten_select_cols(
             payload_schema, "__payload",
             reserved=frozenset(_STREAM_PERTYPE_META),
@@ -523,10 +394,9 @@ def convert(
     # write-time provenance stamp on the per-type rows too (reference
     # TODO FlattenedRosWriter.cpp:183 "we should add a file ID to ALL
     # entries"): map-side literal, so pertype_with_provenance is a
-    # projection + broadcast name resolve — no seqno join. Trailing
-    # (before the partition column), like Messages' optional columns.
-    # Column order follows _STREAM_PERTYPE_META — extend that tuple, not
-    # this select, when adding a metadata column.
+    # projection + name resolve — no seqno join. Column order follows
+    # _STREAM_PERTYPE_META — extend that tuple, not this select, when
+    # adding a metadata column.
     meta_exprs = {
         "seqno": F.col("seqno"),
         "time": F.col(time_col).alias("time"),
@@ -544,11 +414,26 @@ def convert(
     ]
     pertype = resolved.select(*head, *flat_cols, *tail)
     pertype_path = os.path.join(out_dir, "pertype")
+
+    # every table passes the fingerprint guard BEFORE the first write: a
+    # refused append leaves the layout untouched, not half-appended
     if mode == "append":
-        # older-vintage layouts (pre-r11 per-type tables) lack the trailing
-        # stamp — project the batch down rather than refuse
-        pertype = _pad_append_trailing(spark, pertype_path, pertype)
-        assert_append_compatible(spark, pertype_path, pertype.schema)
+        for path, df in (
+            (msg_path, messages), (conn_path, connections),
+            (stats_path, stats), (pertype_path, pertype),
+        ):
+            assert_append_compatible(spark, path, df.schema)
+    # every sink below reads seq: one materialization, cached only once
+    # the append is accepted (a refused one must not leave a cache entry)
+    seq.cache()
+    writer_opts = {
+        "maxRecordsPerFile": str(_MAX_RECORDS_PER_FILE),
+        "compression": compression,
+    }
+    messages.write.options(**writer_opts).mode(mode).parquet(msg_path)
+    # append writes only the genuinely-new dim rows (existing ids kept)
+    connections.write.options(**writer_opts).mode(mode).parquet(conn_path)
+    stats.write.options(**writer_opts).mode(mode).parquet(stats_path)
     (
         # sortWithinPartitions, NOT repartition(datatype): hashing on the
         # type key alone collapses each type onto ONE reducer (a bag is
@@ -965,7 +850,7 @@ def _union_fields(
     # The provenance stamp is UNCONDITIONAL: a payload field named
     # bag_index sanitizes to bag_index_ in every decoder tier
     # (msgdef.RESERVED_COLUMNS), which the provenance reader's column
-    # dispatch relies on — enforce the invariant loudly.
+    # check relies on — enforce the invariant loudly.
     if "bag_index" in types:
         raise AssertionError(
             f"{datatype}: decoder emitted a payload column named "
@@ -1231,7 +1116,6 @@ def _write_bag_tables(
     # stamping per-type tables is map-side free.
     schemas: "dict[str, T.StructType]" = {}
     groups: list = []
-    mixed: set = set()  # table dirs that become mixed-vintage (evolve)
     for datatype, cs in sorted(by_type.items()):
         table = table_name_for_type(datatype)
         # one decode per DEFINITION VERSION: identical everywhere except
@@ -1265,28 +1149,25 @@ def _write_bag_tables(
         )
         table_path = os.path.join(out_dir, table)
         if mode == "append":
-            if not evolve:
-                # pre-r11 vintages: per-type tables without the trailing
-                # stamp stay appendable (the batch projects down; evolve
-                # mode instead treats bag_index as an additive column)
-                schema = _append_schema(spark, table_path, schema)
             existing = assert_append_compatible(
                 spark, table_path, schema, evolve=evolve
             )
             if evolve and existing is not None:
-                if "bag_index" not in existing.names:
-                    # this append introduces the stamp into a table whose
-                    # older files predate it — the table becomes MIXED-
-                    # vintage and the provenance reader must take the
-                    # seqno join (the O(1) dispatch marker, published
-                    # before the table's new files)
-                    mixed.add(table)
+                # the fixed columns are not evolvable: a table without one
+                # (say, no bag_index stamp) comes from an older converter,
+                # and its old rows would read NULL provenance
+                meta = ("seqno", "connection_id", "data", "bag_index")
+                missing = [c for c in meta if c not in existing.names]
+                if missing:
+                    raise ValueError(
+                        f"evolve-append to {table_path}: existing table "
+                        f"lacks {missing} — re-convert it with this version"
+                    )
                 # pad the batch to the UNION schema: columns the layout has
                 # that this batch's definition dropped land as NULLs, so
                 # every new file carries a superset schema; earlier files
                 # keep theirs — read evolved layouts with mergeSchema=true
                 # (the DDL script and read_layout_table do)
-                meta = ("seqno", "connection_id", "data", "bag_index")
                 vals = [f for f in schema.fields if f.name not in meta] + [
                     T.StructField(f.name, f.dataType, True)
                     for f in existing.fields if f.name not in schema.names
@@ -1309,8 +1190,6 @@ def _write_bag_tables(
         },
     }
     if mode == "append":
-        # Messages across SCHEMA VINTAGES (`_pad_append_messages`)
-        messages = _append_schema(spark, msg_path, messages, _MESSAGES_OPTIONAL)
         assert_append_compatible(spark, msg_path, messages)
         # Stats and the side-cars: the same fingerprint guard as every
         # other table — the one provenance shape appends across batches
@@ -1374,10 +1253,7 @@ def _write_bag_tables(
         for t in [*schemas, *small]:
             rank.setdefault(t, len(rank))
         commits.sort(key=lambda r: (rank[r["table"]], r["path"] or ""))
-        lw.publish(
-            out_dir, staging, commits, overwrite=mode == "overwrite",
-            markers={t: _BAG_INDEX_MIXED_MARKER for t in mixed},
-        )
+        lw.publish(out_dir, staging, commits, overwrite=mode == "overwrite")
     except BaseException:
         # publish removes staging itself; a convert that failed earlier
         # leaves nothing behind, not even the out_dir it created
@@ -1572,7 +1448,7 @@ def convert_bags(
     # side-car provenance ordinals: under append, bag_index continues after
     # the existing max over EVERY provenance carrier (read from the
     # footers, like seqno) so one bag's ordinal agrees across tables and
-    # batches; pre-r10 Messages files lack the column and are skipped
+    # batches
     base_bag_index = 0
     if mode == "append":
         prevs = [
@@ -1610,67 +1486,29 @@ def pertype_with_provenance(
 ) -> DataFrame:
     """Per-type rows WITH file provenance — the user-visible end of the
     reference TODO (FlattenedRosWriter.cpp:183 "we should add a file ID
-    to all entries"). Since r11 every converter stamps ``bag_index`` into
-    the per-type tables at write time (map-side free), so the normal path
-    here is a PROJECTION plus a literal name lookup — nothing shuffles at
-    any scale. Pre-r11 per-type tables lack the stamp and fall back to
-    a join against ``Messages`` projected to its (seqno, bag_index) pair
-    (seqno is the cross-table key, reference README.md:119-121; the
-    Messages side is column-pruned to 12 bytes/row, but the per-type side
-    does hash-shuffle on seqno — exactly the cost the write-time stamp
-    removes). Either way ``bag_index`` resolves to the source bag's NAME
-    via the ``Bags`` fleet manifest (every `convert_bags` layout has one;
-    the Metadata side-car serves older/MCAP-only layouts; a
-    DataFrame-stream layout has no files, so ``bag`` stays NULL there).
+    to all entries"). Every converter stamps ``bag_index`` into the
+    per-type tables at write time, after the raw ``data`` blob, so this is
+    a PROJECTION plus a literal name lookup — nothing shuffles at any
+    scale. ``bag_index`` resolves to the source bag's NAME via the
+    ``Bags`` manifest every bag convert writes; a DataFrame-stream layout
+    has no files, so ``bag`` stays NULL there. A table without the stamp
+    comes from an older converter and is refused.
 
-    Planning runs no Spark job: the schemas come from the footers
+    Planning runs no Spark job: the schema comes from the footers
     (`read_layout_table`) and the name dim is read on the driver
     (`_bag_names`). It resolves as one folded literal indexed by the
     ordinal (O(1) per row) with the left join's answer: ``bag_index``
     first, then the other columns, then ``bag``; NULL for an ordinal the
     dim lacks, one row per name where an ordinal carries two. A broadcast
     of the dim would cost a job of its own."""
-    pertype = read_layout_table(spark, out_dir, table)
-    mixed = os.path.isfile(
-        os.path.join(out_dir, table, _BAG_INDEX_MIXED_MARKER)
-    )
-    cols = pertype.columns
-    # The fast path requires the stamp in the STAMPED position — after the
-    # raw `data` blob (trailing for bag layouts, before `datatype` for the
-    # stream layout). A pre-r11 table whose PAYLOAD had a field named
-    # bag_index (the name only became RESERVED with the r11 stamp) carries
-    # that payload column among the value columns — i.e. BEFORE data —
-    # with no mixed marker; trusting it by name alone would serve payload
-    # values as provenance ordinals. Positional dispatch sends such tables
-    # to the always-correct seqno join instead.
-    stamped = (
-        "bag_index" in cols
-        and "data" in cols
-        and cols.index("bag_index") > cols.index("data")
-    )
-    if stamped and not mixed:
-        out = pertype  # write-time stamp: projection only, no join
-    else:
-        # No stamp anywhere (pre-r11 table, or a payload column squatting
-        # on the name pre-reservation), or a MIXED-vintage table
-        # (evolve-append added the stamp to later files only, leaving the
-        # marker — the mergeSchema read would NULL-fill pre-append rows
-        # whose ordinals Messages still records): resolve via the seqno
-        # join, which is complete for every vintage Messages covers.
-        msgs = read_layout_table(spark, out_dir, "Messages")
-        if "bag_index" in msgs.columns:
-            msgs = msgs.select("seqno", "bag_index")
-        else:
-            # pre-r10 vintage: Messages never gained the provenance column
-            # (appends into such a layout project it away — per-row
-            # ordinals genuinely don't exist there), so every row reads
-            # NULL rather than crashing the resolve
-            msgs = msgs.select(
-                "seqno", F.lit(None).cast("int").alias("bag_index")
-            )
-        # drop the partial mergeSchema column (mixed vintage) so the join
-        # provides THE bag_index — never two same-named columns
-        out = pertype.drop("bag_index").join(msgs, "seqno")
+    out = read_layout_table(spark, out_dir, table)
+    cols = out.columns
+    if "data" not in cols or "bag_index" not in cols[cols.index("data"):]:
+        raise ValueError(
+            f"{os.path.join(out_dir, table)}: no bag_index provenance "
+            "column after data — a layout from an older converter; "
+            "re-convert it"
+        )
     names = _bag_names(out_dir)
     if names is None:
         return out.withColumn("bag", F.lit(None).cast("string"))
@@ -1683,26 +1521,16 @@ def pertype_with_provenance(
 
 
 def _bag_names(out_dir: str) -> "list | None":
-    """The name dim of a layout, read on the driver: entry i lists the
-    names of bag ordinal i (None where no side-car row names it); None
-    when the layout has neither side-car. The dim UNIONS both side-cars:
-    a pre-Bags layout appended into by a newer converter has a PARTIAL
-    manifest (only the appended ordinals) while the Metadata side-car
-    still names the older bags — preferring one table alone would NULL
-    the other's names. Both derive the name from basename(path), so
-    same-ordinal rows agree and collapse to one."""
+    """The name dim of a layout, read on the driver from its ``Bags``
+    manifest: entry i lists the names of bag ordinal i (None where no row
+    names it); None when the layout has no manifest."""
     import pyarrow.parquet as pq
 
-    paths = [
-        os.path.join(out_dir, side_car) for side_car in ("Bags", "Metadata")
-    ]
-    paths = [p for p in paths if os.path.isdir(p)]
-    if not paths:
+    path = os.path.join(out_dir, "Bags")
+    if not os.path.isdir(path):
         return None
-    pairs: dict = {}
-    for p in paths:
-        t = pq.read_table(p, columns=["bag_index", "bag"])
-        pairs.update(dict.fromkeys(zip(*(c.to_pylist() for c in t.columns))))
+    t = pq.read_table(path, columns=["bag_index", "bag"])
+    pairs = dict.fromkeys(zip(*(c.to_pylist() for c in t.columns)))
     ordinals = [i for i, _ in pairs if i is not None and i >= 0]
     names: list = [None] * (max(ordinals) + 1 if ordinals else 0)
     for i, name in pairs:

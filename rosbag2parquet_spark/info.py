@@ -14,7 +14,6 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from rosbag2parquet_spark.sources.catalog import read_parquet
 from rosbag2parquet_spark.sources.container import (
     Container,
     connections_df,
@@ -166,38 +165,21 @@ def _stats_rollup(layout_dir: str):
 
 def layout_info(spark: SparkSession, layout_dir: str) -> DataFrame:
     """`bag_info` over a CONVERTED layout instead of a bag: the same
-    per-(datatype, topic) stats + rollup rows. Layouts written since r8
-    persist the aggregates as a ``Stats`` table (reference TODO #2.1 —
-    one row per batch x connection), so info is a rollup of a
-    KILOBYTE-scale table, done on the driver (`_stats_rollup`) and handed
-    to Spark as a local relation: answering it runs no Spark job, and at
-    100 TB `rosbag info` answers without touching Messages at all. Legacy
-    layouts fall back to the column-pruned Messages scan (still no
-    per-type blob ever read — the reason the metadata tables exist,
-    FlattenedRosWriter.cpp:49-137). Both paths compute identical values
-    (sums/mins/maxes re-aggregate exactly); pinned in
-    tests/test_convert_bag.py."""
+    per-(datatype, topic) stats + rollup rows. Every converter persists
+    the aggregates as a ``Stats`` table (reference TODO #2.1 — one row per
+    batch x connection), so info is a rollup of a KILOBYTE-scale table,
+    done on the driver (`_stats_rollup`) and handed to Spark as a local
+    relation: answering it runs no Spark job, and at 100 TB `rosbag info`
+    answers without touching Messages at all. A layout without ``Stats``
+    comes from an older converter and is refused."""
     import os
 
-    if os.path.isdir(os.path.join(layout_dir, "Stats")):
-        return _with_rates(spark.createDataFrame(_stats_rollup(layout_dir)))
-    conns = read_parquet(spark, os.path.join(layout_dir, "Connections"))
-    msgs = read_parquet(spark, os.path.join(layout_dir, "Messages")).select(
-        "connection_id",
-        "size",
-        (
-            F.col("time_sec").cast("long") * 1_000_000_000
-            + F.col("time_nsec")
-        ).alias("time_ns"),
-    )
-    joined = msgs.join(F.broadcast(conns), "connection_id")
-    agg = joined.rollup("datatype", "topic").agg(
-        F.count(F.lit(1)).alias("n_msgs"),
-        F.sum("size").alias("total_bytes"),
-        F.min("time_ns").alias("min_ns"),
-        F.max("time_ns").alias("max_ns"),
-    )
-    return _with_rates(agg)
+    if not os.path.isdir(os.path.join(layout_dir, "Stats")):
+        raise ValueError(
+            f"{layout_dir}: no Stats table — a layout from an older "
+            "converter; re-convert it"
+        )
+    return _with_rates(spark.createDataFrame(_stats_rollup(layout_dir)))
 
 
 def print_layout_info(spark: SparkSession, layout_dir: str) -> None:

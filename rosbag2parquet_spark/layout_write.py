@@ -530,11 +530,9 @@ def publish(
     commits: list,
     *,
     overwrite: bool,
-    markers: "dict[str, str] | None" = None,
 ) -> None:
     """Publish exactly the committed files of every table (in commit-list
-    table order) and remove ``staging``. ``markers`` maps a table to a
-    marker file that lands in its dir before its files do."""
+    table order) and remove ``staging``."""
     try:
         by_table: dict = {}
         for r in commits:
@@ -543,12 +541,7 @@ def publish(
                     os.path.join(staging, r["path"])
                 )
         for table, files in by_table.items():
-            table_dir = os.path.join(out_dir, table)
-            marker = (markers or {}).get(table)
-            if marker is not None:
-                with open(os.path.join(table_dir, marker), "w"):
-                    pass  # empty marker; presence is the signal
-            publish_table(table_dir, files, overwrite)
+            publish_table(os.path.join(out_dir, table), files, overwrite)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
@@ -557,7 +550,7 @@ def footer_max(table_dir: str, column: str) -> "int | None":
     """The max of an integer ``column`` over a table's parquet files from
     their footer statistics — no scan job; only a file whose row groups
     lack statistics is read (that column alone). Files without the column
-    (an older vintage) are skipped; None when no row has a value."""
+    are skipped; None when no row has a value."""
     best = None
     if not os.path.isdir(table_dir):
         return None

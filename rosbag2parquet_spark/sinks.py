@@ -158,9 +158,9 @@ def _converted_fleet_dir(spark: SparkSession, sf_dir: str) -> str:
 def q_provenance_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Provenance surfaced END TO END (reference TODO
     FlattenedRosWriter.cpp:183, SURVEY §7.1 r11 #3): a two-batch fleet
-    conversion, then `pertype_with_provenance` — per-type rows joined to
-    Messages' (seqno, bag_index) on the layout's seqno key — aggregated
-    per (bag_index, datatype). The seqno ranges prove the append
+    conversion, then `pertype_with_provenance` — per-type rows with the
+    bag_index each batch stamped at write time — aggregated per
+    (bag_index, datatype). The seqno ranges prove the append
     continued the global order (batch 1's lo = batch 0's hi + 1 within
     interleaved types); the oracle recomputes the midpoint split and the
     global rank from the raw events."""

@@ -27,3 +27,15 @@ def duck():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con
+
+
+def layout_files(root: str) -> dict:
+    """Every file under ``root`` by relative path, with its bytes: two
+    snapshots compare equal iff no file was added, removed or changed."""
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out

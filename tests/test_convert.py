@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.convert import convert
 from rosbag2parquet_spark.sources.catalog import load_table
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, layout_files
 
 
 @pytest.fixture(scope="module")
@@ -374,40 +374,66 @@ def test_decode_rejects_unknown_on_error(spark, grammar):
             )
 
 
-def test_append_pads_to_older_messages_vintage(spark, tmp_path):
-    """Appending into a layout converted BEFORE the trailing optional
-    Messages columns existed (r8 header-stamp pair, r9 derived `time`)
-    must succeed by projecting the incoming batch DOWN to the on-disk
-    column set (the advisor-flagged migration path) — old files are
-    immutable, so the layout keeps the older vintage's schema. A
-    non-vintage difference still refuses."""
-    from rosbag2parquet_spark.convert import _MESSAGES_OPTIONAL
+def test_append_refuses_older_messages_layout(spark, tmp_path):
+    """A layout whose Messages predates the trailing columns every
+    converter writes (the header-stamp pair, the derived `time`,
+    `bag_index`) is refused on append by the fingerprint guard, and the
+    layout is left byte-identical."""
+    import shutil
+
     from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
 
-    out = str(tmp_path / "vintage")
+    out = str(tmp_path / "older")
     events = load_table(spark, SF_DIR, "events").limit(50)
     convert(
         spark, events, out,
         order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA,
     )
     msg_path = os.path.join(out, "Messages")
-    # rewrite the layout's Messages as the PRE-r8 5-column vintage
-    old = spark.read.parquet(msg_path).drop(*_MESSAGES_OPTIONAL)
+    # rewrite the layout's Messages with the reference's 5 columns only
+    old = spark.read.parquet(msg_path).drop(
+        "header_stamp_sec", "header_stamp_nsec", "time", "bag_index"
+    )
     old_pdf = old.toPandas()
-    import shutil
-
     shutil.rmtree(msg_path)
     spark.createDataFrame(old_pdf, old.schema).write.parquet(msg_path)
 
+    before = layout_files(out)
+    with pytest.raises(ValueError, match="schema mismatch"):
+        convert(
+            spark, events, out, order_cols=["ts", "event_id"],
+            payload_schema=PROPS_SCHEMA, mode="append",
+        )
+    assert layout_files(out) == before
+
+
+def test_refused_append_leaves_the_layout_unchanged(spark, tmp_path):
+    """Every table passes the guard before the first write: an append
+    whose per-type schema differs is refused with the layout
+    byte-identical — no Messages, Connections or Stats file added — and
+    no cache entry left behind."""
+    from pyspark.sql import types as T
+
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+
+    out = str(tmp_path / "refused")
+    events = load_table(spark, SF_DIR, "events").limit(50)
     convert(
-        spark, events, out, order_cols=["ts", "event_id"],
-        payload_schema=PROPS_SCHEMA, mode="append",
+        spark, events, out,
+        order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA,
     )
-    appended = spark.read.parquet(msg_path)
-    assert appended.columns == [
-        "seqno", "time_sec", "time_nsec", "size", "connection_id",
-    ]
-    assert appended.count() == 100
+    before = layout_files(out)
+    other = T.StructType([T.StructField("k", T.StringType(), True)])
+    spark.catalog.clearCache()
+    with pytest.raises(ValueError, match="schema mismatch"):
+        convert(
+            spark, events, out, order_cols=["ts", "event_id"],
+            payload_schema=other, mode="append",
+        )
+    assert layout_files(out) == before
+    # nor does it leave its input cached
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert spark.read.parquet(os.path.join(out, "Messages")).count() == 50
 
 
 def test_append_guard_refuses_conflicting_file_schemas(spark, tmp_path):

@@ -417,23 +417,42 @@ def test_convert_fails_fast_on_bad_paths(spark, two_type_bag, tmp_path):
 
 
 def test_layout_info_from_stats_equals_messages_scan(spark, two_type_bag, tmp_path):
-    """layout_info answers from the persisted Stats table when present
-    (metadata-only `rosbag info`) and must equal the legacy
-    Messages-scan fallback value for value."""
+    """layout_info answers from the persisted Stats table (metadata-only
+    `rosbag info`) and equals the rollup of a column-pruned Messages scan
+    joined to Connections value for value; a layout without Stats is
+    refused."""
     import shutil
 
-    from rosbag2parquet_spark.info import layout_info
+    from pyspark.sql import functions as F
+
+    from rosbag2parquet_spark.info import _with_rates, layout_info
 
     out = str(tmp_path / "out_info")
     convert_bag(spark, two_type_bag, out)
     via_stats = sorted(
         tuple(r) for r in layout_info(spark, out).collect()
     )
-    # hide Stats -> fallback path
-    shutil.move(os.path.join(out, "Stats"), os.path.join(out, "_hidden"))
-    via_scan = sorted(tuple(r) for r in layout_info(spark, out).collect())
+    conns = spark.read.parquet(os.path.join(out, "Connections"))
+    msgs = spark.read.parquet(os.path.join(out, "Messages")).select(
+        "connection_id",
+        "size",
+        (
+            F.col("time_sec").cast("long") * 1_000_000_000 + F.col("time_nsec")
+        ).alias("time_ns"),
+    )
+    scan = msgs.join(conns, "connection_id").rollup("datatype", "topic").agg(
+        F.count(F.lit(1)).alias("n_msgs"),
+        F.sum("size").alias("total_bytes"),
+        F.min("time_ns").alias("min_ns"),
+        F.max("time_ns").alias("max_ns"),
+    )
+    via_scan = sorted(tuple(r) for r in _with_rates(scan).collect())
     assert via_stats == via_scan
     assert len(via_stats) >= 3  # two types + rollup rows
+
+    shutil.rmtree(os.path.join(out, "Stats"))
+    with pytest.raises(ValueError, match="no Stats table"):
+        layout_info(spark, out)
 
 
 def test_header_stamp_jvm_decode_agrees_with_python_decoder(spark, tmp_path):

@@ -12,6 +12,7 @@ import pytest
 from rosbag2parquet_spark.convert import convert_bags, resolve_bag_paths
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
 from rosbag2parquet_spark.sources.rosbag import write_rosbag
+from tests.conftest import layout_files
 from tests.test_baglike import ANGVEL, FRAME, LINACC, QUAT, SEQ, STAMP, _imu_payload
 from tests.test_convert_bag import GPS_DEF, _gps_payload
 from tests.test_msgdef import IMU_DEF
@@ -533,10 +534,10 @@ def test_ros1_mcap_and_rosbag_share_a_type(spark, tmp_path):
 
 def test_pertype_with_provenance_resolves_bag_names(spark, fleet_out):
     """The layout-level provenance read (reference TODO
-    FlattenedRosWriter.cpp:183 surfaced end to end): per-type rows join
-    Messages' (seqno, bag_index) and the Metadata side-car resolves the
-    ordinal to the source bag's NAME — every Imu row names a.bag or
-    b.sbag exactly as recorded."""
+    FlattenedRosWriter.cpp:183 surfaced end to end): per-type rows carry
+    their stamped bag_index and the Bags manifest resolves the ordinal to
+    the source bag's NAME — every Imu row names a.bag or b.sbag exactly
+    as recorded."""
     from rosbag2parquet_spark.convert import pertype_with_provenance
 
     out, _ = fleet_out
@@ -553,97 +554,6 @@ def test_pertype_with_provenance_resolves_bag_names(spark, fleet_out):
         (1, "b.sbag"),
         (1, "b.sbag"),
     ]
-
-
-def test_provenance_mixed_vintage_falls_back_to_join(spark, fleet, tmp_path):
-    """A MIXED-vintage per-type table (evolve-appended: some files carry
-    the r11 stamp, some predate it) must resolve via the seqno join — the
-    stamped-column fast path would NULL-fill the pre-stamp rows that
-    Messages still records. The evolve append drops the
-    `_BAG_INDEX_MIXED_MARKER` as the reader's O(1) dispatch signal;
-    `_all_files_have_column` is the exhaustive check the marker stands
-    in for."""
-    from rosbag2parquet_spark.convert import (
-        _BAG_INDEX_MIXED_MARKER,
-        _all_files_have_column,
-        pertype_with_provenance,
-    )
-
-    _, paths = fleet
-    out = str(tmp_path / "lay")
-    convert_bags(spark, paths, out)
-    tdir = os.path.join(out, "sensor_msgs_Imu")
-    assert _all_files_have_column(tdir, "bag_index")
-    assert not os.path.isfile(os.path.join(tdir, _BAG_INDEX_MIXED_MARKER))
-
-    # simulate the mixed vintage the evolve append creates: rewrite HALF
-    # the table without the stamp and drop the marker, exactly as the
-    # converter does (localCheckpoint materializes before the source
-    # files are deleted)
-    df = spark.read.parquet(tdir).localCheckpoint(eager=True)
-    with_stamp = df.filter("seqno >= 3")
-    without = df.filter("seqno < 3").drop("bag_index")
-    import shutil
-
-    shutil.rmtree(tdir)
-    without.write.parquet(tdir)  # pre-r11 files
-    with_stamp.write.mode("append").option("mergeSchema", "true").parquet(tdir)
-    with open(os.path.join(tdir, _BAG_INDEX_MIXED_MARKER), "w"):
-        pass
-    assert not _all_files_have_column(tdir, "bag_index")
-
-    got = pertype_with_provenance(spark, out, "sensor_msgs_Imu")
-    rows = {r.seqno: (r.bag_index, r.bag) for r in got.collect()}
-    # every row — including the stripped pre-stamp ones — resolves from
-    # Messages' ordinals, none NULL
-    msgs = spark.read.parquet(os.path.join(out, "Messages"))
-    expect = {r.seqno: r.bag_index for r in msgs.collect()}
-    assert {s: bi for s, (bi, _) in rows.items()} == {
-        s: expect[s] for s in rows
-    }
-    assert all(bag is not None for _, bag in rows.values())
-
-
-def test_evolve_append_onto_stampless_table_writes_mixed_marker(
-    spark, fleet, tmp_path
-):
-    """End-to-end marker contract: evolve-appending a stamped batch into a
-    per-type table whose files PREDATE the stamp must drop the
-    `_BAG_INDEX_MIXED_MARKER`, and the provenance read must then resolve
-    EVERY row (old and new) from Messages via the seqno join — no NULLs,
-    no misread payloads."""
-    import shutil
-
-    from rosbag2parquet_spark.convert import (
-        _BAG_INDEX_MIXED_MARKER,
-        pertype_with_provenance,
-    )
-
-    _, paths = fleet
-    out = str(tmp_path / "lay")
-    convert_bags(spark, [paths[0]], out)
-    # simulate the pre-r11 vintage: strip the stamp from the per-type table
-    for t in ("sensor_msgs_Imu", "nav_msgs_Gps"):
-        tdir = os.path.join(out, t)
-        legacy = spark.read.parquet(tdir).drop("bag_index").localCheckpoint(
-            eager=True
-        )
-        shutil.rmtree(tdir)
-        legacy.write.parquet(tdir)
-
-    convert_bags(spark, [paths[1]], out, mode="append", evolve=True)
-    for t in ("sensor_msgs_Imu", "nav_msgs_Gps"):
-        assert os.path.isfile(
-            os.path.join(out, t, _BAG_INDEX_MIXED_MARKER)
-        ), t
-    got = pertype_with_provenance(spark, out, "sensor_msgs_Imu")
-    rows = {r.seqno: (r.bag_index, r.bag) for r in got.collect()}
-    msgs = spark.read.parquet(os.path.join(out, "Messages"))
-    expect = {r.seqno: r.bag_index for r in msgs.collect()}
-    assert {s: bi for s, (bi, _) in rows.items()} == {
-        s: expect[s] for s in rows
-    }
-    assert all(bag is not None for _, bag in rows.values())
 
 
 def test_pertype_bag_index_stamped_and_matches_messages(spark, fleet_out):
@@ -670,121 +580,76 @@ def test_pertype_bag_index_stamped_and_matches_messages(spark, fleet_out):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_provenance_payload_column_named_bag_index_takes_join(
+def _forge_older(table_dir: str, column: str, at: "int | None" = None) -> None:
+    """Rewrite every file of a layout table without ``column``, as a
+    converter that predates it wrote the table; with ``at``, a payload
+    column of that name sits at position ``at`` instead."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(table_dir):
+        if f.endswith(".parquet"):
+            path = os.path.join(table_dir, f)
+            t = pq.read_table(path).drop_columns([column])
+            if at is not None:
+                t = t.add_column(
+                    at, column, pa.array([900] * t.num_rows, pa.int32())
+                )
+            pq.write_table(t.replace_schema_metadata(None), path)
+
+
+@pytest.mark.parametrize(
+    "table, column",
+    [
+        ("Messages", "time"),
+        ("Messages", "bag_index"),
+        ("sensor_msgs_Imu", "bag_index"),
+    ],
+)
+def test_append_refuses_older_layout_unchanged(
+    spark, fleet, tmp_path, table, column
+):
+    """An append into a table written before one of its columns existed
+    is refused by the fingerprint guard before the job runs; every file
+    of the layout is left byte-identical."""
+    _, paths = fleet
+    out = str(tmp_path / "lay")
+    convert_bags(spark, [paths[0]], out)
+    _forge_older(os.path.join(out, table), column)
+    before = layout_files(out)
+    with pytest.raises(ValueError, match="schema mismatch"):
+        convert_bags(spark, [paths[1]], out, mode="append")
+    assert layout_files(out) == before
+
+
+def test_evolve_append_refuses_table_without_fixed_column(
     spark, fleet, tmp_path
 ):
-    """r12 (advisor medium): a pre-r11 layout whose PAYLOAD had a field
-    named bag_index (the name only became RESERVED with the r11 stamp)
-    carries that payload column among the VALUE columns — before `data` —
-    with no mixed marker. The fast path must not trust the name alone:
-    positional dispatch (stamp = after `data`) sends such tables to the
-    seqno join, which serves Messages' true ordinals, never payload
-    values."""
-    import shutil
+    """Evolve mode adds and drops VALUE columns only: a per-type table
+    without the bag_index stamp (or any fixed column) is refused, since
+    its old rows would read NULL provenance; the layout is left
+    byte-identical."""
+    _, paths = fleet
+    out = str(tmp_path / "lay")
+    convert_bags(spark, [paths[0]], out)
+    _forge_older(os.path.join(out, "sensor_msgs_Imu"), "bag_index")
+    before = layout_files(out)
+    with pytest.raises(ValueError, match=r"lacks \['bag_index'\]"):
+        convert_bags(spark, [paths[1]], out, mode="append", evolve=True)
+    assert layout_files(out) == before
 
-    from pyspark.sql import functions as F
 
+def test_provenance_refuses_a_table_without_the_stamp(spark, fleet, tmp_path):
+    """The provenance read needs the stamp after `data`: a table without
+    it, or with a payload column of that name before `data`, is
+    refused instead of read as NULL or payload ordinals."""
     from rosbag2parquet_spark.convert import pertype_with_provenance
 
     _, paths = fleet
     out = str(tmp_path / "lay")
     convert_bags(spark, paths, out)
-    tdir = os.path.join(out, "sensor_msgs_Imu")
-    # forge the pre-r11 squatter vintage: drop the trailing stamp, then
-    # insert a PAYLOAD column named bag_index among the value columns
-    # (position: right after seqno, well before data) holding garbage
-    # ordinals that a name-only fast path would serve as provenance
-    df = spark.read.parquet(tdir).drop("bag_index")
-    cols = df.columns
-    forged = df.select(
-        "seqno",
-        (F.col("seqno") + F.lit(900)).cast("int").alias("bag_index"),
-        *[c for c in cols if c != "seqno"],
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(tdir)
-    forged.write.parquet(tdir)
-
-    got = pertype_with_provenance(spark, out, "sensor_msgs_Imu")
-    rows = {r.seqno: (r.bag_index, r.bag) for r in got.collect()}
-    msgs = spark.read.parquet(os.path.join(out, "Messages"))
-    expect = {r.seqno: r.bag_index for r in msgs.collect()}
-    # true ordinals from Messages — NOT the 900+ payload garbage
-    assert {s: bi for s, (bi, _) in rows.items()} == {
-        s: expect[s] for s in rows
-    }
-    assert all(bi < 900 for bi, _ in rows.values())
-    assert all(bag is not None for _, bag in rows.values())
-
-
-def test_mixed_marker_lands_before_the_append_commits(
-    spark, fleet, tmp_path, monkeypatch
-):
-    """r12 (advisor low): the mixed marker is written BEFORE the evolve
-    append's files are published — a crash between the two fails SAFE
-    (spurious marker = join fallback, always correct) rather than leaving
-    a committed mixed table unmarked (fast path would NULL-fill pre-append
-    rows). Simulated by making the driver's publish step for that table
-    dir raise and asserting the marker is already on disk."""
-    import shutil
-
-    from rosbag2parquet_spark import layout_write
-    from rosbag2parquet_spark.convert import _BAG_INDEX_MIXED_MARKER
-
-    _, paths = fleet
-    out = str(tmp_path / "lay")
-    convert_bags(spark, [paths[0]], out)
-    tdir = os.path.join(out, "sensor_msgs_Imu")
-    legacy = spark.read.parquet(tdir).drop("bag_index").localCheckpoint(
-        eager=True
-    )
-    shutil.rmtree(tdir)
-    legacy.write.parquet(tdir)
-
-    real_publish = layout_write.publish_table
-
-    def crashing_publish(table_dir, files, overwrite):
-        if table_dir == tdir:
-            raise RuntimeError("injected crash before the append commits")
-        return real_publish(table_dir, files, overwrite)
-
-    monkeypatch.setattr(layout_write, "publish_table", crashing_publish)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        convert_bags(spark, [paths[1]], out, mode="append", evolve=True)
-    # the marker preceded the (failed) write: the table is still pure
-    # legacy on disk, and the spurious marker only forces the join path
-    assert os.path.isfile(os.path.join(tdir, _BAG_INDEX_MIXED_MARKER))
-
-
-def test_pad_append_trailing_deterministic_on_mixed_table(
-    spark, fleet, tmp_path
-):
-    """r12 (advisor low): `_pad_append_trailing` reads the existing schema
-    with mergeSchema, so on a MIXED-vintage table the projection decision
-    is deterministic — the merged schema includes the stamp, so a strict
-    append KEEPS stamping (reads stay correct via the marker either way;
-    this pins which vintage new files carry)."""
-    import shutil
-
-    from rosbag2parquet_spark.convert import (
-        _BAG_INDEX_MIXED_MARKER,
-        _pad_append_trailing,
-    )
-
-    _, paths = fleet
-    out = str(tmp_path / "lay")
-    convert_bags(spark, paths, out)
-    tdir = os.path.join(out, "sensor_msgs_Imu")
-    df = spark.read.parquet(tdir).localCheckpoint(eager=True)
-    stamped = df.filter("seqno >= 3")
-    stampless = df.filter("seqno < 3").drop("bag_index")
-    shutil.rmtree(tdir)
-    # write the STAMPLESS files first, then the stamped — a footer-order-
-    # sensitive read would sample the stampless schema here
-    stampless.write.parquet(tdir)
-    stamped.write.mode("append").option("mergeSchema", "true").parquet(tdir)
-    with open(os.path.join(tdir, _BAG_INDEX_MIXED_MARKER), "w"):
-        pass
-
-    batch = df.limit(1)
-    padded = _pad_append_trailing(spark, tdir, batch)
-    assert "bag_index" in padded.columns  # merged schema kept the stamp
+    _forge_older(os.path.join(out, "sensor_msgs_Imu"), "bag_index", at=1)
+    _forge_older(os.path.join(out, "nav_msgs_Gps"), "bag_index")
+    for table in ("sensor_msgs_Imu", "nav_msgs_Gps"):
+        with pytest.raises(ValueError, match="re-convert"):
+            pertype_with_provenance(spark, out, table)

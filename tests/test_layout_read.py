@@ -1,7 +1,7 @@
 """Layout reads planned on the driver: the footer keys every bag-convert
 file carries, the schema resolver built on them (`catalog.footer_schema`)
-against Spark's own mergeSchema inference on every layout vintage, and
-the Spark jobs the layout readers start."""
+against Spark's own mergeSchema inference, the one layout shape every
+converter writes, and the Spark jobs the layout readers start."""
 
 import json
 import os
@@ -17,21 +17,31 @@ from rosbag2parquet_spark import layout_write as lw
 from rosbag2parquet_spark.convert import (
     _SIDECAR_SCHEMAS,
     _read_existing_schema,
+    convert,
     convert_bag,
     convert_bags,
     pertype_with_provenance,
     read_layout_table,
+    resume_convert_bag,
     table_schema,
 )
 from rosbag2parquet_spark.info import layout_info
+from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
-from rosbag2parquet_spark.sources.catalog import footer_schema
+from rosbag2parquet_spark.sources.catalog import footer_schema, load_table
 from rosbag2parquet_spark.sources.container import CONN_SCHEMA
+from rosbag2parquet_spark.sources.mcap import write_mcap
 from rosbag2parquet_spark.sources.rosbag import write_rosbag
+from rosbag2parquet_spark.sources.rosbag2 import write_db3
+from tests.conftest import SF_DIR
 from tests.test_baglike import ANGVEL, FRAME, LINACC, QUAT, SEQ, STAMP, _imu_payload
 from tests.test_convert_bag import GPS_DEF, _gps_payload
 from tests.test_layout_write import _jobs_since, _last_job
+from tests.test_mcap import CONNS as MCAP_CONNS
+from tests.test_mcap import _messages as mcap_messages
 from tests.test_msgdef import IMU_DEF
+from tests.test_resume import _grow_db3, _imu_msgs
+from tests.test_rosbag2 import IMU_DEF as IMU_LITE_DEF
 
 IMU_CONN = dict(
     topic="/imu", datatype="sensor_msgs/Imu", md5sum="imu_md5", msg_def=IMU_DEF
@@ -126,6 +136,55 @@ def test_every_layout_file_carries_spark_footer_keys(spark, fleet_layout):
                 assert schema.names[-3:] == ["connection_id", "data", "bag_index"]
 
 
+def _convert_with(spark, how: str, bags, tmp_path, out: str) -> None:
+    """Write a layout to ``out`` with one of the converters."""
+    if how == "convert":
+        events = load_table(spark, SF_DIR, "events").limit(50)
+        convert(spark, events, out, order_cols=["ts", "event_id"],
+                payload_schema=PROPS_SCHEMA)
+    elif how in ("rosbag", "sbag"):
+        convert_bag(spark, bags[how == "sbag"], out)
+    elif how == "mcap":
+        p = str(tmp_path / "m.mcap")
+        write_mcap(p, MCAP_CONNS, mcap_messages(10), chunk_messages=5)
+        convert_bag(spark, p, out)
+    elif how in ("db3", "resume"):
+        p = str(tmp_path / "live.db3")
+        conn = ConnectionInfo(1, "/imu", "sensor_msgs/ImuLite", "", IMU_LITE_DEF)
+        write_db3(p, [conn], _imu_msgs(0, 10))
+        convert_bag(spark, p, out)
+        if how == "resume":
+            _grow_db3(p, _imu_msgs(10, 15))
+            assert resume_convert_bag(spark, p, out).count == 5
+    else:
+        convert_bags(spark, list(bags), out)
+
+
+@pytest.mark.parametrize(
+    "how", ["convert", "rosbag", "sbag", "mcap", "db3", "convert_bags", "resume"]
+)
+def test_every_converter_writes_the_current_layout(spark, bags, tmp_path, how):
+    """The one layout shape the readers and the append guard accept is
+    the one every converter writes: Messages has exactly
+    `MESSAGES_SCHEMA`'s columns, every per-type table carries `bag_index`
+    right after `data`, `Stats` exists, a bag layout has `Bags`, and no
+    marker file lies anywhere in the layout."""
+    out = str(tmp_path / "out")
+    _convert_with(spark, how, bags, tmp_path, out)
+    tables = _tables(out)
+    assert read_layout_table(spark, out, "Messages").columns == lw.MESSAGES_SCHEMA.names
+    assert "Stats" in tables
+    assert ("Bags" in tables) == (how != "convert")
+    side = {"Messages", "Connections", "Stats", *_SIDECAR_SCHEMAS}
+    pertype = [t for t in tables if t not in side]
+    assert pertype
+    for table in pertype:
+        cols = read_layout_table(spark, out, table).columns
+        assert cols[cols.index("data") + 1] == "bag_index", (table, cols)
+    names = {f for _d, _s, files in os.walk(out) for f in files}
+    assert "_bag_index_mixed" not in names
+
+
 def test_resolver_equals_spark_merge_on_fresh_layout(spark, fleet_layout):
     for table in _tables(fleet_layout):
         _assert_parity(spark, os.path.join(fleet_layout, table))
@@ -175,21 +234,33 @@ def test_resolver_follows_spark_listing_order(spark, tmp_path):
 
 
 def test_resolver_equals_spark_merge_on_mixed_vintage(spark, bags, tmp_path):
-    """A stamp-less per-type table evolve-appended into (the
-    `_bag_index_mixed` vintage): Spark-written old files, converter-written
-    new ones, and `bag_index` after `data` in the merged order the
-    provenance reader dispatches on."""
+    """A per-type table whose files differ because an evolve append
+    brought a definition that gained a field: the resolver equals Spark's
+    merge, `bag_index` stays after `data` in the merged order, and the
+    provenance read serves the new field beside the older rows."""
     out = str(tmp_path / "lay")
     convert_bags(spark, [bags[0]], out)
+    grown = IMU_DEF.replace(
+        "linear_acceleration_covariance\n",
+        "linear_acceleration_covariance\nuint32 extra\n", 1,
+    )
+    c = str(tmp_path / "c.sbag")
+    imu = _imu_payload(SEQ, STAMP, FRAME, QUAT, ANGVEL, LINACC)
+    write_bag(
+        c,
+        [ConnectionInfo(1, "/imu", "sensor_msgs/Imu", "imu_md5_v2", grown)],
+        [(1, 7_000, imu + struct.pack("<I", 7))],
+    )
+    convert_bags(spark, [c], out, mode="append", evolve=True)
     tdir = os.path.join(out, "sensor_msgs_Imu")
-    legacy = spark.read.parquet(tdir).drop("bag_index").localCheckpoint(eager=True)
-    shutil.rmtree(tdir)
-    legacy.write.parquet(tdir)
-    convert_bags(spark, [bags[1]], out, mode="append", evolve=True)
-    assert os.path.isfile(os.path.join(tdir, "_bag_index_mixed"))
+    assert len({tuple(pq.read_schema(f).names) for f in _data_files(tdir)}) == 2
     _assert_parity(spark, tdir)
     names = footer_schema(spark, tdir, merge=True).names
     assert names.index("bag_index") > names.index("data")
+    rows = pertype_with_provenance(spark, out, "sensor_msgs_Imu").collect()
+    assert sorted((r.seqno, r.bag, r.extra) for r in rows) == [
+        (0, "a.bag", None), (2, "a.bag", None), (3, "c.sbag", 7)
+    ]
 
 
 def test_resolver_reads_footers_without_spark_keys(spark, fleet_layout, tmp_path):
@@ -272,17 +343,14 @@ def test_provenance_plans_without_a_job(spark, fleet_layout):
 
 
 def _names_by_join(spark, layout: str, table: str):
-    """The name resolve as a broadcast left join against the side-cars'
-    distinct (bag_index, bag) pairs."""
-    from functools import reduce
-
+    """The name resolve as a broadcast left join against the Bags
+    manifest's distinct (bag_index, bag) pairs."""
     from pyspark.sql import functions as F
 
-    dims = [
-        spark.read.parquet(os.path.join(layout, t)).select("bag_index", "bag")
-        for t in ("Bags", "Metadata") if os.path.isdir(os.path.join(layout, t))
-    ]
-    dim = reduce(lambda a, b: a.unionByName(b), dims).distinct()
+    dim = (
+        spark.read.parquet(os.path.join(layout, "Bags"))
+        .select("bag_index", "bag").distinct()
+    )
     return read_layout_table(spark, layout, table).join(
         F.broadcast(dim), "bag_index", "left"
     )
@@ -311,14 +379,13 @@ def _side_car(layout: str, table: str, rows: list) -> None:
 def test_provenance_names_equal_the_left_join(spark, fleet_layout, tmp_path):
     """The literal name lookup answers what the broadcast left join did:
     the same column order, one row per name of a two-name ordinal, NULL
-    for an ordinal no side-car names — and a query over it runs 2 jobs."""
+    for an ordinal the manifest does not name — and a query over it runs 2 jobs."""
     from pyspark.sql import functions as F
 
     lay = str(tmp_path / "lay")
     shutil.copytree(fleet_layout, lay)
-    # ordinal 0 named twice (Bags and Metadata disagree), ordinal 1 unnamed
-    _side_car(lay, "Bags", [(0, "a.bag")])
-    _side_car(lay, "Metadata", [(0, "alias.bag"), (0, "a.bag")])
+    # ordinal 0 named twice, ordinal 1 unnamed
+    _side_car(lay, "Bags", [(0, "alias.bag"), (0, "a.bag"), (0, "a.bag")])
     for table in ("nav_msgs_Gps", "sensor_msgs_Imu"):
         got = pertype_with_provenance(spark, lay, table)
         want = _names_by_join(spark, lay, table)
@@ -354,7 +421,6 @@ def test_provenance_over_a_large_name_dim(spark, fleet_layout, tmp_path):
     lay = str(tmp_path / "lay")
     shutil.copytree(fleet_layout, lay)
     _side_car(lay, "Bags", [(i, f"bag{i:05d}.bag") for i in range(10_000)])
-    shutil.rmtree(os.path.join(lay, "Metadata"), ignore_errors=True)
 
     def query():
         return (

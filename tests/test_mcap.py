@@ -920,69 +920,3 @@ def test_attachments_survive_indexed_file_without_attachment_index(tmp_path):
     assert mcap_attachment_stats(path) == [("cal.yaml", "text/yaml", 4)]
 
 
-def test_provenance_names_resolve_from_metadata_without_bags(spark, tmp_path):
-    """The Metadata fallback of pertype_with_provenance stays live: a
-    pre-Bags vintage layout (simulated by deleting the manifest) still
-    resolves bag names from the Metadata side-car, and a PARTIAL manifest
-    (the pre-Bags-layout-plus-append case) unions with Metadata so older
-    bags keep their names instead of going NULL."""
-    import os
-    import shutil
-
-    from rosbag2parquet_spark.convert import (
-        convert_bags,
-        pertype_with_provenance,
-    )
-
-    p1 = str(tmp_path / "m1.mcap")
-    p2 = str(tmp_path / "m2.mcap")
-    write_mcap(p1, CONNS, _messages(10), chunk_messages=5,
-               metadata=[("recorder", {"ver": "1"})])
-    write_mcap(p2, CONNS, _messages(10), chunk_messages=5,
-               metadata=[("recorder", {"ver": "2"})])
-    out = str(tmp_path / "lay")
-    convert_bags(spark, [p1, p2], out)
-
-    want = {(0, "m1.mcap"), (1, "m2.mcap")}
-    got = pertype_with_provenance(spark, out, "geometry_msgs_PoseLite")
-    assert {(r.bag_index, r.bag) for r in got.collect()} == want
-
-    # pre-Bags vintage: no manifest at all — Metadata alone resolves
-    shutil.rmtree(os.path.join(out, "Bags"))
-    got = pertype_with_provenance(spark, out, "geometry_msgs_PoseLite")
-    assert {(r.bag_index, r.bag) for r in got.collect()} == want
-
-    # partial manifest (pre-Bags layout + one appended bag): the union
-    # keeps bag 0's Metadata name beside bag 1's manifest row
-    partial = spark.createDataFrame(
-        [(1, "m2.mcap", p2, "mcap")],
-        "bag_index int, bag string, path string, format string",
-    )
-    partial.write.parquet(os.path.join(out, "Bags"))
-    got = pertype_with_provenance(spark, out, "geometry_msgs_PoseLite")
-    assert {(r.bag_index, r.bag) for r in got.collect()} == want
-
-    # r11 stamped-column path survives a pre-r10 MESSAGES vintage: strip
-    # Messages' bag_index — the per-type stamp alone still resolves names
-    # (no join with Messages at all)
-    mpath = os.path.join(out, "Messages")
-    legacy = spark.read.parquet(mpath).drop("bag_index").collect()
-    schema = spark.read.parquet(mpath).drop("bag_index").schema
-    shutil.rmtree(mpath)
-    spark.createDataFrame(legacy, schema).write.parquet(mpath)
-    got = pertype_with_provenance(spark, out, "geometry_msgs_PoseLite")
-    assert {(r.bag_index, r.bag) for r in got.collect()} == want
-
-    # full pre-r10 vintage (neither Messages NOR the per-type table has
-    # the column — appends into such a layout project it away): the
-    # resolve degrades to NULL provenance instead of crashing
-    tpath = os.path.join(out, "geometry_msgs_PoseLite")
-    pt_legacy = spark.read.parquet(tpath).drop("bag_index").collect()
-    pt_schema = spark.read.parquet(tpath).drop("bag_index").schema
-    shutil.rmtree(tpath)
-    spark.createDataFrame(pt_legacy, pt_schema).write.parquet(tpath)
-    got = pertype_with_provenance(spark, out, "geometry_msgs_PoseLite")
-    rows = got.collect()
-    assert rows and all(
-        r.bag_index is None and r.bag is None for r in rows
-    )
