@@ -230,7 +230,9 @@ def convert(
     md5sum identity check, FlattenedRosWriter.cpp:287). ``compression``:
     the reference hardcodes SNAPPY (MessageTable.cpp:324); ``zstd`` trades
     ~15-25% more CPU for markedly smaller files — usually the right call
-    when the output is read many times at 100 TB."""
+    when the output is read many times at 100 TB. Spark writes every
+    table into a staging dir and one `layout_write.publish` promotes
+    them, so a convert that fails part-way leaves the layout as it was."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     _check_compression(compression)
@@ -241,6 +243,7 @@ def convert(
     # Pass order_cols ending in a unique column for a well-defined total order.
     from rosbag2parquet_spark.operators.keys import assign_seqno
 
+    lw.repair(out_dir)  # an interrupted publish is settled before any read
     msg_path = os.path.join(out_dir, "Messages")
     conn_path = os.path.join(out_dir, "Connections")
 
@@ -430,11 +433,15 @@ def convert(
         "maxRecordsPerFile": str(_MAX_RECORDS_PER_FILE),
         "compression": compression,
     }
-    messages.write.options(**writer_opts).mode(mode).parquet(msg_path)
-    # append writes only the genuinely-new dim rows (existing ids kept)
-    connections.write.options(**writer_opts).mode(mode).parquet(conn_path)
-    stats.write.options(**writer_opts).mode(mode).parquet(stats_path)
-    (
+    # every table is written into staging, then published at once: a
+    # write that fails part-way leaves the layout as it was
+    created = not os.path.isdir(out_dir)
+    staging = lw.make_staging(out_dir)
+    writers = {
+        "Messages": messages.write,
+        # append writes only the genuinely-new dim rows (existing ids kept)
+        "Connections": connections.write,
+        "Stats": stats.write,
         # sortWithinPartitions, NOT repartition(datatype): hashing on the
         # type key alone collapses each type onto ONE reducer (a bag is
         # usually dominated by one blob-heavy type — reference README.md:89)
@@ -442,12 +449,26 @@ def convert(
         # partitions keeps the write fully parallel, zero-shuffle, and the
         # committer still emits one file per (task, type) under each
         # partition directory.
-        pertype.sortWithinPartitions("datatype")
-        .write.options(**writer_opts)
-        .mode(mode)
-        .partitionBy("datatype")
-        .parquet(pertype_path)
-    )
+        "pertype": pertype.sortWithinPartitions("datatype")
+        .write.partitionBy("datatype"),
+    }
+    try:
+        for table, w in writers.items():
+            w.options(**writer_opts).parquet(os.path.join(staging, table))
+        commits = [
+            {"table": table, "path": os.path.relpath(os.path.join(d, f), staging)}
+            for table in writers
+            for d, _dirs, files in os.walk(os.path.join(staging, table))
+            for f in sorted(files)
+            if f.endswith(".parquet")
+        ]
+        _publish(out_dir, staging, commits, mode)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        if created and not os.listdir(out_dir):
+            os.rmdir(out_dir)
+        seq.unpersist()
+        raise
 
     # ---- DDL script (reference S17: vertica_load_tables.sql, utils.h:99-136)
     tables = {
@@ -650,6 +671,15 @@ def scan_partitions(spark: SparkSession, nbytes: int) -> int:
 INGEST_STATE = "_ingest_state.json"
 
 
+def _publish(out_dir: str, staging: str, commits: list, mode: str) -> None:
+    """`layout_write.publish` for a convert. An overwrite first removes the
+    resume state: the cursor describes the layout being replaced, and only
+    a complete `convert_bag` writes a fresh one, after the publish."""
+    if mode == "overwrite" and os.path.exists(os.path.join(out_dir, INGEST_STATE)):
+        os.remove(os.path.join(out_dir, INGEST_STATE))
+    lw.publish(out_dir, staging, commits, overwrite=mode == "overwrite")
+
+
 def _write_ingest_state(out_dir: str, state: dict) -> None:
     """Publish the resume state atomically: the format, the batch modes and
     count, and the grammar's cursor (`container.ingest_cursor`)."""
@@ -705,6 +735,7 @@ def resume_convert_bag(
 
     The reference has no incremental story (rosbag2parquet.cpp converts
     whole files); this is the operational upgrade a 100 TB fleet needs."""
+    lw.repair(out_dir)  # an interrupted publish is settled before any read
     state_path = os.path.join(out_dir, INGEST_STATE)
     if not os.path.isfile(state_path):
         raise ValueError(
@@ -1253,7 +1284,7 @@ def _write_bag_tables(
         for t in [*schemas, *small]:
             rank.setdefault(t, len(rank))
         commits.sort(key=lambda r: (rank[r["table"]], r["path"] or ""))
-        lw.publish(out_dir, staging, commits, overwrite=mode == "overwrite")
+        _publish(out_dir, staging, commits, mode)
     except BaseException:
         # publish removes staging itself; a convert that failed earlier
         # leaves nothing behind, not even the out_dir it created
@@ -1379,6 +1410,7 @@ def convert_bags(
     paths = resolve_bag_paths(bags)  # raises on an empty resolution
     for p in paths:
         _validate_convert_paths(p, out_dir)
+    lw.repair(out_dir)  # an interrupted publish is settled before any read
     # one container open per bag (the reference's View construction is
     # per-bag too, rosbag2parquet.cpp:44-47), concurrent across files — I/O
     # bound; the dim, the scan and the side-cars below all use these

@@ -19,6 +19,13 @@ The driver then writes the small tables from rows it already holds
 staging are never listed, and staging is removed whatever happens. A
 convert that fails before the publish leaves the layout as it was.
 
+:func:`publish_table` is the one commit point of every in-place layout
+write (the bag converters, ``convert()``, ``sinks.delete_where``, the
+streaming compaction service): each stages under ``_staging-<uuid>/``
+and promotes through it. :func:`repair` settles what a crash interrupted;
+it runs before each write stages (:func:`make_staging`), before a convert
+reads the layout it appends to, and inside ``sinks.vacuum_layout``.
+
 Files look like Spark's: each footer carries the Spark schema and version
 keys (:data:`SPARK_SCHEMA_KEY`, :data:`SPARK_VERSION_KEY`), so
 ``spark.read.parquet`` sees the same logical types, reads INT96 as a file
@@ -473,10 +480,18 @@ def stats_rows(commits: list) -> list:
     return [(c, *v) for c, v in sorted(merged.items())]
 
 
+_STAGING = "_staging-"
+#: an overwritten table's old copy during the swap: a sibling named after
+#: the table, dot-hidden (an ``_`` prefix does not hide a hive ``a=1``)
+_ASIDE = ".old-"
+
+
 def make_staging(out_dir: str) -> str:
     """A fresh staging dir under ``out_dir`` (underscore-prefixed, so
-    parquet listings of the layout ignore it)."""
-    path = os.path.join(os.path.abspath(out_dir), f"_staging-{uuid.uuid4().hex}")
+    parquet listings of the layout ignore it), made after `repair` has
+    settled what an interrupted earlier write left there."""
+    repair(out_dir)
+    path = os.path.join(os.path.abspath(out_dir), f"{_STAGING}{uuid.uuid4().hex}")
     os.makedirs(path)
     return path
 
@@ -500,28 +515,94 @@ def write_rows(
     }
 
 
-def publish_table(table_dir: str, files: list, overwrite: bool) -> None:
-    """Move one table's staged ``files`` into ``table_dir``: appended
-    beside the files already there, or (``overwrite``) swapped in as the
-    whole table."""
+def aside_dir(table_dir: str) -> str:
+    """Where an overwrite swap parks ``table_dir``'s old copy."""
+    parent, name = os.path.split(os.path.normpath(table_dir))
+    return os.path.join(parent, _ASIDE + name)
+
+
+def repair(out_dir: str, dry_run: bool = False) -> "list[str]":
+    """Settle what an interrupted publish left among ``out_dir``'s entries:
+    a swap that stopped after its rename-in keeps the new table and drops
+    the aside copy, one that stopped before it renames the copy back; every
+    ``_staging-*`` dir is dropped. Returns ``repair:<table dir>`` per swap
+    and each staging dir's path; ``dry_run`` only lists them."""
+    acted: "list[str]" = []
+    for name in sorted(os.listdir(out_dir)) if os.path.isdir(out_dir) else []:
+        path = os.path.join(out_dir, name)
+        if name.startswith(_ASIDE) and os.path.isdir(path):
+            live = os.path.join(out_dir, name[len(_ASIDE):])
+            acted.append("repair:" + live)
+            if not dry_run and os.path.isdir(live):
+                shutil.rmtree(path)
+            elif not dry_run:
+                os.rename(path, live)
+        elif name.startswith(_STAGING) and os.path.isdir(path):
+            acted.append(path)
+            if not dry_run:
+                shutil.rmtree(path)
+    return acted
+
+
+def _move(src: str, dst: str, files: list) -> None:
+    """Rename each of ``files`` (relative paths) from under ``src`` to the
+    same path under ``dst``, over a file already there."""
+    for rel in files:
+        target = os.path.join(dst, rel)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        os.replace(os.path.join(src, rel), target)
+
+
+def publish_table(
+    table_dir: str,
+    staged: str,
+    files: list,
+    *,
+    overwrite: bool,
+    remove: list = (),
+) -> None:
+    """Promote one table's staged files, the layout's one commit point:
+    each of ``files`` (paths relative to ``staged``; subdirectories such as
+    hive partition dirs are kept) moves to the same path under
+    ``table_dir``, over a file already there, and each of ``remove``
+    (paths relative to ``table_dir``) is deleted. A replaced or removed
+    file's Hadoop ``.{name}.crc`` sidecar goes first: it would describe
+    old bytes and fail every later Spark read of the file.
+
+    ``overwrite`` makes ``files`` the whole table instead, swapped in
+    crash-safely: the new table is assembled inside ``staged``, the old
+    one renamed aside (`aside_dir`), the new one renamed in, then the old
+    one dropped. `repair` settles a crash at any point to all-old (before
+    the rename-in) or all-new (after it); the table is never lost."""
     if overwrite:
-        # built beside the table under an underscore name (ignored by
-        # parquet listings), then swapped in
-        fresh = os.path.join(
-            os.path.dirname(table_dir), f"_swap-{uuid.uuid4().hex}"
-        )
-        os.makedirs(fresh)
-        for f in files:
-            os.rename(f, os.path.join(fresh, os.path.basename(f)))
+        old, fresh = aside_dir(table_dir), os.path.join(staged, "_publish")
+        _move(staged, fresh, files)
         open(os.path.join(fresh, "_SUCCESS"), "w").close()
         if os.path.isdir(table_dir):
-            shutil.rmtree(table_dir)
+            os.rename(table_dir, old)
         os.rename(fresh, table_dir)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
         return
-    os.makedirs(table_dir, exist_ok=True)
-    for f in files:
-        os.rename(f, os.path.join(table_dir, os.path.basename(f)))
+    for rel in [*files, *remove]:
+        head, name = os.path.split(os.path.join(table_dir, rel))
+        if os.path.exists(os.path.join(head, f".{name}.crc")):
+            os.remove(os.path.join(head, f".{name}.crc"))
+    _move(staged, table_dir, files)
+    for rel in remove:
+        os.remove(os.path.join(table_dir, rel))
     open(os.path.join(table_dir, "_SUCCESS"), "w").close()
+
+
+def _is_table(path: str) -> bool:
+    """A layout table dir: not hidden, with a Parquet file under it."""
+    if os.path.basename(path).startswith(("_", ".")) or not os.path.isdir(path):
+        return False
+    for _root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
 
 
 def publish(
@@ -532,16 +613,29 @@ def publish(
     overwrite: bool,
 ) -> None:
     """Publish exactly the committed files of every table (in commit-list
-    table order) and remove ``staging``."""
+    table order) through `publish_table` and remove ``staging``. Each
+    commit row's ``path`` is relative to ``staging`` and starts with its
+    ``table`` dir. An ``overwrite`` leaves the layout exactly these
+    tables: every other table dir of ``out_dir`` (`_is_table`; underscore
+    dirs such as ``_snapshots`` are not tables) leaves it by one rename
+    into ``staging`` and goes with it."""
     try:
         by_table: dict = {}
         for r in commits:
             if r["path"] is not None:
                 by_table.setdefault(r["table"], []).append(
-                    os.path.join(staging, r["path"])
+                    os.path.relpath(r["path"], r["table"])
                 )
         for table, files in by_table.items():
-            publish_table(os.path.join(out_dir, table), files, overwrite)
+            publish_table(
+                os.path.join(out_dir, table), os.path.join(staging, table),
+                files, overwrite=overwrite,
+            )
+        if overwrite:
+            for name in sorted(os.listdir(out_dir)):
+                path = os.path.join(out_dir, name)
+                if name not in by_table and _is_table(path):
+                    os.rename(path, os.path.join(staging, f"_stale-{name}"))
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 

@@ -36,7 +36,7 @@ conns AS (
 #: the /tmp scratch below persists ACROSS processes, and a stale
 #: pre-change layout under the old key would feed the driver's sink gate
 #: a wrong schema
-LAYOUT_CACHE_VERSION = 6  # files written by the one-job pyarrow layout write
+LAYOUT_CACHE_VERSION = 6  # the layouts cached here are convert() outputs
 
 
 def _cached_layout(sf_dir: str, suffix: str, build) -> str:
@@ -679,13 +679,6 @@ def compact_partitioned(
     )
 
 
-#: hidden-file suffix for delete_where replacement files — dot-prefixed so
-#: a reader that lists the directory mid-rewrite never sees them (Spark
-#: skips names starting with '.' or '_')
-_DEL_NEW_PREFIX = "."
-_DEL_NEW_SUFFIX = ".delnew"
-
-
 def delete_where(spark: SparkSession, path: str, predicate) -> dict:
     """Copy-on-write row DELETE over a plain parquet layout — the
     GDPR/TTL primitive (Delta/Iceberg ``DELETE WHERE`` semantics without
@@ -698,154 +691,135 @@ def delete_where(spark: SparkSession, path: str, predicate) -> dict:
        ``_metadata.file_path`` — the predicate pushes to the parquet reader,
        so row-group statistics prune most files without reading data.
     2. **Rewrite** the survivors of each affected file in ONE distributed
-       job: rows group by source file (``applyInPandas`` keyed on the file
-       path, one task per affected file) and each task writes its
-       replacement beside the original as a HIDDEN dot-file via pyarrow,
+       job: rows group by source file (one task per affected file) and
+       each task writes its replacement via pyarrow into the table's
+       ``_staging-<uuid>/`` dir at the original's relative path,
        preserving the file's physical schema (hive partition columns live
        in directory names, not the file — they are re-derived on read).
-    3. **Swap** driver-side: ``os.replace`` promotes each hidden
-       replacement over its original — atomic PER FILE on POSIX — and
-       originals whose rows ALL matched are removed outright.
+    3. **Publish** through `layout_write.publish_table`, the layout's one
+       commit point: each replacement is renamed over its original —
+       atomic PER FILE on POSIX — and originals whose rows ALL matched
+       are removed.
 
-    Crash story (documented, same posture as the compaction swap): a
-    crash in step 2 leaves only hidden files readers never see (a
-    re-run sweeps stale ``.{name}.delnew`` leftovers first); a crash
-    mid-step-3 leaves the delete applied to a prefix of the affected
-    files — re-running the same delete completes it (matching rows are
-    rediscovered only in the not-yet-swapped files). No transient state
+    Crash story (the layout's one write protocol, `layout_write`): a
+    crash in steps 1-2 leaves only the staging dir, which readers never
+    list and the next write or `vacuum_layout` drops; a crash mid-step-3
+    leaves the delete applied to a prefix of the affected files —
+    re-running the same delete completes it (matching rows are
+    rediscovered only in the not-yet-published files). No transient state
     ever shows duplicate or partially-deleted FILES to a reader.
 
     Works on flat and hive-partitioned layouts (``basePath`` keeps
     partition columns readable for the predicate). Returns
     ``{"files_matched", "files_rewritten", "files_removed",
     "rows_deleted"}``."""
-    import glob as _glob
+    import shutil
     from urllib.parse import unquote, urlparse
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # sweep stale hidden replacements from a previous crashed run
-    for stale in _glob.glob(
-        os.path.join(path, "**", f"{_DEL_NEW_PREFIX}*{_DEL_NEW_SUFFIX}"),
-        recursive=True,
-    ):
-        os.remove(stale)
+    from rosbag2parquet_spark import layout_write as lw
 
-    df = spark.read.option("basePath", path).parquet(path)
-    hit = (
-        df.select("*", F.col("_metadata.file_path").alias("__src"))
-        .filter(predicate)
-        .groupBy("__src")
-        .agg(F.count(F.lit(1)).alias("__matches"))
-        .collect()
-    )
-    files = {
-        # bracket access: Row.__getattr__ refuses __-prefixed names
-        unquote(urlparse(r["__src"]).path): int(r["__matches"]) for r in hit
-    }
-    if not files:
-        return {
-            "files_matched": 0, "files_rewritten": 0,
-            "files_removed": 0, "rows_deleted": 0,
+    root = os.path.abspath(path)
+    staging = lw.make_staging(root)
+    try:
+        df = spark.read.option("basePath", root).parquet(root)
+        hit = (
+            df.select("*", F.col("_metadata.file_path").alias("__src"))
+            .filter(predicate)
+            .groupBy("__src")
+            .agg(F.count(F.lit(1)).alias("__matches"))
+            .collect()
+        )
+        files = {
+            # bracket access: Row.__getattr__ refuses __-prefixed names
+            unquote(urlparse(r["__src"]).path): int(r["__matches"])
+            for r in hit
         }
-    rows_deleted = sum(files.values())
+        if not files:
+            return {
+                "files_matched": 0, "files_rewritten": 0,
+                "files_removed": 0, "rows_deleted": 0,
+            }
 
-    # one shuffle keyed on the source file: afterwards a file's surviving
-    # rows live in exactly ONE task (a parquet scan partition can SPLIT a
-    # large file across tasks — two tasks writing one replacement would
-    # each write a partial file), and each task accumulates its files
-    # across Arrow batches before writing. The rewrite stays Arrow
-    # END-TO-END (mapInArrow, never pandas): a pandas hop would degrade
-    # nullable ints to float64 and timestamps to ns — the replacement
-    # must carry the file's EXACT physical types
-    kept = (
-        spark.read.option("basePath", path)
-        .parquet(*sorted(files))
-        .select("*", F.col("_metadata.file_path").alias("__src"))
-        .filter(~predicate)
-        .repartition(len(files), "__src")
-    )
+        # one shuffle keyed on the source file: afterwards a file's
+        # surviving rows live in exactly ONE task (a parquet scan
+        # partition can SPLIT a large file across tasks — two tasks
+        # writing one replacement would each write a partial file), and
+        # each task accumulates its files across Arrow batches before
+        # writing. The rewrite stays Arrow END-TO-END (mapInArrow, never
+        # pandas): a pandas hop would degrade nullable ints to float64 and
+        # timestamps to ns — the replacement must carry the file's EXACT
+        # physical types
+        kept = (
+            spark.read.option("basePath", root)
+            .parquet(*sorted(files))
+            .select("*", F.col("_metadata.file_path").alias("__src"))
+            .filter(~predicate)
+            .repartition(len(files), "__src")
+        )
 
-    def write_replacements(batches):
-        import pyarrow.compute as pc
+        def write_replacements(batches):
+            import pyarrow.compute as pc
 
-        from collections import defaultdict
+            from collections import defaultdict
 
-        buf: dict = defaultdict(list)
-        for batch in batches:
-            t = pa.Table.from_batches([batch])
-            for src_uri in pc.unique(t.column("__src")).to_pylist():
-                buf[src_uri].append(
-                    t.filter(pc.equal(t.column("__src"), src_uri))
+            buf: dict = defaultdict(list)
+            for batch in batches:
+                t = pa.Table.from_batches([batch])
+                for src_uri in pc.unique(t.column("__src")).to_pylist():
+                    buf[src_uri].append(
+                        t.filter(pc.equal(t.column("__src"), src_uri))
+                    )
+            out_src = []
+            for src_uri, parts in buf.items():
+                src = unquote(urlparse(src_uri).path)
+                rows = pa.concat_tables(parts)
+                # the physical file schema (hive partition columns are NOT
+                # in the file — they re-derive from the directory name)
+                phys = pq.read_schema(src)
+                # Spark's default parquet timestamps are INT96 (pyarrow
+                # maps them to timestamp[ns]); writing them back as INT64
+                # TIMESTAMP(NANOS) would make Spark's vectorized reader
+                # refuse the replacement — mirror the source's INT96 choice
+                src_md = pq.read_metadata(src).schema
+                int96 = any(
+                    src_md.column(i).physical_type == "INT96"
+                    for i in range(len(src_md))
                 )
-        out_src, out_kept = [], []
-        for src_uri, parts in buf.items():
-            src = unquote(urlparse(src_uri).path)
-            rows = pa.concat_tables(parts)
-            # the physical file schema (hive partition columns are NOT in
-            # the file — they re-derive from the directory name on read)
-            phys = pq.read_schema(src)
-            # Spark's default parquet timestamps are INT96 (pyarrow maps
-            # them to timestamp[ns]); writing them back as INT64
-            # TIMESTAMP(NANOS) would make Spark's vectorized reader
-            # refuse the replacement — mirror the source's INT96 choice
-            src_md = pq.read_metadata(src).schema
-            int96 = any(
-                src_md.column(i).physical_type == "INT96"
-                for i in range(len(src_md))
-            )
-            tmp = os.path.join(
-                os.path.dirname(src),
-                f"{_DEL_NEW_PREFIX}{os.path.basename(src)}{_DEL_NEW_SUFFIX}",
-            )
-            pq.write_table(
-                rows.select(phys.names).cast(phys), tmp,
-                compression="snappy",
-                use_deprecated_int96_timestamps=int96,
-            )
-            out_src.append(src)
-            out_kept.append(len(rows))
-        if out_src:
-            yield pa.record_batch(
-                [pa.array(out_src, pa.string()),
-                 pa.array(out_kept, pa.int64())],
-                names=["src", "kept"],
-            )
+                staged = os.path.join(staging, os.path.relpath(src, root))
+                os.makedirs(os.path.dirname(staged), exist_ok=True)
+                pq.write_table(
+                    rows.select(phys.names).cast(phys), staged,
+                    compression="snappy",
+                    use_deprecated_int96_timestamps=int96,
+                )
+                out_src.append(src)
+            if out_src:
+                yield pa.record_batch(
+                    [pa.array(out_src, pa.string())], names=["src"]
+                )
 
-    wrote = {
-        r.src: r.kept
-        for r in kept.mapInArrow(
-            write_replacements, schema="src string, kept long"
-        ).collect()
-    }
-
-    rewritten = removed = 0
-    for src in sorted(files):
-        tmp = os.path.join(
-            os.path.dirname(src),
-            f"{_DEL_NEW_PREFIX}{os.path.basename(src)}{_DEL_NEW_SUFFIX}",
+        wrote = {
+            r.src
+            for r in kept.mapInArrow(
+                write_replacements, schema="src string"
+            ).collect()
+        }
+        # a file with no replacement had every row matched: it is removed
+        rel = {src: os.path.relpath(src, root) for src in files}
+        lw.publish_table(
+            root, staging, sorted(rel[s] for s in wrote), overwrite=False,
+            remove=sorted(rel[s] for s in files if s not in wrote),
         )
-        # Hadoop's LocalFileSystem keeps a `.{name}.crc` sidecar; after the
-        # swap it describes the OLD bytes and every re-read would fail with
-        # ChecksumException — drop it with the original
-        crc = os.path.join(
-            os.path.dirname(src), f".{os.path.basename(src)}.crc"
-        )
-        if os.path.exists(crc):
-            os.remove(crc)
-        if src in wrote:
-            os.replace(tmp, src)  # atomic per file
-            rewritten += 1
-        else:
-            # every row of this file matched: no replacement was written
-            os.remove(src)
-            removed += 1
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
     return {
         "files_matched": len(files),
-        "files_rewritten": rewritten,
-        "files_removed": removed,
-        "rows_deleted": rows_deleted,
+        "files_rewritten": len(wrote),
+        "files_removed": len(files) - len(wrote),
+        "rows_deleted": sum(files.values()),
     }
 
 
@@ -889,87 +863,49 @@ FROM events WHERE NOT (user_id % 7 = 3)
 
 
 def vacuum_layout(path: str, dry_run: bool = False) -> "list[str]":
-    """VACUUM for a plain-parquet layout — GC of the crash artifacts every
-    writer in this engine can leave behind, without a table format's
-    manifest to diff against. Exactly four KNOWN artifact classes are
-    handled; unknown files are NEVER touched (a half-written visible data
-    file is indistinguishable from a valid one by name — only owners that
-    write hidden-then-promote can be vacuumed safely, and all our writers
-    do):
+    """VACUUM for a plain-parquet layout — GC of what an interrupted write
+    left behind, without a table format's manifest to diff against.
+    Every in-place writer of this package stages under ``_staging-<uuid>/``
+    and promotes through `layout_write.publish_table`, so
+    `layout_write.repair` runs in every directory: leftover staging dirs
+    are removed, and an interrupted overwrite swap is finished or rolled
+    back — REPAIRED, never just deleted, since its aside copy may be the
+    only live one. Beside those, Spark's own writers leave two classes:
 
-    - Spark ``_temporary/`` job scratch (a killed write job's staging)
+    - ``_temporary/`` job scratch (a killed write job's staging)
     - orphan Hadoop ``.{name}.crc`` sidecars whose data file is gone
       (a swapped/removed file's stale checksum would fail later reads)
-    - stale ``.{name}.delnew`` hidden replacements (a ``delete_where``
-      run that crashed before promote; its own re-run also sweeps these)
-    - interrupted ``.__compact_tmp``/``.__compact_old`` partition swaps —
-      these are REPAIRED (finished or rolled back via the compaction
-      service's crash-window logic), never just deleted: one of the two
-      dirs may be the only live copy of the partition.
 
-    Driver-side listing, same posture as the compaction sizers (metadata
-    walk, no data read; on an object store this is the LIST call a
-    manifest-less layout pays anyway). Not safe concurrently with an
-    active writer on the same layout — the standard VACUUM caveat.
-    Returns the removed (or, with ``dry_run``, would-be-removed) paths;
-    repaired swaps are listed once per swap as ``repair:<live root>``
-    (a crash can leave BOTH the tmp and old dir for one partition —
-    still one repair)."""
+    Unknown files are NEVER touched (a half-written visible data file is
+    indistinguishable from a valid one by name). Driver-side listing, same
+    posture as the compaction sizers (metadata walk, no data read). Not
+    safe concurrently with an active writer on the same layout — the
+    standard VACUUM caveat. Returns the removed (or, with ``dry_run``,
+    would-be-removed) paths; a repaired swap is listed as
+    ``repair:<table dir>``."""
     import shutil
 
-    from rosbag2parquet_spark.streaming.compaction_service import (
-        _OLD_SUFFIX,
-        _TMP_SUFFIX,
-        _repair_interrupted_swaps,
-    )
+    from rosbag2parquet_spark import layout_write as lw
 
     acted: "list[str]" = []
-    # one repair entry per SWAP (keyed by the live partition root): an
-    # interrupted swap can leave both .__compact_tmp and .__compact_old
-    # for one partition — that is ONE repair, not two
-    swap_roots: "set[str]" = set()
+    # hidden dirs (staging, swap asides, _snapshots, ...) hold no table
+    # files: repairs first, so the sweep below sees the settled tree
+    for root, dirs, _files in os.walk(path):
+        acted += lw.repair(root, dry_run)
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
     for root, dirs, files in os.walk(path):
-        for d in dirs:
-            for suf in (_TMP_SUFFIX, _OLD_SUFFIX):
-                if d.endswith(suf):
-                    live = os.path.join(root, d[: -len(suf)])
-                    if live not in swap_roots:
-                        swap_roots.add(live)
-                        acted.append("repair:" + live)
-    if swap_roots and not dry_run:
-        _repair_interrupted_swaps(path)
-
-    for root, dirs, files in os.walk(path, topdown=True):
-        for d in list(dirs):
-            if d == "_temporary":
-                p = os.path.join(root, d)
-                acted.append(p)
-                if not dry_run:
-                    shutil.rmtree(p)
-                dirs.remove(d)
-        crc_candidates: "list[str]" = []
+        if "_temporary" in dirs:
+            p = os.path.join(root, "_temporary")
+            acted.append(p)
+            if not dry_run:
+                shutil.rmtree(p)
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in files:
             p = os.path.join(root, f)
-            if f.startswith(_DEL_NEW_PREFIX) and f.endswith(_DEL_NEW_SUFFIX):
-                acted.append(p)
-                if not dry_run:
-                    os.remove(p)
-            elif f.startswith(".") and f.endswith(".crc"):
-                crc_candidates.append(f)
-        # .crc orphan check AFTER this directory's .delnew removals: a
-        # sidecar of a .delnew removed above must go in the SAME pass,
-        # not survive to a second vacuum run
-        for f in crc_candidates:
-            base = f[1:-4]
-            orphan = not os.path.exists(os.path.join(root, base))
-            if dry_run and not orphan:
-                # removals were only listed, not performed — a sidecar of
-                # a would-be-removed .delnew still reports as removable
-                orphan = base.startswith(_DEL_NEW_PREFIX) and base.endswith(
-                    _DEL_NEW_SUFFIX
-                )
-            if orphan:
-                p = os.path.join(root, f)
+            if (
+                f.startswith(".") and f.endswith(".crc")
+                and not os.path.exists(os.path.join(root, f[1:-4]))
+            ):
                 acted.append(p)
                 if not dry_run:
                     os.remove(p)
@@ -978,12 +914,12 @@ def vacuum_layout(path: str, dry_run: bool = False) -> "list[str]":
 
 def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VACUUM as a declared query: events land as a hive layout, all three
-    removable artifact classes are planted (a ``_temporary`` staging dir,
-    an orphan ``.crc`` sidecar, a stale ``.delnew`` replacement), and the
-    layout is vacuumed and read back. The oracle is the plain select —
-    VACUUM must be content-invisible; that the artifacts are actually
-    removed (and interrupted swaps repaired, not deleted) is pinned in
-    tests/test_delete.py."""
+    removable artifact classes are planted (a Spark ``_temporary`` dir,
+    an orphan ``.crc`` sidecar, a leftover ``_staging-*`` dir of an
+    interrupted write), and the layout is vacuumed and read back. The
+    oracle is the plain select — VACUUM must be content-invisible; that
+    the artifacts are actually removed (and interrupted swaps repaired,
+    not deleted) is pinned in tests/test_delete.py."""
     import shutil
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1002,9 +938,8 @@ def q_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write("x")
         with open(os.path.join(lay, ".ghost.parquet.crc"), "w") as f:
             f.write("x")
-        with open(
-            os.path.join(lay, f".part-0{_DEL_NEW_SUFFIX}"), "w"
-        ) as f:
+        os.makedirs(os.path.join(lay, "_staging-0"))
+        with open(os.path.join(lay, "_staging-0", "part-0.parquet"), "w") as f:
             f.write("x")
         n = len(vacuum_layout(lay))
         if n < 3:

@@ -72,10 +72,10 @@ def snapshot_versions(layout: str) -> "list[int]":
 
 def _data_files(layout: str) -> "list[dict]":
     """The CURRENT visible data file set: every non-hidden file outside
-    underscore directories (``_snapshots`` itself, Spark ``_temporary``
-    staging) and not itself underscore/hidden (``_SUCCESS`` markers,
-    ``.crc`` sidecars, in-flight ``.delnew`` replacements are metadata,
-    not table content)."""
+    hidden or underscore directories (``_snapshots`` itself, Spark
+    ``_temporary`` and the layout writers' ``_staging-*`` dirs, a swap's
+    ``.old-*`` copy) and not itself underscore/hidden (``_SUCCESS``
+    markers and ``.crc`` sidecars are metadata, not table content)."""
     files = []
     for root, dirs, fs in os.walk(layout):
         dirs[:] = sorted(

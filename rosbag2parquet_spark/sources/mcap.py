@@ -763,7 +763,8 @@ def mcap_attachment_stats(path: str) -> "list[tuple[str, str, int]]":
     """(name, media_type, data_size) per attachment WITHOUT reading any
     payload bytes when the file is indexed — the AttachmentIndex record
     already carries data_size, so listing a bag with hundreds of MB of
-    side-cars costs a few bytes per attachment (`info` uses this)."""
+    side-cars costs a few bytes per attachment (`sidecar_rows` with
+    ``payloads=False``, which `info.print_info` lists)."""
     size = os.path.getsize(path)
     out: list[tuple[str, str, int]] = []
     with open(path, "rb") as f:

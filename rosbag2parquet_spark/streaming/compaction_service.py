@@ -15,13 +15,17 @@ the trigger cadence, NOT by table size, so a per-partition rewrite here
 is the right (and cheap) shape. Each rewrite is one column-pruned read +
 one coalesced write of one partition directory.
 
-The swap (write to ``.__compact_tmp``, two renames) is not transactional —
-a reader racing the swap can see the partition twice or missing, and a
-crash between the renames leaves a ``.__compact_old`` / ``.__compact_tmp``
-leftover that the NEXT service pass repairs (finish the swap if the new
-dir is complete, else roll back); a table format (Delta/Iceberg) makes
-this atomic via its commit log. This is the plain-parquet-directory
-version, and the service is the single writer by construction
+Each rewrite stages the partition's new files under the table's
+``_staging-<uuid>/`` and swaps them in through
+`layout_write.publish_table`, the one commit point of every in-place
+layout write: the old partition is renamed aside, the new one renamed in,
+then the old one dropped. A crash at any point leaves a state
+`layout_write.repair` settles on the next service pass (or
+`sinks.vacuum_layout`): a swap stopped before the rename-in is rolled
+back, one stopped after it keeps the new files, so a partition is never
+lost. A reader racing the swap can still miss the partition between the
+two renames; a table format (Delta/Iceberg) closes that window with its
+commit log. The service is the single writer by construction
 (foreachBatch triggers run serially).
 """
 
@@ -31,6 +35,8 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame
+
+from rosbag2parquet_spark import layout_write as lw
 
 
 def compact_fragmented_partitions(
@@ -45,14 +51,11 @@ def compact_fragmented_partitions(
     ceil(bytes / target) files (1 when no target). Returns the rewritten
     partition-relative paths. Pure directory listing finds the work — no
     data is read for partitions under the threshold."""
-    _repair_interrupted_swaps(out_dir)
-    rewritten: list[str] = []
+    todo: list = []
     for root, dirs, files in os.walk(out_dir):
-        base = os.path.basename(root)
-        if base.endswith((_TMP_SUFFIX, _OLD_SUFFIX)):
-            dirs[:] = []  # never treat swap scratch as a partition
-            continue
-        if "=" not in base:
+        lw.repair(root)
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if "=" not in os.path.basename(root):
             continue
         parquet = [f for f in files if f.endswith(".parquet")]
         if len(parquet) <= max_files_per_partition:
@@ -67,66 +70,20 @@ def compact_fragmented_partitions(
             # not be rewritten to the same k on every trigger; the no-op
             # threshold is max(max_files_per_partition, k)
             continue
-        tmp = root + _TMP_SUFFIX
-        old = root + _OLD_SUFFIX
-        (
-            spark.read.parquet(root)
-            .repartition(k)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        # two renames instead of rmtree-then-rename: a crash at any point
-        # leaves a repairable state (_repair_interrupted_swaps), never a
-        # missing partition that needs manual surgery
-        os.rename(root, old)
-        os.rename(tmp, root)
-        shutil.rmtree(old)
-        rewritten.append(os.path.relpath(root, out_dir))
-        dirs[:] = []  # don't descend into the dir we just swapped
-    return rewritten
-
-
-_TMP_SUFFIX = ".__compact_tmp"
-_OLD_SUFFIX = ".__compact_old"
-
-
-def _repair_interrupted_swaps(out_dir: str) -> None:
-    """Finish or roll back a swap a previous process died inside: the tmp
-    dir is complete iff Spark's _SUCCESS marker landed; the live partition
-    is whichever of (root, old) still exists."""
-    for root_dir, dirs, _files in os.walk(out_dir):
-        for d in list(dirs):
-            if not d.endswith(_TMP_SUFFIX):
-                continue
-            tmp = os.path.join(root_dir, d)
-            live = tmp[: -len(_TMP_SUFFIX)]
-            old = live + _OLD_SUFFIX
-            complete = os.path.isfile(os.path.join(tmp, "_SUCCESS"))
-            if os.path.isdir(live):
-                # crashed before the first rename (or tmp incomplete):
-                # the live dir is intact — drop the scratch
-                shutil.rmtree(tmp)
-            elif complete:
-                os.rename(tmp, live)  # finish the swap
-            elif os.path.isdir(old):
-                shutil.rmtree(tmp)
-                os.rename(old, live)  # roll back
-        for d in list(dirs):
-            if d.endswith(_OLD_SUFFIX):
-                old = os.path.join(root_dir, d)
-                if not os.path.isdir(old):
-                    continue  # consumed by a rollback in the tmp loop
-                live = old[: -len(_OLD_SUFFIX)]
-                if os.path.isdir(live):
-                    shutil.rmtree(old)  # swap finished; drop the old copy
-                else:
-                    os.rename(old, live)  # crashed between the renames
-        # descend into partition dirs (nested partitioning nests the swap
-        # scratch deeper) but never into scratch we just handled
-        dirs[:] = [
-            x for x in dirs
-            if not x.endswith((_TMP_SUFFIX, _OLD_SUFFIX))
-        ]
+        todo.append((root, k))
+        dirs[:] = []  # the rewrite reads the whole dir
+    if not todo:
+        return []
+    staging = lw.make_staging(out_dir)
+    try:
+        for i, (root, k) in enumerate(todo):
+            staged = os.path.join(staging, str(i))
+            spark.read.parquet(root).repartition(k).write.parquet(staged)
+            files = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+            lw.publish_table(root, staged, files, overwrite=True)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    return [os.path.relpath(root, out_dir) for root, _k in todo]
 
 
 def ingest_with_compaction(

@@ -451,10 +451,7 @@ def q_stream_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("double").alias("value"),
     )
     tbl = _fresh("stream_resample")
-    # the state key domain is event_type (~5 values): size the stateful
-    # shuffle to it — a CPU-count default pays 27 empty state stores per
-    # trigger (see run_to_memory)
-    run_to_memory(running_resample(events), tbl, mode="append", state_partitions=8)
+    run_to_memory(running_resample(events), tbl, mode="append")
     return spark.table(tbl).select("event_type", "grid_us", "locf", "interp")
 
 

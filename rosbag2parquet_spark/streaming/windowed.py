@@ -147,65 +147,37 @@ def sessionized(
     )
 
 
-def run_to_memory(
-    df: DataFrame,
-    name: str,
-    mode: str = "complete",
-    state_partitions: "int | None" = None,
-) -> None:
+#: shuffle partitions of a fixture stream's STATEFUL operators: every
+#: state partition costs a state-store init + snapshot + commit per
+#: trigger, and every fixture stream's state is tiny (per-type counts ≈ 5
+#: rows; the largest, digest/user keyed, a few thousand). At sf0.1 the 27
+#: empty stores of a CPU-count default were ~60% of stream-resample's
+#: micro-batch time (addBatch 1.8 s @32 partitions vs 0.8 s @8). Results
+#: are partition-count invariant (state partitioning only shards the
+#: store). At 100 TB size it to key cardinality × throughput instead.
+STATE_PARTITIONS = 8
+
+
+def run_to_memory(df: DataFrame, name: str, mode: str = "complete") -> None:
     """Drive a streaming query over the finite fixture to completion
-    synchronously (memory sink; tests and smoke only).
-
-    ``state_partitions`` sizes the STATEFUL shuffle for this query: every
-    state partition costs a state-store init + snapshot + commit per
-    trigger, so a stateful stream keyed by a tiny domain (event_type ≈ 5
-    values) should not inherit the CPU-count default — at sf0.1 the 27
-    empty stores were ~60% of stream-resample's micro-batch time
-    (addBatch 1.8 s @32 partitions vs 0.8 s @8, measured min-of-2). The
-    partition count is baked into the checkpoint at first start, so
-    setting the conf around ``start()`` and restoring after is safe. At
-    100 TB the same dial turns the other way: size to key cardinality ×
-    throughput, never to a machine-shaped default.
-
-    r13: the ``stream-resample`` measurement above generalizes — EVERY
-    fixture stream's state surface is orders of magnitude below one
-    state-store's worth of rows per 32 partitions (per-type counts ≈ 5
-    rows, per-day verdicts ≈ 30, top-k = k, per-bucket histograms ≤ 10;
-    the largest, digest/user keyed, reach a few thousand), so the
-    default is now ``$SPARK_GRAFT_STREAM_STATE_PARTITIONS`` (8 when
-    unset) instead of inheriting the machine-shaped session value. The
-    env knob is the cluster override: a 100 TB deployment keying state
-    by user/digest sets it to key-cardinality × throughput; setting it
-    to 0 restores inherit-the-session behaviour. Result sets are
-    partition-count invariant (state partitioning only shards the
-    store), so oracle parity is structural — re-proven by the full
-    check_oracle sweep after the change."""
-    import os as _os
-
+    synchronously (memory sink; tests and smoke only), its stateful
+    shuffle sized to `STATE_PARTITIONS`. The partition count is baked into
+    the checkpoint at first start, so setting the conf around ``start()``
+    and restoring it after is safe."""
     spark = df.sparkSession
-    if state_partitions is None:
-        state_partitions = (
-            int(_os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-            or None
-        )
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     try:
         q.processAllAvailable()
     finally:
         q.stop()
 
 
-def run_all_to_memory(
-    drains: "list[tuple[DataFrame, str, str]]",
-    state_partitions: "int | None" = None,
-) -> None:
+def run_all_to_memory(drains: "list[tuple[DataFrame, str, str]]") -> None:
     """Drive SEVERAL independent finite streams to completion
     CONCURRENTLY (guide §2.6 — actions are only sequential because the
     driver calls them sequentially): all queries start first, then each
@@ -214,22 +186,14 @@ def run_all_to_memory(
     `stream-ivfadc-delete`) pays ONE micro-batch floor of wall clock
     instead of one per stream; the scheduler back-fills the second
     query's tasks onto cores the first one's tail frees. Same
-    state-partition sizing contract as `run_to_memory` (the conf is set
-    around the starts and restored — it is captured into each query's
-    cloned session at start())."""
-    import os as _os
-
+    state-partition sizing as `run_to_memory` (the conf is set around the
+    starts and restored — it is captured into each query's cloned
+    session at start())."""
     if not drains:
         return
     spark = drains[0][0].sparkSession
-    if state_partitions is None:
-        state_partitions = (
-            int(_os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"))
-            or None
-        )
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     queries = []
     try:
         for df, name, mode in drains:
@@ -240,8 +204,7 @@ def run_all_to_memory(
                 .start()
             )
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     try:
         for q in queries:
             q.processAllAvailable()

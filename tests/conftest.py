@@ -39,3 +39,23 @@ def layout_files(root: str) -> dict:
             with open(p, "rb") as fh:
                 out[os.path.relpath(p, root)] = fh.read()
     return out
+
+
+class Crash(BaseException):
+    """A process dying at an injected point (BaseException, like a kill's
+    KeyboardInterrupt: no ``except Exception`` handler swallows it)."""
+
+
+def crash_after_rename(monkeypatch, when) -> None:
+    """Make the first ``os.rename(src, dst)`` for which ``when(src, dst)``
+    holds land, then raise `Crash` — a publish dying right after that
+    rename. Later renames run normally."""
+    real = os.rename
+
+    def rename(src, dst, *args, **kwargs):
+        real(src, dst, *args, **kwargs)
+        if when(src, dst):
+            monkeypatch.setattr(os, "rename", real)
+            raise Crash(f"crashed after rename {src} -> {dst}")
+
+    monkeypatch.setattr(os, "rename", rename)

@@ -87,15 +87,15 @@ def test_compact_is_idempotent_noop_below_threshold(spark, tmp_path):
 
 
 def test_interrupted_swap_repairs(spark, tmp_path):
-    """Every crash window of the two-rename swap repairs on the next pass:
-    (a) complete tmp + live gone -> finish; (b) old left beside live ->
-    drop old; (c) incomplete tmp beside live -> drop tmp; data identical
-    afterwards in all three."""
+    """Every crash window of the partition swap repairs on the next pass:
+    (a) died after the rename-aside (live gone, aside copy left) -> roll
+    back; (b) died after the rename-in (aside copy left beside live) ->
+    drop the copy; (c) died mid-write (a staging dir with a partial file)
+    -> drop the staging; data identical afterwards in all three."""
     import shutil
 
+    from rosbag2parquet_spark import layout_write as lw
     from rosbag2parquet_spark.streaming.compaction_service import (
-        _OLD_SUFFIX,
-        _TMP_SUFFIX,
         compact_fragmented_partitions,
     )
 
@@ -105,32 +105,30 @@ def test_interrupted_swap_repairs(spark, tmp_path):
     )
     df.repartition(3).write.partitionBy("event_type").parquet(out)
     part = os.path.join(out, "event_type=a")
+    aside = lw.aside_dir(part)
     want = {r.event_id for r in spark.read.parquet(out).collect()}
 
-    # (a) crashed between the renames: live missing, complete tmp + old
-    # (a real swap writes tmp as its own Spark output root, so _SUCCESS
-    # lives inside it — the completeness marker the repair keys on)
-    shutil.copytree(part, part + _TMP_SUFFIX)
-    open(os.path.join(part + _TMP_SUFFIX, "_SUCCESS"), "w").close()
-    os.rename(part, part + _OLD_SUFFIX)
+    # (a) crashed between the renames: live missing, aside copy left
+    os.rename(part, aside)
     compact_fragmented_partitions(spark, out, max_files_per_partition=99)
     assert os.path.isdir(part)
-    assert not os.path.isdir(part + _TMP_SUFFIX)
-    assert not os.path.isdir(part + _OLD_SUFFIX)
+    assert not os.path.isdir(aside)
     assert {r.event_id for r in spark.read.parquet(out).collect()} == want
 
-    # (b) crashed after the second rename: old copy left beside live
-    shutil.copytree(part, part + _OLD_SUFFIX)
+    # (b) crashed after the rename-in: aside copy left beside live
+    shutil.copytree(part, aside)
     compact_fragmented_partitions(spark, out, max_files_per_partition=99)
-    assert not os.path.isdir(part + _OLD_SUFFIX)
+    assert not os.path.isdir(aside)
     assert {r.event_id for r in spark.read.parquet(out).collect()} == want
 
-    # (c) crashed mid-write: incomplete tmp (no _SUCCESS) beside live
-    os.makedirs(part + _TMP_SUFFIX)
-    with open(os.path.join(part + _TMP_SUFFIX, "x.parquet"), "wb") as f:
+    # (c) crashed mid-write: a staging dir holding a partial file
+    staging = os.path.join(out, "_staging-0123abcd", "0")
+    os.makedirs(staging)
+    with open(os.path.join(staging, "x.parquet"), "wb") as f:
         f.write(b"garbage")
+    assert {r.event_id for r in spark.read.parquet(out).collect()} == want
     compact_fragmented_partitions(spark, out, max_files_per_partition=99)
-    assert not os.path.isdir(part + _TMP_SUFFIX)
+    assert not os.path.exists(os.path.join(out, "_staging-0123abcd"))
     assert {r.event_id for r in spark.read.parquet(out).collect()} == want
 
 

@@ -436,6 +436,40 @@ def test_refused_append_leaves_the_layout_unchanged(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, "Messages")).count() == 50
 
 
+@pytest.mark.parametrize("mode", ["overwrite", "append"])
+def test_failed_pertype_write_leaves_the_layout_unchanged(
+    spark, tmp_path, monkeypatch, mode
+):
+    """Every table is staged, then published at once: a convert whose last
+    write (the partitioned ``pertype``) fails after Messages, Connections
+    and Stats were written leaves every layout file byte-identical."""
+    from pyspark.sql import DataFrameWriter
+
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+
+    out = str(tmp_path / "lay")
+    events = load_table(spark, SF_DIR, "events").limit(50)
+    convert(
+        spark, events, out,
+        order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA,
+    )
+    before = layout_files(out)
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.basename(path) == "pertype":
+            raise RuntimeError("injected pertype write failure")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        convert(
+            spark, events, out, order_cols=["ts", "event_id"],
+            payload_schema=PROPS_SCHEMA, mode=mode,
+        )
+    assert layout_files(out) == before
+
+
 def test_append_guard_refuses_conflicting_file_schemas(spark, tmp_path):
     """r12 advisor: an EXTERNALLY-produced table whose files carry
     genuinely conflicting types for one column must be refused with the

@@ -1,11 +1,14 @@
 """Copy-on-write DELETE WHERE (`sinks.delete_where`): only files that
 CONTAIN matches are rewritten — untouched files stay byte-identical,
-all-match files are removed outright, replacements are hidden dot-files
-until the per-file atomic swap, and stale crash leftovers sweep on the
-next run. The oracle-level value check is the `delete-rows` driver query."""
+all-match files are removed outright, replacements wait in the table's
+``_staging-<uuid>/`` dir until `layout_write.publish_table` renames each
+over its original, and a crashed run's staging dir is dropped by the next
+write. The oracle-level value check is the `delete-rows` driver query."""
 
 import hashlib
 import os
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -57,9 +60,9 @@ def test_only_matching_files_rewritten(spark, tmp_path):
     # values: complement select
     got = sorted(r.id for r in spark.read.parquet(lay).collect())
     assert got == list(range(50, 400))
-    # no hidden leftovers
+    # no staging leftovers
     assert not [
-        f for r, _d, fs in os.walk(lay) for f in fs if f.endswith(".delnew")
+        d for _r, ds, _f in os.walk(lay) for d in ds if d.startswith("_staging-")
     ]
     # re-run: nothing matches, pure no-op
     res2 = delete_where(spark, lay, F.col("id") < 50)
@@ -86,10 +89,19 @@ def test_all_match_file_removed_and_partition_predicate(spark, tmp_path):
 
 
 def test_stale_crash_leftovers_swept(spark, tmp_path):
+    """A delete that crashed before its publish leaves replacements in the
+    table's staging dir: readers never list them, and the next delete
+    drops the dir before it stages its own."""
+    from rosbag2parquet_spark.sources.catalog import read_parquet
+
     lay = str(tmp_path / "lay")
     _mklayout(spark, lay, partitioned=False)
-    stale = os.path.join(lay, ".part-junk.parquet.delnew")
-    open(stale, "wb").write(b"garbage from a crashed run")
+    victim = sorted(f for f in os.listdir(lay) if f.endswith(".parquet"))[0]
+    stale = os.path.join(lay, "_staging-0123abcd")
+    os.makedirs(stale)
+    open(os.path.join(stale, victim), "wb").write(b"garbage from a crashed run")
+    assert spark.read.parquet(lay).count() == 400
+    assert read_parquet(spark, lay).count() == 400
     res = delete_where(spark, lay, F.col("id") == 7)
     assert not os.path.exists(stale)
     assert res["rows_deleted"] == 1
@@ -143,12 +155,11 @@ def test_nullable_and_timestamp_fidelity(spark, tmp_path):
 
 def test_vacuum_removes_artifacts_repairs_swaps(spark, tmp_path):
     """vacuum_layout removes exactly the known artifact classes
-    (_temporary staging, orphan .crc, stale .delnew), REPAIRS an
-    interrupted partition swap instead of deleting it (the .__compact_old
-    dir may be the only live copy), leaves content untouched, and is
-    idempotent."""
-    import shutil
-
+    (_temporary staging, orphan .crc, a leftover ``_staging-*`` dir),
+    REPAIRS an interrupted partition swap instead of deleting it (the
+    aside copy may be the only live one), leaves content untouched, and
+    is idempotent."""
+    from rosbag2parquet_spark import layout_write as lw
     from rosbag2parquet_spark.sinks import vacuum_layout
 
     lay = str(tmp_path / "lay")
@@ -162,7 +173,8 @@ def test_vacuum_removes_artifacts_repairs_swaps(spark, tmp_path):
     os.makedirs(os.path.join(lay, "_temporary", "0"))
     open(os.path.join(lay, "_temporary", "0", "junk"), "w").write("x")
     open(os.path.join(lay, ".ghost.parquet.crc"), "w").write("x")
-    open(os.path.join(lay, "part=0", ".p.parquet.delnew"), "w").write("x")
+    os.makedirs(os.path.join(lay, "_staging-0123abcd", "part=0"))
+    open(os.path.join(lay, "_staging-0123abcd", "part=0", "p.parquet"), "w").write("x")
     # a KEPT .crc: Hadoop's LocalFileSystem already wrote real sidecars
     # for the data files (and validates them on read — planting a fake
     # one would poison the read, the exact failure stale sidecars cause)
@@ -171,25 +183,25 @@ def test_vacuum_removes_artifacts_repairs_swaps(spark, tmp_path):
         if f.startswith(".") and f.endswith(".crc")
     ]
     assert keep_crcs
-    # crash between the two swap renames: live dir moved away
-    os.rename(
-        os.path.join(lay, "part=1"),
-        os.path.join(lay, "part=1.__compact_old"),
-    )
+    # a swap that died after its rename-aside: the live dir moved away
+    part1 = os.path.join(lay, "part=1")
+    os.rename(part1, lw.aside_dir(part1))
     # an unknown file must NEVER be touched, hidden or not (hidden here
     # so Spark's reader also ignores it)
     open(os.path.join(lay, ".mystery.tmp"), "w").write("keep me")
 
     listed = vacuum_layout(lay, dry_run=True)
-    assert len([p for p in listed if p.startswith("repair:")]) == 1
-    assert os.path.isdir(os.path.join(lay, "part=1.__compact_old"))
+    assert [p for p in listed if p.startswith("repair:")] == ["repair:" + part1]
+    assert os.path.isdir(lw.aside_dir(part1))
 
     acted = vacuum_layout(lay)
+    assert sorted(acted) == sorted(listed)
     assert len(acted) == 4  # 3 removals + 1 repair
     assert not os.path.exists(os.path.join(lay, "_temporary"))
     assert not os.path.exists(os.path.join(lay, ".ghost.parquet.crc"))
-    assert not os.path.exists(os.path.join(lay, "part=0", ".p.parquet.delnew"))
-    assert os.path.isdir(os.path.join(lay, "part=1"))  # rolled back
+    assert not os.path.exists(os.path.join(lay, "_staging-0123abcd"))
+    assert os.path.isdir(part1)  # rolled back
+    assert not os.path.exists(lw.aside_dir(part1))
     assert sorted(
         f for f in os.listdir(os.path.join(lay, "part=0"))
         if f.startswith(".") and f.endswith(".crc")
@@ -200,49 +212,47 @@ def test_vacuum_removes_artifacts_repairs_swaps(spark, tmp_path):
     assert vacuum_layout(lay) == []
 
 
-def test_vacuum_single_pass_and_repair_dedupe(spark, tmp_path):
-    """Two advisor holes pinned: (1) a swap that left BOTH .__compact_tmp
-    and .__compact_old for one partition reports ONE repair, keyed by the
-    live root; (2) the .crc sidecar of a .delnew removed in the same pass
-    is removed in that pass — vacuum is single-pass idempotent, a second
-    run finds nothing."""
-    import shutil
+def test_vacuum_single_pass_and_repair_dedupe(spark, tmp_path, monkeypatch):
+    """A compaction killed after its rename-aside leaves two artifacts for
+    one partition: the aside copy and the staging dir holding the new
+    files (with Spark's ``.crc`` sidecars). Vacuum reports ONE repair,
+    keyed by the live partition, plus the staging dir, rolls the
+    partition back in a single pass, and a second run finds nothing."""
+    from types import SimpleNamespace
 
     from rosbag2parquet_spark.sinks import vacuum_layout
-    from rosbag2parquet_spark.streaming.compaction_service import (
-        _OLD_SUFFIX,
-        _TMP_SUFFIX,
-    )
+    from rosbag2parquet_spark.streaming import compaction_service as cs
+    from tests.conftest import Crash, crash_after_rename
 
     lay = str(tmp_path / "lay")
     df = spark.range(20).selectExpr("id", "CAST(id % 2 AS STRING) AS part")
-    df.write.partitionBy("part").parquet(lay)
-
-    # (1) both swap dirs for ONE partition: live moved to old, tmp staged
-    os.rename(
-        os.path.join(lay, "part=1"), os.path.join(lay, "part=1" + _OLD_SUFFIX)
-    )
-    shutil.copytree(
-        os.path.join(lay, "part=1" + _OLD_SUFFIX),
-        os.path.join(lay, "part=1" + _TMP_SUFFIX),
-    )
-    # (2) a stale .delnew WITH its own .crc sidecar
-    open(os.path.join(lay, "part=0", ".p.parquet.delnew"), "w").write("x")
-    open(os.path.join(lay, "part=0", "..p.parquet.delnew.crc"), "w").write("x")
+    df.repartition(4).write.partitionBy("part").parquet(lay)
+    part1 = os.path.join(lay, "part=1")
+    before = {
+        f: open(os.path.join(part1, f), "rb").read()
+        for f in os.listdir(part1) if f.endswith(".parquet")
+    }
+    # a kill runs no cleanup: the service's own staging removal is off
+    monkeypatch.setattr(cs, "shutil", SimpleNamespace(rmtree=lambda *a, **k: None))
+    crash_after_rename(monkeypatch, lambda src, dst: src == part1)
+    with pytest.raises(Crash):
+        cs.compact_fragmented_partitions(spark, lay, max_files_per_partition=1)
+    monkeypatch.undo()
+    (staging,) = [d for d in os.listdir(lay) if d.startswith("_staging-")]
+    assert [
+        f for _r, _d, fs in os.walk(os.path.join(lay, staging))
+        for f in fs if f.endswith(".crc")
+    ]
 
     listed = vacuum_layout(lay, dry_run=True)
-    repairs = [p for p in listed if p.startswith("repair:")]
-    assert repairs == ["repair:" + os.path.join(lay, "part=1")]
-    # dry run already reports the sidecar as removable
-    assert any(p.endswith(".p.parquet.delnew.crc") for p in listed)
-
-    acted = vacuum_layout(lay)
-    assert [p for p in acted if p.startswith("repair:")] == repairs
-    assert not os.path.exists(os.path.join(lay, "part=0", ".p.parquet.delnew"))
-    assert not os.path.exists(
-        os.path.join(lay, "part=0", "..p.parquet.delnew.crc")
+    assert sorted(listed) == sorted(
+        ["repair:" + part1, os.path.join(lay, staging)]
     )
-    assert os.path.isdir(os.path.join(lay, "part=1"))
+    assert vacuum_layout(lay) == listed
     assert vacuum_layout(lay) == []  # single-pass: nothing left
+    assert {
+        f: open(os.path.join(part1, f), "rb").read()
+        for f in os.listdir(part1) if f.endswith(".parquet")
+    } == before
     got = {r.id for r in spark.read.parquet(lay).collect()}
     assert got == set(range(20))

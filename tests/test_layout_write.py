@@ -318,3 +318,138 @@ def test_header_stamps_match_the_catalyst_rule(spark, serialization):
     got = list(zip(sec.to_pylist(), nsec.to_pylist()))
     assert got == want
     assert any(s is not None for s, _ in got) and any(s is None for s, _ in got)
+
+
+def _stage(out, table, name, xs):
+    """A write's staging dir under ``out`` holding one file of ``table``."""
+    staging = lw.make_staging(out)
+    os.makedirs(os.path.join(staging, table))
+    pq.write_table(pa.table({"x": xs}), os.path.join(staging, table, name))
+    return staging
+
+
+@pytest.mark.parametrize("step", ["aside", "in"])
+def test_overwrite_crash_points_repair_to_one_whole_table(
+    tmp_path, monkeypatch, step
+):
+    """An overwrite publish killed right after the rename-aside, or right
+    after the rename-in, repairs to exactly one whole table: all-old
+    before the rename-in, all-new after it — never missing, never mixed,
+    no leftover dir."""
+    from tests.conftest import Crash, crash_after_rename
+
+    out = str(tmp_path / "lay")
+    table = os.path.join(out, "T")
+    publish_old = _stage(out, "T", "part-old.parquet", [1, 2, 3])
+    lw.publish(out, publish_old, [{"table": "T", "path": "T/part-old.parquet"}],
+               overwrite=True)
+    staging = _stage(out, "T", "part-new.parquet", [7, 8])
+    crash_after_rename(
+        monkeypatch,
+        (lambda src, dst: src == table) if step == "aside"
+        else (lambda src, dst: dst == table),
+    )
+    with pytest.raises(Crash):
+        lw.publish(out, staging, [{"table": "T", "path": "T/part-new.parquet"}],
+                   overwrite=True)
+    assert os.path.isdir(lw.aside_dir(table))
+    assert lw.repair(out) == ["repair:" + table]
+    want = [1, 2, 3] if step == "aside" else [7, 8]
+    assert sorted(pq.read_table(table).column("x").to_pylist()) == want
+    assert os.listdir(out) == ["T"]
+    assert lw.repair(out) == []
+
+
+def test_append_after_an_interrupted_swap_reads_the_repaired_layout(
+    spark, tmp_path
+):
+    """An append into a layout whose Messages swap died after the
+    rename-aside settles the swap before it reads its seqno base: the
+    appended rows continue after the old ones instead of restarting at 0."""
+    out = str(tmp_path / "lay")
+    a = _sbag(str(tmp_path / "a.sbag"), [(1, 10**18 + i, _good(i)) for i in range(5)])
+    b = _sbag(str(tmp_path / "b.sbag"), [(1, 2 * 10**18 + i, _good(i)) for i in range(4)])
+    convert_bag(spark, a, out)
+    msgs = os.path.join(out, "Messages")
+    os.rename(msgs, lw.aside_dir(msgs))
+    convert_bags(spark, [b], out, mode="append")
+    seqnos = sorted(r.seqno for r in spark.read.parquet(msgs).collect())
+    assert seqnos == list(range(9))
+
+
+def test_killed_convert_staging_is_invisible_and_vacuumed(
+    spark, tmp_path, monkeypatch
+):
+    """A convert killed between its write job and its publish leaves its
+    staged files under ``_staging-<uuid>/``: every table still reads its
+    old rows through `read_parquet`, the layout's files are unchanged,
+    and `vacuum_layout` removes exactly that dir."""
+    from rosbag2parquet_spark.sinks import vacuum_layout
+    from rosbag2parquet_spark.sources.catalog import read_parquet
+    from tests.conftest import Crash
+
+    out = str(tmp_path / "lay")
+    a = _sbag(str(tmp_path / "a.sbag"), [(1, 10**18 + i, _good(i)) for i in range(5)])
+    b = _sbag(str(tmp_path / "b.sbag"), [(1, 2 * 10**18 + i, _good(i)) for i in range(4)])
+    convert_bag(spark, a, out)
+    before = _tree(out)
+    tables = ("Messages", "demo_P", "Connections", "Stats", "Bags")
+    counts = [read_parquet(spark, os.path.join(out, t)).count() for t in tables]
+    left = []
+
+    def killed(out_dir, staging, commits, *, overwrite):
+        # what a kill leaves: the staged files, out of the convert's own
+        # cleanup's reach
+        left.append(staging + "-killed")
+        os.rename(staging, left[0])
+        raise Crash("killed before the publish")
+
+    monkeypatch.setattr(lw, "publish", killed)
+    with pytest.raises(Crash):
+        convert_bags(spark, [b], out, mode="append")
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(left[0], "Messages"))
+    assert [
+        read_parquet(spark, os.path.join(out, t)).count() for t in tables
+    ] == counts
+    assert {k: v for k, v in _tree(out).items()
+            if not k.startswith("_staging-")} == before
+    assert vacuum_layout(out, dry_run=True) == [left[0]]
+    assert vacuum_layout(out) == [left[0]]
+    assert _tree(out) == before
+
+
+def test_overwrite_convert_removes_stale_tables(spark, tmp_path):
+    """An overwrite convert leaves exactly the tables it writes: converting
+    a bag of types X and Y, then one of X only, into the same layout
+    removes Y's table, so every table dir is in ``load_tables.sql`` and
+    every per-type row resolves in ``Connections``. Underscore dirs such
+    as ``_snapshots`` stay."""
+    import re
+
+    from rosbag2parquet_spark.snapshots import SNAPSHOT_DIR, snapshot_create
+
+    out = str(tmp_path / "lay")
+    a = str(tmp_path / "a.sbag")
+    write_bag(a, [ConnectionInfo(1, "/x", "demo/X", "", DEF),
+                  ConnectionInfo(2, "/y", "demo/Y", "", DEF)],
+              [(1, 10**18, _good(0)), (2, 10**18 + 1, _good(1))])
+    b = str(tmp_path / "b.sbag")
+    write_bag(b, [ConnectionInfo(1, "/x", "demo/X", "", DEF)],
+              [(1, 2 * 10**18, _good(2))])
+    convert_bag(spark, a, out)
+    assert os.path.isdir(os.path.join(out, "demo_Y"))
+    snapshot_create(out)
+    convert_bag(spark, b, out)
+
+    dirs = {d for d in os.listdir(out)
+            if os.path.isdir(os.path.join(out, d)) and not d.startswith(("_", "."))}
+    assert "demo_Y" not in dirs
+    with open(os.path.join(out, "load_tables.sql")) as f:
+        ddl = set(re.findall(r"CREATE TABLE IF NOT EXISTS (\S+)", f.read()))
+    assert ddl == dirs
+    ids = {r.connection_id for r in spark.read.parquet(os.path.join(out, "Connections")).collect()}
+    for d in dirs - {"Connections", "Bags", "Stats"}:
+        rows = spark.read.parquet(os.path.join(out, d)).select("connection_id").collect()
+        assert {r.connection_id for r in rows} <= ids
+    assert os.path.isdir(os.path.join(out, SNAPSHOT_DIR))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from rosbag2parquet_spark.convert import (
     INGEST_STATE,
     convert_bag,
+    convert_bags,
     resume_convert_bag,
 )
 from rosbag2parquet_spark.sources.baglike import ConnectionInfo, write_bag
@@ -460,3 +461,22 @@ def test_resume_db3_topic_added_during_convert(spark, tmp_path, monkeypatch):
         a = sorted(map(tuple, spark.read.parquet(f"{lay}/{t}").collect()))
         b = sorted(map(tuple, spark.read.parquet(f"{lay2}/{t}").collect()))
         assert a == b, t
+
+
+def test_overwrite_drops_a_stale_ingest_state(spark, tmp_path):
+    """An overwrite that writes no fresh resume state (here a fleet
+    convert over a single-bag layout) removes the old one before it
+    publishes: the cursor of bag a must not vouch for a fleet layout, so
+    resuming a refuses."""
+    conns = [ConnectionInfo(1, "/t", "d/S", "", "uint32 a\nfloat64 b")]
+    a = str(tmp_path / "a.sbag")
+    b = str(tmp_path / "b.sbag")
+    write_bag(a, conns, [(1, T0 + i, struct.pack("<Id", i, 0.0)) for i in range(2)])
+    write_bag(b, conns, [(1, T0 + 10, struct.pack("<Id", 9, 0.0))])
+    lay = str(tmp_path / "lay")
+    convert_bag(spark, a, lay)
+    assert os.path.exists(os.path.join(lay, INGEST_STATE))
+    assert convert_bags(spark, [a, b], lay).count == 3
+    assert not os.path.exists(os.path.join(lay, INGEST_STATE))
+    with pytest.raises(ValueError, match="no _ingest_state"):
+        resume_convert_bag(spark, a, lay)
