@@ -6,22 +6,29 @@ FlattenedRosWriter.cpp): scan the log once; per message emit metadata into
 flattened columns; attach ``connection_id`` and the raw blob; at close, write
 ``Connections`` and flush every table as SNAPPY parquet.
 
-Spark formulation — one declarative DAG instead of a fused imperative loop:
+Every converter here writes that one layout: ``Messages``, ``Connections``,
+``Stats``, one table per message type named by `table_name_for_type`
+(reference README.md:2-4, MessageTable.cpp:315), the bag side-cars, and
+the DDL script. The input differs, the write does not:
 
-- the "bag" is any DataFrame with (time, type, connection, payload) columns
-  (fixtures: the ``events`` table — FIXTURES.md §3);
-- global ``seqno`` via the scalable two-pass plan (operators.keys);
-- ``Connections`` is a tiny dim distilled from the stream (distinct keys →
-  dense ids via a broadcast-joined lookup);
-- per-type demux is ONE partitioned write (``partitionBy(datatype)``) — the
-  distributed analog of the reference's ``m_pertype`` routing map
-  (FlattenedRosWriter.cpp:273-289): each output partition directory is a
-  per-type table, and readers get partition pruning for free (the reference's
-  "don't scan lidar to read GPS" goal, README.md:2-4);
-- row-group sizing: the reference buffers 255 MB then flushes
-  (TableBuffer.h:32, TableBuffer.cpp:164-174); Spark's parquet writer does
-  the same internally — the writer caps files at ``maxRecordsPerFile``
-  instead of reimplementing buffering.
+- a bag or a fleet of bags (`convert_bag`, `convert_bags`,
+  `resume_convert_bag`): the driver plans the scan, and each write task
+  reads its own split of the files;
+- any DataFrame with (time, type, connection, payload) columns
+  (`convert`; fixtures: the ``events`` table — FIXTURES.md §3): the
+  stream is range-partitioned by its order key and cached, and each
+  write task takes one partition.
+
+Both number ``seqno`` by one rule: the driver prefix-sums each task's
+rows (a bag's declared unit counts, else one count job) into per-task
+bases, and each task numbers its rows from its base and checks their
+count. Both then write through
+`_write_layout`: one `layout_write.write_task` job decodes and writes
+``Messages`` and every per-type table (files capped at
+``_MAX_RECORDS_PER_FILE`` rows, row groups at
+`layout_write.ROW_GROUP_BYTES`, the reference's 255 MB buffer,
+TableBuffer.h:32), the driver writes the small tables, and one
+`layout_write.publish` promotes them all.
 
 Returns the same summary the reference's library API returns
 (``info{bagname, count, size}``, rosbag2parquet.h:6-10).
@@ -29,13 +36,16 @@ Returns the same summary the reference's library API returns
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import itertools
 import json
 import os
 import shutil
 from dataclasses import dataclass
 
 from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -73,8 +83,6 @@ def schema_fingerprint(schema) -> str:
     metadata are excluded: parquet round-trips them lossily (everything
     reads back nullable), and the reference's md5 covers field layout, not
     constraints."""
-    import hashlib
-
     canon = ";".join(f"{f.name}:{f.dataType.simpleString()}" for f in schema.fields)
     return hashlib.md5(canon.encode()).hexdigest()
 
@@ -160,34 +168,12 @@ def assert_append_compatible(spark: SparkSession, path: str, schema, evolve: boo
     return existing
 
 
-#: the stream converter's per-type FIXED metadata columns, in layout
-#: order (seqno, time, size, <flattened payload>, connection_id, data,
-#: bag_index, datatype) — the single source for both the payload
-#: reserved-name sanitization and the pertype select
-_STREAM_PERTYPE_META = (
-    "seqno", "time", "size", "connection_id", "data", "bag_index",
-    "datatype",
-)
-
 def read_layout_table(spark: SparkSession, layout_dir: str, table: str) -> DataFrame:
     """Read a converted-layout table under its MERGED schema: after
     ``evolve=True`` appends its files carry different (superset) schemas.
     The schema comes from the footers on the driver (`catalog.read_parquet`
     with ``merge``), so planning the read starts no Spark job."""
     return read_parquet(spark, os.path.join(layout_dir, table), merge=True)
-
-
-def checked_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """unionByName guarded by schema-fingerprint equality (reference
-    FlattenedRosWriter.cpp:287) — multi-file union-as-one-table (E6) is only
-    sound for identical schemas."""
-    fa, fb = schema_fingerprint(a.schema), schema_fingerprint(b.schema)
-    if fa != fb:
-        raise ValueError(
-            f"union of incompatible schemas: {a.schema.simpleString()} vs "
-            f"{b.schema.simpleString()}"
-        )
-    return a.unionByName(b)
 
 
 #: codecs every Spark 3.5+/4.x build writes and every mainstream parquet
@@ -198,10 +184,12 @@ _COMPRESSIONS = ("snappy", "zstd", "gzip", "lz4", "uncompressed")
 _MAX_RECORDS_PER_FILE = 1_000_000
 
 
-def _check_compression(codec: str) -> None:
-    if codec not in _COMPRESSIONS:
+def _check_options(mode: str, compression: str) -> None:
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be overwrite|append, got {mode!r}")
+    if compression not in _COMPRESSIONS:
         raise ValueError(
-            f"compression must be one of {_COMPRESSIONS}, got {codec!r}"
+            f"compression must be one of {_COMPRESSIONS}, got {compression!r}"
         )
 
 
@@ -213,278 +201,209 @@ def convert(
     time_col: str = "ts",
     type_col: str = "event_type",
     conn_col: str = "user_id",
-    size_col: str = "value",
     payload_col: str = "props",
     max_mbs: float | None = None,
     order_cols: list[str] | None = None,
     payload_schema=None,
     mode: str = "overwrite",
     compression: str = "snappy",
-    bag_index: int | None = None,
+    bag_index: int = 0,
 ) -> ConvertInfo:
-    """Convert a message-stream DataFrame into the reference's output layout:
-    ``Messages``, ``Connections``, and per-type partitioned tables under
-    ``out_dir``. ``max_mbs`` reproduces the reference's byte-bounded scan
-    limit (rosbag2parquet.cpp:56-58). ``mode='append'`` adds to an existing
-    output ONLY if every table's schema fingerprint matches (the reference's
-    md5sum identity check, FlattenedRosWriter.cpp:287). ``compression``:
-    the reference hardcodes SNAPPY (MessageTable.cpp:324); ``zstd`` trades
-    ~15-25% more CPU for markedly smaller files — usually the right call
-    when the output is read many times at 100 TB. Spark writes every
-    table into a staging dir and one `layout_write.publish` promotes
-    them, so a convert that fails part-way leaves the layout as it was."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    _check_compression(compression)
+    """Convert a message-stream DataFrame into the layout every converter
+    writes: ``Messages``, ``Connections``, ``Stats`` and one table per
+    ``type_col`` value named by `table_name_for_type`, each holding
+    seqno, the flattened payload, connection_id, the payload bytes as
+    ``data`` and ``bag_index``. A connection is a distinct
+    (``conn_col``, ``type_col``) pair; its ``callerid`` is ``conn_col``
+    cast to string.
 
-    # ---- seqno: global order in stream order (reference FlattenedRosWriter.cpp:256)
-    # via the scalable two-pass plan (range shuffle + per-partition offsets —
-    # operators.keys.assign_seqno); no single-partition exchange anywhere.
-    # Pass order_cols ending in a unique column for a well-defined total order.
-    from rosbag2parquet_spark.operators.keys import assign_seqno
+    ``seqno`` follows ``order_cols`` (default ``[time_col, conn_col]``;
+    end them in a unique column for a well-defined total order). The
+    stream is range-partitioned by them, sorted within each partition and
+    cached; one count job returns each partition's rows, payload bytes
+    and connection keys, and one write job numbers each partition from
+    its base, checks its row count (a partition recomputed differently
+    fails the convert instead of renumbering), and writes it through
+    `layout_write.write_task`.
 
+    ``payload_schema`` (a StructType of long, double, string, boolean,
+    arrays of those and nested structs; another type is refused before
+    any job) decodes ``payload_col`` as JSON into flattened columns; a
+    payload that does not decode fails the convert. Without it the
+    per-type tables keep the payload bytes only. ``size`` in Messages and
+    ``total_bytes`` in Stats, like the returned size, are payload bytes.
+    ``max_mbs`` keeps the rows whose running payload-byte sum in seqno
+    order stays within the cap (reference rosbag2parquet.cpp:56-58).
+    ``bag_index`` is the provenance ordinal stamped on every row.
+
+    ``mode='append'`` continues seqno after the layout's max, keeps the
+    ids of connections already in the dim and numbers new ones after
+    them, and refuses a table whose schema fingerprint differs (the
+    reference's md5sum identity check, FlattenedRosWriter.cpp:287).
+    ``compression``: the reference hardcodes SNAPPY (MessageTable.cpp:
+    324); ``zstd`` trades some CPU for smaller files. A convert that
+    fails leaves the layout as it was."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rosbag2parquet_spark.sources.container import CONN_SCHEMA
+    from rosbag2parquet_spark.sources.jsonschema import struct_tier
+
+    _check_options(mode, compression)
+    tier = None if payload_schema is None else struct_tier(payload_schema)
     lw.repair(out_dir)  # an interrupted publish is settled before any read
-    msg_path = os.path.join(out_dir, "Messages")
-    conn_path = os.path.join(out_dir, "Connections")
-
-    seq = assign_seqno(stream, order_cols or [time_col, conn_col])
-    if mode == "append" and os.path.isdir(msg_path):
-        # the reference declares seqno unique within the output
-        # (FlattenedRosWriter.cpp:57) and README makes it the cross-table
-        # join key — an appended batch continues after the existing max,
-        # read from the files' footer statistics on the driver
-        prev_max = lw.footer_max(msg_path, "seqno")
-        if prev_max is not None:
-            seq = seq.withColumn(
-                "seqno", (F.col("seqno") + F.lit(prev_max + 1)).cast("long")
-            )
-
-    if max_mbs is not None:
-        # byte-bounded limit (reference rosbag2parquet.cpp:56-58) — the
-        # bucketed two-pass running sum over seqno (contiguous ints → dense
-        # buckets); window partitioned by bucket, no global-order window
-        from rosbag2parquet_spark.operators.relational import running_sum_scalable
-
-        seq = (
-            running_sum_scalable(
-                seq, "seqno", F.col(size_col).cast("decimal(18,4)"), 1_000_000
-            )
-            .filter(F.col("__running") <= max_mbs * (1 << 20))
-            .drop("__b", "__running")
-        )
-
-    # ---- Connections dim (reference FlattenedRosWriter.cpp:90-137, 209-224):
-    # distinct (connection, datatype) keys → dense connection_id. On append,
-    # keys already in the existing dim KEEP their ids (only genuinely-new
-    # keys are appended, numbered after the existing max) — blind re-append
-    # wrote duplicate rows with conflicting id→callerid mappings.
-    conn_dtype = stream.schema[conn_col].dataType
-    keys = seq.select(
-        F.col(conn_col).alias("callerid"), F.col(type_col).alias("datatype")
-    ).distinct()
-    base_id = 0
-    existing_conns = None
-    if mode == "append" and os.path.isdir(conn_path):
-        existing_conns = read_parquet(spark, conn_path)
-        base_id = (
-            existing_conns.agg(F.max("connection_id")).collect()[0][0] or -1
-        ) + 1
-        keys = keys.join(
-            F.broadcast(
-                existing_conns.select(
-                    F.col("callerid").cast(conn_dtype).alias("callerid"),
-                    "datatype",
-                )
-            ),
-            on=["callerid", "datatype"],
-            how="left_anti",
-        )
-    conn_w = Window.orderBy("callerid", "datatype")
-    connections = (
-        keys
-        .withColumn("connection_id", F.row_number().over(conn_w) - 1 + base_id)
+    order = order_cols or [time_col, conn_col]
+    rows = (
+        stream.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
         .select(
-            "connection_id",
-            F.concat(F.lit("/topic/"), F.col("datatype")).alias("topic"),
-            "datatype",
-            F.md5(F.concat_ws("|", "callerid", "datatype")).alias("md5sum"),
-            F.lit("").alias("msg_def"),
-            F.col("callerid").cast("string").alias("callerid"),
+            (F.unix_micros(F.col(time_col)) * 1000).alias("time_ns"),
+            F.col(type_col).alias("datatype"),
+            F.col(conn_col).cast("string").alias("callerid"),
+            F.col(conn_col).alias("conn"),
+            F.col(payload_col).cast("binary").alias("data"),
         )
+        .persist()
     )
-
-    # connection resolution = broadcast hash probe (reference's unordered_map,
-    # FlattenedRosWriter.cpp:172-178). callerid is cast back to the STREAM's
-    # conn_col dtype — a hardcoded numeric cast would silently NULL every
-    # connection_id for string connection keys. On append the probe side is
-    # the UNION of kept existing ids and freshly-numbered new keys.
-    full_dim = (
-        connections
-        if existing_conns is None
-        else connections.unionByName(existing_conns)
-    )
-    lookup = full_dim.select(
-        "connection_id",
-        F.col("callerid").cast(conn_dtype).alias(conn_col),
-        F.col("datatype").alias(type_col),
-    )
-    resolved = seq.join(F.broadcast(lookup), on=[conn_col, type_col], how="left")
-
-    # ---- Messages table (reference FlattenedRosWriter.cpp:180-207):
-    # (seqno, time_sec, time_nsec, size, connection_id) — the reference's
-    # exact column set (README.md:26-32); time decomposed per S7
-    # floor semantics via non-negative pmod (integer-exact; `div` truncates
-    # toward zero, which would yield negative nsec for pre-epoch timestamps)
-    us = F.unix_micros(F.col(time_col))
-    rem = F.pmod(us, F.lit(1_000_000))
-    sec = F.expr(f"(unix_micros(`{time_col}`) - pmod(unix_micros(`{time_col}`), 1000000)) div 1000000")
-    messages = resolved.select(
-        "seqno",
-        sec.cast("int").alias("time_sec"),
-        (rem * 1000).cast("int").alias("time_nsec"),
-        F.col(size_col).alias("size"),
-        "connection_id",
-        # SBAG payloads are JSON — no leading ros Header to extract; the
-        # column pair exists so every converter emits ONE Messages shape
-        # (reference TODO #6: "adding nulls for msgs without header stamp")
-        F.lit(None).cast("int").alias("header_stamp_sec"),
-        F.lit(None).cast("int").alias("header_stamp_nsec"),
-        # reference TODO #7 ("want native timestamps"): the derived
-        # TimestampType view of the same instant, MICROSECOND precision
-        # (parquet TIMESTAMP(MICROS); the sec/nsec pair remains the
-        # bit-exact ns-precision record)
-        F.col(time_col).alias("time"),
-        # file provenance (reference TODO FlattenedRosWriter.cpp:183) —
-        # NULL by default on this path (a DataFrame stream has no source
-        # file), but a caller converting a KNOWN batch of a larger corpus
-        # passes its ordinal so appended conversions stay distinguishable
-        # (the DataFrame analog of the fleet path's per-bag stamp)
-        F.lit(bag_index).cast("int").alias("bag_index"),
-    )
-    # per-connection batch stats (reference TODO #2/#2.1) — same shape as
-    # the bag converters' Stats table
-    stats = resolved.groupBy("connection_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_messages"),
-        (F.min(F.unix_micros(F.col(time_col))) * 1000).alias("min_time_ns"),
-        (F.max(F.unix_micros(F.col(time_col))) * 1000).alias("max_time_ns"),
-        F.sum(F.col(size_col).cast("long")).cast("long").alias("total_bytes"),
-    )
-    stats_path = os.path.join(out_dir, "Stats")
-
-    # ---- per-type demux: ONE partitioned write (reference GetHandler routing,
-    # FlattenedRosWriter.cpp:273-289). Layout per MessageTable.cpp:326-343:
-    # seqno, flattened payload fields, connection_id, raw data blob. The
-    # payload is decoded and recursively flattened (S5) when a schema is
-    # given; the raw blob is carried verbatim regardless
-    # (FlattenedRosWriter.cpp:229-253).
-    flat_cols = []
-    if payload_schema is not None:
-        from rosbag2parquet_spark.operators.keys import flatten_select_cols
-
-        resolved = resolved.withColumn(
-            "__payload", F.from_json(F.col(payload_col), payload_schema)
-        )
-        # reserved = this table's fixed metadata columns (the single
-        # tuple the select below is built from): a payload field named
-        # data/bag_index/... sanitizes with trailing underscores (the bag
-        # decoders' msgdef.RESERVED_COLUMNS rule), so the stamp below —
-        # and the provenance reader's column check — is UNCONDITIONAL
-        flat_cols = flatten_select_cols(
-            payload_schema, "__payload",
-            reserved=frozenset(_STREAM_PERTYPE_META),
-        )
-
-    # write-time provenance stamp on the per-type rows too (reference
-    # TODO FlattenedRosWriter.cpp:183 "we should add a file ID to ALL
-    # entries"): map-side literal, so pertype_with_provenance is a
-    # projection + name resolve — no seqno join. Column order follows
-    # _STREAM_PERTYPE_META — extend that tuple, not this select, when
-    # adding a metadata column.
-    meta_exprs = {
-        "seqno": F.col("seqno"),
-        "time": F.col(time_col).alias("time"),
-        "size": F.col(size_col).alias("size"),
-        "connection_id": F.col("connection_id"),
-        "data": F.col(payload_col).cast("binary").alias("data"),
-        "bag_index": F.lit(bag_index).cast("int").alias("bag_index"),
-        "datatype": F.col(type_col).alias("datatype"),
-    }
-    assert set(meta_exprs) == set(_STREAM_PERTYPE_META)
-    head = [meta_exprs[c] for c in ("seqno", "time", "size")]
-    tail = [
-        meta_exprs[c]
-        for c in ("connection_id", "data", "bag_index", "datatype")
-    ]
-    pertype = resolved.select(*head, *flat_cols, *tail)
-    pertype_path = os.path.join(out_dir, "pertype")
-
-    # every table passes the fingerprint guard BEFORE the first write: a
-    # refused append leaves the layout untouched, not half-appended
-    if mode == "append":
-        for path, df in (
-            (msg_path, messages), (conn_path, connections),
-            (stats_path, stats), (pertype_path, pertype),
-        ):
-            assert_append_compatible(spark, path, df.schema)
-    # every sink below reads seq: one materialization, cached only once
-    # the append is accepted (a refused one must not leave a cache entry)
-    seq.cache()
-    writer_opts = {
-        "maxRecordsPerFile": str(_MAX_RECORDS_PER_FILE),
-        "compression": compression,
-    }
-    # every table is written into staging, then published at once: a
-    # write that fails part-way leaves the layout as it was
-    created = not os.path.isdir(out_dir)
-    staging = lw.make_staging(out_dir)
-    writers = {
-        "Messages": messages.write,
-        # append writes only the genuinely-new dim rows (existing ids kept)
-        "Connections": connections.write,
-        "Stats": stats.write,
-        # sortWithinPartitions, NOT repartition(datatype): hashing on the
-        # type key alone collapses each type onto ONE reducer (a bag is
-        # usually dominated by one blob-heavy type — reference README.md:89)
-        # and shuffles every payload byte. Sorting within the existing
-        # partitions keeps the write fully parallel, zero-shuffle, and the
-        # committer still emits one file per (task, type) under each
-        # partition directory.
-        "pertype": pertype.sortWithinPartitions("datatype")
-        .write.partitionBy("datatype"),
-    }
     try:
-        for table, w in writers.items():
-            w.options(**writer_opts).parquet(os.path.join(staging, table))
-        commits = [
-            {"table": table, "path": os.path.relpath(os.path.join(d, f), staging)}
-            for table in writers
-            for d, _dirs, files in os.walk(os.path.join(staging, table))
-            for f in sorted(files)
-            if f.endswith(".parquet")
-        ]
-        _publish(out_dir, staging, commits, mode)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        if created and not os.listdir(out_dir):
-            os.rmdir(out_dir)
-        seq.unpersist()
-        raise
+        count_schema = T.StructType.fromDDL(
+            f"part int, rows long, bytes long, conn "
+            f"{stream.schema[conn_col].dataType.simpleString()}, "
+            "callerid string, datatype string, first long"
+        )
+        got = rows.mapInArrow(
+            functools.partial(_count_partition, to_arrow_schema(count_schema)),
+            count_schema,
+        ).collect()
+        totals = sorted((r.part, r.rows, r.bytes) for r in got if r.rows is not None)
+        counts = [n for _, n, _ in totals]
+        bases = list(itertools.accumulate(counts, initial=_next_seqno(out_dir, mode)))
+        byte_bases = list(itertools.accumulate((b for *_, b in totals), initial=0))
+        cap = _max_bytes(max_mbs)
 
-    # ---- DDL script (reference S17: vertica_load_tables.sql, utils.h:99-136)
-    tables = {
-        "Messages": messages.schema,
-        "Connections": connections.schema,
-        "Stats": stats.schema,
-    }
-    for row in full_dim.select("datatype").distinct().collect():
-        tables[table_name_for_type(row.datatype)] = pertype.drop("datatype").schema
-    with open(os.path.join(out_dir, "load_tables.sql"), "w") as f:
-        f.write(load_script(tables))
+        # the dim: existing ids kept, the batch's new keys numbered after
+        # them in (conn_col, type_col) order, NULLs first like Spark's sort
+        old: list = []
+        conn_path = os.path.join(out_dir, "Connections")
+        if mode == "append" and os.path.isdir(conn_path):
+            old = [ConnRow(*r) for r in sorted(_read_rows(conn_path))]
+        dim = {}
+        for r in old:
+            dim.setdefault((r.callerid, r.datatype), r.connection_id)
+        keys = {
+            (r.callerid, r.datatype): r.conn for r in got
+            if r.rows is None and (cap is None or byte_bases[r.part] + r.first <= cap)
+        }
+        new = sorted(
+            (k for k in keys if k not in dim),
+            key=lambda k: (keys[k] is not None, keys[k], k[1] is not None, k[1]),
+        )
+        new_rows = []
+        for i, (callerid, datatype) in enumerate(
+            new, max((r.connection_id for r in old), default=-1) + 1
+        ):
+            dim[(callerid, datatype)] = i
+            ident = "|".join(x for x in (callerid, datatype) if x is not None)
+            new_rows.append(ConnRow(
+                i, None if datatype is None else f"/topic/{datatype}", datatype,
+                hashlib.md5(ident.encode()).hexdigest(), "", callerid, None,
+            ))
+        by_type: dict = {}
+        for r in old + new_rows:
+            by_type.setdefault(r.datatype, []).append(r.connection_id)
+        fields = [] if tier is None else list(tier[0].fields)
 
-    count = seq.count()
-    size = seq.agg(F.sum(size_col)).collect()[0][0] or 0.0
-    seq.unpersist()
-    return ConvertInfo(bagname=out_dir, count=count, size=float(size))
+        def job(plan: lw.WritePlan) -> DataFrame:
+            return rows.mapInArrow(
+                _stream_task(plan, bases, byte_bases, cap, counts, dim),
+                lw.COMMIT_SCHEMA,
+            )
+
+        count, size = _write_layout(
+            spark, out_dir, mode=mode, compression=compression,
+            types={t: [fields] for t in by_type},
+            groups=[(t, ids, tier) for t, ids in by_type.items()],
+            small={"Connections": (T.StructType.fromDDL(CONN_SCHEMA), new_rows)},
+            job=job, base_bag_index=bag_index,
+        )
+    finally:
+        rows.unpersist()
+    return ConvertInfo(bagname=out_dir, count=count, size=size)
+
+
+def _count_partition(schema, batches):
+    """The count job of `convert`: one row with the partition's rows and
+    payload bytes, and one per distinct (conn, callerid, datatype) key
+    with the partition's running payload bytes at its first row, so the
+    driver can tell which keys a ``max_mbs`` cap keeps. ``schema`` is the
+    Arrow schema of the rows it yields."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark import TaskContext
+
+    part = TaskContext.get().partitionId()
+    rows = nbytes = 0
+    first: dict = {}
+    for b in batches:
+        if not b.num_rows:
+            continue
+        running = nbytes + np.cumsum(
+            pc.binary_length(b["data"]).to_numpy(), dtype=np.int64
+        )
+        agg = pa.table({
+            "conn": b["conn"], "callerid": b["callerid"],
+            "datatype": b["datatype"], "first": running,
+        }).group_by(["conn", "callerid", "datatype"]).aggregate([("first", "min")])
+        for key in zip(*(agg[c].to_pylist() for c in (
+            "conn", "callerid", "datatype", "first_min"
+        ))):
+            first.setdefault(key[:3], key[3])
+        rows += b.num_rows
+        nbytes = int(running[-1])
+    out = [{"part": part, "rows": rows, "bytes": nbytes}] + [
+        {"part": part, "conn": c, "callerid": k, "datatype": t, "first": f}
+        for (c, k, t), f in first.items()
+    ]
+    yield pa.RecordBatch.from_pylist(out, schema=schema)
+
+
+def _stream_task(plan: lw.WritePlan, bases, byte_bases, cap, counts, dim):
+    """The write job of `convert`: partition *i*'s rows numbered from
+    ``bases[i]``, capped and count-checked (`container.number_rows`),
+    their (callerid, datatype) keys resolved to connection ids through
+    ``dim``, then written by `layout_write.write_task`."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    from rosbag2parquet_spark.sources.container import COUNT_MISMATCH, number_rows
+
+    write = lw.write_task(plan)
+
+    def run(batches):
+        i = TaskContext.get().partitionId()
+
+        def scan_batches():
+            for b in number_rows(
+                batches, bases[i], byte_bases[i], cap, counts[i],
+                lambda: f"stream partition {i}",
+            ):
+                keys = zip(b["callerid"].to_pylist(), b["datatype"].to_pylist())
+                try:
+                    ids = [dim[k] for k in keys]
+                except KeyError as exc:
+                    raise ValueError(
+                        f"stream partition {i} holds the connection key "
+                        f"{exc.args[0]} the count job did not see — "
+                        f"{COUNT_MISMATCH}"
+                    ) from None
+                yield pa.record_batch(
+                    [b["seqno"], b["time_ns"], pa.array(ids, pa.int32()), b["data"]],
+                    names=["seqno", "time_ns", "conn_id", "data"],
+                )
+
+        yield from write(scan_batches())
+
+    return run
 
 
 def convert_bag(
@@ -1072,50 +991,25 @@ def _write_bag_tables(
     sidecars: "dict[str, list] | None" = None,
     base_bag_index: int = 0,
 ) -> "tuple[int, float]":
-    """The one tail of every bag convert: ``scan`` is the numbered scan
-    plan (`container.plan_scan` with ``seqno=True``: split bases 0.. over
-    this batch, and any ``max_bytes`` cap already planned). Writes
-    ``Messages``, ``Connections``, ``Stats``, one flattened typed table
-    per datatype, the ``sidecars`` tables (name -> rows, `_sidecar_rows`)
-    and the DDL script, and returns the batch's (count, payload bytes).
+    """The tail of every bag convert: ``scan`` is the numbered scan plan
+    (`container.plan_scan` with ``seqno=True``: split bases 0.. over this
+    batch, and any ``max_bytes`` cap already planned). Checks the type
+    identities, picks each type's decode tier, and writes the layout
+    through `_write_layout` in ONE Spark job of one task per split: task
+    *i* reads split *i* (`container.read_split`), then decodes and writes
+    Messages and every per-type table. Returns the batch's (count,
+    payload bytes); a failed scan count check surfaces as its ValueError.
 
-    Under append the split bases shift past the layout's max seqno, read
-    from the footers (seqno is the cross-table join key, unique within
-    the output, FlattenedRosWriter.cpp:57). Then ONE Spark job of one
-    task per split (`layout_write.write_task`): task *i* reads split *i*
-    (`container.read_split`), then decodes and writes Messages and every
-    per-type table, streaming its rows into a staging dir and committing
-    its files and per-connection Stats partials; the driver writes the
-    small tables from rows it holds and publishes the committed files
-    (`layout_write.publish`). Count and size come from the commit rows. A
-    failed scan count check surfaces as its ValueError.
-
-    ``mode='append'`` adds the batch to an existing layout: every touched
-    table passes the schema-fingerprint guard (the reference's md5 identity
-    check, FlattenedRosWriter.cpp:287) BEFORE the job runs, new per-type
-    tables create their own dirs, and ``conns_write_rows`` (the
+    Under append the split bases shift past the layout's max seqno (read
+    from the footers; seqno is the cross-table join key, unique within
+    the output, FlattenedRosWriter.cpp:57), and ``conns_write_rows`` (the
     genuinely-NEW dim rows only) lands on disk while the full
     ``conn_rows`` still drive the per-type decode. Both are driver-held
-    rows (the reference snapshots the dim at open). A convert that fails
-    before the publish — a refused append, an undecodable payload under
-    ``on_error='fail'`` — leaves the layout as it was."""
+    rows (the reference snapshots the dim at open). ``sidecars`` are the
+    side-car tables (name -> rows, `_sidecar_rows`)."""
     from rosbag2parquet_spark.sources.container import CONN_SCHEMA
     from rosbag2parquet_spark.sources.decode import decode_columns, payload_tier
 
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite|append, got {mode!r}")
-    _check_compression(compression)
-    msg_path = os.path.join(out_dir, "Messages")
-    if mode == "append":
-        prev_max = lw.footer_max(msg_path, "seqno")
-        if prev_max is not None:
-            scan = scan._replace(
-                bases=[b + int(prev_max) + 1 for b in scan.bases]
-            )
-
-    # ---- per-type grouping + identity validation BEFORE any write: a
-    # refused append (md5 disagreement, schema drift) must leave the
-    # existing layout untouched, not half-appended
     by_type: dict[str, list] = {}
     for c in conn_rows:
         by_type.setdefault(c.datatype, []).append(c)
@@ -1137,38 +1031,130 @@ def _write_bag_tables(
                 "and not every md5sum is known"
             )
 
-    # ---- one flattened typed table per datatype (lazy per-type handlers,
-    # reference FlattenedRosWriter.cpp:273-289): the decode tiers and every
-    # table schema are built and VALIDATED here, so every refusal — strict
-    # fingerprint mismatch, evolve type conflict — fires before any file is
-    # written. Column order per MessageTable.cpp:326-343 (seqno, flattened
-    # payload, connection_id, raw blob) plus the trailing r11 provenance
-    # stamp, which rides the scan batch like seqno and the blob, so
-    # stamping per-type tables is map-side free.
-    schemas: "dict[str, T.StructType]" = {}
+    # one decode per DEFINITION VERSION: identical everywhere except evolve
+    # mode, where connections of the same type may carry different defs —
+    # each group decodes with ITS def and the table takes the union of
+    # their columns
+    types: dict = {}
     groups: list = []
     for datatype, cs in sorted(by_type.items()):
-        table = table_name_for_type(datatype)
-        # one decode per DEFINITION VERSION: identical everywhere except
-        # evolve mode, where connections of the same type may carry
-        # different defs — each group decodes with ITS def and the table
-        # takes the union of their columns
         defgroups: dict[str, list] = {}
         for c in cs:
             defgroups.setdefault(c.msg_def, []).append(c)
-        versions = []
         for msg_def, gcs in sorted(defgroups.items()):
             tier = payload_tier(
                 datatype, msg_def, serialization=serialization,
                 arrays=arrays, unsigned=unsigned,
             )
-            versions.append(
+            types.setdefault(datatype, []).append(
                 [] if tier is None
                 else decode_columns(tier[0], tier[1], on_error=on_error)[0]
             )
-            groups.append(
-                lw.Group(table, [c.connection_id for c in gcs], tier)
+            groups.append((datatype, [c.connection_id for c in gcs], tier))
+
+    first = _next_seqno(out_dir, mode)
+    scan = scan._replace(bases=[b + first for b in scan.bases])
+    stamps, le_ids = _header_stamp_plan(conn_rows, serialization)
+    small = {
+        "Connections": (
+            T.StructType.fromDDL(CONN_SCHEMA),
+            conn_rows if conns_write_rows is None else conns_write_rows,
+        ),
+        **{
+            name: (T.StructType.fromDDL(_SIDECAR_SCHEMAS[name]), rows)
+            for name, rows in (sidecars or {}).items()
+        },
+    }
+    return _write_layout(
+        spark, out_dir, mode=mode, compression=compression, on_error=on_error,
+        evolve=evolve, types=types, groups=groups, small=small,
+        job=lambda plan: split_job(spark, scan, lw.write_task(plan), lw.COMMIT_SCHEMA),
+        base_bag_index=base_bag_index, stamps=stamps, le_ids=le_ids, scan=scan,
+    )
+
+
+def _next_seqno(out_dir: str, mode: str) -> int:
+    """The batch's first seqno: 0, or under append one past the layout's
+    max, read from the Messages footers."""
+    if mode != "append":
+        return 0
+    prev = lw.footer_max(os.path.join(out_dir, "Messages"), "seqno")
+    return 0 if prev is None else int(prev) + 1
+
+
+def _table_names(datatypes) -> "dict[str, str]":
+    """Each datatype's per-type table (`table_name_for_type`). A datatype
+    is refused when its table would be a layout table
+    (`layout_write.META_TABLES`), empty or hidden (leading ``_`` or
+    ``.``: readers skip it), or the table of another datatype."""
+    owner: "dict[str, str]" = {}
+    for datatype in datatypes:
+        table = table_name_for_type(datatype) if datatype else ""
+        if not table or table.startswith(("_", ".")) or table in lw.META_TABLES:
+            raise ValueError(
+                f"datatype {datatype!r} cannot have a per-type table: "
+                f"{table!r} is empty, hidden or a layout table"
             )
+        if table in owner:
+            raise ValueError(
+                f"datatypes {owner[table]!r} and {datatype!r} both name the "
+                f"per-type table {table!r}"
+            )
+        owner[table] = datatype
+    return {datatype: table for table, datatype in owner.items()}
+
+
+def _write_layout(
+    spark: SparkSession,
+    out_dir: str,
+    *,
+    mode: str,
+    compression: str,
+    types: dict,
+    groups: list,
+    small: dict,
+    job,
+    on_error: str = "fail",
+    evolve: bool = False,
+    base_bag_index: int = 0,
+    stamps: list = (),
+    le_ids: tuple = (),
+    scan: "ScanPlan | None" = None,
+) -> "tuple[int, float]":
+    """The one layout write of every convert. ``types`` maps each datatype
+    to the decoded value columns of each of its definition versions;
+    ``groups`` lists ``(datatype, connection ids, decode tier)``; ``small``
+    maps the driver-held tables (Connections, the side-cars) to
+    ``(schema, rows)``; ``job(plan)`` is the DataFrame of
+    `layout_write.write_task` commit rows. Writes ``Messages``, one
+    flattened typed table per datatype, ``Stats``, the small tables and
+    the DDL script, and returns the batch's (count, payload bytes) from
+    the commit rows.
+
+    Every refusal fires before the job: a datatype without a table of
+    its own (`_table_names`), and under ``mode='append'`` a table whose
+    schema fingerprint differs from the layout's (the reference's md5
+    identity check, FlattenedRosWriter.cpp:287; ``evolve`` relaxes it to
+    additive columns). The tasks stream their rows into a staging dir and
+    commit their files and per-connection Stats partials; the driver
+    writes the small tables from rows it holds and publishes the
+    committed files (`layout_write.publish`). A convert that fails before
+    the publish — a refused append, an undecodable payload under
+    ``on_error='fail'`` — leaves the layout as it was."""
+    _check_options(mode, compression)
+    tables = _table_names(types)
+
+    # ---- one flattened typed table per datatype (lazy per-type handlers,
+    # reference FlattenedRosWriter.cpp:273-289): every table schema is
+    # built and VALIDATED here, so every refusal — strict fingerprint
+    # mismatch, evolve type conflict — fires before any file is written.
+    # Column order per MessageTable.cpp:326-343 (seqno, flattened payload,
+    # connection_id, raw blob) plus the trailing r11 provenance stamp,
+    # which rides the scan batch like seqno and the blob, so stamping
+    # per-type tables is map-side free.
+    schemas: "dict[str, T.StructType]" = {}
+    for datatype, versions in sorted(types.items()):
+        table = tables[datatype]
         schema = T.StructType(
             [T.StructField("seqno", T.LongType(), False)]
             + _union_fields(datatype, versions)
@@ -1210,32 +1196,17 @@ def _write_bag_tables(
         schemas[table] = schema
 
     messages = lw.MESSAGES_SCHEMA
-    small = {
-        "Connections": (
-            T.StructType.fromDDL(CONN_SCHEMA),
-            conn_rows if conns_write_rows is None else conns_write_rows,
-        ),
-        **{
-            name: (T.StructType.fromDDL(_SIDECAR_SCHEMAS[name]), rows)
-            for name, rows in (sidecars or {}).items()
-        },
-    }
     if mode == "append":
-        assert_append_compatible(spark, msg_path, messages)
-        # Stats and the side-cars: the same fingerprint guard as every
-        # other table — the one provenance shape appends across batches
-        assert_append_compatible(
-            spark, os.path.join(out_dir, "Stats"), lw.STATS_SCHEMA
-        )
-        for name, (schema, _rows) in small.items():
-            if name != "Connections":
-                assert_append_compatible(
-                    spark, os.path.join(out_dir, name), schema
-                )
+        # Messages, Stats and the side-cars: the same fingerprint guard —
+        # the one provenance shape appends across batches
+        for name, schema in (
+            ("Messages", messages), ("Stats", lw.STATS_SCHEMA),
+            *((n, sch) for n, (sch, _) in small.items() if n != "Connections"),
+        ):
+            assert_append_compatible(spark, os.path.join(out_dir, name), schema)
     schemas = {"Messages": messages, **schemas}
 
-    # ---- the one job: each task reads, decodes and writes its split
-    stamps, le_ids = _header_stamp_plan(conn_rows, serialization)
+    # ---- the one job: each task decodes and writes its rows
     version = spark.version
     created = not os.path.isdir(out_dir)
     staging = lw.make_staging(out_dir)
@@ -1247,16 +1218,14 @@ def _write_bag_tables(
         on_error=on_error,
         base_bag_index=base_bag_index,
         schemas={t: lw.arrow_schema(s, version) for t, s in schemas.items()},
-        groups=groups,
-        stamps=stamps,
-        le_ids=le_ids,
+        groups=[lw.Group(tables[d], ids, tier) for d, ids, tier in groups],
+        stamps=list(stamps),
+        le_ids=tuple(le_ids),
         scan=scan,
     )
     try:
         try:
-            done = split_job(
-                spark, scan, lw.write_task(plan), lw.COMMIT_SCHEMA
-            ).collect()
+            done = job(plan).collect()
         except PySparkException as exc:
             raise_count_error(exc)
             raise
@@ -1265,7 +1234,7 @@ def _write_bag_tables(
         if failed:
             raise ValueError(f"layout write failed: {failed[0]}")
         stats = lw.stats_rows(commits)
-        small["Stats"] = (lw.STATS_SCHEMA, stats)
+        small = {**small, "Stats": (lw.STATS_SCHEMA, stats)}
         written = {r["table"] for r in commits if r["path"] is not None}
         for table, schema in schemas.items():
             # a table no task wrote still gets its (empty) file where it

@@ -32,12 +32,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rosbag2parquet_spark.layout_write import META_TABLES
 from rosbag2parquet_spark.sources.catalog import read_parquet
 
-#: layout directories that are not per-type message tables
-_META_TABLES = {
-    "Messages", "Connections", "Attachments", "Metadata", "Stats", "Bags",
-}
 
 #: default target bytes of payload per exported part file
 _TARGET_PART_BYTES = 256 << 20
@@ -56,7 +53,7 @@ def _type_tables(layout_dir: str) -> list[str]:
     out = []
     for name in sorted(os.listdir(layout_dir)):
         p = os.path.join(layout_dir, name)
-        if os.path.isdir(p) and name not in _META_TABLES:
+        if os.path.isdir(p) and name not in META_TABLES:
             out.append(p)
     return out
 

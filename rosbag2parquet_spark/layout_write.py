@@ -1,13 +1,14 @@
-"""The layout write of every bag convert: one Spark job, then renames.
+"""The layout write of every convert: one Spark job, then renames.
 
 The reference writes every table in one pass over the bag, buffering each
 type's rows into row groups (FlattenedRosWriter.cpp:226-271,
 TableBuffer.cpp:10-58, 164-174). Here one job of one task per scan split
-does the same (:func:`write_task`): task *i* reads split *i* of the
-driver's scan plan itself (`sources.container.read_split`), so payload
-bytes go from the file to the writers without passing through the JVM,
-and routes each Arrow batch by connection to the type's decode tier
-in-process
+does the same (:func:`write_task`): a bag convert's task *i* reads split
+*i* of the driver's scan plan itself (`sources.container.read_split`), so
+payload bytes go from the file to the writers without passing through the
+JVM; ``convert()`` feeds each task the numbered rows of one partition of
+its stream. The task routes each Arrow batch by connection to the type's
+decode tier in-process
 (`sources.decode.decode_columns`), streams ``Messages`` and every
 per-type table through pyarrow ``ParquetWriter``s into a staging dir under
 the layout, and yields one commit row per file it wrote plus a
@@ -67,6 +68,11 @@ COMMIT_SCHEMA = T.StructType([
 
 STATS = "Stats"
 MESSAGES = "Messages"
+
+#: the layout's tables that are not per-type message tables
+META_TABLES = frozenset(
+    {"Messages", "Connections", "Stats", "Bags", "Attachments", "Metadata"}
+)
 
 #: rows buffer per table up to this many bytes before they land as one
 #: row group (Spark's ``parquet.block.size``)

@@ -214,43 +214,6 @@ def flatten_struct_cols(df: DataFrame, prefix_sep: str = "_") -> DataFrame:
     return df.select(*expand(df.schema, ""))
 
 
-def flatten_select_cols(
-    schema: T.StructType,
-    root: str,
-    prefix_sep: str = "_",
-    reserved: "frozenset[str] | None" = None,
-) -> list:
-    """Select-list for recursively flattening the struct column ``root``
-    whose type is ``schema``: one aliased column per leaf, names joined with
-    ``prefix_sep`` (reference naming MessageTable.cpp:298-301). Shared by
-    :func:`flatten_struct_cols` consumers that flatten a single payload
-    struct (e.g. the converter's per-type tables). ``reserved`` applies the
-    bag decoders' collision rule (msgdef._sanitize_flat_names): a leaf name
-    that would capture a table metadata column gains trailing underscores
-    until unique — so the converter's fixed columns are unconditional."""
-
-    def walk(s: T.StructType, path: str, name: str) -> list:
-        cols = []
-        for f in s.fields:
-            p = f"{path}.{f.name}"
-            n = f"{name}{prefix_sep}{f.name}" if name else f.name
-            if isinstance(f.dataType, T.StructType):
-                cols.extend(walk(f.dataType, p, n))
-            else:
-                cols.append((p, n))
-        return cols
-
-    pairs = walk(schema, root, "")
-    seen: set = set()
-    out = []
-    for p, n in pairs:
-        while (reserved is not None and n in reserved) or n in seen:
-            n += "_"
-        seen.add(n)
-        out.append(F.col(p).alias(n))
-    return out
-
-
 def q_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blob decode + flatten (reference E7 blob round-trip,
     rosbag2parquet_test.cpp:262-275 — deserialize the raw ``data`` column

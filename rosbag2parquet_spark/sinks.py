@@ -9,14 +9,17 @@ reader and assert content).
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.convert import convert, pertype_with_provenance
 from rosbag2parquet_spark.sources.catalog import load_table, publish_scratch
+from rosbag2parquet_spark.sources.msgdef import table_name_for_type
 
 _SEQ_CONN_SQL = """
 WITH seq AS (
@@ -36,7 +39,7 @@ conns AS (
 #: the /tmp scratch below persists ACROSS processes, and a stale
 #: pre-change layout under the old key would feed the driver's sink gate
 #: a wrong schema
-LAYOUT_CACHE_VERSION = 6  # the layouts cached here are convert() outputs
+LAYOUT_CACHE_VERSION = 7  # the layouts cached here are convert() outputs
 
 
 def _cached_layout(sf_dir: str, suffix: str, build) -> str:
@@ -81,27 +84,27 @@ def _converted_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def q_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type demultiplexer (reference GetHandler, FlattenedRosWriter.cpp:
-    273-289): after the partitioned write, reading ONE type touches one
-    partition directory — the partition filter prunes all others (the
-    reference's per-type scan isolation, README.md:2-4)."""
+    273-289): every type lands in its own table, so reading ONE type
+    touches only its directory (the reference's per-type scan isolation,
+    README.md:2-4); its rows join ``Messages`` on seqno for the time and
+    size, which live there."""
     out = _converted_dir(spark, sf_dir)
-    pertype = spark.read.parquet(os.path.join(out, "pertype"))
-    return (
-        pertype.filter(F.col("datatype") == "purchase")
-        .select(
-            "seqno",
-            F.unix_micros("time").alias("time_us"),
-            "size",
-            "k",  # flattened payload field (S5 applied inside the converter)
-            "connection_id",
-        )
+    purchase = spark.read.parquet(os.path.join(out, "purchase"))
+    messages = spark.read.parquet(os.path.join(out, "Messages"))
+    return purchase.join(messages.select("seqno", "time", "size"), "seqno").select(
+        "seqno",
+        F.unix_micros("time").alias("time_us"),
+        "size",
+        "k",  # flattened payload field (S5 applied inside the converter)
+        purchase["connection_id"],
     )
 
 
+#: the converter's ``size`` is the payload's byte length (UTF-8 here)
 ORACLE_DEMUX = (
     _SEQ_CONN_SQL
     + """
-SELECT seqno, epoch_us(ts) AS time_us, value AS size,
+SELECT seqno, epoch_us(ts) AS time_us, CAST(strlen(props) AS INTEGER) AS size,
        CAST(json_extract(props, '$.k') AS BIGINT) AS k, connection_id
 FROM seq JOIN conns USING (user_id, event_type)
 WHERE event_type = 'purchase'
@@ -114,11 +117,11 @@ def q_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     TableBuffer.cpp:10-162): the ``Messages`` table as written to disk and
     read back — the reference's exact (seqno, time_sec, time_nsec, size,
     connection_id) layout — plus the nullable header-stamp pair every
-    converter emits since r8 (reference TODO #6; NULL here: SBAG
-    payloads are JSON, no leading ros Header), the derived TimestampType
-    (TODO #7) and the r10 file-provenance ordinal (reference TODO
-    FlattenedRosWriter.cpp:183; NULL here: the input is a stream, not a
-    bag file) — must survive the sink."""
+    converter emits since r8 (reference TODO #6; NULL here: the payloads
+    are JSON, no leading ros Header), the derived TimestampType (TODO #7)
+    and the r10 file-provenance ordinal (reference TODO
+    FlattenedRosWriter.cpp:183; 0 here: one batch) — must survive the
+    sink."""
     out = _converted_dir(spark, sf_dir)
     return spark.read.parquet(os.path.join(out, "Messages"))
 
@@ -158,14 +161,22 @@ def _converted_fleet_dir(spark: SparkSession, sf_dir: str) -> str:
 def q_provenance_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Provenance surfaced END TO END (reference TODO
     FlattenedRosWriter.cpp:183, SURVEY §7.1 r11 #3): a two-batch fleet
-    conversion, then `pertype_with_provenance` — per-type rows with the
-    bag_index each batch stamped at write time — aggregated per
-    (bag_index, datatype). The seqno ranges prove the append
+    conversion, then `pertype_with_provenance` over each per-type table —
+    its rows with the bag_index each batch stamped at write time, tagged
+    with the table's datatype — unioned and aggregated per (bag_index,
+    datatype). The seqno ranges prove the append
     continued the global order (batch 1's lo = batch 0's hi + 1 within
     interleaved types); the oracle recomputes the midpoint split and the
     global rank from the raw events."""
     out = _converted_fleet_dir(spark, sf_dir)
-    pt = pertype_with_provenance(spark, out, "pertype")
+    conns = pq.read_table(os.path.join(out, "Connections"), columns=["datatype"])
+    types = sorted(set(conns.column(0).to_pylist()))
+    pt = functools.reduce(DataFrame.unionByName, [
+        pertype_with_provenance(spark, out, table_name_for_type(t)).select(
+            "bag_index", "seqno", F.lit(t).alias("datatype")
+        )
+        for t in types
+    ])
     return (
         pt.groupBy("bag_index", "datatype")
         .agg(
@@ -202,11 +213,11 @@ ORACLE_SINK = (
 SELECT seqno,
        CAST(epoch_us(ts) // 1000000 AS INTEGER) AS time_sec,
        CAST((epoch_us(ts) % 1000000) * 1000 AS INTEGER) AS time_nsec,
-       value AS size, connection_id,
+       CAST(strlen(props) AS INTEGER) AS size, connection_id,
        CAST(NULL AS INTEGER) AS header_stamp_sec,
        CAST(NULL AS INTEGER) AS header_stamp_nsec,
        ts AS time,
-       CAST(NULL AS INTEGER) AS bag_index
+       0 AS bag_index
 FROM seq JOIN conns USING (user_id, event_type)
 """
 )

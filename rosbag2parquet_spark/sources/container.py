@@ -426,26 +426,24 @@ def _globalize(plan: ScanPlan, batch, bag: int):
     )
 
 
-def read_split(plan: ScanPlan, i: int):
-    """The Arrow batches of split ``i``: its units read in file order, the
-    exact row filter applied, fleet columns added, rows numbered from the
-    split's base, and the rows past the ``max_bytes`` cap dropped (the
+def number_rows(batches, base, byte_base, cap, count, where):
+    """The rows of one task's ``batches`` (each with a ``data`` column),
+    numbered from ``base`` (None = not numbered) in a trailing ``seqno``,
+    and the rows past the ``cap`` on payload bytes dropped (the
     reference's byte-bounded scan, rosbag2parquet.cpp:56-58: the running
-    sum starts at the split's byte base, so a split past the cap reads
-    nothing and the split holding it stops there). A split read to its
-    end checks its rows against its planned count. Only split ``i``'s
-    bytes are read, so a retried task reads what its first attempt did."""
+    sum starts at ``byte_base``, so a task past the cap reads nothing and
+    the task holding it stops there). Read to their end, the rows must be
+    ``count`` (None = unchecked): a mismatch raises the count-check error,
+    worded from ``where()``."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    cap = plan.max_bytes
-    spent = 0 if plan.byte_bases is None else plan.byte_bases[i]
+    spent = byte_base or 0
     if cap is not None and spent > cap:
         return
     walked = 0
-    for bag, batch in _walk(plan, plan.splits[i]):
-        batch = _keep(plan.filters, batch)
+    for batch in batches:
         if not batch.num_rows:
             continue
         capped = False
@@ -457,10 +455,8 @@ def read_split(plan: ScanPlan, i: int):
                 batch, capped = batch.slice(0, kept), True
             else:
                 spent = int(running[-1])
-        if plan.fleet:
-            batch = _globalize(plan, batch, bag)
-        if plan.bases is not None:
-            lo = plan.bases[i] + walked
+        if base is not None:
+            lo = base + walked
             seqno = np.arange(lo, lo + batch.num_rows, dtype=np.int64)
             batch = batch.append_column("seqno", pa.array(seqno))
         walked += batch.num_rows
@@ -468,14 +464,38 @@ def read_split(plan: ScanPlan, i: int):
             yield batch
         if capped:
             return
-    if plan.counts is not None and walked != plan.counts[i]:
+    if count is not None and walked != count:
+        raise ValueError(
+            f"{where()} holds {walked} messages but the count job counted "
+            f"{count} — {COUNT_MISMATCH}"
+        )
+
+
+def read_split(plan: ScanPlan, i: int):
+    """The Arrow batches of split ``i``: its units read in file order, the
+    exact row filter applied, fleet columns added, then numbered, capped
+    and checked against the split's planned count (:func:`number_rows`).
+    Only split ``i``'s bytes are read, so a retried task reads what its
+    first attempt did."""
+
+    def batches():
+        for bag, batch in _walk(plan, plan.splits[i]):
+            batch = _keep(plan.filters, batch)
+            if batch.num_rows:
+                yield _globalize(plan, batch, bag) if plan.fleet else batch
+
+    def where() -> str:
         bag, key, _ = plan.splits[i][0]
         path, _, label, _, _ = plan.bags[bag]
-        raise ValueError(
-            f"{path}: the split from {label.format(*key)} holds {walked} "
-            f"messages but the count job counted {plan.counts[i]} — "
-            f"{COUNT_MISMATCH}"
-        )
+        return f"{path}: the split from {label.format(*key)}"
+
+    def at(values):
+        return None if values is None else values[i]
+
+    yield from number_rows(
+        batches(), at(plan.bases), at(plan.byte_bases), plan.max_bytes,
+        at(plan.counts), where,
+    )
 
 
 def read_splits(plan: ScanPlan, ids):

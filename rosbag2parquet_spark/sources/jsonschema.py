@@ -185,16 +185,30 @@ def json_tier(msg_def: str) -> tuple:
     names sanitized like every other tier) and a per-row ``json.loads``
     walk. ``arrays``/``unsigned`` do not apply (JSON arrays are always
     native; JSON numbers carry no signedness)."""
-    from rosbag2parquet_spark.sources.msgdef import _sanitize_flat_names
-
     text = msg_def[len(JSON_DEF_PREFIX):] if msg_def.startswith(
         JSON_DEF_PREFIX
     ) else msg_def
-    struct = spark_schema_from_jsonschema(text)
+    return struct_tier(spark_schema_from_jsonschema(text))
+
+
+def struct_tier(struct: T.StructType) -> tuple:
+    """The :func:`json_tier` of JSON payloads typed by ``struct``, which
+    may hold only this tier's types: long, double, string, boolean, arrays
+    of those, and nested structs; any other type raises ``ValueError``."""
+    from rosbag2parquet_spark.sources.msgdef import _sanitize_flat_names
+
+    scalars = tuple(type(t) for t in _SCALARS.values())
+    leaves = _flat_leaves(struct)
+    for _p, fl, t in leaves:
+        elem = t.elementType if isinstance(t, T.ArrayType) else t
+        if not isinstance(elem, scalars):
+            raise ValueError(
+                f"payload field {fl!r}: {t.simpleString()} is outside the "
+                "JSON decode tier (long, double, string, boolean, arrays "
+                "of those, nested structs)"
+            )
     flat = T.StructType(
-        _sanitize_flat_names(
-            [T.StructField(fl, t, True) for _p, fl, t in _flat_leaves(struct)]
-        )
+        _sanitize_flat_names([T.StructField(fl, t, True) for _p, fl, t in leaves])
     )
     return flat, make_json_decoder(struct), None
 

@@ -3,10 +3,11 @@
 ``writeStream.partitionBy`` with a checkpoint (exactly-once file sink: the
 offset log + file-commit manifest make replays idempotent).
 
-This is the converter's demux write running continuously instead of batch —
-the same partitioned layout drops out, and a batch reader gets partition
-pruning over it immediately (reference's per-type scan isolation,
-README.md:2-4, now with files arriving live)."""
+This is the converter's demux running continuously instead of batch, but
+not its layout: the batch converters write one table dir per type, while
+this sink writes one table partitioned by ``datatype``, over which a
+batch reader gets partition pruning immediately (reference's per-type
+scan isolation, README.md:2-4, now with files arriving live)."""
 
 from __future__ import annotations
 

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from rosbag2parquet_spark.convert import convert
 from rosbag2parquet_spark.sources.catalog import load_table
+from rosbag2parquet_spark.sources.msgdef import table_name_for_type
 from tests.conftest import SF_DIR, layout_files
 
 
@@ -24,6 +25,20 @@ def converted(spark, tmp_path_factory):
         spark, events, out, order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA
     )
     return out, info, events
+
+
+def _pertype(spark, out):
+    """Every per-type table of the layout ``out``, unioned, with its
+    datatype (from Connections) as a trailing column."""
+    from functools import reduce
+
+    conns = spark.read.parquet(os.path.join(out, "Connections"))
+    types = sorted({r.datatype for r in conns.select("datatype").collect()})
+    return reduce(lambda a, b: a.unionByName(b), [
+        spark.read.parquet(os.path.join(out, table_name_for_type(t)))
+        .withColumn("datatype", F.lit(t))
+        for t in types
+    ])
 
 
 def test_summary_counts(converted, spark):
@@ -42,6 +57,7 @@ def test_tables_exist_with_schema(converted, spark):
     ]
     assert set(connections.columns) == {
         "connection_id", "topic", "datatype", "md5sum", "msg_def", "callerid",
+        "latching",
     }
     # one row per message / per connection (ref test :208-211, :229-231)
     assert messages.count() == 1000
@@ -68,7 +84,7 @@ def test_cross_table_key_consistency(converted, spark):
     out, _, _ = converted
     messages = spark.read.parquet(os.path.join(out, "Messages"))
     connections = spark.read.parquet(os.path.join(out, "Connections"))
-    pertype = spark.read.parquet(os.path.join(out, "pertype"))
+    pertype = _pertype(spark, out)
     # every message's connection_id resolves
     dangling = messages.join(
         connections, "connection_id", "left_anti"
@@ -89,23 +105,26 @@ def test_cross_table_key_consistency(converted, spark):
 
 
 def test_pertype_partition_layout(converted, spark):
-    """The demux write produces one partition dir per type (ref
-    FlattenedRosWriter.cpp:273-289 routing; README.md:2-4 scan isolation)."""
+    """The demux write produces one table per type, named by
+    `table_name_for_type` (ref FlattenedRosWriter.cpp:273-289 routing,
+    MessageTable.cpp:315; README.md:2-4 scan isolation), and nothing
+    else: no partitioned ``pertype`` table."""
     out, _, events = converted
     types = {r.event_type for r in events.select("event_type").distinct().collect()}
     dirs = {
-        d.split("=", 1)[1]
-        for d in os.listdir(os.path.join(out, "pertype"))
-        if d.startswith("datatype=")
+        d for d in os.listdir(out)
+        if os.path.isdir(os.path.join(out, d)) and not d.startswith(("_", "."))
     }
-    assert dirs == types
+    assert dirs == {"Messages", "Connections", "Stats"} | {
+        table_name_for_type(t) for t in types
+    }
 
 
 def test_blob_round_trip(converted, spark):
     """The raw payload survives the sink byte-for-byte and decodes back
     (ref test :262-275)."""
     out, _, events = converted
-    pertype = spark.read.parquet(os.path.join(out, "pertype"))
+    pertype = _pertype(spark, out)
     back = pertype.select("seqno", F.decode(F.col("data"), "utf-8").alias("props"))
     orig = events.select(
         F.col("props").alias("orig_props"),
@@ -129,17 +148,17 @@ def test_pertype_layout_and_flattened_payload(converted, spark):
     bag_index provenance stamp, TODO FlattenedRosWriter.cpp:183) and S5
     flatten applied to the payload: the flattened `k` column equals the
     JSON-decoded blob."""
-    out, _, _ = converted
-    pertype = spark.read.parquet(os.path.join(out, "pertype"))
-    cols = [c for c in pertype.columns if c != "datatype"]
-    assert cols[0] == "seqno"
-    assert cols[-3:] == ["connection_id", "data", "bag_index"]
-    assert "k" in cols
-    mismatch = pertype.filter(
-        F.col("k")
-        != F.get_json_object(F.decode(F.col("data"), "utf-8"), "$.k").cast("long")
-    ).count()
-    assert mismatch == 0
+    out, _, events = converted
+    for t in {r.event_type for r in events.select("event_type").distinct().collect()}:
+        pertype = spark.read.parquet(os.path.join(out, table_name_for_type(t)))
+        assert pertype.columns == [
+            "seqno", "k", "connection_id", "data", "bag_index",
+        ]
+        mismatch = pertype.filter(
+            F.col("k")
+            != F.get_json_object(F.decode(F.col("data"), "utf-8"), "$.k").cast("long")
+        ).count()
+        assert mismatch == 0
 
 
 def test_ddl_script_written(converted):
@@ -211,8 +230,8 @@ def test_append_requires_identical_schema(spark, tmp_path):
         )
 
 
-def test_checked_union_guards_schema():
-    from rosbag2parquet_spark.convert import checked_union, schema_fingerprint
+def test_schema_fingerprint_ignores_nullability():
+    from rosbag2parquet_spark.convert import schema_fingerprint
     from pyspark.sql import types as T
 
     a = T.StructType([T.StructField("x", T.LongType(), False)])
@@ -440,11 +459,10 @@ def test_refused_append_leaves_the_layout_unchanged(spark, tmp_path):
 def test_failed_pertype_write_leaves_the_layout_unchanged(
     spark, tmp_path, monkeypatch, mode
 ):
-    """Every table is staged, then published at once: a convert whose last
-    write (the partitioned ``pertype``) fails after Messages, Connections
-    and Stats were written leaves every layout file byte-identical."""
-    from pyspark.sql import DataFrameWriter
-
+    """Every table is staged, then published at once: a convert whose
+    driver-side table write fails after the job wrote Messages and every
+    per-type table leaves every layout file byte-identical."""
+    from rosbag2parquet_spark import layout_write as lw
     from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
 
     out = str(tmp_path / "lay")
@@ -454,14 +472,11 @@ def test_failed_pertype_write_leaves_the_layout_unchanged(
         order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA,
     )
     before = layout_files(out)
-    real = DataFrameWriter.parquet
 
-    def parquet(self, path, *args, **kwargs):
-        if os.path.basename(path) == "pertype":
-            raise RuntimeError("injected pertype write failure")
-        return real(self, path, *args, **kwargs)
+    def write_rows(*args, **kwargs):
+        raise RuntimeError("injected table write failure")
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(lw, "write_rows", write_rows)
     with pytest.raises(RuntimeError, match="injected"):
         convert(
             spark, events, out, order_cols=["ts", "event_id"],
@@ -516,3 +531,88 @@ def test_publish_scratch_race_drops_loser_and_reraises_real_errors(tmp_path):
     with pytest.raises(OSError):
         publish_scratch(str(work2), str(tmp_path / "no_parent" / "x"))
     assert work2.exists()  # nothing silently discarded on a real error
+
+
+def test_convert_ddl_names_exactly_the_table_dirs(spark, tmp_path):
+    """An overwrite and an append of `convert` each leave
+    ``load_tables.sql`` naming exactly the layout's table dirs: the
+    append adds the tables of its new types, and an overwrite with fewer
+    types drops the others."""
+    import re
+
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+
+    out = str(tmp_path / "lay")
+    events = load_table(spark, SF_DIR, "events").limit(50)
+
+    def run(batch, mode):
+        convert(
+            spark, batch, out, order_cols=["ts", "event_id"],
+            payload_schema=PROPS_SCHEMA, mode=mode,
+        )
+        dirs = {
+            d for d in os.listdir(out)
+            if os.path.isdir(os.path.join(out, d)) and not d.startswith(("_", "."))
+        }
+        with open(os.path.join(out, "load_tables.sql")) as f:
+            ddl = set(re.findall(r"CREATE TABLE IF NOT EXISTS (\S+)", f.read()))
+        assert ddl == dirs
+        return dirs - {"Messages", "Connections", "Stats"}
+
+    assert run(events.filter(F.col("event_type") == "click"), "overwrite") == {"click"}
+    everything = {r.event_type for r in events.select("event_type").distinct().collect()}
+    assert len(everything) > 1
+    assert run(events, "append") == everything
+    assert run(events.filter(F.col("event_type") == "view"), "overwrite") == {"view"}
+
+
+@pytest.mark.parametrize(
+    "types, payload_schema, err",
+    [
+        ("Stats", "k map<string,long>", "outside the JSON decode tier"),
+        ("demo", "k long", "both name the per-type table"),
+        ("Stats", "k long", "is empty, hidden or a layout table"),
+    ],
+    ids=["map-payload", "colliding-types", "layout-table-type"],
+)
+def test_convert_refusals_leave_the_layout_unchanged(
+    spark, tmp_path, types, payload_schema, err
+):
+    """A payload schema outside the JSON tier is refused before any job,
+    and so is a type whose table would be another type's (``demo/P`` and
+    ``demo.P``) or a layout table (``Stats``); the layout stays
+    byte-identical."""
+    from pyspark.sql import types as T
+
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+
+    out = str(tmp_path / "lay")
+    events = load_table(spark, SF_DIR, "events").limit(20)
+    convert(spark, events, out, order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA)
+    before = layout_files(out)
+    if types == "demo":
+        names = F.when(F.col("event_id") % 2 == 0, "demo/P").otherwise("demo.P")
+    else:
+        names = F.lit(types)
+    with pytest.raises(ValueError, match=err):
+        convert(
+            spark, events.withColumn("event_type", names), out,
+            order_cols=["ts", "event_id"], mode="append",
+            payload_schema=T.StructType.fromDDL(payload_schema),
+        )
+    assert layout_files(out) == before
+
+
+def test_malformed_payload_fails_the_convert(spark, tmp_path):
+    """A payload that does not decode under ``payload_schema`` fails the
+    convert (the bag converters' ``on_error='fail'``), leaving no layout."""
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+
+    out = str(tmp_path / "lay")
+    events = load_table(spark, SF_DIR, "events").limit(20)
+    bad = events.withColumn(
+        "props", F.when(F.col("event_id") == 3, F.lit("{not json")).otherwise(F.col("props"))
+    )
+    with pytest.raises(ValueError, match="layout write failed"):
+        convert(spark, bad, out, order_cols=["ts", "event_id"], payload_schema=PROPS_SCHEMA)
+    assert not os.path.exists(out)

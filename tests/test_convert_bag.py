@@ -86,6 +86,37 @@ def test_convert_bag_md5_conflict_refused(spark, tmp_path):
         convert_bag(spark, path, str(tmp_path / "out"))
 
 
+@pytest.mark.parametrize(
+    "conns, err",
+    [
+        ([ConnectionInfo(1, "/s", "Stats", "", "uint32 a")],
+         "is empty, hidden or a layout table"),
+        ([ConnectionInfo(1, "/p", "demo/P", "", "uint32 a"),
+          ConnectionInfo(2, "/q", "demo.P", "", "string s")],
+         "both name the per-type table"),
+    ],
+    ids=["layout-table-type", "colliding-types"],
+)
+def test_convert_bag_refuses_colliding_type_tables(spark, tmp_path, conns, err):
+    """A type whose table would be a layout table, or another type's
+    table (``demo/P`` and ``demo.P`` both map to ``demo_P``), is refused
+    before the write, and the layout it targets stays byte-identical."""
+    from tests.conftest import layout_files
+
+    good = str(tmp_path / "good.sbag")
+    write_bag(good, [ConnectionInfo(1, "/t", "demo/T", "", "uint32 x")],
+              [(1, 1, struct.pack("<I", 7))])
+    out = str(tmp_path / "out")
+    convert_bag(spark, good, out)
+    before = layout_files(out)
+    bad = str(tmp_path / "bad.sbag")
+    payloads = {"uint32 a": struct.pack("<I", 1), "string s": struct.pack("<I", 1) + b"x"}
+    write_bag(bad, conns, [(c.conn_id, 2 + i, payloads[c.msg_def]) for i, c in enumerate(conns)])
+    with pytest.raises(ValueError, match=err):
+        convert_bag(spark, bad, out)
+    assert layout_files(out) == before
+
+
 def test_convert_bag_unsigned_exact(spark, tmp_path):
     """unsigned='exact' flows through the converter: a uint32 counter past
     2^31 lands positive in the typed table (the reference's documented

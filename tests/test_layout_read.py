@@ -165,13 +165,25 @@ def _convert_with(spark, how: str, bags, tmp_path, out: str) -> None:
 )
 def test_every_converter_writes_the_current_layout(spark, bags, tmp_path, how):
     """The one layout shape the readers and the append guard accept is
-    the one every converter writes: Messages has exactly
-    `MESSAGES_SCHEMA`'s columns, every per-type table carries `bag_index`
-    right after `data`, `Stats` exists, a bag layout has `Bags`, and no
+    the one every converter writes: every Messages, Connections and Stats
+    file's footer schema is `MESSAGES_SCHEMA`, `CONN_SCHEMA` and
+    `STATS_SCHEMA`, types included, every per-type table carries
+    `bag_index` right after `data`, a bag layout has `Bags`, and no
     marker file lies anywhere in the layout."""
     out = str(tmp_path / "out")
     _convert_with(spark, how, bags, tmp_path, out)
     tables = _tables(out)
+    declared = {
+        "Messages": lw.MESSAGES_SCHEMA,
+        "Connections": T.StructType.fromDDL(CONN_SCHEMA),
+        "Stats": lw.STATS_SCHEMA,
+    }
+    for table, schema in declared.items():
+        files = _data_files(os.path.join(out, table))
+        assert files, table
+        for f in files:
+            key = pq.read_metadata(f).metadata[lw.SPARK_SCHEMA_KEY.encode()]
+            assert T.StructType.fromJson(json.loads(key)) == schema, (table, f)
     assert read_layout_table(spark, out, "Messages").columns == lw.MESSAGES_SCHEMA.names
     assert "Stats" in tables
     assert ("Bags" in tables) == (how != "convert")

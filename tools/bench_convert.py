@@ -25,7 +25,10 @@ path ``load_bag`` and sampling take: ms and Spark jobs, best of 3 after a
 warm-up), ``tasks`` = the fixed cost of a Python task: the median ms of a
 no-op ``container.split_job`` over 4 and 16 splits beside a JVM-only
 ``spark.range`` job of the same width (no bag; the first two arguments are
-ignored).
+ignored), ``stream`` = ``convert()`` of the fixture ``events`` table at
+sf0.01 and sf0.1 (beside ``catalog.DEFAULT_SF_DIR``): an overwrite, then
+an append of the same stream, each timed after an untimed warm-up convert
+(no bag; the first two arguments are ignored).
 """
 
 from __future__ import annotations
@@ -620,6 +623,41 @@ def run_scan(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
         shutil.rmtree(work, ignore_errors=True)
 
 
+def run_stream(spark=None) -> dict:
+    """``<sf>_<mode>_s`` and ``<sf>_<mode>_jobs``: the wall seconds and
+    Spark jobs of a ``convert()`` overwrite, then an append, of the
+    fixture ``events`` stream, after one untimed overwrite."""
+    from rosbag2parquet_spark.convert import convert
+    from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
+    from rosbag2parquet_spark.session import get_spark
+    from rosbag2parquet_spark.sources.catalog import DEFAULT_SF_DIR, load_table
+
+    spark = spark or get_spark("bench_convert")
+    work = tempfile.mkdtemp(prefix="bench_stream_")
+    out = {}
+    try:
+        for sf in ("sf0.01", "sf0.1"):
+            events = load_table(
+                spark, os.path.join(os.path.dirname(DEFAULT_SF_DIR), sf), "events"
+            )
+            layout = os.path.join(work, sf)
+
+            def conv(mode: str):
+                return convert(
+                    spark, events, layout, order_cols=["ts", "event_id"],
+                    payload_schema=PROPS_SCHEMA, mode=mode,
+                )
+
+            conv("overwrite")
+            for mode in ("overwrite", "append"):
+                _, dt, jobs = timed(spark, lambda: conv(mode))
+                out[f"{sf}_{mode}_s"] = round(dt, 2)
+                out[f"{sf}_{mode}_jobs"] = jobs
+        return out
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def _noop_split(ids):
     yield from ids
 
@@ -658,6 +696,7 @@ def main() -> None:
         "reads": lambda: run_reads(n_msgs, blob_bytes),
         "scan": lambda: run_scan(n_msgs, blob_bytes),
         "tasks": run_tasks,
+        "stream": run_stream,
     }
     mode = sys.argv[3] if len(sys.argv) > 3 else "walkthrough"
     if mode not in modes:
