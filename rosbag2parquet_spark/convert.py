@@ -568,8 +568,10 @@ def split_count(
     split bytes = min(maxPartitionBytes, max(openCostInBytes,
     nbytes / parallelism)). Small inputs get few splits (every split is a
     task each per-type decode job pays for), large ones one per
-    maxPartitionBytes."""
-    per_core = nbytes // max(1, parallelism)
+    maxPartitionBytes. ``nbytes / parallelism`` rounds up: rounded down, a
+    size the cores do not divide gets one split more than cores, a second
+    wave."""
+    per_core = -(-nbytes // max(1, parallelism))
     split = max(1, min(max_partition_bytes, max(open_cost, per_core)))
     return max(1, -(-nbytes // split))
 

@@ -20,14 +20,35 @@ on ``local[N]``. All scale-sensitive knobs live here so every entry point
   (a no-op 16-task job 1.2 s -> 0.34 s on 4 cores). Workers import the
   package from the driver's cwd or ``PYTHONPATH``, as package tasks already
   need; the conf is set only when the package is found there, and being
-  static it does not reach a session this function did not build.
+  static it does not reach a session this function did not build. That
+  daemon also imports what tasks import (``_daemon.PRELOAD``: pandas,
+  pyarrow, numpy, the package's scan, decode and write modules) and runs
+  ``gc.collect(); gc.freeze()`` before its first fork, so a worker starts
+  with nothing left to import and the ``gc.collect()`` after each task
+  skips the frozen heap. Fork safety rests on those imports starting no
+  thread that the fork would lose: numpy's OpenBLAS pool and pyarrow's
+  jemalloc thread are re-armed by their libraries, and a module that
+  starts threads or opens files at import must stay off the list;
+- a warm-up job started by a session this function builds: one no-op
+  ``mapInArrow`` task in job group :data:`WARMUP_GROUP`, run on a
+  background thread, so the daemon's start and the JVM's first Arrow
+  runner overlap the caller's own first work instead of preceding its
+  first Python job. Counters of ungrouped jobs
+  (``statusTracker().getJobIdsForGroup()``) never see it. A reused
+  active session gets none, and an error in it (the session stopped
+  while it runs) is dropped.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import SparkSession
+
+#: the job group of the warm-up job a new session runs
+WARMUP_GROUP = "rosbag2parquet_spark.warmup"
 
 #: the package's parent dir, which a worker must find on its sys.path
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -78,6 +99,34 @@ def get_spark(app_name: str = "rosbag2parquet_spark", cpus: int | None = None) -
     if active is not None:
         return active
     builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
+    new = SparkContext._active_spark_context is None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if new:
+        _Warmup(spark).start()
     return spark
+
+
+class _Warmup(InheritableThread):
+    """The warm-up job on its own thread. An error it meets, the stop of a
+    session that has not finished it included, is logged at debug level
+    and dropped: the warm-up only saves time."""
+
+    def __init__(self, spark: SparkSession):
+        super().__init__(self._job, args=(spark,), name=WARMUP_GROUP, daemon=True)
+
+    @staticmethod
+    def _job(spark: SparkSession) -> None:
+        def noop(batches):
+            for _ in batches:
+                pass
+            return iter(())
+
+        spark.sparkContext.setJobGroup(WARMUP_GROUP, "start the Python workers")
+        spark.range(0, 1, 1, 1).mapInArrow(noop, "id long").collect()
+
+    def run(self) -> None:
+        try:
+            super().run()
+        except Exception:
+            logging.getLogger(__name__).debug("warm-up job failed", exc_info=True)

@@ -710,8 +710,9 @@ def test_messages_files_disjoint_seqno_ranges(spark, tmp_path):
 
 def test_scan_split_sizing(spark, tmp_path):
     """num_partitions=None sizes the scan like a Spark file scan from the
-    session's settings: 2 splits for a ~4.7 MB bag on 4 cores, ~800 for
-    100 GB; an explicit num_partitions is still honored."""
+    session's settings: 2 splits for a ~4.7 MB bag on 4 cores, one per
+    core for a size the cores do not divide, ~800 for 100 GB; an explicit
+    num_partitions is still honored."""
     from rosbag2parquet_spark.convert import (
         _conf_bytes,
         scan_partitions,
@@ -721,6 +722,11 @@ def test_scan_split_sizing(spark, tmp_path):
     max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
     assert split_count(4_726_474, 4, max_bytes, open_cost) == 2
+    # one wave: a remainder of the per-core share gets no split of its own
+    assert split_count(95_000_003, 4, max_bytes, open_cost) == 4
+    assert split_count(95_000_000, 4, max_bytes, open_cost) == 4
+    assert split_count(100_000_001, 8, max_bytes, open_cost) == 8
+    assert split_count(13, 4, 128, 1) == 4
     assert split_count(100 << 30, 4, max_bytes, open_cost) == 800
     assert split_count(0, 4, max_bytes, open_cost) == 1
     assert scan_partitions(spark, 100 << 30) == 800

@@ -1,6 +1,8 @@
 """The package's Python worker daemon (``rosbag2parquet_spark._daemon``):
 a zip archive's directory is re-read only when the archive changed, so a
-reused worker's tasks parse no zip directory."""
+reused worker's tasks parse no zip directory; what tasks import is loaded
+and frozen before the fork and still works in the forked workers; and the
+warm-up job a new `get_spark` session starts."""
 
 import os
 import subprocess
@@ -12,6 +14,7 @@ from pyspark.sql import functions as F
 import rosbag2parquet_spark
 
 DAEMON = os.path.join(os.path.dirname(rosbag2parquet_spark.__file__), "_daemon.py")
+_REPO = os.path.dirname(os.path.dirname(DAEMON))
 
 _RULE = r"""
 import importlib, sys, zipfile, zipimport
@@ -138,3 +141,199 @@ def test_daemon_conf_needs_the_package_on_the_worker_path(tmp_path, monkeypatch)
     assert not session._workers_find_package()
     monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), session._ROOT]))
     assert session._workers_find_package()
+
+
+def test_forked_workers_start_preloaded_and_frozen(spark):
+    """Each of 4 workers holds every preload module, and holds it in the
+    heap the daemon froze before forking it: a module a worker imported
+    itself would sit in a collected generation."""
+
+    def _preload_state(_):
+        import gc
+        import os
+        import sys
+
+        from rosbag2parquet_spark._daemon import PRELOAD
+
+        collected = {id(o) for o in gc.get_objects()}
+        yield (
+            os.getpid(),
+            [m for m in PRELOAD if m not in sys.modules],
+            [m for m in PRELOAD if m in sys.modules and id(sys.modules[m]) in collected],
+            gc.get_freeze_count(),
+        )
+
+    rows = spark.sparkContext.parallelize(range(4), 4).mapPartitions(_preload_state).collect()
+    assert len(rows) == 4
+    for pid, missing, unfrozen, frozen in rows:
+        assert (missing, unfrozen) == ([], []), pid
+        assert frozen > 0, pid
+
+
+def test_forked_workers_compute_like_the_driver(spark, tmp_path):
+    """Threaded Arrow compute, a multi-row-group Parquet round trip and a
+    BLAS matmul give the driver's answers in 4 forked workers: the
+    libraries the daemon loaded before the fork still work after it."""
+    out = str(tmp_path)
+
+    def _compute(i):
+        import hashlib
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        n = 200_000
+        t = pa.table({"k": np.arange(n) % 7, "v": np.arange(n, dtype=np.int64) * 3})
+        agg = t.group_by("k", use_threads=True).aggregate([("v", "sum"), ("v", "max")])
+        agg = agg.sort_by("k").to_pydict()
+        order = pc.sort_indices(t, sort_keys=[("k", "ascending"), ("v", "descending")])
+        path = f"{out}/{i}.parquet"
+        pq.write_table(t, path, row_group_size=n // 8)
+        back = pq.read_table(path, use_threads=True)
+        groups = pq.ParquetFile(path).metadata.num_row_groups
+        rng = np.random.default_rng(0)
+        a = rng.integers(-8, 9, size=(512, 512)).astype(np.float64)  # exact sums
+        mm = hashlib.sha256((a @ a.T).tobytes()).hexdigest()
+        return (
+            agg, pc.sum(t["v"]).as_py(), order[:5].to_pylist(), order[-5:].to_pylist(),
+            back.equals(t), groups, mm,
+        )
+
+    want = _compute("driver")
+    assert want[4] and want[5] == 8
+    got = (
+        spark.sparkContext.parallelize(range(4), 4)
+        .mapPartitionsWithIndex(lambda i, _: [_compute(i)])
+        .collect()
+    )
+    assert got == [want] * 4
+
+
+_BAD_PRELOAD_DAEMON = """
+from rosbag2parquet_spark import _daemon
+
+if __name__ == "__main__":
+    _daemon.main(("no_such_module_anywhere",) + _daemon.PRELOAD)
+"""
+
+_PLAIN_JOB = r"""
+import sys
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.python.daemon.module", "bad_preload_daemon")
+    .getOrCreate()
+)
+sc = spark.sparkContext
+assert sc.parallelize(range(10), 2).map(lambda x: x * x).sum() == 285
+
+def probe(_):
+    import gc, sys
+    yield sys.modules["__main__"].__file__, "pandas" in sys.modules, gc.get_freeze_count()
+
+print(sc.parallelize(range(2), 2).mapPartitions(probe).collect()[0])
+spark.stop()
+"""
+
+
+def test_unimportable_preload_is_skipped(tmp_path):
+    """A daemon whose preload tuple starts with a name nothing provides
+    still serves a plain lambda job, and loads the rest of the tuple."""
+    (tmp_path / "bad_preload_daemon.py").write_text(_BAD_PRELOAD_DAEMON)
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([str(tmp_path), _REPO]))
+    out = subprocess.run(
+        [sys.executable, "-c", _PLAIN_JOB], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    main_file, has_pandas, frozen = eval(out.stdout.strip().splitlines()[-1])
+    assert os.path.basename(main_file) == "bad_preload_daemon.py"
+    assert has_pandas and frozen > 0
+
+
+_WARMUP = r"""
+import json, threading
+from rosbag2parquet_spark import session
+
+def warmups():
+    return [t for t in threading.enumerate() if t.name == session.WARMUP_GROUP]
+
+spark = session.get_spark("warmup-test", cpus=2)
+started = len(warmups())
+for t in warmups():
+    t.join(300)
+finished = not any(t.is_alive() for t in warmups())
+reused = session.get_spark("warmup-test", cpus=2) is spark
+started_on_reuse = len(warmups())
+sc = spark.sparkContext
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+st = sc.statusTracker()
+ids = list(st.getJobIdsForGroup(session.WARMUP_GROUP))
+jobs = [st.getJobInfo(j) for j in ids]
+print(json.dumps({
+    "started": started,
+    "finished": finished,
+    "reused": reused,
+    "started_on_reuse": started_on_reuse,
+    "jobs": len(ids),
+    "status": [str(j.status) for j in jobs],
+    "tasks": [sum(st.getStageInfo(s).numTasks for s in j.stageIds) for j in jobs],
+    "ungrouped": [j for j in st.getJobIdsForGroup() if j in ids],
+}))
+spark.stop()
+
+# a fresh session stopped while its warm-up job may still be running
+spark = session.get_spark("warmup-stop", cpus=2)
+spark.stop()
+print("stopped")
+"""
+
+
+def _processes_with(token: str) -> list:
+    """Pids of the live processes whose environment holds ``token``."""
+    pids = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/environ", "rb") as fh:
+                if token.encode() in fh.read():
+                    pids.append(int(pid))
+        except OSError:
+            pass
+    return pids
+
+
+def test_new_session_runs_one_warmup_job():
+    """`get_spark` on a new session starts one 1-task warm-up job in its
+    own group, which no ungrouped job counter lists; reusing the session
+    starts none. Stopping a session right after `get_spark` raises nothing
+    in the caller, and no process the session started outlives it."""
+    import json
+    import time
+    import uuid
+
+    token = f"WARMUP_TEST_{uuid.uuid4().hex}"
+    env = dict(os.environ, PYTHONPATH=_REPO, WARMUP_TEST_TOKEN=token)
+    out = subprocess.run(
+        [sys.executable, "-c", _WARMUP], env=env, cwd=_REPO,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "Exception in thread" not in out.stderr, out.stderr[-3000:]
+    lines = out.stdout.strip().splitlines()
+    assert lines[-1] == "stopped"
+    got = json.loads(lines[-2])
+    assert got == {
+        "started": 1, "finished": True, "reused": True, "started_on_reuse": 0, "jobs": 1,
+        "status": ["SUCCEEDED"], "tasks": [1], "ungrouped": [],
+    }, got
+    deadline = time.monotonic() + 30
+    while _processes_with(token) and time.monotonic() < deadline:
+        time.sleep(0.2)
+    left = _processes_with(token)
+    for pid in left:
+        os.kill(pid, 9)
+    assert not left

@@ -89,17 +89,18 @@ def synth_bag(path: str, n_msgs: int, blob_bytes: int) -> None:
 
 def timed(spark, fn):
     """``fn()``'s result, its wall seconds and the Spark jobs it ran: the
-    status tracker's job ids above the highest one before the call."""
-    def last_job() -> int:
+    ungrouped job ids above the highest one before the call (a job of
+    another group, such as the session's warm-up, is not counted)."""
+    def job_ids() -> list:
         sc = spark.sparkContext
         sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return max(sc.statusTracker().getJobIdsForGroup(), default=-1)
+        return sc.statusTracker().getJobIdsForGroup()
 
-    before = last_job()
+    before = max(job_ids(), default=-1)
     t0 = time.perf_counter()
     out = fn()
     dt = time.perf_counter() - t0
-    return out, dt, last_job() - before
+    return out, dt, sum(1 for j in job_ids() if j > before)
 
 
 def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
@@ -116,9 +117,8 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
         bag_mb = os.path.getsize(bag) / (1 << 20)
 
         spark = spark or get_spark("bench_convert")
-        spark.range(1).count()  # session warm-up outside the timed region
-        # python-worker spin-up is also excluded (a fixed ~5 s per executor
-        # lifetime, amortized away on any long-lived cluster)
+        # session and Python-worker warm-ups outside the timed region
+        spark.range(1).count()
         read_messages(spark, bag, 4).limit(1).count()
 
         # the reference's full program: Messages + Connections + one
