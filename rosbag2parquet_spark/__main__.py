@@ -550,4 +550,10 @@ def main(argv: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    from rosbag2parquet_spark.session import stop_spark
+
+    try:
+        code = main()
+    finally:
+        stop_spark()  # the session main() built, if it built one
+    sys.exit(code)

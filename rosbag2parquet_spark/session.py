@@ -13,6 +13,22 @@ on ``local[N]``. All scale-sensitive knobs live here so every entry point
 - session timezone pinned to UTC so timestamp semantics match external
   oracles (DuckDB is UTC-naive);
 - Arrow enabled for the Pandas-UDF slow path;
+- Spark's generated-class cache sized to the session's query shapes:
+  ``spark.sql.codegen.cache.maxEntries`` = :data:`CODEGEN_CACHE_ENTRIES`
+  (Spark's default is 100). At sf0.001 one pass of the analytics suite
+  compiles 193 distinct classes and one pass of the full ``queries()``
+  registry 2,059, so at 100 every repeat pass of the suite evicted and
+  recompiled about 195 (1.0-1.3 s of compile time a pass); now a repeat
+  pass compiles none. ``spark.sql.codegen.useIdInClassName`` = false
+  keeps the codegen stage id out of the generated source, which is the
+  cache key: AQE numbers a re-planned query's stages in the order it
+  creates them, which follows stage completion order, so with the id in
+  the class name a repeat of one query compiled 2-6 classes anew. Cost:
+  JVM metaspace after two passes of the full registry was 220 MB,
+  against 207 MB at 100 entries; after four passes of the suite it was
+  164 MB, against 166 MB. The cache size is a static conf, read when the
+  cache is built at the JVM's first compile: a session this function did
+  not build keeps Spark's 100;
 - ``spark.python.daemon.module`` = :mod:`rosbag2parquet_spark._daemon`, so
   a Python worker does not re-read ~27k zip directory entries (pyspark.zip,
   py4j, the spark-core jar) at the start of every task: that stdlib call,
@@ -36,19 +52,26 @@ on ``local[N]``. All scale-sensitive knobs live here so every entry point
   first Python job. Counters of ungrouped jobs
   (``statusTracker().getJobIdsForGroup()``) never see it. A reused
   active session gets none, and an error in it (the session stopped
-  while it runs) is dropped.
+  while it runs) is dropped. :func:`stop_spark` waits for it before it
+  stops the session.
 """
 
 from __future__ import annotations
 
 import logging
 import os
+import threading
+import time
 
 from pyspark import InheritableThread, SparkContext
 from pyspark.sql import SparkSession
 
 #: the job group of the warm-up job a new session runs
 WARMUP_GROUP = "rosbag2parquet_spark.warmup"
+
+#: ``spark.sql.codegen.cache.maxEntries``: twice the 2,059 classes one pass
+#: of the full query registry compiles (Spark's default holds 100)
+CODEGEN_CACHE_ENTRIES = 4096
 
 #: the package's parent dir, which a worker must find on its sys.path
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -87,6 +110,8 @@ def get_spark(app_name: str = "rosbag2parquet_spark", cpus: int | None = None) -
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -105,6 +130,34 @@ def get_spark(app_name: str = "rosbag2parquet_spark", cpus: int | None = None) -
     if new:
         _Warmup(spark).start()
     return spark
+
+
+def compile_count(spark: SparkSession) -> int:
+    """The classes Spark's code generator has compiled in this JVM: one per
+    miss of its generated-class cache (``CodegenMetrics``)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def stop_spark(spark: SparkSession | None = None) -> None:
+    """Stop ``spark`` (default: the active session, if any) once its warm-up
+    job has ended, waiting at most 30 s for it.
+
+    A stop under a running Python task logs Spark ``ERROR`` lines for it
+    ("SparkEnv.get() is null", "Python worker exited unexpectedly")
+    although nothing failed. Cancelling the warm-up does not help: a
+    cancelled job ends before its killed task does, and that task ends no
+    sooner than the warm-up would have (about 1.5 s after the cancel, on
+    4 cores). A job that succeeds has run its task's completion listeners.
+    """
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        return
+    deadline = time.monotonic() + 30.0
+    for t in threading.enumerate():
+        if t.name == WARMUP_GROUP:
+            t.join(max(0.0, deadline - time.monotonic()))
+    spark.stop()
 
 
 class _Warmup(InheritableThread):

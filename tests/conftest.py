@@ -11,10 +11,11 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    from rosbag2parquet_spark.session import get_spark
+    from rosbag2parquet_spark.session import get_spark, stop_spark
 
     s = get_spark("tests", cpus=8)
     yield s
+    stop_spark(s)
 
 
 @pytest.fixture(scope="session")

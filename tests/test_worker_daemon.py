@@ -256,7 +256,7 @@ def test_unimportable_preload_is_skipped(tmp_path):
 
 
 _WARMUP = r"""
-import json, threading
+import json, threading, time
 from rosbag2parquet_spark import session
 
 def warmups():
@@ -286,9 +286,15 @@ print(json.dumps({
 }))
 spark.stop()
 
-# a fresh session stopped while its warm-up job may still be running
+# a fresh session stopped while its warm-up task runs: the task waits
+# for the daemon's first start, which takes over a second
 spark = session.get_spark("warmup-stop", cpus=2)
-spark.stop()
+st = spark.sparkContext.statusTracker()
+deadline = time.monotonic() + 60
+while time.monotonic() < deadline and not st.getJobIdsForGroup(session.WARMUP_GROUP):
+    time.sleep(0.01)
+time.sleep(0.2)
+session.stop_spark(spark)
 print("stopped")
 """
 
@@ -309,8 +315,10 @@ def _processes_with(token: str) -> list:
 def test_new_session_runs_one_warmup_job():
     """`get_spark` on a new session starts one 1-task warm-up job in its
     own group, which no ungrouped job counter lists; reusing the session
-    starts none. Stopping a session right after `get_spark` raises nothing
-    in the caller, and no process the session started outlives it."""
+    starts none. `stop_spark` on a session whose warm-up task is running
+    raises nothing in the caller and logs no ``ERROR`` line (a plain
+    ``spark.stop()`` there logs the task's failure), and no process the
+    session started outlives it."""
     import json
     import time
     import uuid
@@ -323,6 +331,8 @@ def test_new_session_runs_one_warmup_job():
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert "Exception in thread" not in out.stderr, out.stderr[-3000:]
+    errors = [line for line in out.stderr.splitlines() if " ERROR " in line]
+    assert not errors, out.stderr[-3000:]
     lines = out.stdout.strip().splitlines()
     assert lines[-1] == "stopped"
     got = json.loads(lines[-2])

@@ -11,7 +11,9 @@ the raw column, reference MessageTable.cpp:63-67) → converter layout write
 
 Usage: python tools/bench_convert.py [n_messages] [blob_bytes] [mode]
 Prints one JSON line {"bag_mb":…, "messages":…, "convert_s":…, "mb_per_s":…,
-"jobs":…}; ``jobs`` counts the Spark jobs the timed convert ran.
+"jobs":…, "compiles":…}; ``jobs`` counts the Spark jobs the timed convert
+ran and ``compiles`` the classes Spark's code generator compiled for it (a
+miss of the session's generated-class cache).
 ``mode`` picks the corpus: omitted = the SBAG walkthrough, ``mcap`` or
 ``db3`` = the same corpus in that container, ``fleet`` = 4 SBAG bags of
 ``n_messages`` each through ``convert_bags``, ``resume`` = a ``.db3`` and
@@ -88,19 +90,25 @@ def synth_bag(path: str, n_msgs: int, blob_bytes: int) -> None:
 
 
 def timed(spark, fn):
-    """``fn()``'s result, its wall seconds and the Spark jobs it ran: the
-    ungrouped job ids above the highest one before the call (a job of
-    another group, such as the session's warm-up, is not counted)."""
+    """``fn()``'s result, its wall seconds, the Spark jobs it ran (the
+    ungrouped job ids above the highest one before the call: a job of
+    another group, such as the session's warm-up, is not counted) and the
+    classes it compiled (`session.compile_count`; a warm-up running
+    alongside may add a few)."""
+    from rosbag2parquet_spark.session import compile_count
+
     def job_ids() -> list:
         sc = spark.sparkContext
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return sc.statusTracker().getJobIdsForGroup()
 
     before = max(job_ids(), default=-1)
+    compiled = compile_count(spark)
     t0 = time.perf_counter()
     out = fn()
     dt = time.perf_counter() - t0
-    return out, dt, sum(1 for j in job_ids() if j > before)
+    jobs = sum(1 for j in job_ids() if j > before)
+    return out, dt, jobs, compile_count(spark) - compiled
 
 
 def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
@@ -123,7 +131,7 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
 
         # the reference's full program: Messages + Connections + one
         # FLATTENED typed table per type (blob per MessageTable.cpp:339)
-        info, dt, jobs = timed(
+        info, dt, jobs, compiles = timed(
             spark, lambda: convert_bag(spark, bag, os.path.join(work, "out"))
         )
 
@@ -139,6 +147,7 @@ def run(n_msgs: int, blob_bytes: int = 4_096, spark=None) -> dict:
             "mb_per_s": round(bag_mb / dt, 1),
             "output_mb": round(out_mb, 1),
             "jobs": jobs,
+            "compiles": compiles,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -279,7 +288,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
         spark = spark or get_spark("bench_convert")
         spark.range(1).count()
         read_messages(spark, bag, 4).limit(1).count()
-        info, dt, jobs = timed(
+        info, dt, jobs, compiles = timed(
             spark, lambda: convert_bag(spark, bag, os.path.join(work, "out"))
         )
         return {
@@ -288,6 +297,7 @@ def _run_grammar(synth, suffix: str, n_msgs: int, blob_bytes: int, spark):
             "convert_s": round(dt, 2),
             "mb_per_s": round(bag_mb / dt, 1),
             "jobs": jobs,
+            "compiles": compiles,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -498,7 +508,7 @@ def run_fleet(
         for p in paths:
             read_messages(spark, p, 4).limit(1).count()
 
-        info, dt, jobs = timed(
+        info, dt, jobs, compiles = timed(
             spark, lambda: convert_bags(spark, paths, os.path.join(work, "out"))
         )
         assert info.count == n_bags * msgs_per_bag
@@ -509,6 +519,7 @@ def run_fleet(
             "convert_s": round(dt, 2),
             "mb_per_s": round(total_mb / dt, 1),
             "jobs": jobs,
+            "compiles": compiles,
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -538,11 +549,12 @@ def run_resume(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict
             synth(bag, half, blob_bytes, 0)
             convert_bag(spark, bag, layout)
             synth(bag, n_msgs, blob_bytes, half)
-            info, dt, jobs = timed(
+            info, dt, jobs, compiles = timed(
                 spark, lambda: resume_convert_bag(spark, bag, layout)
             )
             out[f"{suffix}_resume_s"] = round(dt, 2)
             out[f"{suffix}_resume_jobs"] = jobs
+            out[f"{suffix}_resume_compiles"] = compiles
             assert info.count == n_msgs - half, info
         return out
     finally:
@@ -553,7 +565,8 @@ def run_reads(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
     """The layout readers on a converted walkthrough SBAG: each query
     plans the reader and collects a small answer, as the benchmark's
     query mix does; ``<reader>_ms`` is the best of 3 runs after a warm-up
-    and ``<reader>_jobs`` the Spark jobs one run starts."""
+    and ``<reader>_jobs`` / ``<reader>_compiles`` the Spark jobs and
+    compiled classes of the last run."""
     from pyspark.sql import functions as F
 
     from rosbag2parquet_spark.convert import (
@@ -583,8 +596,9 @@ def run_reads(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
         for name, query in queries.items():
             query()
             runs = [timed(spark, query) for _ in range(3)]
-            out[f"{name}_ms"] = round(min(dt for _, dt, _ in runs) * 1000, 1)
+            out[f"{name}_ms"] = round(min(run[1] for run in runs) * 1000, 1)
             out[f"{name}_jobs"] = runs[-1][2]
+            out[f"{name}_compiles"] = runs[-1][3]
         return out
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -594,7 +608,8 @@ def run_scan(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
     """``read_messages(...).count()`` over the walkthrough SBAG, split the
     way a convert splits it: planning plus one task per split whose rows
     all reach the JVM; ``scan_ms`` is the best of 3 runs after a warm-up
-    and ``scan_jobs`` the Spark jobs one run starts."""
+    and ``scan_jobs`` / ``scan_compiles`` the Spark jobs and compiled
+    classes of the last run."""
     from rosbag2parquet_spark.convert import scan_partitions
     from rosbag2parquet_spark.session import get_spark
     from rosbag2parquet_spark.sources.container import read_messages
@@ -616,16 +631,18 @@ def run_scan(n_msgs: int = 6_000, blob_bytes: int = 4_096, spark=None) -> dict:
             "bag_mb": round(os.path.getsize(bag) / (1 << 20), 1),
             "messages": n_msgs,
             "splits": n,
-            "scan_ms": round(min(dt for _, dt, _ in runs) * 1000, 1),
+            "scan_ms": round(min(run[1] for run in runs) * 1000, 1),
             "scan_jobs": runs[-1][2],
+            "scan_compiles": runs[-1][3],
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
 def run_stream(spark=None) -> dict:
-    """``<sf>_<mode>_s`` and ``<sf>_<mode>_jobs``: the wall seconds and
-    Spark jobs of a ``convert()`` overwrite, then an append, of the
+    """``<sf>_<mode>_s``, ``<sf>_<mode>_jobs`` and ``<sf>_<mode>_compiles``:
+    the wall seconds, Spark jobs and compiled classes of a ``convert()``
+    overwrite, then an append, of the
     fixture ``events`` stream, after one untimed overwrite."""
     from rosbag2parquet_spark.convert import convert
     from rosbag2parquet_spark.operators.keys import PROPS_SCHEMA
@@ -650,9 +667,10 @@ def run_stream(spark=None) -> dict:
 
             conv("overwrite")
             for mode in ("overwrite", "append"):
-                _, dt, jobs = timed(spark, lambda: conv(mode))
+                _, dt, jobs, compiles = timed(spark, lambda: conv(mode))
                 out[f"{sf}_{mode}_s"] = round(dt, 2)
                 out[f"{sf}_{mode}_jobs"] = jobs
+                out[f"{sf}_{mode}_compiles"] = compiles
         return out
     finally:
         shutil.rmtree(work, ignore_errors=True)
